@@ -3,11 +3,16 @@ package graft
 import graft.config.{ConfigParser, StreamConfig, TapConfig}
 import graft.operators.StreamMaps
 import graft.sinks.{BatchManifest, BatchSink, SingerSink}
+import graft.sinks.SingerSink.{line, obj, strings}
 import graft.sources.StreamSource
 import graft.state.{Bookmarks, TapState}
 import graft.types.TypeMapper
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.io.PrintStream
+import java.io.{FileDescriptor, FileOutputStream, PrintStream}
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 
 /** The tap orchestrator — the engine's equivalent of the SDK's
   * `Tap.sync_all` (reference: invoked from tap_rawpostgresql/tap.py via
@@ -111,9 +116,8 @@ object Tap {
             StreamResult(s, -1, manifests)
           case None =>
             // a mapped stream's SCHEMA reflects the transformed shape
-            val schemaJson = smap.map(_ =>
-              TypeMapper.jsonSchemaFromStruct(s, df.schema))
-            SingerSink.emitSchema(emitStream, out, schemaJson)
+            val shape = if (smap.isDefined) df.schema else TypeMapper.structType(s.columns)
+            SingerSink.emitSchema(emitStream, TypeMapper.jsonSchema(s, shape), out)
             val te = java.time.OffsetDateTime.now(java.time.ZoneOffset.UTC)
               .format(java.time.format.DateTimeFormatter
                 .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"))
@@ -129,7 +133,8 @@ object Tap {
                   if (s.isSorted) {
                     state = state.advanced(s.streamId, v)
                     SingerSink.emitState(state, out)
-                  } else SingerSink.emitStateProgress(state, s.streamId, k, v, out)
+                  } else SingerSink.emitState(state, out,
+                    Some(SingerSink.Progress(s.streamId, k, v)))
                 case _ => SingerSink.emitState(state, out) // heartbeat
               })
             bookmark.foreach(v => state = state.advanced(s.streamId, v))
@@ -170,9 +175,8 @@ object Tap {
     var state = state0
     val files = manifests.flatMap(_.files)
     // (native max for type-correct ordering, its string cast for the
-    // bookmark) per written file — string rep keys compare as UTF8String
-    // to agree with Spark's max() byte order (see SingerSink.emitRecords)
-    val maxByFile: Map[String, (AnyRef, String)] = s.replicationKey match {
+    // bookmark) per written file
+    val maxByFile: Map[String, (Comparable[Any], String)] = s.replicationKey match {
       case Some(k) if files.nonEmpty =>
         spark.read.schema(df.schema)
           .option("timestampFormat", graft.operators.Conformance.IsoTimestampPattern)
@@ -181,22 +185,16 @@ object Tap {
           .agg(max(col(k)).as("rk"), max(col(k)).cast("string").as("rks"))
           .collect()
           .filterNot(_.isNullAt(1))
-          .map { r =>
-            val v = r.get(1) match {
-              case str: String =>
-                org.apache.spark.unsafe.types.UTF8String.fromString(str)
-              case other => other.asInstanceOf[AnyRef]
-            }
-            fileName(r.getString(0)) -> (v, r.getString(2))
-          }.toMap
+          .map(r => fileName(r.getString(0)) -> (SingerSink.repKeyOrder(r.get(1)), r.getString(2)))
+          .toMap
       case _ => Map.empty
     }
-    var best: AnyRef = null
+    var best: Comparable[Any] = null
     var bestStr: String = null
     manifests.foreach { m =>
       SingerSink.emitBatch(emitStream, m, out)
       m.files.flatMap(f => maxByFile.get(fileName(f))).foreach { case (v, vs) =>
-        if (best == null || v.asInstanceOf[Comparable[AnyRef]].compareTo(best) > 0) {
+        if (best == null || v.compareTo(best) > 0) {
           best = v; bestStr = vs
         }
       }
@@ -211,11 +209,8 @@ object Tap {
     * capability, tap.py:252; Singer convention: a stream is selected
     * unless its root-breadcrumb metadata says `"selected": false`).
     */
-  def selectedStreams(catalogJson: String): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(catalogJson)
-    Option(root.get("streams")).map(_.elements().asScala.flatMap { s =>
+  def selectedStreams(catalogJson: String): Set[String] =
+    catalogStreams(catalogJson).flatMap { s =>
       val id = Option(s.get("tap_stream_id")).map(_.asText)
       val deselected = Option(s.get("metadata")).exists(_.elements().asScala.exists { m =>
         val rootCrumb = Option(m.get("breadcrumb")).forall(_.isEmpty)
@@ -223,8 +218,7 @@ object Tap {
         rootCrumb && sel.exists(n => n.isBoolean && !n.asBoolean)
       })
       if (deselected) None else id
-    }.toSet).getOrElse(Set.empty)
-  }
+    }.toSet
 
   /** Per-stream DESELECTED property names from a Singer catalog: entries
     * whose breadcrumb is `["properties", <name>]` and whose metadata says
@@ -233,11 +227,8 @@ object Tap {
     * selection. Names are lower-cased for the same case-insensitive
     * resolution conformance uses.
     */
-  def deselectedProperties(catalogJson: String): Map[String, Set[String]] = {
-    import scala.jdk.CollectionConverters._
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(catalogJson)
-    Option(root.get("streams")).map(_.elements().asScala.flatMap { s =>
+  def deselectedProperties(catalogJson: String): Map[String, Set[String]] =
+    catalogStreams(catalogJson).flatMap { s =>
       val id = Option(s.get("tap_stream_id")).map(_.asText)
       val drops = Option(s.get("metadata")).map(_.elements().asScala.flatMap { m =>
         val crumb = Option(m.get("breadcrumb"))
@@ -252,8 +243,10 @@ object Tap {
         if (deselected && !automatic) crumb else None
       }.map(_.toLowerCase).toSet).getOrElse(Set.empty[String])
       id.filter(_ => drops.nonEmpty).map(_ -> drops)
-    }.toMap).getOrElse(Map.empty)
-  }
+    }.toMap
+
+  private def catalogStreams(catalogJson: String): Seq[JsonNode] =
+    Option(SingerSink.mapper.readTree(catalogJson).get("streams")).toSeq.flatMap(_.elements().asScala)
 
   /** Apply a (possibly user-edited) Singer catalog to the config:
     * stream-level selection ([[selectedStreams]]) plus property-level
@@ -281,47 +274,50 @@ object Tap {
     * this tap comes from the configured streams (tap.py:211-215), not DB
     * introspection.
     */
-  def catalogJson(tap: TapConfig): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val entries = tap.streams.map { s =>
-      val keys = s.keyProperties.map(q).mkString("[", ",", "]")
-      val repKey = s.replicationKey.map(k => s",${q("replication_key")}:${q(k)}").getOrElse("")
+  def catalogJson(tap: TapConfig): ObjectNode = {
+    val root = obj()
+    val streams = root.putArray("streams")
+    tap.streams.foreach { s =>
       val method = if (s.replicationKey.isDefined) "INCREMENTAL" else "FULL_TABLE"
-      // singer-sdk STANDARD METADATA (the discovery output a user edits
-      // for selection, r9 verdict item 8; key names fixed per r10
-      // ADVICE): one root-breadcrumb entry carrying the table facts
-      // under the names get_standard_metadata actually emits —
-      // `forced-replication-method`, `valid-replication-keys` (a LIST),
-      // `schema-name` — with NO `selected` key at discovery (absent
-      // means selected-by-default, which selectedStreams already
-      // honors; external catalog editors keying on the standard names
-      // now find them); one ["properties", name] entry per column whose
-      // `inclusion` is `automatic` for key / replication-key properties
-      // (they sync regardless of user deselection) and `available`
-      // otherwise — so a catalog produced by --discover round-trips
-      // through deselectedProperties / applyCatalogSelection with no
-      // hand-added metadata.
-      val auto = (s.keyProperties ++ s.replicationKey)
-        .map(_.toLowerCase).toSet
-      val validKeys = s.replicationKey
-        .map(k => s""","valid-replication-keys":[${q(k)}]""").getOrElse("")
-      val mdRoot =
-        s"""{"breadcrumb":[],"metadata":{"inclusion":"available","schema-name":${q(s.name)},"table-key-properties":$keys,"forced-replication-method":${q(method)}$validKeys}}"""
-      val mdProps = s.columns.map { c =>
-        val inc = if (auto(c.name.toLowerCase)) "automatic" else "available"
-        s"""{"breadcrumb":["properties",${q(c.name)}],"metadata":{"inclusion":${q(inc)}}}"""
+      val entry = streams.addObject().put("tap_stream_id", s.streamId).put("stream", s.name)
+        .set[ObjectNode]("schema", TypeMapper.jsonSchema(s, TypeMapper.structType(s.columns)))
+        .set[ObjectNode]("key_properties", strings(s.keyProperties))
+        .put("replication_method", method)
+      s.replicationKey.foreach(entry.put("replication_key", _))
+      // singer-sdk STANDARD METADATA, under the names
+      // get_standard_metadata emits: one root-breadcrumb entry with the
+      // table facts and NO `selected` key (absent means selected), then
+      // one ["properties", name] entry per column, `automatic` for key /
+      // replication-key properties (they sync regardless of user
+      // deselection) and `available` otherwise — so a discovered catalog
+      // round-trips through deselectedProperties / applyCatalogSelection
+      val metadata = entry.putArray("metadata")
+      val tableMd = metadata.addObject().set[ObjectNode]("breadcrumb", strings(Nil))
+        .putObject("metadata").put("inclusion", "available").put("schema-name", s.name)
+        .set[ObjectNode]("table-key-properties", strings(s.keyProperties))
+        .put("forced-replication-method", method)
+      s.replicationKey.foreach(k => tableMd.putArray("valid-replication-keys").add(k))
+      val auto = (s.keyProperties ++ s.replicationKey).map(_.toLowerCase).toSet
+      s.columns.foreach { c =>
+        metadata.addObject().set[ObjectNode]("breadcrumb", strings(Seq("properties", c.name)))
+          .putObject("metadata")
+          .put("inclusion", if (auto(c.name.toLowerCase)) "automatic" else "available")
       }
-      val metadata = (mdRoot +: mdProps).mkString("[", ",", "]")
-      s"""{"tap_stream_id":${q(s.streamId)},"stream":${q(s.name)},"schema":${TypeMapper.jsonSchema(s)},"key_properties":$keys,"replication_method":${q(method)}$repKey,"metadata":$metadata}"""
     }
-    s"""{"streams":${entries.mkString("[", ",", "]")}}"""
+    root
   }
 
   /** `--about`: capabilities/settings self-description (reference README:40,
-    * capabilities at tap.py:244-259).
+    * capabilities at tap.py:244-259). `settings` names every top-level key
+    * `ConfigParser.parseTap` reads, plus the per-stream `json_columns`.
     */
-  def aboutJson: String =
-    """{"name":"graft","capabilities":["state","catalog","discover","about","stream-maps","flattening","batch"],"settings":["host","port","user","password","database","streams","batch_config","batch_size","stream_maps","stream_map_config","flattening_enabled","flattening_max_depth","json_columns","state_message_frequency","execution"]}"""
+  def aboutJson: ObjectNode = obj().put("name", "graft")
+    .set[ObjectNode]("capabilities", strings(Seq("state", "catalog", "discover", "about",
+      "stream-maps", "flattening", "batch")))
+    .set[ObjectNode]("settings", strings(Seq("host", "port", "user", "password", "database",
+      "streams", "batch_config", "batch_size", "stream_maps", "stream_map_config",
+      "flattening_enabled", "flattening_max_depth", "json_columns", "state_message_frequency",
+      "execution", "sync_parallelism", "jdbc_url", "jdbc_driver")))
 }
 
 /** CLI entry point mirroring the reference's (`tap.py:262-263`):
@@ -350,8 +346,13 @@ object Main {
     (opts, flags)
   }
 
-  def main(args: Array[String]): Unit =
-    sys.exit(run(args, System.err))
+  /** stdout and stderr are UTF-8 whatever the platform charset, and flush
+    * on every line as `System.out` does.
+    */
+  def main(args: Array[String]): Unit = {
+    def utf8(fd: FileDescriptor) = new PrintStream(new FileOutputStream(fd), true, UTF_8)
+    sys.exit(run(args, utf8(FileDescriptor.out), utf8(FileDescriptor.err)))
+  }
 
   /** CLI body with the SDK's error contract: any config/validation/run
     * failure emits ONE structured CRITICAL line on stderr and exits
@@ -359,21 +360,19 @@ object Main {
     * orchestrators like Meltano key off it), instead of a bare stack
     * trace. Stdout stays reserved for Singer messages.
     */
-  private[graft] def run(args: Array[String], err: PrintStream): Int =
-    try { body(args); 0 }
+  private[graft] def run(args: Array[String], out: PrintStream, err: PrintStream): Int =
+    try { body(args, out); 0 }
     catch {
       case e: Throwable =>
-        def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-          .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t") + "\""
-        err.println(s"""{"level":"CRITICAL","logger":"graft","message":${q(
-          Option(e.getMessage).getOrElse(e.toString))}}""")
+        line(err, obj().put("level", "CRITICAL").put("logger", "graft")
+          .put("message", Option(e.getMessage).getOrElse(e.toString)))
         1
     }
 
-  private def body(args: Array[String]): Unit = {
+  private def body(args: Array[String], out: PrintStream): Unit = {
     val (opts, flags) = parseArgs(args)
 
-    if (flags("--version")) { println("graft 0.1.0"); return }
+    if (flags("--version")) { out.println("graft 0.1.0"); return }
     val cfgPath = opts.getOrElse("--config",
       sys.error("usage: graft.Main --config <cfg.json|ENV> [--discover|--about] " +
         "[--state <state.json>] [--catalog <catalog.json>]"))
@@ -384,15 +383,15 @@ object Main {
       else ConfigParser.parseTap(
         java.nio.file.Files.readString(java.nio.file.Paths.get(cfgPath)))
 
-    if (flags("--about")) { println(Tap.aboutJson); return }
+    if (flags("--about")) { line(out, Tap.aboutJson); return }
     ConfigParser.validate(tap)
     if (flags("--discover")) {
       // config-based catalog by default (the reference's primary path,
       // tap.py:211-215); --introspect walks the live database instead
       // (client.py:85-104)
-      if (flags("--introspect"))
-        println(graft.sources.Discovery.catalogJson(tap))
-      else println(Tap.catalogJson(tap))
+      line(out,
+        if (flags("--introspect")) graft.sources.Discovery.catalogJson(tap)
+        else Tap.catalogJson(tap))
       return
     }
 
@@ -412,7 +411,7 @@ object Main {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try Tap.syncAll(spark, effectiveTap, opts.get("--state"))
+    try Tap.syncAll(spark, effectiveTap, opts.get("--state"), out)
     finally spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft.sinks
 
 import graft.config.{BatchConfig, StreamConfig}
 import graft.operators.Conformance
-import org.apache.hadoop.fs.{FileSystem, Path => HadoopPath}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path => HadoopPath}
 import org.apache.spark.sql.DataFrame
 import java.util.UUID
 
@@ -60,10 +60,13 @@ object BatchSink {
       .toSeq
 
     val syncId = UUID.randomUUID().toString
+    // a checksummed filesystem (the local one) would move each part's
+    // `.crc` sidecar into the root too; the raw one leaves it in outDir
+    val renameFs = fs match { case c: ChecksumFileSystem => c.getRawFileSystem; case o => o }
     val renamed = parts.zipWithIndex.map { case (p, i) =>
       val name = s"${batch.storage.prefix}$tapName--${stream.name}-$syncId-$i$ext"
       val target = new HadoopPath(root, name)
-      if (!fs.rename(p, target))
+      if (!renameFs.rename(p, target))
         throw new java.io.IOException(s"rename $p -> $target failed")
       target
     }

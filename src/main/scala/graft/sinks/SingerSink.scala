@@ -1,15 +1,21 @@
 package graft.sinks
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode}
 import graft.config.StreamConfig
 import graft.operators.Conformance
 import graft.state.TapState
-import graft.types.TypeMapper
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.unsafe.types.UTF8String
 import java.io.PrintStream
 
 /** Singer protocol emission: SCHEMA, then RECORDs, then STATE, one JSON
   * object per stdout line (inherited behavior of `singer_sdk.Stream.sync`;
   * reference invocation at tap_rawpostgresql/client.py:212).
+  *
+  * The one module that knows the wire format: every message, the
+  * `--discover` catalog, `--about` and the CRITICAL line is a Jackson tree
+  * (fields in insertion order) written by [[line]], with Jackson's escaping.
   *
   * Message serialization is inherently a driver-side, ordered, line-oriented
   * concern (the Singer spec is a stdout pipe), so this is the one place the
@@ -19,18 +25,26 @@ import java.io.PrintStream
   */
 object SingerSink {
 
-  /** `schemaJson` overrides the declared-columns schema document — used
-    * when a stream map changed the emitted shape (the SDK likewise
-    * regenerates SCHEMA from the transformed records).
+  private[graft] val mapper = new ObjectMapper()
+
+  def obj(): ObjectNode = JsonNodeFactory.instance.objectNode()
+  def strings(xs: Seq[String]): ArrayNode =
+    xs.foldLeft(JsonNodeFactory.instance.arrayNode())(_ add _)
+  def render(node: JsonNode): String = mapper.writeValueAsString(node)
+
+  /** The writer: `node` as one line of compact JSON. */
+  def line(out: PrintStream, node: JsonNode): Unit = out.println(render(node))
+
+  /** `schema`: `TypeMapper.jsonSchema` of the declared columns, or of the
+    * transformed shape when a stream map changed it (as the SDK does).
     */
-  def emitSchema(stream: StreamConfig, out: PrintStream = System.out,
-                 schemaJson: Option[String] = None): Unit = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val keys = stream.keyProperties.map(q).mkString("[", ",", "]")
-    val bookmark = stream.replicationKey.map(k => s",\"bookmark_properties\":[${q(k)}]").getOrElse("")
-    val schema = schemaJson.getOrElse(TypeMapper.jsonSchema(stream))
-    out.println(
-      s"""{"type":"SCHEMA","stream":${q(stream.name)},"schema":$schema,"key_properties":$keys$bookmark}""")
+  def emitSchema(stream: StreamConfig, schema: ObjectNode,
+                 out: PrintStream = System.out): Unit = {
+    val msg = obj().put("type", "SCHEMA").put("stream", stream.name)
+      .set[ObjectNode]("schema", schema)
+      .set[ObjectNode]("key_properties", strings(stream.keyProperties))
+    stream.replicationKey.foreach(k => msg.putArray("bookmark_properties").add(k))
+    line(out, msg)
   }
 
   /** Emit RECORD messages. The DataFrame's JSON encoding happens
@@ -73,33 +87,25 @@ object SingerSink {
       case None => df.select(jsonCol.as("j"))
     }
     var n = 0L
-    // singer_sdk stamps each RECORD with time_extracted (ISO8601 UTC);
-    // one timestamp per sync — resolved by the caller so tests stay
-    // deterministic and all of a stream's records agree
-    val te = timeExtracted
-      .map(t => s""","time_extracted":"$t"""").getOrElse("")
-    val prefix = s"""{"type":"RECORD","stream":"${stream.name}","record":"""
+    // The envelope is rendered once and split around its `"record":null`
+    // (unique: a `"` inside a JSON string is escaped), so a row costs one
+    // concatenation. singer_sdk stamps each RECORD with time_extracted;
+    // one per sync, from the caller, so all of a stream's records agree.
+    val envelope = obj().put("type", "RECORD").put("stream", stream.name).putNull("record")
+    timeExtracted.foreach(envelope.put("time_extracted", _))
+    val rendered = render(envelope)
+    val slot = rendered.indexOf("\"record\":null") + "\"record\":".length
+    val (prefix, suffix) = (rendered.take(slot), rendered.drop(slot + "null".length))
     val hasRk = stream.replicationKey.isDefined
-    var best: AnyRef = null
+    var best: Comparable[Any] = null
     var bestStr: String = null
     val it = projected.toLocalIterator()
     while (it.hasNext) {
       val row = it.next()
-      out.println(prefix + row.getString(0) + te + "}")
+      out.println(prefix + row.getString(0) + suffix)
       if (hasRk && !row.isNullAt(1)) {
-        // external types of the supported rep-key types compare
-        // consistently with Spark's max() ordering — except String, whose
-        // compareTo is UTF-16 code-unit order while Spark orders UTF-8
-        // bytes (code points); route strings through UTF8String so the
-        // Singer bookmark agrees with the batch-mode Bookmarks.advance
-        // max() on supplementary-plane values
-        val v = row.get(1) match {
-          case s: String =>
-            org.apache.spark.unsafe.types.UTF8String.fromString(s)
-          case other => other.asInstanceOf[AnyRef]
-        }
-        if (best == null ||
-            v.asInstanceOf[Comparable[AnyRef]].compareTo(best) > 0) {
+        val v = repKeyOrder(row.get(1))
+        if (best == null || v.compareTo(best) > 0) {
           best = v
           bestStr = row.getString(2)
         }
@@ -110,10 +116,15 @@ object SingerSink {
     (n, Option(bestStr))
   }
 
-  /** One Singer BATCH message per emitted manifest (the SDK's
-    * `BatchMessage`; the reference yields one `(encoding, [file_url])`
-    * chunk at a time, client.py:234,245).
+  /** A replication-key value in Spark's max() order: a String compares as
+    * UTF8String (UTF-8 byte order), not by its UTF-16 code units, so
+    * bookmarks agree with `max()` on supplementary-plane values.
     */
+  private[graft] def repKeyOrder(v: Any): Comparable[Any] = (v match {
+    case s: String => UTF8String.fromString(s)
+    case other => other
+  }).asInstanceOf[Comparable[Any]]
+
   /** `ACTIVATE_VERSION` — the singer_sdk FULL_TABLE resync handshake: a
     * version stamp emitted after the sync's last RECORD tells a
     * version-aware target that rows not carrying this version are stale
@@ -122,49 +133,49 @@ object SingerSink {
     * it — their bookmark IS the freshness contract.
     */
   def emitActivateVersion(stream: StreamConfig, version: Long,
-                          out: PrintStream = System.out): Unit = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    out.println(
-      s"""{"type":"ACTIVATE_VERSION","stream":${q(stream.name)},"version":$version}""")
-  }
+                          out: PrintStream = System.out): Unit =
+    line(out, obj().put("type", "ACTIVATE_VERSION").put("stream", stream.name).put("version", version))
 
+  /** One Singer BATCH message per emitted manifest (the SDK's
+    * `BatchMessage`; the reference yields one `(encoding, [file_url])`
+    * chunk at a time, client.py:234,245).
+    */
   def emitBatch(stream: StreamConfig, manifest: BatchManifest,
                 out: PrintStream = System.out): Unit = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val files = manifest.files.map(q).mkString("[", ",", "]")
-    out.println(s"""{"type":"BATCH","stream":${q(stream.name)},"encoding":{"format":${q(manifest.format)},"compression":${q(manifest.compression)}},"manifest":$files}""")
+    val encoding = obj().put("format", manifest.format)
+      .put("compression", manifest.compression)
+    line(out, obj().put("type", "BATCH").put("stream", stream.name)
+      .set[ObjectNode]("encoding", encoding)
+      .set[ObjectNode]("manifest", strings(manifest.files)))
   }
 
-  def emitState(state: TapState, out: PrintStream = System.out): Unit = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val bms = state.bookmarks.toSeq.sortBy(_._1).map { case (sid, v) =>
-      s"${q(sid)}:{${q("replication_key_value")}:${q(v)}}"
-    }.mkString("{", ",", "}")
-    out.println(s"""{"type":"STATE","value":{"bookmarks":$bms}}""")
-  }
+  /** An UNSORTED stream's running max (see [[emitState]]). */
+  final case class Progress(streamId: String, replicationKey: String, value: String)
 
-  /** Mid-sync STATE for an UNSORTED stream: the active stream's running
-    * max rides in `progress_markers` (the SDK's non-resumable marker shape
-    * for `is_sorted=False` streams) while its committed
+  /** STATE: every committed bookmark, streams in id order. With
+    * `progress`, the active stream's running max rides in
+    * `progress_markers` (the SDK's non-resumable marker shape for
+    * `is_sorted=False` streams) while its committed
     * `replication_key_value` — what a resume actually filters on — stays
     * untouched. `Bookmarks.load` reads only `replication_key_value`, so an
     * interrupted unsorted sync re-extracts the whole stream (safe: rows
     * below the running max might not have been emitted yet) and the marker
     * is promoted to a real bookmark only when the stream completes.
     */
-  def emitStateProgress(state: TapState, streamId: String, repKey: String,
-                        value: String, out: PrintStream = System.out): Unit = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val markers = s"${q("progress_markers")}:{${q("Note")}:${q(
-      "Progress is not resumable if interrupted.")},${q("replication_key")}:${q(
-      repKey)},${q("replication_key_value")}:${q(value)}}"
-    val sids = (state.bookmarks.keySet + streamId).toSeq.sorted
-    val bms = sids.map { sid =>
-      val committed = state.bookmarks.get(sid)
-        .map(v => s"${q("replication_key_value")}:${q(v)}")
-      val fields = committed.toSeq ++ (if (sid == streamId) Seq(markers) else Nil)
-      s"${q(sid)}:{${fields.mkString(",")}}"
-    }.mkString("{", ",", "}")
-    out.println(s"""{"type":"STATE","value":{"bookmarks":$bms}}""")
+  def emitState(state: TapState, out: PrintStream = System.out,
+                progress: Option[Progress] = None): Unit = {
+    val msg = obj().put("type", "STATE")
+    val bookmarks = msg.putObject("value").putObject("bookmarks")
+    (state.bookmarks.keySet ++ progress.map(_.streamId)).toSeq.sorted.foreach { sid =>
+      val entry = bookmarks.putObject(sid)
+      state.bookmarks.get(sid).foreach(entry.put("replication_key_value", _))
+      progress.filter(_.streamId == sid).foreach { p =>
+        entry.putObject("progress_markers")
+          .put("Note", "Progress is not resumable if interrupted.")
+          .put("replication_key", p.replicationKey)
+          .put("replication_key_value", p.value)
+      }
+    }
+    line(out, msg)
   }
 }

@@ -118,6 +118,6 @@ object Discovery {
   /** Introspected Singer catalog: the discovered streams rendered through
     * the same catalog emitter as config-based discovery.
     */
-  def catalogJson(tap: TapConfig): String =
+  def catalogJson(tap: TapConfig): com.fasterxml.jackson.databind.node.ObjectNode =
     graft.Tap.catalogJson(tap.copy(streams = introspect(tap)))
 }

@@ -1,5 +1,6 @@
 package graft.types
 
+import com.fasterxml.jackson.databind.node.{JsonNodeFactory, ObjectNode}
 import graft.config.{ColumnSpec, StreamConfig}
 import org.apache.spark.sql.types._
 
@@ -75,25 +76,6 @@ object TypeMapper {
     if (isRequired(stream, col)) Seq(base) else Seq(base, "null")
   }
 
-  /** Full JSON-schema document for a stream's declared columns. The schema
-    * is emitted from the *declared* config, never from `df.schema` (Spark
-    * widens nullability through operators).
-    */
-  def jsonSchema(stream: StreamConfig): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val props = stream.columns.map { c =>
-      val types = jsonTypeArray(stream, c).map(q).mkString("[", ",", "]")
-      s"${q(c.name)}:{\"type\":$types${fmtSuffix(toDataType(c.typeName))}}"
-    }.mkString(",")
-    s"""{"type":"object","properties":{$props}}"""
-  }
-
-  private def fmtSuffix(dt: DataType): String = dt match {
-    case TimestampType => ",\"format\":\"date-time\""
-    case DateType => ",\"format\":\"date\""
-    case _ => ""
-  }
-
   /** JSON-schema primitive for a Spark type (the inverse direction of
     * [[jsonSchemaType]], for columns that exist only post-transform).
     */
@@ -105,32 +87,34 @@ object TypeMapper {
     case _ => "string" // complex types serialize as JSON text
   }
 
-  /** JSON-schema document for a POST-stream-map shape: columns still
-    * declared in the config keep their declared types and required rules;
-    * map-computed columns derive from the Spark type and are nullable
-    * unless they are key properties (the SDK likewise regenerates the
-    * SCHEMA message from the transformed record shape).
+  /** JSON-schema document for the stream's emitted shape `schema`:
+    * columns declared in the config keep their declared types and
+    * required rules; map-computed columns derive from the Spark type and
+    * are nullable unless they are key properties (the SDK likewise
+    * regenerates the SCHEMA message from the transformed record shape).
+    * Without a stream map, pass the declared [[structType]] — never
+    * `df.schema`, which Spark widens through operators.
     */
-  def jsonSchemaFromStruct(stream: StreamConfig,
-                           schema: StructType): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  def jsonSchema(stream: StreamConfig, schema: StructType): ObjectNode = {
     val declared = stream.columns.map(c => c.name -> c).toMap
-    val props = schema.fields.map { f =>
-      declared.get(f.name) match {
+    val props = JsonNodeFactory.instance.objectNode()
+    schema.fields.foreach { f =>
+      val types = declared.get(f.name) match {
         // a declared column whose Spark type the map changed (e.g.
         // {"amount": "CAST(amount AS STRING)"}) must advertise the ACTUAL
         // type — emitting the declared one would contradict the RECORD
         // payloads and strict Singer targets reject the sync
-        case Some(c) if toDataType(c.typeName) == f.dataType =>
-          val types = jsonTypeArray(stream, c).map(q).mkString("[", ",", "]")
-          s"${q(c.name)}:{\"type\":$types${fmtSuffix(toDataType(c.typeName))}}"
+        case Some(c) if toDataType(c.typeName) == f.dataType => jsonTypeArray(stream, c)
         case _ =>
           val base = jsonSchemaTypeOf(f.dataType)
-          val types = (if (stream.keyProperties.contains(f.name)) Seq(base)
-                       else Seq(base, "null")).map(q).mkString("[", ",", "]")
-          s"${q(f.name)}:{\"type\":$types${fmtSuffix(f.dataType)}}"
+          if (stream.keyProperties.contains(f.name)) Seq(base) else Seq(base, "null")
       }
-    }.mkString(",")
-    s"""{"type":"object","properties":{$props}}"""
+      val prop = props.putObject(f.name)
+      types.foldLeft(prop.putArray("type"))(_ add _)
+      if (f.dataType == TimestampType) prop.put("format", "date-time")
+      else if (f.dataType == DateType) prop.put("format", "date")
+    }
+    JsonNodeFactory.instance.objectNode().put("type", "object")
+      .set[ObjectNode]("properties", props)
   }
 }

@@ -59,7 +59,7 @@ class DiscoverySpec extends AnyFunSuite {
   test("introspected catalog renders Singer entries; discovered SQL runs") {
     prepared
     val tap = ConfigParser.parseTap(tapJson)
-    val cat = Discovery.catalogJson(tap)
+    val cat = graft.sinks.SingerSink.render(Discovery.catalogJson(tap))
     assert(cat.contains(""""tap_stream_id":"discdb-APP-INV""""))
     assert(cat.contains(""""replication_method":"FULL_TABLE""""))
     assert(cat.contains(""""key_properties":["ID"]"""))

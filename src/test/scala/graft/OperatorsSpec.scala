@@ -5,6 +5,7 @@ import graft.operators.{Conformance, Flattener, StreamMap, StreamMaps}
 import graft.functions.Multimodal
 import graft.sinks.SingerSink
 import graft.state.{Bookmarks, TapState}
+import graft.types.TypeMapper
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -150,7 +151,7 @@ class OperatorsSpec extends AnyFunSuite {
         |"columns":[{"name":"one","type":"text"},{"name":"two","type":"int","nullable":true}]}""".stripMargin)
     val buf = new ByteArrayOutputStream()
     val out = new PrintStream(buf, true, "UTF-8")
-    SingerSink.emitSchema(s, out)
+    SingerSink.emitSchema(s, TypeMapper.jsonSchema(s, TypeMapper.structType(s.columns)), out)
     val df = graft.sources.StreamSource.native(spark, s)
     val (n, bookmark) = SingerSink.emitRecords(df, s, out)
     SingerSink.emitState(TapState(Map(s.streamId -> "2")), out)
@@ -161,6 +162,15 @@ class OperatorsSpec extends AnyFunSuite {
       lines(0).contains(""""two":{"type":["integer"]}""")) // rep key ⇒ required
     assert(lines(1) === """{"type":"RECORD","stream":"t","record":{"one":"Ichi","two":2}}""")
     assert(lines(2).contains(""""postgres-public-t":{"replication_key_value":"2"}"""))
+
+    // a stream name with a quote and a backslash stays inside its JSON
+    // string: the RECORD line parses and names the stream it came from
+    val odd = s.copy(name = "a\"b\\c")
+    val oddBuf = new ByteArrayOutputStream()
+    SingerSink.emitRecords(df, odd, new PrintStream(oddBuf, true, "UTF-8"))
+    val rec = SingerSink.mapper.readTree(oddBuf.toString("UTF-8").trim)
+    assert(rec.get("stream").asText === "a\"b\\c")
+    assert(rec.get("record").get("one").asText === "Ichi")
   }
 
   test("singer sink stamps time_extracted when provided") {

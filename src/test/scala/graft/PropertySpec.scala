@@ -1,12 +1,18 @@
 package graft
 
-import graft.config.{ColumnSpec, StreamConfig}
+import com.fasterxml.jackson.databind.JsonNode
+import graft.config.{ColumnSpec, StreamConfig, TapConfig}
+import graft.sinks.{BatchManifest, SingerSink}
 import graft.sources.SqlDialect
+import graft.state.TapState
 import graft.types.TypeMapper
+import java.io.{ByteArrayOutputStream, OutputStream, PrintStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Property tests for the pure layers: type mapping, literal rendering,
   * dialect rewriting, required/nullable schema rules (§2.4.1).
@@ -917,5 +923,87 @@ class PropertySpec extends AnyFunSuite {
           s"literal mangled: $out")
         assert(SqlDialect.rewriteIntervalCast(out) === out)
     }
+  }
+
+  // ---------------------------------------------------------------------
+  // Singer wire format: every message a generated name or value can reach
+  // is exactly one physical line of UTF-8 JSON that parses back to the
+  // same values.
+
+  private val allControls = (0 to 0x1f).map(_.toChar).mkString
+  private val wireString: Gen[String] = {
+    val char = Gen.frequency(
+      4 -> Gen.alphaNumChar.map(_.toString),
+      2 -> Gen.oneOf("\"", "\\", "\u2028", "\u2029", "\u00e9", "/"),
+      2 -> Gen.choose(0, 0x1f).map(_.toChar.toString),
+      1 -> Gen.choose(0x10000, 0x10ffff).map(c => new String(Character.toChars(c))))
+    Gen.listOf(char).map(_.mkString)
+  }
+
+  /** What `emit` printed: asserted to be one line, parsed back. */
+  private def oneLine(emit: PrintStream => Unit): JsonNode = {
+    val buf = new ByteArrayOutputStream()
+    emit(new PrintStream(buf, true, UTF_8))
+    val text = buf.toString(UTF_8)
+    assert(text.endsWith("\n") && text.count(c => c == '\n' || c == '\r') === 1, text)
+    SingerSink.mapper.readTree(text)
+  }
+
+  private def texts(n: JsonNode): Seq[String] = n.elements().asScala.map(_.asText).toSeq
+
+  private def checkWire(a: String, b: String): Unit = {
+    val (key, repKey) = ("k" + a, "r" + b)
+    val s = StreamConfig(a, "SELECT 1", keyProperties = Seq(key),
+      replicationKey = Some(repKey),
+      columns = Seq(ColumnSpec(key, "int"), ColumnSpec(repKey, "text")))
+
+    val schema = oneLine(SingerSink.emitSchema(s,
+      TypeMapper.jsonSchema(s, TypeMapper.structType(s.columns)), _))
+    assert(schema.get("stream").asText === a)
+    assert(schema.get("schema").get("properties").fieldNames().asScala.toSeq === Seq(key, repKey))
+    assert(texts(schema.get("key_properties")) === Seq(key))
+    assert(texts(schema.get("bookmark_properties")) === Seq(repKey))
+
+    val entry = oneLine(SingerSink.line(_, Tap.catalogJson(TapConfig(streams = Seq(s)))))
+      .get("streams").get(0)
+    assert(entry.get("tap_stream_id").asText === s.streamId)
+    assert(entry.get("stream").asText === a)
+    assert(entry.get("schema").get("properties").fieldNames().asScala.toSeq === Seq(key, repKey))
+    assert(texts(entry.get("key_properties")) === Seq(key))
+    assert(entry.get("replication_key").asText === repKey)
+    assert(entry.get("metadata").elements().asScala.drop(1)
+      .map(_.get("breadcrumb").get(1).asText).toSeq === Seq(key, repKey))
+
+    val uris = Seq(s"file:///tmp/$a.json.gz", b)
+    val batch = oneLine(SingerSink.emitBatch(s, BatchManifest("jsonl", "gzip", uris), _))
+    assert(batch.get("stream").asText === a)
+    assert(texts(batch.get("manifest")) === uris)
+
+    val av = oneLine(SingerSink.emitActivateVersion(s, 42L, _))
+    assert(av.get("stream").asText === a && av.get("version").asLong === 42L)
+
+    val state = TapState(Map("a" + a -> b, "b" + b -> a))
+    def assertCommitted(bookmarks: JsonNode): Unit = state.bookmarks.foreach {
+      case (sid, v) => assert(bookmarks.get(sid).get("replication_key_value").asText === v)
+    }
+    val committed = oneLine(SingerSink.emitState(state, _)).get("value").get("bookmarks")
+    assert(committed.fieldNames().asScala.toSeq === state.bookmarks.keys.toSeq.sorted)
+    assertCommitted(committed)
+    val withProgress = oneLine(SingerSink.emitState(state, _,
+      Some(SingerSink.Progress("p" + a, repKey, b)))).get("value").get("bookmarks")
+    assertCommitted(withProgress)
+    val marker = withProgress.get("p" + a).get("progress_markers")
+    assert(marker.get("replication_key").asText === repKey)
+    assert(marker.get("replication_key_value").asText === b)
+
+    val critical = oneLine(err =>
+      assert(Main.run(Array(a), new PrintStream(OutputStream.nullOutputStream()), err) === 1))
+    assert(critical.get("level").asText === "CRITICAL")
+    assert(critical.get("message").asText === s"unknown argument: $a")
+  }
+
+  test("every Singer message is one line of JSON that round-trips its strings") {
+    checkWire(allControls, "\"\\\u2028\u2029" + new String(Character.toChars(0x1f600)))
+    forAll(wireString, wireString)(checkWire)
   }
 }

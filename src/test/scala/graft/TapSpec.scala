@@ -1,8 +1,10 @@
 package graft
 
 import graft.config.ConfigParser
+import graft.sinks.SingerSink
 import graft.state.Bookmarks
 import java.io.{ByteArrayOutputStream, PrintStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -281,6 +283,14 @@ class TapSpec extends AnyFunSuite {
     val firstBatch = lines.indexWhere(_.contains(""""type":"BATCH""""))
     assert(lines(firstBatch + 1).contains(""""type":"STATE""""),
       "each BATCH message is followed by its STATE")
+
+    // the root holds exactly the announced files: no staging dir, no
+    // checksum sidecars
+    import scala.jdk.CollectionConverters._
+    val announced = lines.filter(_.contains(""""type":"BATCH""""))
+      .flatMap(l => SingerSink.mapper.readTree(l).get("manifest").elements().asScala)
+      .map(f => new java.io.File(java.net.URI.create(f.asText)).getName).toSet
+    assert(new java.io.File(tmp).list().toSet === announced)
   }
 
   // sync_parallelism (VERDICT r10 item 7): three streams extract
@@ -330,7 +340,7 @@ class TapSpec extends AnyFunSuite {
   // metadata {"selected": false}; everything else stays selected.
   test("catalog selection round-trips and honors selected:false") {
     val tap = ConfigParser.parseTap(cfgJson)
-    val cat = Tap.catalogJson(tap)
+    val cat = SingerSink.render(Tap.catalogJson(tap))
     assert(Tap.selectedStreams(cat) === Set("db1-public-s1", "db1-public-s2"))
     val edited =
       """{"streams":[
@@ -402,7 +412,7 @@ class TapSpec extends AnyFunSuite {
         |            {"name":"b","type":"text"}]}
         |]}""".stripMargin
     val tap = ConfigParser.parseTap(cfg)
-    val discovered = Tap.catalogJson(tap)
+    val discovered = SingerSink.render(Tap.catalogJson(tap))
     // discovery emits the standard-metadata inclusion marks
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(discovered)
@@ -480,10 +490,11 @@ class TapSpec extends AnyFunSuite {
     val cfg = Files.createTempDirectory("tap-bad").resolve("cfg.json")
     Files.writeString(cfg,
       """{"streams":[{"name":"x","sql":" ","columns":[{"name":"v","type":"int"}]}]}""")
-    val errBuf = new ByteArrayOutputStream()
+    val (outBuf, errBuf) = (new ByteArrayOutputStream(), new ByteArrayOutputStream())
     val code = Main.run(Array("--config", cfg.toString, "--discover"),
-      new PrintStream(errBuf, true, "UTF-8"))
+      new PrintStream(outBuf, true, "UTF-8"), new PrintStream(errBuf, true, "UTF-8"))
     assert(code === 1)
+    assert(outBuf.size === 0)
     val line = errBuf.toString("UTF-8").trim
     assert(line.startsWith("""{"level":"CRITICAL","logger":"graft""""))
     assert(line.contains("empty sql"))
@@ -492,12 +503,52 @@ class TapSpec extends AnyFunSuite {
 
   test("catalog and about output") {
     val tap = ConfigParser.parseTap(cfgJson)
-    val cat = Tap.catalogJson(tap)
+    val cat = SingerSink.render(Tap.catalogJson(tap))
     assert(cat.contains(""""tap_stream_id":"db1-public-s1""""))
     assert(cat.contains(""""replication_method":"INCREMENTAL""""))
     assert(cat.contains(""""replication_method":"FULL_TABLE""""))
     assert(cat.contains(""""v":{"type":["integer"]}"""))
-    assert(Tap.aboutJson.contains("\"capabilities\""))
+    val about = SingerSink.render(Tap.aboutJson)
+    assert(about.contains("\"capabilities\""))
+
+    // --about names every setting the config parser reads
+    val everyKey =
+      """{"host":"h","port":5433,"user":"u","password":"p","database":"db1",
+        |"streams":[{"name":"s","sql":"SELECT 1 AS v","key_properties":["v"],
+        |  "json_columns":[],"columns":[{"name":"v","type":"int"}]}],
+        |"batch_config":{"storage":{"root":"file:///tmp/graft-about"}},
+        |"batch_size":10,"stream_maps":{"s":{"w":"v + 1"}},
+        |"stream_map_config":{"k":1},"flattening_enabled":true,
+        |"flattening_max_depth":2,"state_message_frequency":5,
+        |"execution":"native","sync_parallelism":2,
+        |"jdbc_url":"jdbc:derby:memory:about","jdbc_driver":"org.apache.derby.jdbc.EmbeddedDriver"
+        |}""".stripMargin
+    ConfigParser.validate(ConfigParser.parseTap(everyKey))
+    import scala.jdk.CollectionConverters._
+    val settings = Tap.aboutJson.get("settings").elements().asScala.map(_.asText).toSet
+    val keys = SingerSink.mapper.readTree(everyKey).fieldNames().asScala.toSeq
+    assert(keys.filterNot(settings).isEmpty, keys.filterNot(settings))
+  }
+
+  // stdout is UTF-8 whatever the platform charset: a non-ASCII column
+  // name reaches the catalog as its UTF-8 bytes, not escaped, not `?`
+  test("--discover writes non-ASCII names as UTF-8 through Main.run") {
+    val name = "Zo\u00eb_\ud83d\ude00"
+    val cfgJson =
+      s"""{"database":"db1","streams":[{"name":"s","sql":"SELECT 1 AS v",
+         |"key_properties":["$name"],"columns":[{"name":"$name","type":"int"}]}]}""".stripMargin
+    val cfg = Files.createTempDirectory("tap-utf8").resolve("cfg.json")
+    Files.writeString(cfg, cfgJson)
+    val (outBuf, errBuf) = (new ByteArrayOutputStream(), new ByteArrayOutputStream())
+    val code = Main.run(Array("--config", cfg.toString, "--discover"),
+      new PrintStream(outBuf, true, UTF_8), new PrintStream(errBuf, true, UTF_8))
+    assert(code === 0, errBuf.toString(UTF_8))
+    val expected = SingerSink.render(Tap.catalogJson(ConfigParser.parseTap(cfgJson))) +
+      System.lineSeparator
+    assert(outBuf.toByteArray.toSeq === expected.getBytes(UTF_8).toSeq)
+    assert(expected.contains("\"" + name + "\":{\"type\":[\"integer\"]}"))
+    assert(SingerSink.mapper.readTree(outBuf.toString(UTF_8)).get("streams").get(0)
+      .get("key_properties").get(0).asText === name)
   }
 
   // VERDICT r6 item 1: `execution: "auto"` in a full sync — a stream whose

@@ -80,7 +80,8 @@ class TypeMapperSpec extends AnyFunSuite {
   test("json schema emission") {
     val s = StreamConfig("t", "SELECT 1", keyProperties = Seq("id"),
       columns = Seq(ColumnSpec("id", "int"), ColumnSpec("at", "datetime", nullable = true)))
-    val js = TypeMapper.jsonSchema(s)
+    val js = graft.sinks.SingerSink.render(
+      TypeMapper.jsonSchema(s, TypeMapper.structType(s.columns)))
     assert(js.contains(""""id":{"type":["integer"]}"""))
     assert(js.contains(""""at":{"type":["string","null"],"format":"date-time"}"""))
   }
