@@ -2,7 +2,7 @@ package graft
 
 import graft.config.{ConfigParser, StreamConfig, TapConfig}
 import graft.operators.StreamMaps
-import graft.sinks.{BatchManifest, BatchSink, SingerSink}
+import graft.sinks.{BatchChunk, BatchManifest, BatchSink, MaxKey, SingerSink}
 import graft.sinks.SingerSink.{line, obj, strings}
 import graft.sources.StreamSource
 import graft.state.{Bookmarks, TapState}
@@ -46,9 +46,8 @@ object Tap {
     // source could commit rows between two lazy executions; the
     // reference derives state from processed records, singer_sdk
     // _sync_records). Each sink therefore executes the stream exactly
-    // ONCE: SingerSink tracks max(rep_key) inside the emit pass, and
-    // batch mode reads the max back from the files just written —
-    // no full-stream persist, which at a 100 TB extraction would
+    // ONCE and tracks max(rep_key) inside its emit or write pass — no
+    // full-stream persist, which at a 100 TB extraction would
     // materialize the whole stream on executor storage.
     // Execution-mode dispatch (config key `execution`): native Catalyst,
     // JDBC pushdown, or auto (native with pushdown fallback for SQL
@@ -71,6 +70,21 @@ object Tap {
       val emitStream = smap.flatMap(_.alias)
         .map(a => s.copy(name = a)).getOrElse(s)
       (df, emitStream, smap)
+    }
+    // Batch-mode emission: one BATCH message per chunk, each followed by a
+    // STATE whose bookmark covers exactly the chunks ANNOUNCED so far — a
+    // target that persists the last STATE line before a crash resumes from
+    // the last chunk it actually received, never skipping one it didn't.
+    def announce(s: StreamConfig, emitStream: StreamConfig,
+                 chunks: Seq[BatchChunk]): StreamResult = {
+      val max = new MaxKey
+      chunks.foreach { c =>
+        SingerSink.emitBatch(emitStream, c.manifest, out)
+        max.merge(c.maxKey)
+        max.value.foreach(v => state = state.advanced(s.streamId, v))
+        SingerSink.emitState(state, out)
+      }
+      StreamResult(s, chunks.map(_.records).sum, chunks.map(_.manifest))
     }
     val active = tap.streams.filterNot(s => tap.removedStreams.contains(s.name))
     // Concurrent batch-mode extraction (config `sync_parallelism`, r10
@@ -98,22 +112,15 @@ object Tap {
               spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", s"graft-sync-${i % par}")
               val (df, emitStream, _) = planStream(s, state0)
-              (s, emitStream, df, BatchSink.write(df, emitStream, bc))
+              (s, emitStream, BatchSink.write(df, emitStream, bc))
             }
           }.map(Await.result(_, Duration.Inf))
-          written.map { case (s, emitStream, df, manifests) =>
-            state = emitBatchManifests(spark, s, emitStream, df, manifests,
-              state, out)
-            StreamResult(s, -1, manifests)
-          }
+          written.map { case (s, emitStream, chunks) => announce(s, emitStream, chunks) }
         } finally pool.shutdown()
       case _ => active.map { s =>
         val (df, emitStream, smap) = planStream(s, state)
         tap.batchConfig match {
-          case Some(bc) =>
-            val manifests = BatchSink.write(df, emitStream, bc)
-            state = emitBatchManifests(spark, s, emitStream, df, manifests, state, out)
-            StreamResult(s, -1, manifests)
+          case Some(bc) => announce(s, emitStream, BatchSink.write(df, emitStream, bc))
           case None =>
             // a mapped stream's SCHEMA reflects the transformed shape
             val shape = if (smap.isDefined) df.schema else TypeMapper.structType(s.columns)
@@ -151,57 +158,6 @@ object Tap {
     SingerSink.emitState(state, out)
     statePath.foreach(p => Bookmarks.save(p, state, tap.streams))
     (results, state)
-  }
-
-  /** Batch-mode emission: one BATCH message per manifest, each followed by
-    * a STATE whose bookmark covers exactly the manifests ANNOUNCED so far —
-    * a target that persists the last STATE line before a crash resumes from
-    * the last chunk it actually received, never skipping one it didn't.
-    *
-    * The bookmark derives from the immutable JSONL files the sink just
-    * wrote (provably matches emitted rows without re-executing a possibly
-    * nondeterministic source): ONE distributed read-back computes the
-    * per-file max grouped by `input_file_name`, and the driver folds the
-    * cumulative max across manifests — O(#files) driver state, which is
-    * manifest metadata, not data. `timestampFormat` matches the sink's so
-    * temporal rep keys round-trip exactly.
-    */
-  private def emitBatchManifests(spark: SparkSession, s: StreamConfig,
-                                 emitStream: StreamConfig, df: DataFrame,
-                                 manifests: Seq[BatchManifest],
-                                 state0: TapState, out: PrintStream): TapState = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max}
-    def fileName(uri: String): String = uri.substring(uri.lastIndexOf('/') + 1)
-    var state = state0
-    val files = manifests.flatMap(_.files)
-    // (native max for type-correct ordering, its string cast for the
-    // bookmark) per written file
-    val maxByFile: Map[String, (Comparable[Any], String)] = s.replicationKey match {
-      case Some(k) if files.nonEmpty =>
-        spark.read.schema(df.schema)
-          .option("timestampFormat", graft.operators.Conformance.IsoTimestampPattern)
-          .json(files: _*)
-          .groupBy(input_file_name().as("__file"))
-          .agg(max(col(k)).as("rk"), max(col(k)).cast("string").as("rks"))
-          .collect()
-          .filterNot(_.isNullAt(1))
-          .map(r => fileName(r.getString(0)) -> (SingerSink.repKeyOrder(r.get(1)), r.getString(2)))
-          .toMap
-      case _ => Map.empty
-    }
-    var best: Comparable[Any] = null
-    var bestStr: String = null
-    manifests.foreach { m =>
-      SingerSink.emitBatch(emitStream, m, out)
-      m.files.flatMap(f => maxByFile.get(fileName(f))).foreach { case (v, vs) =>
-        if (best == null || v.compareTo(best) > 0) {
-          best = v; bestStr = vs
-        }
-      }
-      if (bestStr != null) state = state.advanced(s.streamId, bestStr)
-      SingerSink.emitState(state, out)
-    }
-    state
   }
 
   /** Parse a (possibly user-edited) Singer catalog and return the selected

@@ -58,9 +58,9 @@ object Conformance {
   val IsoTimestampPattern = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"
 
   /** Per-column expressions serializing timestamp/date columns to their
-    * reference JSON string forms — exposed so callers can combine the
-    * serialized struct with other columns in a single projection
-    * (SingerSink rides the replication key alongside the JSON line).
+    * reference JSON string forms — the record projection of
+    * `SingerSink.encode`, which both sinks write, with the replication key
+    * riding alongside the JSON line.
     */
   def temporalExprs(df: DataFrame): Seq[Column] =
     df.schema.fields.toSeq.map { f =>
@@ -70,11 +70,4 @@ object Conformance {
         case _ => col(f.name)
       }
     }
-
-  /** Serialize timestamp/date columns to their reference JSON string forms.
-    * Used before emitting Singer RECORD messages; the batch sink instead
-    * sets the writer's `timestampFormat` option.
-    */
-  def serializeTemporal(df: DataFrame): DataFrame =
-    df.select(temporalExprs(df): _*)
 }

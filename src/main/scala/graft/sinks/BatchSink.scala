@@ -1,16 +1,23 @@
 package graft.sinks
 
 import graft.config.{BatchConfig, StreamConfig}
-import graft.operators.Conformance
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path => HadoopPath}
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path => HadoopPath}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.util.SerializableConfiguration
+import java.io.{BufferedOutputStream, OutputStream}
 import java.util.UUID
+import java.util.zip.GZIPOutputStream
+import scala.collection.mutable.ArrayBuffer
 
 /** One emitted batch manifest: encoding + the files of one chunk
   * (reference: tap_rawpostgresql/client.py:234,245 yields
   * `(encoding, [file_url])` per chunk).
   */
 final case class BatchManifest(format: String, compression: String, files: Seq[String])
+
+/** One written chunk: its manifest, record count and replication-key max. */
+final case class BatchChunk(manifest: BatchManifest, records: Long, maxKey: MaxKey)
 
 /** Batch sink: gzip-compressed JSONL files of at most `batchSize` records,
   * named `{prefix}{tap}--{stream}-{uuid4}-{i}.json.gz`.
@@ -19,61 +26,86 @@ final case class BatchManifest(format: String, compression: String, files: Seq[S
   * `batch_size` records (client.py:228-239), final flush (client.py:241-245),
   * filename scheme (client.py:202,214).
   *
-  * Spark-first: the write itself is `DataFrameWriter.json` with
-  * `maxRecordsPerFile` — rotation and parallel IO are native and scale with
-  * partitions, unlike the reference's single sequential writer. All path
-  * handling goes through the Hadoop `FileSystem` API resolved from the
-  * root's scheme, so `batch_config.storage.root` accepts any configured
-  * filesystem URL (`file://`, `s3a://`, `gs://`, `hdfs://`, …) — the
-  * analog of the reference's fsspec root (client.py:211); the rename to
-  * the reference filename scheme is a metadata operation on that same
-  * filesystem.
+  * Spark-first: one job over the [[SingerSink.encode]]d rows — the same
+  * lines RECORD mode emits — in which each task streams its partition into
+  * chunk files and returns each chunk's record count and [[MaxKey]], so
+  * the bookmark comes from the single write pass and nothing is read back.
+  * Write parallelism scales with partitions, unlike the reference's single
+  * sequential writer. All path handling goes through the Hadoop
+  * `FileSystem` API resolved from the root's scheme, so
+  * `batch_config.storage.root` accepts any configured filesystem URL
+  * (`file://`, `s3a://`, `gs://`, `hdfs://`, …) — the analog of the
+  * reference's fsspec root (client.py:211); the rename to the reference
+  * filename scheme is a metadata operation on that same filesystem.
   */
 object BatchSink {
 
   def write(df: DataFrame, stream: StreamConfig, batch: BatchConfig,
-            tapName: String = "tap-rawpostgresql"): Seq[BatchManifest] = {
+            tapName: String = "tap-rawpostgresql"): Seq[BatchChunk] = {
     require(batch.encoding.format == "jsonl",
       s"unsupported batch format: ${batch.encoding.format}")
     // Normalize before reporting: anything other than gzip writes plain
     // .json, and the manifest must say what was actually applied.
     val gzip = batch.encoding.compression == "gzip"
     val appliedCompression = if (gzip) "gzip" else "none"
+    val ext = if (gzip) ".json.gz" else ".json"
     val root = new HadoopPath(
       if (batch.storage.root.contains(":")) batch.storage.root
       else s"file://${batch.storage.root}")
-    val fs: FileSystem =
-      root.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-    fs.mkdirs(root)
+    val conf = new SerializableConfiguration(df.sparkSession.sessionState.newHadoopConf())
+    val fs = root.getFileSystem(conf.value)
     val outDir = new HadoopPath(root, s"graft-batch-${UUID.randomUUID()}")
+    fs.mkdirs(outDir)
 
-    val writer = df.write
-      .option("maxRecordsPerFile", stream.batchSize.toString)
-      .option("timestampFormat", Conformance.IsoTimestampPattern)
-    (if (gzip) writer.option("compression", "gzip") else writer)
-      .json(outDir.toString)
+    val encoded = SingerSink.encode(df, stream)
+    val keyType = encoded.schema.fields.lift(1).map(_.dataType) // of `rk`, if any
+    try {
+      // internal rows: each line's UTF-8 bytes go to the file as encoded
+      val written = encoded.queryExecution.toRdd.mapPartitionsWithIndex { (part, rows) =>
+        val taskFs = outDir.getFileSystem(conf.value)
+        // per attempt: a retried or speculative attempt never writes over
+        // another's file; only successful attempts' names reach the driver
+        val attempt = TaskContext.get().taskAttemptId()
+        val chunks = ArrayBuffer.empty[(String, Long, MaxKey)]
+        def name = s"part-$part-$attempt-${chunks.length}$ext"
+        var out: OutputStream = null
+        var n = 0L
+        var max: MaxKey = null
+        def finish(): Unit = { out.close(); out = null; chunks += ((name, n, max)) }
+        try {
+          rows.foreach { row =>
+            if (out == null) { // opened on a chunk's first row: no empty files
+              // non-recursive: a straggler cannot recreate a deleted staging dir
+              val raw = taskFs.createFile(new HadoopPath(outDir, name)).overwrite(false).build()
+              out = new BufferedOutputStream(if (gzip) new GZIPOutputStream(raw) else raw, 1 << 16)
+              n = 0L
+              max = new MaxKey
+            }
+            row.getUTF8String(0).writeTo(out)
+            out.write('\n')
+            n += 1
+            keyType.foreach(t => max.add(row.get(1, t), row.getUTF8String(2).toString))
+            if (n == stream.batchSize) finish()
+          }
+          if (out != null) finish()
+        } finally if (out != null) out.close()
+        chunks.iterator
+      }.collect()
 
-    val ext = if (gzip) ".json.gz" else ".json"
-    val parts = fs.listStatus(outDir).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(ext))
-      .sortBy(_.getName)
-      .toSeq
-
-    val syncId = UUID.randomUUID().toString
-    // a checksummed filesystem (the local one) would move each part's
-    // `.crc` sidecar into the root too; the raw one leaves it in outDir
-    val renameFs = fs match { case c: ChecksumFileSystem => c.getRawFileSystem; case o => o }
-    val renamed = parts.zipWithIndex.map { case (p, i) =>
-      val name = s"${batch.storage.prefix}$tapName--${stream.name}-$syncId-$i$ext"
-      val target = new HadoopPath(root, name)
-      if (!renameFs.rename(p, target))
-        throw new java.io.IOException(s"rename $p -> $target failed")
-      target
-    }
-    fs.delete(outDir, true) // _SUCCESS + any stragglers
-
-    // one manifest per chunk file, matching the reference's per-chunk yield
-    renamed.map(p => BatchManifest(batch.encoding.format,
-      appliedCompression, Seq(p.toUri.toString)))
+      val syncId = UUID.randomUUID().toString
+      // a checksummed filesystem (the local one) would move each chunk's
+      // `.crc` sidecar into the root too; the raw one leaves it in outDir
+      val renameFs = fs match { case c: ChecksumFileSystem => c.getRawFileSystem; case o => o }
+      // one manifest per chunk file, matching the reference's per-chunk yield
+      written.toSeq.zipWithIndex.map { case ((staged, n, max), i) =>
+        val source = new HadoopPath(outDir, staged)
+        val target = new HadoopPath(root,
+          s"${batch.storage.prefix}$tapName--${stream.name}-$syncId-$i$ext")
+        if (!renameFs.rename(source, target))
+          throw new java.io.IOException(s"rename $source -> $target failed")
+        BatchChunk(BatchManifest(batch.encoding.format, appliedCompression,
+          Seq(target.toUri.toString)), n, max)
+      }
+    } finally fs.delete(outDir, true) // sidecars, failed attempts' files
   }
 }

@@ -47,19 +47,33 @@ object SingerSink {
     line(out, msg)
   }
 
-  /** Emit RECORD messages. The DataFrame's JSON encoding happens
-    * distributed (executor-side `to_json`); only the enveloped lines stream
-    * through the driver. `ignoreNullFields=false` so null-valued columns
-    * appear as explicit JSON nulls — `df.toJSON` would drop them, but the
-    * reference/singer_sdk emits every declared column in each RECORD and
-    * strict Singer targets check schema parity.
+  /** The one row encoding both sinks write. Column `j` is the record's
+    * JSON, encoded distributed (executor-side `to_json`), with timestamps
+    * and dates in their reference string forms. `ignoreNullFields=false`
+    * so null-valued columns appear as explicit JSON nulls — `df.toJSON`
+    * would drop them, but the reference/singer_sdk emits every declared
+    * column in each record and strict Singer targets check schema parity.
+    * With a replication key, `rk` carries it natively (type-correct
+    * ordering: numbers must not compare lexicographically) and `rks` its
+    * Spark string cast, the bookmark rendering (see [[MaxKey]]).
+    */
+  def encode(df: DataFrame, stream: StreamConfig): DataFrame = {
+    import org.apache.spark.sql.functions.{col, struct, to_json}
+    val j = to_json(struct(Conformance.temporalExprs(df): _*),
+      java.util.Map.of("ignoreNullFields", "false")).as("j")
+    stream.replicationKey match {
+      case Some(k) => df.select(j, col(k).as("rk"), col(k).cast("string").as("rks"))
+      case None => df.select(j)
+    }
+  }
+
+  /** Emit RECORD messages: only the [[encode]]d lines, enveloped, stream
+    * through the driver.
     *
     * Returns (records emitted, max replication-key value among them as its
     * Spark string cast). The bookmark is tracked INSIDE the single emit
-    * pass — the rep key rides alongside each JSON line (natively, for
-    * type-correct ordering; numbers must not compare lexicographically) —
-    * so the stream is executed exactly once: no second max() job that a
-    * nondeterministic source could answer differently, and no
+    * pass, so the stream is executed exactly once: no second max() job
+    * that a nondeterministic source could answer differently, and no
     * full-stream persist to keep the two executions consistent
     * (singer_sdk likewise derives state from processed records). O(1)
     * driver state; `toLocalIterator` holds at most one partition.
@@ -75,17 +89,6 @@ object SingerSink {
                   timeExtracted: Option[String] = None,
                   stateEvery: Long = Long.MaxValue,
                   onProgress: Option[String] => Unit = _ => ()): (Long, Option[String]) = {
-    import org.apache.spark.sql.functions.{col, struct, to_json}
-    val jsonCol = to_json(struct(Conformance.temporalExprs(df): _*),
-      java.util.Map.of("ignoreNullFields", "false"))
-    val projected = stream.replicationKey match {
-      // cast BEFORE the max is picked, but argmax(native) then its string
-      // == cast(max(native)): same bookmark rendering Bookmarks.advance
-      // produced from a whole-column max
-      case Some(k) => df.select(jsonCol.as("j"),
-        col(k).as("rk"), col(k).cast("string").as("rks"))
-      case None => df.select(jsonCol.as("j"))
-    }
     var n = 0L
     // The envelope is rendered once and split around its `"record":null`
     // (unique: a `"` inside a JSON string is escaped), so a row costs one
@@ -96,34 +99,17 @@ object SingerSink {
     val rendered = render(envelope)
     val slot = rendered.indexOf("\"record\":null") + "\"record\":".length
     val (prefix, suffix) = (rendered.take(slot), rendered.drop(slot + "null".length))
-    val hasRk = stream.replicationKey.isDefined
-    var best: Comparable[Any] = null
-    var bestStr: String = null
-    val it = projected.toLocalIterator()
+    val max = new MaxKey
+    val it = encode(df, stream).toLocalIterator()
     while (it.hasNext) {
       val row = it.next()
       out.println(prefix + row.getString(0) + suffix)
-      if (hasRk && !row.isNullAt(1)) {
-        val v = repKeyOrder(row.get(1))
-        if (best == null || v.compareTo(best) > 0) {
-          best = v
-          bestStr = row.getString(2)
-        }
-      }
+      if (row.length > 1) max.add(row.get(1), row.getString(2))
       n += 1
-      if (n % stateEvery == 0) onProgress(Option(bestStr))
+      if (n % stateEvery == 0) onProgress(max.value)
     }
-    (n, Option(bestStr))
+    (n, max.value)
   }
-
-  /** A replication-key value in Spark's max() order: a String compares as
-    * UTF8String (UTF-8 byte order), not by its UTF-16 code units, so
-    * bookmarks agree with `max()` on supplementary-plane values.
-    */
-  private[graft] def repKeyOrder(v: Any): Comparable[Any] = (v match {
-    case s: String => UTF8String.fromString(s)
-    case other => other
-  }).asInstanceOf[Comparable[Any]]
 
   /** `ACTIVATE_VERSION` — the singer_sdk FULL_TABLE resync handshake: a
     * version stamp emitted after the sync's last RECORD tells a
@@ -178,4 +164,35 @@ object SingerSink {
     }
     line(out, msg)
   }
+}
+
+/** The running max of a stream's replication key over [[SingerSink.encode]]d
+  * rows, in Spark's max() order, keeping the winner's string cast as the
+  * bookmark: argmax(native) then its string == cast(max(native)), the
+  * rendering `Bookmarks.advance` produced from a whole-column max. A String
+  * compares as UTF8String (UTF-8 byte order), not by its UTF-16 code units,
+  * so bookmarks agree with `max()` on supplementary-plane values.
+  * Serializable: batch write tasks return one per chunk.
+  */
+final class MaxKey extends Serializable {
+  private var best: Comparable[Any] = _
+  private var bookmark: String = _
+
+  /** Offer one row's `rk` — all in Spark's external or all in its internal
+    * form; null leaves the max alone — and its `rks`, evaluated only when
+    * the key wins. An internal string is copied: it can point into a row
+    * buffer the next row reuses.
+    */
+  def add(key: Any, rks: => String): Unit = if (key != null) offer((key match {
+    case s: String => UTF8String.fromString(s)
+    case u: UTF8String => u.clone()
+    case o => o
+  }).asInstanceOf[Comparable[Any]], rks)
+
+  def merge(other: MaxKey): Unit = if (other.best != null) offer(other.best, other.bookmark)
+
+  private def offer(v: Comparable[Any], rks: => String): Unit =
+    if (best == null || v.compareTo(best) > 0) { best = v; bookmark = rks }
+
+  def value: Option[String] = Option(bookmark)
 }

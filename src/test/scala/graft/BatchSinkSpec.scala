@@ -1,7 +1,7 @@
 package graft
 
 import graft.config.{BatchConfig, BatchEncoding, BatchStorage, ConfigParser}
-import graft.sinks.BatchSink
+import graft.sinks.{BatchChunk, BatchSink}
 import graft.sources.StreamSource
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.file.{Files, Paths}
@@ -24,6 +24,12 @@ class MockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 class BatchSinkSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  private def gzipBatch(tmp: String) =
+    BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"file://$tmp"))
+
+  private def chunkLines(c: BatchChunk): Seq[String] =
+    gunzipLines(Paths.get(java.net.URI.create(c.manifest.files.head)).toString)
+
   private def gunzipLines(path: String): Seq[String] = {
     val in = new BufferedReader(new InputStreamReader(
       new GZIPInputStream(Files.newInputStream(Paths.get(path))), "UTF-8"))
@@ -39,7 +45,7 @@ class BatchSinkSpec extends AnyFunSuite {
         |"columns":[{"name":"id","type":"string"},{"name":"last_updated","type":"datetime"}]}""".stripMargin)
     val df = StreamSource.native(spark, s)
     val manifests = BatchSink.write(df, s,
-      BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"file://$tmp")))
+      BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"file://$tmp"))).map(_.manifest)
     assert(manifests.nonEmpty)
     val file = Paths.get(java.net.URI.create(manifests.head.files.head))
     assert(file.getFileName.toString.matches(
@@ -64,7 +70,7 @@ class BatchSinkSpec extends AnyFunSuite {
         |"columns":[{"name":"id","type":"bigint"}]}""".stripMargin)
     val df = StreamSource.native(spark, s).coalesce(1)
     val manifests = BatchSink.write(df, s,
-      BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"mockfs://$tmp")))
+      BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"mockfs://$tmp"))).map(_.manifest)
     assert(manifests.length === 2) // 7 records, batch_size 4 → 4/3
     assert(manifests.forall(_.files.head.startsWith("mockfs:")))
     val counts = manifests.map { m =>
@@ -81,7 +87,7 @@ class BatchSinkSpec extends AnyFunSuite {
         |"columns":[{"name":"id","type":"bigint"}]}""".stripMargin)
     val df = StreamSource.native(spark, s).coalesce(1)
     val manifests = BatchSink.write(df, s,
-      BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"file://$tmp")))
+      BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"file://$tmp"))).map(_.manifest)
     // 12 records, batch_size 5 → 3 chunk files (5/5/2), one manifest each
     assert(manifests.length === 3)
     val counts = manifests.map(m =>
@@ -90,5 +96,75 @@ class BatchSinkSpec extends AnyFunSuite {
     val total = Files.list(Paths.get(tmp)).iterator.asScala
       .count(_.getFileName.toString.endsWith(".json.gz"))
     assert(total === 3)
+  }
+
+  // The write pass itself reports each chunk's count and bookmark: both
+  // must equal what reading the chunk back finds, for a numeric, a string
+  // and a temporal key (whose file form is ISO, its bookmark Spark's
+  // string cast).
+  test("each chunk's records and max key match its file") {
+    val tmp = Files.createTempDirectory("graft-batch-max").toString
+    val sql = "SELECT id, (id * 37) % 23 AS k, CAST((id * 37) % 23 AS STRING) AS sk, " +
+      "timestamp_micros(1637581511062824 + ((id * 7919) % 23) * 1000001) AS ts FROM range(0, 23, 1, 3)"
+    def stream(key: String) = ConfigParser.parseStream(
+      s"""{"name":"m","sql":"$sql",
+         |"key_properties":["id"],"replication_key":"$key","batch_size":3,
+         |"replication_key_value_start":"1970-01-01",
+         |"columns":[{"name":"id","type":"bigint"},{"name":"k","type":"bigint"},{"name":"sk","type":"text"},
+         |  {"name":"ts","type":"datetime"}]}""".stripMargin)
+    for (key <- Seq("k", "sk", "ts")) {
+      val s = stream(key)
+      val df = StreamSource.native(spark, s)
+      val chunks = BatchSink.write(df, s, gzipBatch(tmp))
+      // 3 partitions of 7/8/8 rows, rotated at 3 → 3 chunks each
+      assert(chunks.map(_.records) === Seq(3, 3, 1, 3, 3, 2, 3, 3, 2))
+      chunks.foreach { c =>
+        assert(chunkLines(c).length === c.records)
+        val readBack = spark.read.schema(df.schema)
+          .option("timestampFormat", graft.operators.Conformance.IsoTimestampPattern)
+          .json(c.manifest.files.head)
+          .selectExpr(s"CAST(max($key) AS STRING)").head().getString(0)
+        assert(c.maxKey.value === Some(readBack))
+      }
+    }
+  }
+
+  // Partition 0 of this source is empty after the filter; a chunk file is
+  // only opened on its first row, so no manifest names an empty file.
+  test("empty partitions announce no empty chunk") {
+    val tmp = Files.createTempDirectory("graft-batch-empty").toString
+    val s = ConfigParser.parseStream(
+      """{"name":"e","sql":"SELECT id FROM range(0, 6, 1, 3) WHERE id >= 2","key_properties":["id"],
+        |"batch_size":5,"columns":[{"name":"id","type":"bigint"}]}""".stripMargin)
+    val chunks = BatchSink.write(StreamSource.native(spark, s), s, gzipBatch(tmp))
+    assert(chunks.map(chunkLines(_).length) === Seq(2, 2))
+    assert(chunks.map(_.records) === Seq(2, 2))
+  }
+
+  // Batch lines are the RECORD mode encoding: every declared column,
+  // null-valued ones as explicit JSON nulls (as the reference writes them).
+  test("batch lines carry null-valued columns as explicit nulls") {
+    val tmp = Files.createTempDirectory("graft-batch-null").toString
+    val s = ConfigParser.parseStream(
+      """{"name":"n","sql":"SELECT 'a' AS one, CAST(NULL AS INT) AS two","key_properties":["one"],
+        |"columns":[{"name":"one","type":"text"},{"name":"two","type":"int","nullable":true}]}""".stripMargin)
+    val chunks = BatchSink.write(StreamSource.native(spark, s), s, gzipBatch(tmp))
+    assert(chunks.flatMap(chunkLines) === Seq("""{"one":"a","two":null}"""))
+  }
+
+  // A row of a later partition fails the write job after other tasks have
+  // written their chunks: the sink deletes its staging dir before
+  // rethrowing, so the root holds nothing.
+  test("a failed write job leaves the batch root empty") {
+    val tmp = Files.createTempDirectory("graft-batch-fail").toString
+    val s = ConfigParser.parseStream(
+      """{"name":"f","key_properties":["id"],"batch_size":2,
+        |"sql":"SELECT id, CASE WHEN id = 10 THEN raise_error('boom') ELSE id END AS v FROM range(0, 12, 1, 4)",
+        |"columns":[{"name":"id","type":"bigint"},{"name":"v","type":"bigint"}]}""".stripMargin)
+    val e = intercept[Exception](
+      BatchSink.write(StreamSource.native(spark, s), s, gzipBatch(tmp)))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")))
+    assert(new java.io.File(tmp).list().isEmpty)
   }
 }

@@ -243,10 +243,9 @@ class TapSpec extends AnyFunSuite {
     assert(last.contains(""""replication_key_value":"4""""))
   }
 
-  // Batch mode re-reads max(rep_key) from the immutable files the sink
-  // just wrote — the stream itself executes exactly once, and temporal rep
-  // keys round-trip through the sink's ISO timestampFormat back to the
-  // exact Spark string-cast bookmark rendering.
+  // Batch mode tracks max(rep_key) inside the single write pass — the
+  // stream executes exactly once, and a temporal rep key's bookmark is the
+  // exact Spark string-cast rendering RECORD mode commits.
   test("batch mode derives bookmark from the files just written") {
     val tmp = Files.createTempDirectory("graft-batch-state").toString
     val tap = ConfigParser.parseTap(
@@ -265,6 +264,7 @@ class TapSpec extends AnyFunSuite {
     val buf = new ByteArrayOutputStream()
     val (res, st) = Tap.syncAll(spark, tap, None, new PrintStream(buf, true, "UTF-8"))
     assert(res.forall(_.manifests.nonEmpty))
+    assert(res.head.records === 7)
     assert(st.bookmark("db1-public-b1") === Some("6"))
     assert(st.bookmark("db1-public-b2") === Some("2021-11-22 11:45:11.062824"))
 

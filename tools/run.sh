@@ -3,6 +3,9 @@
 # (bypasses sbt JVM startup). Usage: tools/run.sh graft.Verify <args...>
 set -e
 CLASS="$1"; shift
+# this checkout's classes, with the Spark jars its build compiles against
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+JARS="$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")"
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -16,5 +19,5 @@ exec java $ADDOPENS \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$JARS/*" \
   "$CLASS" "$@"
