@@ -72,17 +72,24 @@ object Tap {
       (df, emitStream, smap)
     }
     // Batch-mode emission: one BATCH message per chunk, each followed by a
-    // STATE whose bookmark covers exactly the chunks ANNOUNCED so far — a
-    // target that persists the last STATE line before a crash resumes from
-    // the last chunk it actually received, never skipping one it didn't.
+    // STATE over the chunks ANNOUNCED so far. A sorted stream commits that
+    // max — a target that persists the last STATE line before a crash
+    // resumes from the last chunk it actually received. An unsorted
+    // stream's later chunks may still hold rows below it, so, as in RECORD
+    // mode, it rides in progress markers until the last chunk commits it.
     def announce(s: StreamConfig, emitStream: StreamConfig,
                  chunks: Seq[BatchChunk]): StreamResult = {
       val max = new MaxKey
-      chunks.foreach { c =>
+      chunks.zipWithIndex.foreach { case (c, i) =>
         SingerSink.emitBatch(emitStream, c.manifest, out)
         max.merge(c.maxKey)
-        max.value.foreach(v => state = state.advanced(s.streamId, v))
-        SingerSink.emitState(state, out)
+        (max.value, s.replicationKey) match {
+          case (Some(v), Some(k)) if !s.isSorted && i < chunks.size - 1 =>
+            SingerSink.emitState(state, out, Some(SingerSink.Progress(s.streamId, k, v)))
+          case (committed, _) =>
+            committed.foreach(v => state = state.advanced(s.streamId, v))
+            SingerSink.emitState(state, out)
+        }
       }
       StreamResult(s, chunks.map(_.records).sum, chunks.map(_.manifest))
     }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.util.SerializableConfiguration
 import java.io.{BufferedOutputStream, OutputStream}
 import java.util.UUID
-import java.util.zip.GZIPOutputStream
 import scala.collection.mutable.ArrayBuffer
 
 /** One emitted batch manifest: encoding + the files of one chunk
@@ -30,8 +29,13 @@ final case class BatchChunk(manifest: BatchManifest, records: Long, maxKey: MaxK
   * lines RECORD mode emits — in which each task streams its partition into
   * chunk files and returns each chunk's record count and [[MaxKey]], so
   * the bookmark comes from the single write pass and nothing is read back.
-  * Write parallelism scales with partitions, unlike the reference's single
-  * sequential writer. All path handling goes through the Hadoop
+  * Each task gzips through a [[BlockGzipOutputStream]]: it holds one slot
+  * of the executor's [[CoreBudget]] while it runs, and its 256 KB deflate
+  * blocks go to helper threads while slots are free, so compression uses
+  * the idle cores even when the source has fewer partitions than the
+  * executor has cores (the reference has one sequential writer). With as
+  * many busy partitions as cores, each task deflates its own blocks.
+  * All path handling goes through the Hadoop
   * `FileSystem` API resolved from the root's scheme, so
   * `batch_config.storage.root` accepts any configured filesystem URL
   * (`file://`, `s3a://`, `gs://`, `hdfs://`, …) — the analog of the
@@ -62,34 +66,36 @@ object BatchSink {
     try {
       // internal rows: each line's UTF-8 bytes go to the file as encoded
       val written = encoded.queryExecution.toRdd.mapPartitionsWithIndex { (part, rows) =>
-        val taskFs = outDir.getFileSystem(conf.value)
-        // per attempt: a retried or speculative attempt never writes over
-        // another's file; only successful attempts' names reach the driver
-        val attempt = TaskContext.get().taskAttemptId()
-        val chunks = ArrayBuffer.empty[(String, Long, MaxKey)]
-        def name = s"part-$part-$attempt-${chunks.length}$ext"
-        var out: OutputStream = null
-        var n = 0L
-        var max: MaxKey = null
-        def finish(): Unit = { out.close(); out = null; chunks += ((name, n, max)) }
-        try {
-          rows.foreach { row =>
-            if (out == null) { // opened on a chunk's first row: no empty files
-              // non-recursive: a straggler cannot recreate a deleted staging dir
-              val raw = taskFs.createFile(new HadoopPath(outDir, name)).overwrite(false).build()
-              out = new BufferedOutputStream(if (gzip) new GZIPOutputStream(raw) else raw, 1 << 16)
-              n = 0L
-              max = new MaxKey
+        CoreBudget.shared.holding {
+          val taskFs = outDir.getFileSystem(conf.value)
+          // per attempt: a retried or speculative attempt never writes over
+          // another's file; only successful attempts' names reach the driver
+          val attempt = TaskContext.get().taskAttemptId()
+          val chunks = ArrayBuffer.empty[(String, Long, MaxKey)]
+          def name = s"part-$part-$attempt-${chunks.length}$ext"
+          var out: OutputStream = null
+          var n = 0L
+          var max: MaxKey = null
+          def finish(): Unit = { out.close(); out = null; chunks += ((name, n, max)) }
+          try {
+            rows.foreach { row =>
+              if (out == null) { // opened on a chunk's first row: no empty files
+                // non-recursive: a straggler cannot recreate a deleted staging dir
+                val raw = taskFs.createFile(new HadoopPath(outDir, name)).overwrite(false).build()
+                out = if (gzip) new BlockGzipOutputStream(raw) else new BufferedOutputStream(raw, 1 << 16)
+                n = 0L
+                max = new MaxKey
+              }
+              row.getUTF8String(0).writeTo(out)
+              out.write('\n')
+              n += 1
+              keyType.foreach(t => max.add(row.get(1, t), row.getUTF8String(2).toString))
+              if (n == stream.batchSize) finish()
             }
-            row.getUTF8String(0).writeTo(out)
-            out.write('\n')
-            n += 1
-            keyType.foreach(t => max.add(row.get(1, t), row.getUTF8String(2).toString))
-            if (n == stream.batchSize) finish()
-          }
-          if (out != null) finish()
-        } finally if (out != null) out.close()
-        chunks.iterator
+            if (out != null) finish()
+          } finally if (out != null) out.close()
+          chunks.iterator
+        }
       }.collect()
 
       val syncId = UUID.randomUUID().toString

@@ -5,6 +5,7 @@ import graft.operators.Conformance
 import graft.state.{Bookmarks, TapState}
 import graft.types.TypeMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Stream execution: turn a `StreamConfig` into a `DataFrame`.
   *
@@ -43,17 +44,14 @@ object StreamSource {
       SqlDialect.rewrite(stream.sql), start, repKeyType)
     // PG '...' literals are backslash-LITERAL (standard_conforming_strings,
     // PG default since 9.1); Spark's parser processes \-escapes unless
-    // escapedStringLiterals is on. Scope the PG semantics to this parse so
-    // regex/SIMILAR TO patterns like '\d+' or 'NATION\.5' survive intact.
-    val escKey = "spark.sql.parser.escapedStringLiterals"
-    val prevEsc = spark.conf.getOption(escKey)
+    // escapedStringLiterals is on. The parse runs under a clone of the
+    // session conf with it on, so regex/SIMILAR TO patterns like '\d+' or
+    // 'NATION\.5' survive intact, and the shared conf — which concurrent
+    // plannings (sync_parallelism) and other queries read — is never set.
     PgFunctions.ensureRegistered(spark)
-    val df =
-      try { spark.conf.set(escKey, "true"); spark.sql(sql) }
-      finally { prevEsc match {
-        case Some(v) => spark.conf.set(escKey, v)
-        case None => spark.conf.unset(escKey)
-      } }
+    val parseConf = spark.sessionState.conf.clone()
+    parseConf.setConfString("spark.sql.parser.escapedStringLiterals", "true")
+    val df = SQLConf.withExistingConf(parseConf)(spark.sql(sql))
     // flattening enabled + declared json_columns ⇒ those string values
     // (PG json/jsonb through SQL) first parse through the bounded
     // schema-inference hop, then expand like any struct; undeclared

@@ -38,4 +38,15 @@ object GraftBridge {
     if (!cs.experimental.extraStrategies.contains(s))
       cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ s
   }
+
+  /** Task slots of this JVM's executor: `N` of a `local[N]` master (local
+    * mode runs tasks in the driver), `spark.executor.cores` on a cluster.
+    */
+  def executorCores: Int = {
+    import org.apache.spark.SparkContext
+    val env = org.apache.spark.SparkEnv.get
+    if (env.executorId == SparkContext.DRIVER_IDENTIFIER)
+      SparkContext.numDriverCores(env.conf.get("spark.master"), env.conf)
+    else env.conf.getInt("spark.executor.cores", Runtime.getRuntime.availableProcessors)
+  }
 }

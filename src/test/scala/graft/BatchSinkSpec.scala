@@ -101,23 +101,31 @@ class BatchSinkSpec extends AnyFunSuite {
   // The write pass itself reports each chunk's count and bookmark: both
   // must equal what reading the chunk back finds, for a numeric, a string
   // and a temporal key (whose file form is ISO, its bookmark Spark's
-  // string cast).
+  // string cast) — in small chunks, and in chunks that span several
+  // 256 KB gzip blocks (a padded 30k-row source rotated at 4000 rows).
   test("each chunk's records and max key match its file") {
     val tmp = Files.createTempDirectory("graft-batch-max").toString
-    val sql = "SELECT id, (id * 37) % 23 AS k, CAST((id * 37) % 23 AS STRING) AS sk, " +
-      "timestamp_micros(1637581511062824 + ((id * 7919) % 23) * 1000001) AS ts FROM range(0, 23, 1, 3)"
-    def stream(key: String) = ConfigParser.parseStream(
-      s"""{"name":"m","sql":"$sql",
-         |"key_properties":["id"],"replication_key":"$key","batch_size":3,
+    def sql(n: Int, pad: Int) = "SELECT id, (id * 37) % 23 AS k, CAST((id * 37) % 23 AS STRING) AS sk, " +
+      s"timestamp_micros(1637581511062824 + ((id * 7919) % 23) * 1000001) AS ts, " +
+      s"repeat(CAST(id AS STRING), $pad) AS pad FROM range(0, $n, 1, 3)"
+    def stream(key: String, n: Int, pad: Int, batchSize: Int) = ConfigParser.parseStream(
+      s"""{"name":"m","sql":"${sql(n, pad)}",
+         |"key_properties":["id"],"replication_key":"$key","batch_size":$batchSize,
          |"replication_key_value_start":"1970-01-01",
          |"columns":[{"name":"id","type":"bigint"},{"name":"k","type":"bigint"},{"name":"sk","type":"text"},
-         |  {"name":"ts","type":"datetime"}]}""".stripMargin)
-    for (key <- Seq("k", "sk", "ts")) {
-      val s = stream(key)
+         |  {"name":"ts","type":"datetime"},{"name":"pad","type":"text"}]}""".stripMargin)
+    for ((n, pad, batchSize, counts) <- Seq(
+           // 3 partitions of 7/8/8 rows, rotated at 3 → 3 chunks each
+           (23, 0, 3, Seq(3, 3, 1, 3, 3, 2, 3, 3, 2)),
+           // 3 partitions of 10000 rows of ~150 bytes: ~600 KB chunks
+           (30000, 30, 4000, Seq(4000, 4000, 2000, 4000, 4000, 2000, 4000, 4000, 2000)));
+         key <- Seq("k", "sk", "ts")) {
+      val s = stream(key, n, pad, batchSize)
       val df = StreamSource.native(spark, s)
       val chunks = BatchSink.write(df, s, gzipBatch(tmp))
-      // 3 partitions of 7/8/8 rows, rotated at 3 → 3 chunks each
-      assert(chunks.map(_.records) === Seq(3, 3, 1, 3, 3, 2, 3, 3, 2))
+      assert(chunks.map(_.records) === counts)
+      if (pad > 0) assert(chunks.forall(c =>
+        chunkLines(c).map(_.length + 1).sum > graft.sinks.BlockGzipOutputStream.BlockSize))
       chunks.foreach { c =>
         assert(chunkLines(c).length === c.records)
         val readBack = spark.read.schema(df.schema)
@@ -165,6 +173,21 @@ class BatchSinkSpec extends AnyFunSuite {
       BatchSink.write(StreamSource.native(spark, s), s, gzipBatch(tmp)))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("boom")))
+    assert(new java.io.File(tmp).list().isEmpty)
+
+    // The same failure while every task has gzip blocks in flight on
+    // helpers: each task's close drains them, so every core slot comes
+    // back once the killed tasks have stopped. A leaked slot would
+    // serialize every later write in this JVM.
+    val budget = graft.sinks.CoreBudget.shared
+    val wide = ConfigParser.parseStream(
+      """{"name":"f","key_properties":["id"],
+        |"sql":"SELECT id, CASE WHEN id = 250000 THEN raise_error('boom') ELSE id END AS v, repeat('x', 100) AS pad FROM range(0, 400000, 1, 4)",
+        |"columns":[{"name":"id","type":"bigint"},{"name":"v","type":"bigint"},{"name":"pad","type":"text"}]}""".stripMargin)
+    intercept[Exception](BatchSink.write(StreamSource.native(spark, wide), wide, gzipBatch(tmp)))
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (budget.available != budget.cores && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(budget.available === budget.cores)
     assert(new java.io.File(tmp).list().isEmpty)
   }
 }

@@ -97,4 +97,32 @@ class StreamSourceSpec extends AnyFunSuite {
     val st = Bookmarks.advance(s, df, Bookmarks.empty)
     assert(st.bookmark("postgres-public-adv") === Some("7"))
   }
+
+  // native parses with PG literal semantics (backslash literal) under a
+  // private clone of the session conf. Under sync_parallelism several
+  // plannings run at once; none may flip the shared setting, which every
+  // other query on the session parses with.
+  test("concurrent native plannings leave the session's string escaping alone") {
+    val key = "spark.sql.parser.escapedStringLiterals"
+    val before = spark.conf.getOption(key)
+    val s = ConfigParser.parseStream(
+      """{"name":"esc","sql":"SELECT regexp_extract('a12b', '\\d+', 0) AS d","key_properties":["d"],
+        |"columns":[{"name":"d","type":"text"}]}""".stripMargin)
+    // Spark's default escaping drops the backslash of an unknown escape
+    def shared(): String = spark.sql("SELECT '\\d' AS x").head().getString(0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
+    try {
+      val jobs = (0 until 60).map { i =>
+        pool.submit(new java.util.concurrent.Callable[String] {
+          def call(): String =
+            if (i % 2 == 0) StreamSource.native(spark, s).head().getString(0) else shared()
+        })
+      }
+      val got = jobs.map(_.get())
+      assert(got.zipWithIndex.forall { case (g, i) => g == (if (i % 2 == 0) "12" else "d") },
+        got.distinct.mkString(", "))
+    } finally pool.shutdown()
+    assert(spark.conf.getOption(key) === before)
+    assert(shared() === "d")
+  }
 }

@@ -246,14 +246,18 @@ class TapSpec extends AnyFunSuite {
   // Batch mode tracks max(rep_key) inside the single write pass — the
   // stream executes exactly once, and a temporal rep key's bookmark is the
   // exact Spark string-cast rendering RECORD mode commits.
-  test("batch mode derives bookmark from the files just written") {
+  /** Batch sync of an incremental `b1` (7 rows over 4 partitions, so 4
+    * chunks) and a one-row `b2`; returns b1's per-chunk STATE entries as
+    * (committed, progress marker) bookmarks, after the shared checks.
+    */
+  private def batchBookmarks(sorted: Boolean): Seq[(Option[Int], Option[Int])] = {
     val tmp = Files.createTempDirectory("graft-batch-state").toString
     val tap = ConfigParser.parseTap(
       s"""{"database":"db1",
          |"batch_config":{"encoding":{"format":"jsonl","compression":"gzip"},
          |  "storage":{"root":"file://$tmp"}},
          |"streams":[
-         |{"name":"b1","sql":"SELECT id FROM range(7) WHERE id > :rep_key_val",
+         |{"name":"b1","sql":"SELECT id FROM range(7) WHERE id > :rep_key_val","is_sorted":$sorted,
          | "key_properties":["id"],"replication_key":"id","replication_key_value_start":-1,
          | "columns":[{"name":"id","type":"bigint"}]},
          |{"name":"b2","sql":"SELECT timestamptz '2021-11-22T11:45:11.062824+00:00' AS ts",
@@ -268,20 +272,16 @@ class TapSpec extends AnyFunSuite {
     assert(st.bookmark("db1-public-b1") === Some("6"))
     assert(st.bookmark("db1-public-b2") === Some("2021-11-22 11:45:11.062824"))
 
-    // one BATCH message per manifest, each followed by a STATE covering
-    // exactly the chunks announced so far (resumable batch extraction)
+    // one BATCH message per manifest, each followed by its STATE
     val lines = buf.toString("UTF-8").split("\n")
     val nManifests = res.map(_.manifests.size).sum
     assert(lines.count(_.contains(""""type":"BATCH"""")) === nManifests)
     assert(lines.count(_.contains(""""type":"STATE"""")) === nManifests + 1)
-    val b1Bookmarks = lines
-      .filter(l => l.contains(""""type":"STATE"""") && l.contains("db1-public-b1"))
-      .map(l => """db1-public-b1":\{"replication_key_value":"(\d+)"""".r
-        .findFirstMatchIn(l).get.group(1).toInt).toSeq
-    assert(b1Bookmarks === b1Bookmarks.sorted, "per-manifest bookmarks must be monotone")
-    assert(b1Bookmarks.last === 6)
-    val firstBatch = lines.indexWhere(_.contains(""""type":"BATCH""""))
-    assert(lines(firstBatch + 1).contains(""""type":"STATE""""),
+    val b1Batches = lines.indices.filter(i =>
+      lines(i).contains(""""type":"BATCH"""") && lines(i).contains(""""stream":"b1""""))
+    assert(b1Batches.size === res.head.manifests.size)
+    assert(b1Batches.size > 1)
+    assert(b1Batches.forall(i => lines(i + 1).contains(""""type":"STATE"""")),
       "each BATCH message is followed by its STATE")
 
     // the root holds exactly the announced files: no staging dir, no
@@ -291,6 +291,37 @@ class TapSpec extends AnyFunSuite {
       .flatMap(l => SingerSink.mapper.readTree(l).get("manifest").elements().asScala)
       .map(f => new java.io.File(java.net.URI.create(f.asText)).getName).toSet
     assert(new java.io.File(tmp).list().toSet === announced)
+
+    b1Batches.map { i =>
+      val entry = SingerSink.mapper.readTree(lines(i + 1)).at("/value/bookmarks/db1-public-b1")
+      def int(path: String) = Option(entry.at(path)).filterNot(_.isMissingNode).map(_.asText.toInt)
+      (int("/replication_key_value"), int("/progress_markers/replication_key_value"))
+    }
+  }
+
+  // An unsorted stream's later chunks may hold rows below an earlier
+  // chunk's max, so (as in RECORD mode and the SDK's is_sorted rule) its
+  // per-chunk STATE carries a monotone progress marker and leaves the
+  // committed bookmark alone until the last chunk commits it: a target
+  // that persists a mid-sync STATE resumes by re-extracting, never above
+  // rows it has not loaded.
+  test("batch mode derives bookmark from the files just written") {
+    val states = batchBookmarks(sorted = false)
+    val (mids, last) = (states.init, states.last)
+    assert(mids.forall(_._1.isEmpty), "no mid-sync commit for an unsorted stream")
+    val markers = mids.map(_._2.get)
+    assert(markers === markers.sorted, "progress markers must be monotone")
+    assert(last === ((Some(6), None)))
+  }
+
+  // A sorted stream commits after every chunk: a target that persists the
+  // last STATE line before a crash resumes from the last chunk it received.
+  test("batch mode commits a sorted stream's bookmark after every chunk") {
+    val states = batchBookmarks(sorted = true)
+    assert(states.forall(_._2.isEmpty))
+    val committed = states.map(_._1.get)
+    assert(committed === committed.sorted, "per-manifest bookmarks must be monotone")
+    assert(committed.last === 6)
   }
 
   // sync_parallelism (VERDICT r10 item 7): three streams extract
