@@ -10,7 +10,7 @@ import graft.types.TypeMapper
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.io.{FileDescriptor, FileOutputStream, PrintStream}
+import java.io.{BufferedOutputStream, FileDescriptor, FileOutputStream, OutputStream, PrintStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 
@@ -309,30 +309,56 @@ object Main {
     (opts, flags)
   }
 
-  /** stdout and stderr are UTF-8 whatever the platform charset, and flush
-    * on every line as `System.out` does.
+  /** stdout and stderr are UTF-8 whatever the platform charset. stderr
+    * flushes on every line as `System.err` does; stdout is [[buffered]].
     */
   def main(args: Array[String]): Unit = {
-    def utf8(fd: FileDescriptor) = new PrintStream(new FileOutputStream(fd), true, UTF_8)
-    sys.exit(run(args, utf8(FileDescriptor.out), utf8(FileDescriptor.err)))
+    val err = new PrintStream(new FileOutputStream(FileDescriptor.err), true, UTF_8)
+    val code = try run(args, buffered(new FileOutputStream(FileDescriptor.out)), err)
+      finally SparkSession.getDefaultSession.foreach(_.stop())
+    sys.exit(code)
   }
+
+  /** The tap's stdout: UTF-8 through a 64 KB buffer, not flushed per line
+    * (one `write(2)` per RECORD would cost more than encoding it). A STATE
+    * line flushes it ([[SingerSink.emitState]]), so a STATE and every
+    * RECORD before it always reach the target together, and [[run]]
+    * flushes it on exit, also on failure.
+    */
+  private[graft] def buffered(fd: OutputStream): PrintStream =
+    new PrintStream(new BufferedOutputStream(fd, 1 << 16), false, UTF_8)
 
   /** CLI body with the SDK's error contract: any config/validation/run
     * failure emits ONE structured CRITICAL line on stderr and exits
     * non-zero (singer_sdk logs CRITICAL through Python logging on stderr;
     * orchestrators like Meltano key off it), instead of a bare stack
-    * trace. Stdout stays reserved for Singer messages.
+    * trace. Stdout stays reserved for Singer messages. A sync runs on
+    * `session()`, which [[main]] stops.
     */
-  private[graft] def run(args: Array[String], out: PrintStream, err: PrintStream): Int =
-    try { body(args, out); 0 }
+  private[graft] def run(args: Array[String], out: PrintStream, err: PrintStream,
+                         session: () => SparkSession = () => tapSession()): Int =
+    try { body(args, out, session); 0 }
     catch {
       case e: Throwable =>
         line(err, obj().put("level", "CRITICAL").put("logger", "graft")
           .put("message", Option(e.getMessage).getOrElse(e.toString)))
         1
-    }
+    } finally out.flush()
 
-  private def body(args: Array[String], out: PrintStream): Unit = {
+  private def tapSession(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+      .appName("graft-tap")
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private def body(args: Array[String], out: PrintStream, session: () => SparkSession): Unit = {
     val (opts, flags) = parseArgs(args)
 
     if (flags("--version")) { out.println("graft 0.1.0"); return }
@@ -365,16 +391,6 @@ object Main {
         java.nio.file.Files.readString(java.nio.file.Paths.get(p))))
       .getOrElse(tap)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-tap")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try Tap.syncAll(spark, effectiveTap, opts.get("--state"), out)
-    finally spark.stop()
+    Tap.syncAll(session(), effectiveTap, opts.get("--state"), out)
   }
 }

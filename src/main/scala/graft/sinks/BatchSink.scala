@@ -25,16 +25,18 @@ final case class BatchChunk(manifest: BatchManifest, records: Long, maxKey: MaxK
   * `batch_size` records (client.py:228-239), final flush (client.py:241-245),
   * filename scheme (client.py:202,214).
   *
-  * Spark-first: one job over the [[SingerSink.encode]]d rows — the same
-  * lines RECORD mode emits — in which each task streams its partition into
-  * chunk files and returns each chunk's record count and [[MaxKey]], so
-  * the bookmark comes from the single write pass and nothing is read back.
-  * Each task gzips through a [[BlockGzipOutputStream]]: it holds one slot
-  * of the executor's [[CoreBudget]] while it runs, and its 256 KB deflate
-  * blocks go to helper threads while slots are free, so compression uses
-  * the idle cores even when the source has fewer partitions than the
-  * executor has cores (the reference has one sequential writer). With as
-  * many busy partitions as cores, each task deflates its own blocks.
+  * Spark-first: one job over the conformed rows in which each task encodes
+  * its partition into [[LineBlock]]s — the lines RECORD mode emits, by the
+  * same [[LineEncoder]] — writes their bytes into chunk files, splitting a
+  * block at a line boundary where a chunk reaches `batch_size`, and returns
+  * each chunk's record count and [[MaxKey]], so the bookmark comes from the
+  * single write pass and nothing is read back. Each task holds one slot of
+  * the executor's [[CoreBudget]] while it runs; its line blocks, and the
+  * 256 KB deflate blocks of its [[BlockGzipOutputStream]], go to helper
+  * threads while slots are free, so encoding and compression use the idle
+  * cores even when the source has fewer partitions than the executor has
+  * cores (the reference has one sequential writer). With as many busy
+  * partitions as cores, each task encodes and deflates its own blocks.
   * All path handling goes through the Hadoop
   * `FileSystem` API resolved from the root's scheme, so
   * `batch_config.storage.root` accepts any configured filesystem URL
@@ -61,11 +63,9 @@ object BatchSink {
     val outDir = new HadoopPath(root, s"graft-batch-${UUID.randomUUID()}")
     fs.mkdirs(outDir)
 
-    val encoded = SingerSink.encode(df, stream)
-    val keyType = encoded.schema.fields.lift(1).map(_.dataType) // of `rk`, if any
+    val encoder = LineEncoder(df, stream)
     try {
-      // internal rows: each line's UTF-8 bytes go to the file as encoded
-      val written = encoded.queryExecution.toRdd.mapPartitionsWithIndex { (part, rows) =>
+      val written = df.queryExecution.toRdd.mapPartitionsWithIndex { (part, rows) =>
         CoreBudget.shared.holding {
           val taskFs = outDir.getFileSystem(conf.value)
           // per attempt: a retried or speculative attempt never writes over
@@ -78,19 +78,22 @@ object BatchSink {
           var max: MaxKey = null
           def finish(): Unit = { out.close(); out = null; chunks += ((name, n, max)) }
           try {
-            rows.foreach { row =>
-              if (out == null) { // opened on a chunk's first row: no empty files
-                // non-recursive: a straggler cannot recreate a deleted staging dir
-                val raw = taskFs.createFile(new HadoopPath(outDir, name)).overwrite(false).build()
-                out = if (gzip) new BlockGzipOutputStream(raw) else new BufferedOutputStream(raw, 1 << 16)
-                n = 0L
-                max = new MaxKey
+            encoder.encode(rows)(identity) { block =>
+              var i = 0
+              while (i < block.lines) {
+                if (out == null) { // opened on a chunk's first line: no empty files
+                  // non-recursive: a straggler cannot recreate a deleted staging dir
+                  val raw = taskFs.createFile(new HadoopPath(outDir, name)).overwrite(false).build()
+                  out = if (gzip) new BlockGzipOutputStream(raw) else new BufferedOutputStream(raw, 1 << 16)
+                  n = 0L
+                  max = new MaxKey
+                }
+                // the block's lines up to the end of the chunk
+                val end = math.min(block.lines, i + (stream.batchSize - n).toInt)
+                out.write(block.bytes, block.start(i), block.start(end) - block.start(i))
+                while (i < end) { block.offerKey(i, max); i += 1; n += 1 }
+                if (n == stream.batchSize) finish()
               }
-              row.getUTF8String(0).writeTo(out)
-              out.write('\n')
-              n += 1
-              keyType.foreach(t => max.add(row.get(1, t), row.getUTF8String(2).toString))
-              if (n == stream.batchSize) finish()
             }
             if (out != null) finish()
           } finally if (out != null) out.close()

@@ -1,41 +1,7 @@
 package graft.sinks
 
-import org.apache.spark.sql.GraftBridge
 import java.io.OutputStream
-import java.util.concurrent.{Executors, FutureTask, ThreadFactory}
-import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.{CRC32, Deflater}
-
-/** A JVM-wide count of idle cores. A running write task holds one slot for
-  * as long as it runs ([[holding]]); a compression helper takes a slot only
-  * while one is free ([[tryAcquire]]), so helpers run on idle cores only.
-  */
-final class CoreBudget(val cores: Int) {
-  private val free = new AtomicInteger(cores)
-
-  /** Free slots: `cores` when nothing holds one. */
-  def available: Int = free.get
-
-  def holding[T](body: => T): T = {
-    free.decrementAndGet()
-    try body finally release()
-  }
-
-  def tryAcquire(): Boolean = {
-    var f = free.get
-    while (f > 0 && !free.compareAndSet(f, f - 1)) f = free.get
-    f > 0
-  }
-
-  def release(): Unit = free.incrementAndGet()
-}
-
-object CoreBudget {
-  /** Sized by the first task that uses it: the executor's core count —
-    * `N` of a `local[N]` master, `spark.executor.cores` on a cluster.
-    */
-  lazy val shared: CoreBudget = new CoreBudget(math.max(1, GraftBridge.executorCores))
-}
 
 /** A gzip writer that compresses in parallel, pigz-style, and writes one
   * standard gzip member (RFC 1952) that any gunzip reads.
@@ -49,12 +15,12 @@ object CoreBudget {
   * scheduling. The writing thread keeps the CRC32 and length for the
   * trailer.
   *
-  * A full block goes to a helper thread while `budget` has a free slot,
-  * otherwise the writing thread deflates it itself. At most
-  * [[BlockGzipOutputStream.MaxInFlight]] blocks are pending, and compressed
-  * blocks are written to `raw`, in order, by the writing thread only.
-  * `close()` waits for every pending block, also when it fails, before
-  * closing `raw`.
+  * Full blocks go through an [[InOrder]] queue of `budget`: to a helper
+  * thread while a core is idle, otherwise deflated by the writing thread
+  * itself. At most [[BlockGzipOutputStream.MaxInFlight]] blocks are
+  * pending, and compressed blocks are written to `raw`, in order, by the
+  * writing thread only. `close()` waits for every pending block, also when
+  * it fails, before closing `raw`.
   */
 final class BlockGzipOutputStream(raw: OutputStream, budget: CoreBudget = CoreBudget.shared)
     extends OutputStream {
@@ -65,7 +31,7 @@ final class BlockGzipOutputStream(raw: OutputStream, budget: CoreBudget = CoreBu
   private var block = new Array[Byte](BlockSize)
   private var fill = 0
   private var prev: Array[Byte] = null // the previous block: this one's dictionary
-  private val pending = new java.util.ArrayDeque[FutureTask[Array[Byte]]]()
+  private val pending = new InOrder[Array[Byte]](budget, MaxInFlight, raw.write(_))
   private var closed = false
   raw.write(Header)
 
@@ -91,7 +57,7 @@ final class BlockGzipOutputStream(raw: OutputStream, budget: CoreBudget = CoreBu
     closed = true
     try {
       submit(last = true)
-      while (!pending.isEmpty) writeHead()
+      pending.flush()
       val t = new Array[Byte](8)
       littleEndian(t, 0, crc.getValue)
       littleEndian(t, 4, size)
@@ -99,7 +65,7 @@ final class BlockGzipOutputStream(raw: OutputStream, budget: CoreBudget = CoreBu
     } finally {
       // on failure too: a helper still deflating must finish before the
       // file closes (it holds a core slot until it returns)
-      pending.forEach(f => try f.get() catch { case _: Exception => })
+      pending.close()
       raw.close()
     }
   }
@@ -112,22 +78,11 @@ final class BlockGzipOutputStream(raw: OutputStream, budget: CoreBudget = CoreBu
     crc.update(block, 0, fill)
     size += fill
     val (in, len, dict) = (block, fill, prev)
-    val task = new FutureTask[Array[Byte]](() => deflate(in, len, dict, last))
-    if (pending.size >= MaxInFlight) writeHead()
-    if (budget.tryAcquire()) {
-      try Helpers.execute(() => try task.run() finally budget.release())
-      catch { case e: Throwable => budget.release(); throw e }
-    } else task.run()
-    pending.add(task)
-    while (!pending.isEmpty && pending.peek.isDone) writeHead()
+    pending.submit(() => deflate(in, len, dict, last))
     prev = block
     block = if (last) null else new Array[Byte](BlockSize)
     fill = 0
   }
-
-  private def writeHead(): Unit =
-    try raw.write(pending.poll().get())
-    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
 }
 
 object BlockGzipOutputStream {
@@ -140,15 +95,6 @@ object BlockGzipOutputStream {
 
   private def littleEndian(b: Array[Byte], at: Int, v: Long): Unit =
     (0 until 4).foreach(i => b(at + i) = (v >>> (8 * i)).toByte)
-
-  private val Helpers = Executors.newCachedThreadPool(new ThreadFactory {
-    private val n = new AtomicInteger
-    def newThread(r: Runnable): Thread = {
-      val t = new Thread(r, s"graft-gzip-${n.incrementAndGet()}")
-      t.setDaemon(true)
-      t
-    }
-  })
 
   // one raw deflater and output buffer per thread, reset for each block
   private val deflaters = ThreadLocal.withInitial[Deflater](() =>

@@ -1,0 +1,186 @@
+package graft.sinks
+
+import graft.config.StreamConfig
+import org.apache.spark.io.CompressionCodec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.DataType
+import org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Arrays
+
+/** `lines` encoded records: line `i` is `bytes(start(i) until ends(i))`,
+  * its newline included. With a replication key, `keys` holds each line's
+  * (`rk`, `rks`) as an UnsafeRow that ends at `keyEnds(i)`.
+  */
+final class LineBlock private[sinks] (val lines: Int, val bytes: Array[Byte], val ends: Array[Int],
+                                      keys: Array[Byte], keyEnds: Array[Int], keyType: DataType) {
+
+  def start(i: Int): Int = if (i == 0) 0 else ends(i - 1)
+
+  /** Line `i` without its newline. */
+  def line(i: Int): String = new String(bytes, start(i), ends(i) - 1 - start(i), UTF_8)
+
+  /** Offer line `i`'s replication key to `max`; a no-op without a key. */
+  def offerKey(i: Int, max: MaxKey): Unit = if (keyType != null) {
+    val from = if (i == 0) 0 else keyEnds(i - 1)
+    val row = new UnsafeRow(2)
+    row.pointTo(keys, BYTE_ARRAY_OFFSET + from, keyEnds(i) - from)
+    max.add(row.get(0, keyType), row.getUTF8String(1).toString)
+  }
+
+  /** The block compressed with `codec`: what a RECORD-mode task returns. */
+  def compress(codec: CompressionCodec): Array[Byte] = {
+    val buf = new ByteArrayOutputStream(ends(lines - 1) / 4)
+    val out = new DataOutputStream(codec.compressedOutputStream(buf))
+    out.writeInt(lines)
+    out.write(LineBlock.packed(ends))
+    out.write(bytes, 0, ends(lines - 1))
+    if (keyType != null) {
+      out.write(LineBlock.packed(keyEnds))
+      out.write(keys, 0, keyEnds(lines - 1))
+    }
+    out.close()
+    buf.toByteArray
+  }
+}
+
+object LineBlock {
+  private def packed(a: Array[Int]): Array[Byte] = {
+    val b = ByteBuffer.allocate(4 * a.length)
+    b.asIntBuffer().put(a)
+    b.array()
+  }
+
+  private def unpacked(in: DataInputStream, n: Int): Array[Int] = {
+    val b = in.readNBytes(4 * n)
+    val a = new Array[Int](n)
+    ByteBuffer.wrap(b).asIntBuffer().get(a)
+    a
+  }
+
+  private[sinks] def decompress(codec: CompressionCodec, data: Array[Byte], keyType: DataType): LineBlock = {
+    val in = new DataInputStream(codec.compressedInputStream(new ByteArrayInputStream(data)))
+    try {
+      val lines = in.readInt()
+      val ends = unpacked(in, lines)
+      val bytes = in.readNBytes(ends(lines - 1))
+      if (keyType == null) new LineBlock(lines, bytes, ends, null, null, null)
+      else {
+        val keyEnds = unpacked(in, lines)
+        new LineBlock(lines, bytes, ends, in.readNBytes(keyEnds(lines - 1)), keyEnds, keyType)
+      }
+    } finally in.close()
+  }
+}
+
+/** The one block line encoder both sinks run. A task copies its partition's
+  * conformed rows into batches of [[LineEncoder.BatchRows]] and encodes each
+  * into a [[LineBlock]] with [[SingerSink.encode]]'s own expressions — the
+  * record's `to_json`, and `rk`/`rks` for an incremental stream — so the
+  * bytes are exactly that frame's. Batches go through an [[InOrder]] queue
+  * of a [[CoreBudget]]: to a helper while a core is idle, otherwise encoded
+  * by the task thread itself; at most [[LineEncoder.MaxInFlight]] are
+  * pending, and blocks come back in input order.
+  *
+  * Every thread evaluates its own copy of the expressions: `to_json` keeps
+  * one JSON generator per expression instance, so a shared projection
+  * would interleave two threads' records.
+  */
+final class LineEncoder private (exprs: Seq[Expression], keyType: DataType) extends Serializable {
+  import LineEncoder._
+
+  @transient private lazy val projections = ThreadLocal.withInitial[Projections](() => new Projections(exprs))
+
+  /** Encode `rows` into blocks; `finish` runs on the thread that encoded
+    * the block, `consume` on this one, in input order. Waits for every
+    * pending block before it returns or throws.
+    */
+  def encode[T](rows: Iterator[InternalRow], budget: CoreBudget = CoreBudget.shared)
+               (finish: LineBlock => T)(consume: T => Unit): Unit = {
+    // helpers are not task threads: they evaluate under the task's conf
+    val conf = SQLConf.get
+    val pending = new InOrder[T](budget, MaxInFlight, consume)
+    try {
+      while (rows.hasNext) {
+        val batch = new Array[InternalRow](BatchRows)
+        var n = 0
+        while (n < BatchRows && rows.hasNext) { batch(n) = rows.next().copy(); n += 1 }
+        val size = n
+        pending.submit(() => SQLConf.withExistingConf(conf)(finish(encodeBatch(batch, size))))
+      }
+      pending.flush()
+    } finally pending.close()
+  }
+
+  /** A block back from [[LineBlock.compress]]. */
+  def decompress(codec: CompressionCodec, data: Array[Byte]): LineBlock =
+    LineBlock.decompress(codec, data, keyType)
+
+  private def encodeBatch(rows: Array[InternalRow], n: Int): LineBlock = {
+    val p = projections.get()
+    val ends = new Array[Int](n)
+    val keyEnds = if (keyType == null) null else new Array[Int](n)
+    var bytes = new Array[Byte](p.bytesHint)
+    var keys = if (keyType == null) null else new Array[Byte](p.keysHint)
+    var fill, keyFill = 0
+    var i = 0
+    while (i < n) {
+      val json = p.json(rows(i)).getUTF8String(0)
+      bytes = room(bytes, fill + json.numBytes + 1)
+      json.writeToMemory(bytes, BYTE_ARRAY_OFFSET + fill)
+      fill += json.numBytes
+      bytes(fill) = '\n'
+      fill += 1
+      ends(i) = fill
+      if (keyType != null) {
+        val key = p.key(rows(i))
+        keys = room(keys, keyFill + key.getSizeInBytes)
+        key.writeToMemory(keys, BYTE_ARRAY_OFFSET + keyFill)
+        keyFill += key.getSizeInBytes
+        keyEnds(i) = keyFill
+      }
+      i += 1
+    }
+    p.bytesHint = math.max(p.bytesHint, fill)
+    p.keysHint = math.max(p.keysHint, keyFill)
+    new LineBlock(n, bytes, ends, keys, keyEnds, keyType)
+  }
+}
+
+object LineEncoder {
+  val BatchRows = 2048
+  val MaxInFlight = 8
+
+  /** The encoder of `encode(df, stream)`, over `df.queryExecution.toRdd`'s rows. */
+  def apply(df: DataFrame, stream: StreamConfig): LineEncoder =
+    SingerSink.encode(df, stream).queryExecution.analyzed match {
+      case Project(list, _) =>
+        val exprs = list.map { case a: Alias => a.child; case e => e }
+        new LineEncoder(BindReferences.bindReferences(exprs, df.queryExecution.analyzed.output),
+          list.lift(1).map(_.dataType).orNull)
+      case other => throw new IllegalStateException(s"not a projection: $other")
+    }
+
+  private def room(a: Array[Byte], need: Int): Array[Byte] =
+    if (need <= a.length) a else Arrays.copyOf(a, math.max(2 * a.length, need))
+
+  /** One thread's projections of fresh copies of the expressions, with
+    * runtime-replaceable ones (`to_json`) replaced as the optimizer would.
+    */
+  private final class Projections(bound: Seq[Expression]) {
+    private val replaced = ReplaceExpressions(
+      Project(bound.map(e => Alias(e.clone(), "_")()), LocalRelation())
+    ).asInstanceOf[Project].projectList.map(_.asInstanceOf[Alias].child)
+    val json: UnsafeProjection = UnsafeProjection.create(replaced.take(1))
+    val key: UnsafeProjection = if (replaced.length > 1) UnsafeProjection.create(replaced.drop(1)) else null
+    // the largest block so far, to size the next one's buffers
+    var bytesHint, keysHint = 1 << 16
+  }
+}

@@ -5,9 +5,10 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNo
 import graft.config.StreamConfig
 import graft.operators.Conformance
 import graft.state.TapState
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.unsafe.types.UTF8String
 import java.io.PrintStream
+import scala.collection.mutable.ArrayBuffer
 
 /** Singer protocol emission: SCHEMA, then RECORDs, then STATE, one JSON
   * object per stdout line (inherited behavior of `singer_sdk.Stream.sync`;
@@ -19,9 +20,10 @@ import java.io.PrintStream
   *
   * Message serialization is inherently a driver-side, ordered, line-oriented
   * concern (the Singer spec is a stdout pipe), so this is the one place the
-  * engine iterates rows on the driver — via `toLocalIterator`, which holds
-  * at most one partition in memory, mirroring the reference's O(1)
-  * generator streaming (client.py:247-304).
+  * engine iterates records on the driver: one partition at a time, as the
+  * compressed blocks of lines its task encoded on the executor's idle
+  * cores ([[LineEncoder]]), where the reference streams rows through one
+  * sequential generator (client.py:247-304).
   */
 object SingerSink {
 
@@ -47,8 +49,9 @@ object SingerSink {
     line(out, msg)
   }
 
-  /** The one row encoding both sinks write. Column `j` is the record's
-    * JSON, encoded distributed (executor-side `to_json`), with timestamps
+  /** The one row encoding both sinks write: [[LineEncoder]] evaluates
+    * these expressions, on executors. Column `j` is the record's
+    * JSON (`to_json`), with timestamps
     * and dates in their reference string forms. `ignoreNullFields=false`
     * so null-valued columns appear as explicit JSON nulls — `df.toJSON`
     * would drop them, but the reference/singer_sdk emits every declared
@@ -68,7 +71,11 @@ object SingerSink {
   }
 
   /** Emit RECORD messages: only the [[encode]]d lines, enveloped, stream
-    * through the driver.
+    * through the driver. Each partition's task encodes its rows into
+    * [[LineBlock]]s on the executor's idle cores ([[LineEncoder]]) and
+    * returns them compressed with `spark.io.compression.codec`; the driver
+    * fetches one partition's blocks at a time and prints their lines in
+    * order, each through one `println`.
     *
     * Returns (records emitted, max replication-key value among them as its
     * Spark string cast). The bookmark is tracked INSIDE the single emit
@@ -76,7 +83,8 @@ object SingerSink {
     * that a nondeterministic source could answer differently, and no
     * full-stream persist to keep the two executions consistent
     * (singer_sdk likewise derives state from processed records). O(1)
-    * driver state; `toLocalIterator` holds at most one partition.
+    * driver state; the driver holds the compressed blocks of at most one
+    * partition.
     *
     * `onProgress` fires after every `stateEvery` emitted records with the
     * max replication-key string among records emitted SO FAR — the caller
@@ -100,13 +108,25 @@ object SingerSink {
     val slot = rendered.indexOf("\"record\":null") + "\"record\":".length
     val (prefix, suffix) = (rendered.take(slot), rendered.drop(slot + "null".length))
     val max = new MaxKey
-    val it = encode(df, stream).toLocalIterator()
+    val encoder = LineEncoder(df, stream)
+    val blocks = df.queryExecution.toRdd.mapPartitions { rows =>
+      val codec = GraftBridge.compressionCodec
+      val done = ArrayBuffer.empty[Array[Byte]]
+      CoreBudget.shared.holding(encoder.encode(rows)(_.compress(codec))(done += _))
+      done.iterator
+    }
+    val codec = GraftBridge.compressionCodec
+    val it = blocks.toLocalIterator
     while (it.hasNext) {
-      val row = it.next()
-      out.println(prefix + row.getString(0) + suffix)
-      if (row.length > 1) max.add(row.get(1), row.getString(2))
-      n += 1
-      if (n % stateEvery == 0) onProgress(max.value)
+      val block = encoder.decompress(codec, it.next())
+      var i = 0
+      while (i < block.lines) {
+        out.println(prefix + block.line(i) + suffix)
+        block.offerKey(i, max)
+        n += 1
+        if (n % stateEvery == 0) onProgress(max.value)
+        i += 1
+      }
     }
     (n, max.value)
   }
@@ -147,6 +167,10 @@ object SingerSink {
     * interrupted unsorted sync re-extracts the whole stream (safe: rows
     * below the running max might not have been emitted yet) and the marker
     * is promoted to a real bookmark only when the stream completes.
+    *
+    * Flushes `out`: a STATE line reaches the target together with every
+    * RECORD before it, and a buffered stdout is flushed nowhere else
+    * during a sync.
     */
   def emitState(state: TapState, out: PrintStream = System.out,
                 progress: Option[Progress] = None): Unit = {
@@ -163,6 +187,7 @@ object SingerSink {
       }
     }
     line(out, msg)
+    out.flush()
   }
 }
 

@@ -49,4 +49,10 @@ object GraftBridge {
       SparkContext.numDriverCores(env.conf.get("spark.master"), env.conf)
     else env.conf.getInt("spark.executor.cores", Runtime.getRuntime.availableProcessors)
   }
+
+  /** The codec of `spark.io.compression.codec` (LZ4 by default), the one
+    * Spark compresses its own task results and shuffle blocks with.
+    */
+  def compressionCodec: org.apache.spark.io.CompressionCodec =
+    org.apache.spark.io.CompressionCodec.createCodec(org.apache.spark.SparkEnv.get.conf)
 }

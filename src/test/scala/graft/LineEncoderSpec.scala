@@ -1,0 +1,185 @@
+package graft
+
+import graft.config.{BatchConfig, BatchEncoding, BatchStorage, ConfigParser, StreamConfig}
+import graft.sinks.{BatchSink, CoreBudget, LineBlock, LineEncoder, MaxKey, SingerSink}
+import graft.sources.StreamSource
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import java.io.{BufferedReader, ByteArrayOutputStream, InputStreamReader, OutputStream, PrintStream}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.zip.GZIPInputStream
+import scala.collection.mutable.ArrayBuffer
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The block line encoder both sinks run: the lines are exactly
+  * [[SingerSink.encode]]'s whoever encodes a block, block and partition
+  * boundaries never show in either sink's output or bookmarks, and a
+  * failed RECORD-mode sync gives back every core slot.
+  */
+class LineEncoderSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.spark
+  private val B = LineEncoder.BatchRows
+
+  /** 60k rows over 4 partitions of every value class `to_json` escapes or
+    * formats: quotes, backslashes, control characters, non-BMP text,
+    * nulls, doubles (NaN too), decimals, timestamps, dates and booleans.
+    */
+  private def awkward: DataFrame = spark.range(0, 60000, 1, 4).select(
+    col("id"),
+    when(col("id") % 7 === 0, lit(null)).otherwise(concat(
+      lit("q\"b\\s\u0001\u001f\t\n "), col("id").cast("string"),
+      lit("😀 é"))).as("s"),
+    when(col("id") % 11 === 0, lit(Double.NaN)).otherwise(col("id") / 3.0).as("d"),
+    (col("id") * 1.23).cast("decimal(18,4)").as("dec"),
+    expr("timestamp_micros(1637581511062824 + id * 1000001)").as("ts"),
+    expr("date_add(DATE'2020-01-01', CAST(id % 1000 AS INT))").as("dt"),
+    (col("id") % 2 === 0).as("b"))
+
+  private def lines(block: LineBlock): Seq[String] = (0 until block.lines).map(block.line)
+
+  test("blocks hold exactly encode's lines and keys, inline and on helpers") {
+    val df = awkward
+    for (key <- Seq(None, Some("s"), Some("ts"))) {
+      val stream = StreamConfig("awk", "", replicationKey = key)
+      val encoded = SingerSink.encode(df, stream).collect()
+      val expected = encoded.map(_.getString(0)).toSeq
+      val expectedMax = new MaxKey
+      if (key.isDefined) encoded.foreach(r => expectedMax.add(r.get(1), r.getString(2)))
+      val rows = df.queryExecution.toRdd.map(_.copy()).collect()
+      assert(rows.length === 60000)
+      val codec = GraftBridge.compressionCodec
+      for (budget <- Seq(new CoreBudget(0), new CoreBudget(8))) {
+        val encoder = LineEncoder(df, stream)
+        val got = ArrayBuffer.empty[String]
+        val max = new MaxKey
+        // the compressed form too: that is what RECORD-mode tasks return
+        encoder.encode(rows.iterator, budget)(_.compress(codec)) { data =>
+          val block = encoder.decompress(codec, data)
+          assert(block.lines <= B)
+          got ++= lines(block)
+          (0 until block.lines).foreach(block.offerKey(_, max))
+        }
+        assert(got.length === expected.length, s"$key, ${budget.cores} cores")
+        assert(got === expected, s"$key, ${budget.cores} cores")
+        assert(max.value === expectedMax.value)
+        assert(budget.available === budget.cores)
+      }
+    }
+  }
+
+  /** Partitions of 0, 1, B-1, B and B+1 rows with empty ones between;
+    * key `k` is a zero-padded string, so its byte order is row order.
+    */
+  private def boundaries: (DataFrame, Seq[Int]) = {
+    val sizes = Seq(0, 1, 0, B - 1, 0, 0, B, 0, B + 1, 0)
+    val schema = StructType(Seq(StructField("id", LongType), StructField("k", StringType)))
+    val rdd = spark.sparkContext.parallelize(sizes.indices, sizes.length).flatMap { p =>
+      (0 until sizes(p)).map(i => Row(p * 100000L + i, f"k${p * 100000L + i}%08d"))
+    }
+    (spark.createDataFrame(rdd, schema), sizes)
+  }
+
+  test("RECORD mode across block and partition boundaries") {
+    val (df, sizes) = boundaries
+    assert(df.rdd.getNumPartitions === sizes.length)
+    val stream = StreamConfig("bnd", "", keyProperties = Seq("id"), replicationKey = Some("k"))
+    val keys = SingerSink.encode(df, stream).collect()
+    val expected = keys.map(_.getString(0)).toSeq
+    val buf = new ByteArrayOutputStream()
+    val progress = ArrayBuffer.empty[Option[String]]
+    val (n, max) = SingerSink.emitRecords(df, stream, new PrintStream(buf, true, UTF_8),
+      stateEvery = B - 1, onProgress = progress += _)
+    assert(n === sizes.sum)
+    val printed = buf.toString(UTF_8).split("\n").toSeq
+    assert(printed === expected.map(j => s"""{"type":"RECORD","stream":"bnd","record":$j}"""))
+    assert(max === Some(keys.map(_.getString(2)).max))
+    // each progress bookmark is the max key of the records before it
+    assert(progress.toSeq === (1 to sizes.sum / (B - 1)).map(i =>
+      Some(keys.take(i * (B - 1)).map(_.getString(2)).max)))
+  }
+
+  private def gunzipLines(uri: String): Seq[String] = {
+    val in = new BufferedReader(new InputStreamReader(new GZIPInputStream(
+      Files.newInputStream(Paths.get(java.net.URI.create(uri)))), UTF_8))
+    try Iterator.continually(in.readLine()).takeWhile(_ != null).toList
+    finally in.close()
+  }
+
+  test("batch chunks across block and partition boundaries, smaller and larger than a block") {
+    val (df, sizes) = boundaries
+    for (batchSize <- Seq(B / 2 + 1, B + B / 2)) {
+      val tmp = Files.createTempDirectory("graft-encoder-batch").toString
+      val stream = StreamConfig("bnd", "", keyProperties = Seq("id"), replicationKey = Some("k"),
+        batchSize = batchSize)
+      val chunks = BatchSink.write(df, stream,
+        BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"file://$tmp")))
+      val expected = sizes.filter(_ > 0).flatMap(s =>
+        Seq.fill(s / batchSize)(batchSize) ++ Seq(s % batchSize).filter(_ > 0))
+      assert(chunks.map(_.records) === expected, s"batch_size $batchSize")
+      val all = chunks.flatMap { c =>
+        val file = gunzipLines(c.manifest.files.head)
+        assert(file.length === c.records)
+        val keys = file.map(l => """"k":"([^"]+)"""".r.findFirstMatchIn(l).get.group(1))
+        assert(c.maxKey.value === Some(keys.max))
+        file
+      }
+      assert(all === SingerSink.encode(df, stream).collect().map(_.getString(0)).toSeq)
+    }
+  }
+
+  // Sorted, 10k rows in 3 partitions, STATE every 997 records: neither a
+  // block nor a partition boundary. Each mid-sync bookmark must be the max
+  // key among the records printed before it.
+  test("sorted stream: every mid-sync bookmark is the max of the records printed so far") {
+    val tap = ConfigParser.parseTap(
+      """{"database":"db1","state_message_frequency":997,"streams":[
+        |{"name":"srt","sql":"SELECT id, id * 3 AS k FROM range(0, 10000, 1, 3) WHERE id * 3 > :rep_key_val",
+        | "key_properties":["id"],"replication_key":"k","replication_key_value_start":-1,
+        | "is_sorted":true,"columns":[{"name":"id","type":"bigint"},{"name":"k","type":"bigint"}]}]}""".stripMargin)
+    val buf = new ByteArrayOutputStream()
+    Tap.syncAll(spark, tap, None, new PrintStream(buf, true, UTF_8))
+    var max = -1L
+    var records = 0
+    val mids = ArrayBuffer.empty[(Int, Long, Long)]
+    buf.toString(UTF_8).split("\n").foreach { l =>
+      val msg = SingerSink.mapper.readTree(l)
+      msg.get("type").asText match {
+        case "RECORD" =>
+          records += 1
+          max = math.max(max, msg.at("/record/k").asLong)
+        case "STATE" if records < 10000 =>
+          mids += ((records, msg.at("/value/bookmarks/db1-public-srt/replication_key_value").asText.toLong, max))
+        case _ =>
+      }
+    }
+    assert(records === 10000)
+    assert(mids.map(_._1).toSeq === (1 to 10).map(_ * 997))
+    mids.foreach { case (n, bookmark, printedMax) => assert(bookmark === printedMax, s"after $n") }
+  }
+
+  // A row of the third of four partitions fails the sync while the task
+  // has line blocks in flight on helpers: emitRecords throws, and every
+  // core slot comes back once the task has stopped. A leaked slot would
+  // serialize every later sync in this JVM.
+  test("a failed RECORD-mode sync gives back every core slot") {
+    val s = ConfigParser.parseStream(
+      """{"name":"f","key_properties":["id"],
+        |"sql":"SELECT id, CASE WHEN id = 250000 THEN raise_error('boom') ELSE id END AS v, repeat('x', 100) AS pad FROM range(0, 400000, 1, 4)",
+        |"columns":[{"name":"id","type":"bigint"},{"name":"v","type":"bigint"},{"name":"pad","type":"text"}]}""".stripMargin)
+    val df = StreamSource.native(spark, s)
+    val budget = CoreBudget.shared // sized by the running session
+    var printed = 0L
+    val out = new PrintStream(OutputStream.nullOutputStream()) {
+      override def println(x: String): Unit = printed += 1
+    }
+    val e = intercept[Exception](SingerSink.emitRecords(df, s, out))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")))
+    assert(printed === 200000) // the first two partitions, nothing of the third
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (budget.available != budget.cores && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(budget.available === budget.cores)
+  }
+}

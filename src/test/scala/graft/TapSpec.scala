@@ -532,6 +532,36 @@ class TapSpec extends AnyFunSuite {
     assert(!line.contains("\n"))
   }
 
+  // stdout is buffered: Main.run's stream is flushed right after each
+  // STATE line — so a STATE always reaches the target with every RECORD
+  // before it — and once more when run returns, also when the sync fails.
+  test("Main.run flushes stdout after every STATE line and on exit, also on failure") {
+    class Recording extends ByteArrayOutputStream {
+      val flushes = scala.collection.mutable.ArrayBuffer.empty[Int]
+      override def flush(): Unit = flushes += size()
+    }
+    val failing = sortedCfg.stripSuffix("]}") +
+      """,{"name":"bad","sql":"SELECT CASE WHEN id = 3 THEN raise_error('boom') ELSE id END AS id FROM range(0, 5, 1, 1)",
+        | "key_properties":["id"],"columns":[{"name":"id","type":"bigint"}]}]}""".stripMargin
+    for ((cfgJson, exitCode) <- Seq(sortedCfg -> 0, failing -> 1)) {
+      val cfg = Files.createTempDirectory("tap-flush").resolve("cfg.json")
+      Files.writeString(cfg, cfgJson)
+      val rec = new Recording
+      val code = Main.run(Array("--config", cfg.toString), Main.buffered(rec),
+        new PrintStream(java.io.OutputStream.nullOutputStream()), () => spark)
+      assert(code === exitCode)
+      val lines = rec.toString(UTF_8).split("\n").toSeq
+      val ends = lines.scanLeft(0)(_ + _.getBytes(UTF_8).length + 1).tail
+      val afterState = lines.zip(ends).collect { case (l, e) if l.contains(""""type":"STATE"""") => e }
+      assert(afterState.length === (if (exitCode == 0) 6 else 5))
+      assert(rec.flushes.last === rec.size, "nothing left unflushed")
+      assert(afterState.forall(rec.flushes.contains), "every STATE line is flushed")
+      assert(rec.flushes.forall(f => afterState.contains(f) || f == rec.size),
+        s"a flush away from a STATE line: ${rec.flushes} vs $afterState")
+      if (exitCode == 1) assert(!lines.last.contains(""""type":"STATE""""))
+    }
+  }
+
   test("catalog and about output") {
     val tap = ConfigParser.parseTap(cfgJson)
     val cat = SingerSink.render(Tap.catalogJson(tap))
