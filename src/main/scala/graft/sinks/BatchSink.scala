@@ -30,7 +30,9 @@ final case class BatchChunk(manifest: BatchManifest, records: Long, maxKey: MaxK
   * same [[LineEncoder]] — writes their bytes into chunk files, splitting a
   * block at a line boundary where a chunk reaches `batch_size`, and returns
   * each chunk's record count and [[MaxKey]], so the bookmark comes from the
-  * single write pass and nothing is read back. Each task holds one slot of
+  * single write pass and nothing is read back: a chunk that takes a whole
+  * block offers the block's max key, one that takes part of it each of
+  * its lines' keys. Each task holds one slot of
   * the executor's [[CoreBudget]] while it runs; its line blocks, and the
   * 256 KB deflate blocks of its [[BlockGzipOutputStream]], go to helper
   * threads while slots are free, so encoding and compression use the idle
@@ -91,7 +93,10 @@ object BatchSink {
                 // the block's lines up to the end of the chunk
                 val end = math.min(block.lines, i + (stream.batchSize - n).toInt)
                 out.write(block.bytes, block.start(i), block.start(end) - block.start(i))
-                while (i < end) { block.offerKey(i, max); i += 1; n += 1 }
+                if (i == 0 && end == block.lines) block.offerMax(max) // the whole block
+                else (i until end).foreach(block.offerKey(_, max))
+                n += end - i
+                i = end
                 if (n == stream.batchSize) finish()
               }
             }

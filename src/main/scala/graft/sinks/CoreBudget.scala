@@ -29,17 +29,21 @@ final class CoreBudget(val cores: Int) {
 
   private def release(): Unit = free.incrementAndGet()
 
-  /** `work` on a helper while a slot is free (the helper gives it back when
-    * done), else run here before returning.
+  /** `work` on a helper while a slot is free, else run here before
+    * returning. The helper gives its slot back before the result is
+    * visible, so a caller that has every result sees every slot free.
     */
-  private[sinks] def submit[T](work: () => T): FutureTask[T] = {
-    val task = new FutureTask[T](() => work())
+  private[sinks] def submit[T](work: () => T): FutureTask[T] =
     if (tryAcquire()) {
-      try CoreBudget.Helpers.execute(() => try task.run() finally release())
+      val task = new FutureTask[T](() => try work() finally release())
+      try CoreBudget.Helpers.execute(task)
       catch { case e: Throwable => release(); throw e }
-    } else task.run()
-    task
-  }
+      task
+    } else {
+      val task = new FutureTask[T](() => work())
+      task.run()
+      task
+    }
 }
 
 object CoreBudget {

@@ -5,10 +5,14 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNo
 import graft.config.StreamConfig
 import graft.operators.Conformance
 import graft.state.TapState
+import org.apache.spark.FutureAction
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.unsafe.types.UTF8String
 import java.io.PrintStream
 import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Singer protocol emission: SCHEMA, then RECORDs, then STATE, one JSON
   * object per stdout line (inherited behavior of `singer_sdk.Stream.sync`;
@@ -21,9 +25,11 @@ import scala.collection.mutable.ArrayBuffer
   * Message serialization is inherently a driver-side, ordered, line-oriented
   * concern (the Singer spec is a stdout pipe), so this is the one place the
   * engine iterates records on the driver: one partition at a time, as the
-  * compressed blocks of lines its task encoded on the executor's idle
-  * cores ([[LineEncoder]]), where the reference streams rows through one
-  * sequential generator (client.py:247-304).
+  * compressed blocks of final RECORD lines its task encoded on the
+  * executor's idle cores ([[LineEncoder]]), printed one STATE-free span of
+  * a block at a time while the next partition's job runs, where the
+  * reference streams rows through one sequential generator
+  * (client.py:247-304).
   */
 object SingerSink {
 
@@ -70,21 +76,40 @@ object SingerSink {
     }
   }
 
-  /** Emit RECORD messages: only the [[encode]]d lines, enveloped, stream
-    * through the driver. Each partition's task encodes its rows into
-    * [[LineBlock]]s on the executor's idle cores ([[LineEncoder]]) and
-    * returns them compressed with `spark.io.compression.codec`; the driver
-    * fetches one partition's blocks at a time and prints their lines in
-    * order, each through one `println`.
+  /** The RECORD envelope around a record's JSON, as (prefix, suffix):
+    * rendered once and split around its `"record":null` (unique: a `"`
+    * inside a JSON string is escaped). singer_sdk stamps each RECORD with
+    * time_extracted; one per sync, from the caller, so all of a stream's
+    * records agree.
+    */
+  def envelope(stream: StreamConfig, timeExtracted: Option[String]): (String, String) = {
+    val msg = obj().put("type", "RECORD").put("stream", stream.name).putNull("record")
+    timeExtracted.foreach(msg.put("time_extracted", _))
+    val rendered = render(msg)
+    val slot = rendered.indexOf("\"record\":null") + "\"record\":".length
+    (rendered.take(slot), rendered.drop(slot + "null".length))
+  }
+
+  /** Emit RECORD messages: only the [[encode]]d lines stream through the
+    * driver, already enveloped. Each partition's task encodes its rows
+    * into [[LineBlock]]s of final RECORD lines on the executor's idle
+    * cores ([[LineEncoder]]) and returns them compressed with
+    * `spark.io.compression.codec`. The driver runs one job per partition,
+    * in order, with the next partition's job in flight while it prints
+    * this one's; it decompresses blocks through an [[InOrder]] queue on
+    * [[CoreBudget.shared]]'s idle cores and prints each run of a block's
+    * lines between two STATE points with one `println`.
     *
     * Returns (records emitted, max replication-key value among them as its
     * Spark string cast). The bookmark is tracked INSIDE the single emit
     * pass, so the stream is executed exactly once: no second max() job
     * that a nondeterministic source could answer differently, and no
     * full-stream persist to keep the two executions consistent
-    * (singer_sdk likewise derives state from processed records). O(1)
-    * driver state; the driver holds the compressed blocks of at most one
-    * partition.
+    * (singer_sdk likewise derives state from processed records). A block
+    * without a STATE point offers its own max key ([[LineBlock.offerMax]]),
+    * a block with one offers each line's. O(1) driver state; the driver
+    * holds the compressed blocks of at most two partitions, plus
+    * [[LineEncoder.MaxInFlight]] decompressed blocks.
     *
     * `onProgress` fires after every `stateEvery` emitted records with the
     * max replication-key string among records emitted SO FAR — the caller
@@ -98,17 +123,27 @@ object SingerSink {
                   stateEvery: Long = Long.MaxValue,
                   onProgress: Option[String] => Unit = _ => ()): (Long, Option[String]) = {
     var n = 0L
-    // The envelope is rendered once and split around its `"record":null`
-    // (unique: a `"` inside a JSON string is escaped), so a row costs one
-    // concatenation. singer_sdk stamps each RECORD with time_extracted;
-    // one per sync, from the caller, so all of a stream's records agree.
-    val envelope = obj().put("type", "RECORD").put("stream", stream.name).putNull("record")
-    timeExtracted.foreach(envelope.put("time_extracted", _))
-    val rendered = render(envelope)
-    val slot = rendered.indexOf("\"record\":null") + "\"record\":".length
-    val (prefix, suffix) = (rendered.take(slot), rendered.drop(slot + "null".length))
     val max = new MaxKey
-    val encoder = LineEncoder(df, stream)
+    def print(block: LineBlock): Unit =
+      if (n / stateEvery == (n + block.lines) / stateEvery) {
+        out.println(block.span(0, block.lines))
+        block.offerMax(max)
+        n += block.lines
+      } else {
+        var from, i = 0
+        while (i < block.lines) {
+          block.offerKey(i, max)
+          i += 1
+          n += 1
+          if (n % stateEvery == 0) {
+            out.println(block.span(from, i))
+            from = i
+            onProgress(max.value)
+          }
+        }
+        if (from < block.lines) out.println(block.span(from, block.lines))
+      }
+    val encoder = LineEncoder(df, stream, envelope(stream, timeExtracted))
     val blocks = df.queryExecution.toRdd.mapPartitions { rows =>
       val codec = GraftBridge.compressionCodec
       val done = ArrayBuffer.empty[Array[Byte]]
@@ -116,19 +151,40 @@ object SingerSink {
       done.iterator
     }
     val codec = GraftBridge.compressionCodec
-    val it = blocks.toLocalIterator
-    while (it.hasNext) {
-      val block = encoder.decompress(codec, it.next())
-      var i = 0
-      while (i < block.lines) {
-        out.println(prefix + block.line(i) + suffix)
-        block.offerKey(i, max)
-        n += 1
-        if (n % stateEvery == 0) onProgress(max.value)
-        i += 1
+    val decoded = new InOrder[LineBlock](CoreBudget.shared, LineEncoder.MaxInFlight, print)
+    val jobs = new java.util.ArrayDeque[FutureAction[Array[Array[Byte]]]]()
+    try {
+      for (p <- 0 until blocks.getNumPartitions) {
+        while (jobs.size < JobWindow && p + jobs.size < blocks.getNumPartitions)
+          jobs.add(partition(blocks, p + jobs.size))
+        Await.result(jobs.peek, Duration.Inf).foreach { data =>
+          decoded.submit(() => encoder.decompress(codec, data))
+        }
+        jobs.poll()
+        decoded.flush()
       }
+    } finally {
+      jobs.forEach(_.cancel())
+      decoded.close()
     }
     (n, max.value)
+  }
+
+  /** Partition jobs in flight at once in [[emitRecords]]: the one it
+    * prints and the next.
+    */
+  private val JobWindow = 2
+
+  /** The job that fetches partition `p` of `rdd`. It runs over an RDD of
+    * its own: the scheduler aborts every active job whose final RDD is the
+    * one a failed task ran on, so with `rdd` itself a failure in the next
+    * partition would fail this one's job too.
+    */
+  private def partition(rdd: RDD[Array[Byte]], p: Int): FutureAction[Array[Array[Byte]]] = {
+    var result: Array[Array[Byte]] = null
+    rdd.sparkContext.submitJob(PartitionPruningRDD.create(rdd, _ == p),
+      (it: Iterator[Array[Byte]]) => it.toArray, Seq(0),
+      (_: Int, r: Array[Array[Byte]]) => result = r, result)
   }
 
   /** `ACTIVATE_VERSION` — the singer_sdk FULL_TABLE resync handshake: a

@@ -1,8 +1,10 @@
 package graft
 
+import com.fasterxml.jackson.databind.util.RawValue
 import graft.config.{BatchConfig, BatchEncoding, BatchStorage, ConfigParser, StreamConfig}
 import graft.sinks.{BatchSink, CoreBudget, LineBlock, LineEncoder, MaxKey, SingerSink}
 import graft.sources.StreamSource
+import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -67,6 +69,46 @@ class LineEncoderSpec extends AnyFunSuite {
         assert(budget.available === budget.cores)
       }
     }
+  }
+
+  /** `df`'s blocks, encoded under `budget` and back through compression. */
+  private def blocks(df: DataFrame, stream: StreamConfig, budget: CoreBudget,
+                     envelope: (String, String) = ("", "")): Seq[LineBlock] = {
+    val codec = GraftBridge.compressionCodec
+    val encoder = LineEncoder(df, stream, envelope)
+    val got = ArrayBuffer.empty[LineBlock]
+    encoder.encode(df.queryExecution.toRdd.map(_.copy()).collect().iterator, budget)(
+      _.compress(codec))(got += encoder.decompress(codec, _))
+    got.toSeq
+  }
+
+  test("a block's max key is the max of its lines' keys; an enveloped line is the RECORD message") {
+    val tied = spark.range(0, 5000, 1, 1).select(col("id"), (col("id") % 100).as("k"))
+    val allNull = spark.range(0, 3000, 1, 1).select(col("id"), lit(null).cast("string").as("k"))
+    for ((df, key) <- Seq((awkward, "s"), (awkward, "ts"), (tied, "k"), (allNull, "k"));
+         budget <- Seq(new CoreBudget(0), new CoreBudget(8))) {
+      val stream = StreamConfig("mx", "", replicationKey = Some(key))
+      val perLine, perBlock = new MaxKey
+      for (block <- blocks(df, stream, budget)) {
+        (0 until block.lines).foreach(block.offerKey(_, perLine))
+        block.offerMax(perBlock)
+      }
+      assert(perBlock.value === perLine.value, s"$key, ${budget.cores} cores")
+      assert(budget.available === budget.cores)
+    }
+    // the first of tied maxima, and no max among null keys
+    val tiedBlock = blocks(tied, StreamConfig("mx", "", replicationKey = Some("k")), new CoreBudget(0)).head
+    assert(tiedBlock.maxLine === 99)
+    assert(blocks(allNull, StreamConfig("mx", "", replicationKey = Some("k")), new CoreBudget(0))
+      .forall(_.maxLine === -1))
+
+    val stream = StreamConfig("strøm 😀 \"q\"", "", replicationKey = Some("ts"))
+    val te = "2021-11-22T11:45:11.062824+00:00"
+    val json = SingerSink.encode(awkward, stream).collect().map(_.getString(0)).toSeq
+    val enveloped = blocks(awkward, stream, new CoreBudget(8), SingerSink.envelope(stream, Some(te)))
+      .flatMap(lines)
+    assert(enveloped === json.map(j => SingerSink.render(SingerSink.obj().put("type", "RECORD")
+      .put("stream", stream.name).putRawValue("record", new RawValue(j)).put("time_extracted", te))))
   }
 
   /** Partitions of 0, 1, B-1, B and B+1 rows with empty ones between;
@@ -162,24 +204,44 @@ class LineEncoderSpec extends AnyFunSuite {
   // A row of the third of four partitions fails the sync while the task
   // has line blocks in flight on helpers: emitRecords throws, and every
   // core slot comes back once the task has stopped. A leaked slot would
-  // serialize every later sync in this JVM.
+  // serialize every later sync in this JVM. A partition job still in
+  // flight behind the failed one is cancelled: no job outlives the sync.
   test("a failed RECORD-mode sync gives back every core slot") {
     val s = ConfigParser.parseStream(
       """{"name":"f","key_properties":["id"],
         |"sql":"SELECT id, CASE WHEN id = 250000 THEN raise_error('boom') ELSE id END AS v, repeat('x', 100) AS pad FROM range(0, 400000, 1, 4)",
         |"columns":[{"name":"id","type":"bigint"},{"name":"v","type":"bigint"},{"name":"pad","type":"text"}]}""".stripMargin)
-    val df = StreamSource.native(spark, s)
+    val sc = spark.sparkContext
     val budget = CoreBudget.shared // sized by the running session
-    var printed = 0L
-    val out = new PrintStream(OutputStream.nullOutputStream()) {
-      override def println(x: String): Unit = printed += 1
+    // the third partition fails, or the second, behind a 100k-row first
+    // one, while the third's job is in flight and must be cancelled
+    for ((failAt, before) <- Seq((250000, 200000), (100000, 100000))) {
+      val df = StreamSource.native(spark, s.copy(sql = s.sql.replace("250000", failAt.toString)))
+      var printed = 0L // newline-terminated lines written
+      val out = new PrintStream(new OutputStream {
+        def write(b: Int): Unit = if (b == '\n') printed += 1
+        override def write(b: Array[Byte], off: Int, len: Int): Unit =
+          (off until off + len).foreach(i => write(b(i).toInt))
+      }, false, UTF_8)
+      val e = intercept[Exception](SingerSink.emitRecords(df, s, out))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("boom")))
+      assert(printed === before) // the earlier partitions, nothing of the failed one
+      // the status tracker learns of jobs late, from the listener bus: once
+      // it has seen a job submitted after the sync end, it has seen every
+      // job the sync started
+      val marker = s"after-$failAt"
+      sc.setJobGroup(marker, marker)
+      sc.parallelize(Seq(0), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def settled = budget.available == budget.cores &&
+        sc.statusTracker.getJobIdsForGroup(marker).flatMap(sc.statusTracker.getJobInfo)
+          .exists(_.status == JobExecutionStatus.SUCCEEDED) &&
+        sc.statusTracker.getActiveJobIds.isEmpty
+      while (!settled && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(settled, s"fail at $failAt: active jobs ${sc.statusTracker.getActiveJobIds.toSeq}")
+      assert(budget.available === budget.cores, s"fail at $failAt")
     }
-    val e = intercept[Exception](SingerSink.emitRecords(df, s, out))
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(t => String.valueOf(t.getMessage).contains("boom")))
-    assert(printed === 200000) // the first two partitions, nothing of the third
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (budget.available != budget.cores && System.nanoTime() < deadline) Thread.sleep(20)
-    assert(budget.available === budget.cores)
   }
 }

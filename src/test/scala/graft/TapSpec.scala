@@ -151,14 +151,19 @@ class TapSpec extends AnyFunSuite {
 
   // -- periodic STATE emission (SDK STATE_MSG_FREQUENCY) -------------------
 
-  /** stdout pipe that dies (like a killed target) after `afterLines`. */
+  /** stdout pipe that dies (like a killed target) after `afterLines`
+    * lines: a `println` of several lines writes those up to the limit.
+    */
   private class KilledPipe extends RuntimeException("pipe killed")
   private def killingStream(buf: ByteArrayOutputStream, afterLines: Int) =
     new PrintStream(buf, true, "UTF-8") {
       private var lines = 0
       override def println(x: String): Unit = {
-        if (lines >= afterLines) throw new KilledPipe
-        super.println(x); lines += 1
+        val span = x.split("\n", -1)
+        val fit = math.min(span.length, afterLines - lines)
+        if (fit > 0) super.println(span.take(fit).mkString("\n"))
+        lines += fit
+        if (fit < span.length) throw new KilledPipe
       }
     }
   private def stateValue(line: String): String =
