@@ -329,6 +329,8 @@ object ConfigParser {
       problems += "state_message_frequency must be positive"
     if (tap.syncParallelism <= 0)
       problems += "sync_parallelism must be positive"
+    tap.batchConfig.map(_.encoding.format).filter(_ != "jsonl").foreach(f =>
+      problems += s"batch_config: unsupported batch format '$f'")
     val known = tap.streams.map(_.name).toSet
     (tap.streamMaps.keySet ++ tap.removedStreams).filterNot(known).foreach(m =>
       problems += s"stream_maps: unknown stream '$m'")

@@ -5,7 +5,9 @@ import java.util.concurrent.{ExecutionException, Executors, FutureTask, ThreadFa
 import java.util.concurrent.atomic.AtomicInteger
 
 /** A JVM-wide count of idle cores, and the one pool of helper threads that
-  * runs sink work on them. A running sink task holds one slot for as long
+  * runs sink work on them: a [[LineEncoder]] block's encoding and its
+  * sink's `finish` (RECORD mode compresses the block for the driver, batch
+  * mode cuts it into gzip members). A running sink task holds one slot for as long
   * as it runs ([[holding]]); an [[InOrder]] queue hands a unit of work to a
   * helper only while a slot is free and otherwise runs it on the calling
   * thread, so helpers use idle cores only.

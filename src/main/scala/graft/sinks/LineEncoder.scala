@@ -136,22 +136,25 @@ final class LineEncoder private (exprs: Seq[Expression], keyType: DataType,
 
   @transient private lazy val projections = ThreadLocal.withInitial[Projections](() => new Projections(exprs))
 
-  /** Encode `rows` into blocks; `finish` runs on the thread that encoded
-    * the block, `consume` on this one, in input order. Waits for every
-    * pending block before it returns or throws.
+  /** Encode `rows` into blocks; `finish` gets each block and the index of
+    * its first line among `rows` and runs on the thread that encoded the
+    * block, `consume` on this one, in input order. Waits for every pending
+    * block before it returns or throws.
     */
   def encode[T](rows: Iterator[InternalRow], budget: CoreBudget = CoreBudget.shared)
-               (finish: LineBlock => T)(consume: T => Unit): Unit = {
+               (finish: (LineBlock, Long) => T)(consume: T => Unit): Unit = {
     // helpers are not task threads: they evaluate under the task's conf
     val conf = SQLConf.get
     val pending = new InOrder[T](budget, MaxInFlight, consume)
     try {
+      var first = 0L
       while (rows.hasNext) {
         val batch = new Array[InternalRow](BatchRows)
         var n = 0
         while (n < BatchRows && rows.hasNext) { batch(n) = rows.next().copy(); n += 1 }
-        val size = n
-        pending.submit(() => SQLConf.withExistingConf(conf)(finish(encodeBatch(batch, size))))
+        val (size, at) = (n, first)
+        pending.submit(() => SQLConf.withExistingConf(conf)(finish(encodeBatch(batch, size), at)))
+        first += n
       }
       pending.flush()
     } finally pending.close()

@@ -147,7 +147,7 @@ object SingerSink {
     val blocks = df.queryExecution.toRdd.mapPartitions { rows =>
       val codec = GraftBridge.compressionCodec
       val done = ArrayBuffer.empty[Array[Byte]]
-      CoreBudget.shared.holding(encoder.encode(rows)(_.compress(codec))(done += _))
+      CoreBudget.shared.holding(encoder.encode(rows)((block, _) => block.compress(codec))(done += _))
       done.iterator
     }
     val codec = GraftBridge.compressionCodec

@@ -57,7 +57,7 @@ class LineEncoderSpec extends AnyFunSuite {
         val got = ArrayBuffer.empty[String]
         val max = new MaxKey
         // the compressed form too: that is what RECORD-mode tasks return
-        encoder.encode(rows.iterator, budget)(_.compress(codec)) { data =>
+        encoder.encode(rows.iterator, budget)((block, _) => block.compress(codec)) { data =>
           val block = encoder.decompress(codec, data)
           assert(block.lines <= B)
           got ++= lines(block)
@@ -78,7 +78,7 @@ class LineEncoderSpec extends AnyFunSuite {
     val encoder = LineEncoder(df, stream, envelope)
     val got = ArrayBuffer.empty[LineBlock]
     encoder.encode(df.queryExecution.toRdd.map(_.copy()).collect().iterator, budget)(
-      _.compress(codec))(got += encoder.decompress(codec, _))
+      (block, _) => block.compress(codec))(got += encoder.decompress(codec, _))
     got.toSeq
   }
 
@@ -168,6 +168,18 @@ class LineEncoderSpec extends AnyFunSuite {
         file
       }
       assert(all === SingerSink.encode(df, stream).collect().map(_.getString(0)).toSeq)
+      // a chunk's gzip members depend on its lines alone: the files are the
+      // pieces encoded inline and on helpers, byte for byte
+      val files = chunks.flatMap(c => Files.readAllBytes(Paths.get(java.net.URI.create(c.manifest.files.head))))
+      val partitions = df.queryExecution.toRdd.map(_.copy()).glom().collect()
+      for (budget <- Seq(new CoreBudget(0), new CoreBudget(8))) {
+        val encoder = LineEncoder(df, stream)
+        val pieces = ArrayBuffer.empty[Byte]
+        partitions.foreach(rows => encoder.encode(rows.iterator, budget)(
+          BatchSink.pieces(_, _, batchSize, gzip = true))(_.foreach(pieces ++= _.bytes)))
+        assert(pieces.toSeq === files, s"batch_size $batchSize, ${budget.cores} cores")
+        assert(budget.available === budget.cores)
+      }
     }
   }
 

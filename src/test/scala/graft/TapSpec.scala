@@ -488,7 +488,7 @@ class TapSpec extends AnyFunSuite {
         | "replication_key":"also_missing","batch_size":0,
         | "columns":[{"name":"x","type":"wat"}]},
         |{"name":"a","sql":"SELECT 1","columns":[{"name":"y","type":"int"}]}
-        |]}""".stripMargin)
+        |],"batch_config":{"encoding":{"format":"parquet"}}}""".stripMargin)
     val e = intercept[IllegalArgumentException](ConfigParser.validate(bad))
     val msg = e.getMessage
     assert(msg.contains("duplicate stream name 'a'"))
@@ -497,6 +497,7 @@ class TapSpec extends AnyFunSuite {
     assert(msg.contains("replication_key column 'also_missing' not declared"))
     assert(msg.contains("unsupported column type"))
     assert(msg.contains("batch_size must be positive"))
+    assert(msg.contains("batch_config: unsupported batch format 'parquet'"))
     // a clean config passes
     ConfigParser.validate(ConfigParser.parseTap(cfgJson))
   }
