@@ -1,7 +1,9 @@
 package graft.config
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import java.nio.charset.Charset
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** One declared output column of a stream.
   *
@@ -291,6 +293,15 @@ object ConfigParser {
         str(s, "root").getOrElse(fail("batch storage missing 'root'")),
         str(s, "prefix").getOrElse(""))).getOrElse(BatchStorage("file:///tmp")))
 
+  /** The JVM's file-name charset (`sun.jnu.encoding`): ASCII when no
+    * locale is set.
+    */
+  def fileNameCharset: Charset =
+    Try(Charset.forName(System.getProperty("sun.jnu.encoding"))).getOrElse(Charset.defaultCharset)
+
+  /** A batch root on the local filesystem: `file:` or no scheme. */
+  private def isLocal(root: String): Boolean = !root.contains(":") || root.toLowerCase.startsWith("file:")
+
   private def opt(n: JsonNode, f: String): Option[JsonNode] =
     Option(n.get(f)).filterNot(_.isNull)
   private def str(n: JsonNode, f: String): Option[String] = opt(n, f).map(_.asText)
@@ -300,9 +311,10 @@ object ConfigParser {
   /** Cross-field validation, the engine's analog of the reference's
     * config_jsonschema gate (tap.py:30-145) plus the runtime checks its
     * SDK applies: every problem reported at once with the stream name
-    * attached, instead of failing mid-sync.
+    * attached, instead of failing mid-sync. `fileNames` is the charset the
+    * JVM encodes local file names in.
     */
-  def validate(tap: TapConfig): Unit = {
+  def validate(tap: TapConfig, fileNames: Charset = fileNameCharset): Unit = {
     val problems = scala.collection.mutable.ArrayBuffer.empty[String]
     val dupNames = tap.streams.groupBy(_.name).collect { case (n, ss) if ss.size > 1 => n }
     dupNames.foreach(n => problems += s"duplicate stream name '$n'")
@@ -331,6 +343,15 @@ object ConfigParser {
       problems += "sync_parallelism must be positive"
     tap.batchConfig.map(_.encoding.format).filter(_ != "jsonl").foreach(f =>
       problems += s"batch_config: unsupported batch format '$f'")
+    // a local filesystem writes a character its charset cannot encode as
+    // `?`, so the file would not be at the URL its BATCH message announces
+    for (bc <- tap.batchConfig.toSeq if isLocal(bc.storage.root); s <- tap.streams) {
+      val emitted = tap.streamMaps.get(s.name).flatMap(_.alias).getOrElse(s.name)
+      if (!fileNames.newEncoder().canEncode(bc.storage.prefix + emitted))
+        problems += s"stream '${s.name}': batch file name prefix '${bc.storage.prefix}' or stream name " +
+          s"'$emitted' cannot be encoded in the file-name charset ${fileNames.name}; " +
+          "run under a UTF-8 locale (LC_ALL=C.UTF-8)"
+    }
     val known = tap.streams.map(_.name).toSet
     (tap.streamMaps.keySet ++ tap.removedStreams).filterNot(known).foreach(m =>
       problems += s"stream_maps: unknown stream '$m'")

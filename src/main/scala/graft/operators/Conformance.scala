@@ -4,7 +4,6 @@ import graft.config.ColumnSpec
 import graft.types.TypeMapper
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Record conformance: project to the declared columns (dropping unmapped
   * ones), cast each to its declared type, and canonicalize UUIDs.
@@ -12,7 +11,9 @@ import org.apache.spark.sql.types._
   * Reference behavior: SDK `conform_record_data_types` + UUID fix-up at
   * tap_rawpostgresql/client.py:144-161; unmapped-property drop documented at
   * client.py:147-151. Here the whole step is a single Catalyst `Project`,
-  * so column pruning pushes into the scan for free.
+  * so column pruning pushes into the scan for free. The sinks write the
+  * conformed row as is; only its JSON rendering formats timestamps and
+  * dates ([[IsoTimestampPattern]]).
   */
 object Conformance {
 
@@ -53,21 +54,9 @@ object Conformance {
   /** ISO8601 timestamp pattern with microseconds and `+00:00`-style offset —
     * the exact serialization the reference's JSON output uses
     * (reference: tests/test_postgres.py:200-203 asserts
-    * `"2021-11-22T11:45:11.062824+00:00"`).
+    * `"2021-11-22T11:45:11.062824+00:00"`). Both sinks write a record's
+    * timestamps in this form and its dates as `yyyy-MM-dd`, each in the
+    * session time zone, as `date_format` formats them (`graft.sinks.RecordWriter`).
     */
   val IsoTimestampPattern = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"
-
-  /** Per-column expressions serializing timestamp/date columns to their
-    * reference JSON string forms — the record projection of
-    * `SingerSink.encode`, which both sinks write, with the replication key
-    * riding alongside the JSON line.
-    */
-  def temporalExprs(df: DataFrame): Seq[Column] =
-    df.schema.fields.toSeq.map { f =>
-      f.dataType match {
-        case TimestampType => date_format(col(f.name), IsoTimestampPattern).as(f.name)
-        case DateType => date_format(col(f.name), "yyyy-MM-dd").as(f.name)
-        case _ => col(f.name)
-      }
-    }
 }

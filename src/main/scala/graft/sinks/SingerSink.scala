@@ -3,7 +3,6 @@ package graft.sinks
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode}
 import graft.config.StreamConfig
-import graft.operators.Conformance
 import graft.state.TapState
 import org.apache.spark.FutureAction
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
@@ -55,27 +54,6 @@ object SingerSink {
     line(out, msg)
   }
 
-  /** The one row encoding both sinks write: [[LineEncoder]] evaluates
-    * these expressions, on executors. Column `j` is the record's
-    * JSON (`to_json`), with timestamps
-    * and dates in their reference string forms. `ignoreNullFields=false`
-    * so null-valued columns appear as explicit JSON nulls — `df.toJSON`
-    * would drop them, but the reference/singer_sdk emits every declared
-    * column in each record and strict Singer targets check schema parity.
-    * With a replication key, `rk` carries it natively (type-correct
-    * ordering: numbers must not compare lexicographically) and `rks` its
-    * Spark string cast, the bookmark rendering (see [[MaxKey]]).
-    */
-  def encode(df: DataFrame, stream: StreamConfig): DataFrame = {
-    import org.apache.spark.sql.functions.{col, struct, to_json}
-    val j = to_json(struct(Conformance.temporalExprs(df): _*),
-      java.util.Map.of("ignoreNullFields", "false")).as("j")
-    stream.replicationKey match {
-      case Some(k) => df.select(j, col(k).as("rk"), col(k).cast("string").as("rks"))
-      case None => df.select(j)
-    }
-  }
-
   /** The RECORD envelope around a record's JSON, as (prefix, suffix):
     * rendered once and split around its `"record":null` (unique: a `"`
     * inside a JSON string is escaped). singer_sdk stamps each RECORD with
@@ -90,9 +68,12 @@ object SingerSink {
     (rendered.take(slot), rendered.drop(slot + "null".length))
   }
 
-  /** Emit RECORD messages: only the [[encode]]d lines stream through the
-    * driver, already enveloped. Each partition's task encodes its rows
-    * into [[LineBlock]]s of final RECORD lines on the executor's idle
+  /** Emit RECORD messages: only the encoded lines stream through the
+    * driver, already enveloped. A record is every column of `df`, nulls
+    * included as JSON nulls (singer_sdk emits every declared column and
+    * strict Singer targets check schema parity), with timestamps and dates
+    * in their reference string forms. Each partition's task encodes its
+    * rows into [[LineBlock]]s of final RECORD lines on the executor's idle
     * cores ([[LineEncoder]]) and returns them compressed with
     * `spark.io.compression.codec`. The driver runs one job per partition,
     * in order, with the next partition's job in flight while it prints
@@ -247,10 +228,10 @@ object SingerSink {
   }
 }
 
-/** The running max of a stream's replication key over [[SingerSink.encode]]d
-  * rows, in Spark's max() order, keeping the winner's string cast as the
-  * bookmark: argmax(native) then its string == cast(max(native)), the
-  * rendering `Bookmarks.advance` produced from a whole-column max. A String
+/** The running max of a stream's replication key over encoded rows, in
+  * Spark's max() order, keeping the winner's string cast as the bookmark:
+  * argmax(native) then its string == cast(max(native)), the rendering
+  * `Bookmarks.advance` produced from a whole-column max. A String
   * compares as UTF8String (UTF-8 byte order), not by its UTF-16 code units,
   * so bookmarks agree with `max()` on supplementary-plane values.
   * Serializable: batch write tasks return one per chunk.

@@ -9,14 +9,14 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import java.io.{BufferedReader, ByteArrayOutputStream, InputStreamReader, OutputStream, PrintStream}
-import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPInputStream
 import scala.collection.mutable.ArrayBuffer
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The block line encoder both sinks run: the lines are exactly
-  * [[SingerSink.encode]]'s whoever encodes a block, block and partition
+  * [[RecordOracle.encode]]'s whoever encodes a block, block and partition
   * boundaries never show in either sink's output or bookmarks, and a
   * failed RECORD-mode sync gives back every core slot.
   */
@@ -26,27 +26,65 @@ class LineEncoderSpec extends AnyFunSuite {
 
   /** 60k rows over 4 partitions of every value class `to_json` escapes or
     * formats: quotes, backslashes, control characters, non-BMP text,
-    * nulls, doubles (NaN too), decimals, timestamps, dates and booleans.
+    * strings that are not valid UTF-8, nulls, floats and doubles (NaN,
+    * -0.0, ±Infinity, scientific notation), integers of every width and
+    * `Long.MinValue`, decimals (scientific too), timestamps and dates
+    * (years 0, 385 and 10000, before the epoch), booleans, binary, and a
+    * stream map's struct, array and map columns and `timestamp_ntz`.
     */
   private def awkward: DataFrame = spark.range(0, 60000, 1, 4).select(
     col("id"),
     when(col("id") % 7 === 0, lit(null)).otherwise(concat(
-      lit("q\"b\\s\u0001\u001f\t\n "), col("id").cast("string"),
+      lit("q\"b\\s\u0001\u001f\t\n\b\f\r\u007f "), col("id").cast("string"),
       lit("😀 é"))).as("s"),
-    when(col("id") % 11 === 0, lit(Double.NaN)).otherwise(col("id") / 3.0).as("d"),
+    expr("""CASE id % 11 WHEN 0 THEN double('NaN') WHEN 1 THEN -0.0D WHEN 2 THEN double('Infinity')
+           |WHEN 3 THEN double('-Infinity') WHEN 4 THEN id * 1e-10 ELSE id / 3.0D END""".stripMargin).as("d"),
+    expr("""CAST(CASE id % 7 WHEN 0 THEN double('NaN') WHEN 1 THEN -0.0D WHEN 2 THEN double('-Infinity')
+           |WHEN 3 THEN id * 1e-9 ELSE id / 7.0D END AS FLOAT)""".stripMargin).as("f"),
     (col("id") * 1.23).cast("decimal(18,4)").as("dec"),
+    expr("CAST(CASE WHEN id % 3 = 0 THEN (id % 5) * 0.0000001 ELSE id * 1.5 END AS DECIMAL(18,10))").as("small"),
+    expr("CASE id % 5 WHEN 0 THEN bigint('-9223372036854775808') WHEN 1 THEN bigint('9223372036854775807') ELSE id * -1000003 END").as("l"),
+    expr("CAST(id % 65536 - 32768 AS SMALLINT)").as("sh"),
+    expr("CAST(id % 256 - 128 AS TINYINT)").as("by \"é\""),
+    expr("""CAST(CASE id % 6 WHEN 0 THEN X'C0AF41' WHEN 1 THEN X'EDA080' WHEN 2 THEN X'E282'
+           |WHEN 3 THEN X'F4908080' WHEN 4 THEN X'41FF42E282AC' ELSE X'F09F9880E282AC' END AS STRING)""".stripMargin)
+      .as("bad"),
     expr("timestamp_micros(1637581511062824 + id * 1000001)").as("ts"),
+    expr("""timestamp_micros(CASE id % 5 WHEN 0 THEN -62161989903876544 + id WHEN 1 THEN -50000885877000000 - id
+           |WHEN 2 THEN 253402300800000000 + id WHEN 3 THEN -1 - id * 997 ELSE 253402300799999999 END)""".stripMargin)
+      .as("ts2"),
     expr("date_add(DATE'2020-01-01', CAST(id % 1000 AS INT))").as("dt"),
-    (col("id") % 2 === 0).as("b"))
+    expr("date_from_unix_date(CAST(CASE id % 4 WHEN 0 THEN -719528 WHEN 1 THEN -578714 WHEN 2 THEN 2932897 ELSE -1 - id END AS INT))")
+      .as("dt2"),
+    (col("id") % 2 === 0).as("b"),
+    expr("CAST(concat('b\u0001', id) AS BINARY)").as("bin"),
+    expr("named_struct('i', id, 't', timestamp_micros(1637581511062824 + id), 'q', concat('\"', id), 'n', CAST(NULL AS STRING))")
+      .as("st"),
+    expr("array(id, NULL, id * 2)").as("arr"),
+    expr("map('k\"', concat('v', id), 'z', CAST(NULL AS STRING))").as("m"),
+    expr("CAST(timestamp_micros(1637581511062824 + id) AS TIMESTAMP_NTZ)").as("ntz"))
 
   private def lines(block: LineBlock): Seq[String] = (0 until block.lines).map(block.line)
 
+  /** Each line's bytes, one char per byte: equal exactly when the bytes are. */
+  private def rawLines(block: LineBlock): Seq[String] = (0 until block.lines).map(i =>
+    new String(block.bytes, block.start(i), block.ends(i) - 1 - block.start(i), ISO_8859_1))
+
+  /** `body` with the session time zone set to `zone`. */
+  private def inZone[T](zone: String)(body: => T): T = {
+    val before = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try body finally spark.conf.set("spark.sql.session.timeZone", before)
+  }
+
   test("blocks hold exactly encode's lines and keys, inline and on helpers") {
-    val df = awkward
-    for (key <- Seq(None, Some("s"), Some("ts"))) {
+    // UTC, a zone with DST and LMT offsets, and a fixed offset that is not UTC
+    for ((zone, key) <- Seq(("UTC", None), ("UTC", Some("s")), ("UTC", Some("ts")),
+      ("Europe/Berlin", Some("ts")), ("+05:30", Some("dt2")))) inZone(zone) {
+      val df = awkward
       val stream = StreamConfig("awk", "", replicationKey = key)
-      val encoded = SingerSink.encode(df, stream).collect()
-      val expected = encoded.map(_.getString(0)).toSeq
+      val encoded = RecordOracle.encode(df, stream).collect()
+      val expected = encoded.map(r => new String(r.getString(0).getBytes(UTF_8), ISO_8859_1)).toSeq
       val expectedMax = new MaxKey
       if (key.isDefined) encoded.foreach(r => expectedMax.add(r.get(1), r.getString(2)))
       val rows = df.queryExecution.toRdd.map(_.copy()).collect()
@@ -60,11 +98,12 @@ class LineEncoderSpec extends AnyFunSuite {
         encoder.encode(rows.iterator, budget)((block, _) => block.compress(codec)) { data =>
           val block = encoder.decompress(codec, data)
           assert(block.lines <= B)
-          got ++= lines(block)
+          got ++= rawLines(block)
           (0 until block.lines).foreach(block.offerKey(_, max))
         }
-        assert(got.length === expected.length, s"$key, ${budget.cores} cores")
-        assert(got === expected, s"$key, ${budget.cores} cores")
+        assert(got.length === expected.length, s"$zone, $key, ${budget.cores} cores")
+        val diff = got.indices.find(i => got(i) != expected(i))
+        assert(diff.isEmpty, s"$zone, $key, ${budget.cores} cores: ${diff.map(i => s"${got(i)} != ${expected(i)}")}")
         assert(max.value === expectedMax.value)
         assert(budget.available === budget.cores)
       }
@@ -104,7 +143,7 @@ class LineEncoderSpec extends AnyFunSuite {
 
     val stream = StreamConfig("strøm 😀 \"q\"", "", replicationKey = Some("ts"))
     val te = "2021-11-22T11:45:11.062824+00:00"
-    val json = SingerSink.encode(awkward, stream).collect().map(_.getString(0)).toSeq
+    val json = RecordOracle.encode(awkward, stream).collect().map(_.getString(0)).toSeq
     val enveloped = blocks(awkward, stream, new CoreBudget(8), SingerSink.envelope(stream, Some(te)))
       .flatMap(lines)
     assert(enveloped === json.map(j => SingerSink.render(SingerSink.obj().put("type", "RECORD")
@@ -127,7 +166,7 @@ class LineEncoderSpec extends AnyFunSuite {
     val (df, sizes) = boundaries
     assert(df.rdd.getNumPartitions === sizes.length)
     val stream = StreamConfig("bnd", "", keyProperties = Seq("id"), replicationKey = Some("k"))
-    val keys = SingerSink.encode(df, stream).collect()
+    val keys = RecordOracle.encode(df, stream).collect()
     val expected = keys.map(_.getString(0)).toSeq
     val buf = new ByteArrayOutputStream()
     val progress = ArrayBuffer.empty[Option[String]]
@@ -167,7 +206,7 @@ class LineEncoderSpec extends AnyFunSuite {
         assert(c.maxKey.value === Some(keys.max))
         file
       }
-      assert(all === SingerSink.encode(df, stream).collect().map(_.getString(0)).toSeq)
+      assert(all === RecordOracle.encode(df, stream).collect().map(_.getString(0)).toSeq)
       // a chunk's gzip members depend on its lines alone: the files are the
       // pieces encoded inline and on helpers, byte for byte
       val files = chunks.flatMap(c => Files.readAllBytes(Paths.get(java.net.URI.create(c.manifest.files.head))))

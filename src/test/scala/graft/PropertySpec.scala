@@ -2,12 +2,14 @@ package graft
 
 import com.fasterxml.jackson.databind.JsonNode
 import graft.config.{ColumnSpec, StreamConfig, TapConfig}
-import graft.sinks.{BatchManifest, SingerSink}
+import graft.sinks.{BatchManifest, CoreBudget, LineEncoder, SingerSink}
 import graft.sources.SqlDialect
 import graft.state.TapState
 import graft.types.TypeMapper
 import java.io.{ByteArrayOutputStream, OutputStream, PrintStream}
 import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{date_from_unix_date, timestamp_micros}
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -15,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Property tests for the pure layers: type mapping, literal rendering,
-  * dialect rewriting, required/nullable schema rules (§2.4.1).
+  * dialect rewriting, required/nullable schema rules (§2.4.1), and the
+  * sinks' record writer against Spark's `to_json`.
   * Uses raw ScalaCheck generators with a fixed seed (the scalatest-plus
   * bridge is not in the offline artifact cache).
   */
@@ -1005,5 +1008,67 @@ class PropertySpec extends AnyFunSuite {
   test("every Singer message is one line of JSON that round-trips its strings") {
     checkWire(allControls, "\"\\\u2028\u2029" + new String(Character.toChars(0x1f600)))
     forAll(wireString, wireString)(checkWire)
+  }
+
+  /** A value of `dt` in the raw form the record frame is built from:
+    * timestamps as epoch microseconds, dates as epoch days, both reaching
+    * past years 0000 and 9999.
+    */
+  private def rawValue(dt: DataType): Gen[Any] = dt match {
+    case StringType => Gen.listOf(Gen.frequency(
+      8 -> Gen.choose(' ', '~').map(_.toString),
+      2 -> Gen.choose('\u0000', '\u001f').map(_.toString),
+      1 -> Gen.oneOf("\"", "\\", "\u007f", "\u2028", new String(Character.toChars(0x1f600))),
+      2 -> Gen.choose('\u00a0', '\ud7ff').map(_.toString))).map(_.mkString)
+    case d: DecimalType => for {
+      n <- Gen.choose(1, d.precision)
+      digits <- Gen.listOfN(n, Gen.numChar)
+      sign <- Gen.oneOf("", "-")
+    } yield new java.math.BigDecimal(new java.math.BigInteger(sign + digits.mkString), d.scale)
+    case IntegerType => Gen.chooseNum(Int.MinValue, Int.MaxValue)
+    case LongType => Gen.chooseNum(Long.MinValue, Long.MaxValue)
+    case ShortType => Gen.chooseNum(Short.MinValue, Short.MaxValue)
+    case TimestampType => Gen.frequency(
+      4 -> Gen.choose(-62167219200000000L, 253402300799999999L), // years 0000-9999
+      1 -> Gen.choose(-300000000000000000L, 300000000000000000L),
+      1 -> Gen.choose(-1000000000L, 1000000000L))
+    case DateType => Gen.frequency(4 -> Gen.choose(-719528, 2932896), 1 -> Gen.choose(-3000000, 3000000))
+    case BooleanType => Gen.oneOf(true, false)
+    case FloatType => Gen.frequency(4 -> Gen.chooseNum(Float.MinValue, Float.MaxValue),
+      1 -> Gen.oneOf(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0.0f, Float.MinPositiveValue),
+      2 -> Gen.choose(-1e-3f, 1e-3f))
+    case DoubleType => Gen.frequency(4 -> Gen.chooseNum(Double.MinValue, Double.MaxValue),
+      1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0, Double.MinPositiveValue),
+      2 -> Gen.choose(-1e-3, 1e-3))
+    case BinaryType => Gen.listOf(Gen.choose(Byte.MinValue, Byte.MaxValue)).map(_.toArray)
+  }
+
+  test("the record writer's lines equal to_json's for random rows of every declared type") {
+    val spark = SparkTestSession.spark
+    val types = Seq("text", "decimal", "numeric(12)", "decimal(18,10)", "int", "bigint", "smallint",
+      "timestamp", "date", "bool", "float", "double", "bytea").map(TypeMapper.toDataType)
+    val gen = for {
+      cols <- Gen.nonEmptyListOf(Gen.oneOf(types)).map(_.take(8))
+      rows <- Gen.listOf(Gen.sequence[Seq[Any], Any](cols.map(t => Gen.frequency(1 -> Gen.const(null), 5 -> rawValue(t)))))
+    } yield (cols, rows.take(40))
+    forAll(gen, n = 40) { case (cols, rows) =>
+      val names = cols.indices.map(i => s"c$i \"é\"")
+      val raw = spark.createDataFrame(rows.map(Row.fromSeq).asJava, StructType(cols.zip(names).map {
+        case (TimestampType, n) => StructField(n, LongType)
+        case (DateType, n) => StructField(n, IntegerType)
+        case (t, n) => StructField(n, t)
+      }))
+      val df = raw.select(cols.zip(names).map {
+        case (TimestampType, n) => timestamp_micros(raw(s"`$n`")).as(n)
+        case (DateType, n) => date_from_unix_date(raw(s"`$n`")).as(n)
+        case (_, n) => raw(s"`$n`")
+      }: _*)
+      val stream = StreamConfig("p", "")
+      val expected = RecordOracle.encode(df, stream).collect().map(_.getString(0).getBytes(UTF_8).toSeq).toSeq
+      val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Byte]]
+      LineEncoder(df, stream).encode(df.queryExecution.toRdd.map(_.copy()).collect().iterator, new CoreBudget(0))(
+        (block, _) => (0 until block.lines).map(i => block.bytes.slice(block.start(i), block.ends(i) - 1).toSeq))(got ++= _)
+      assert(got.toSeq === expected, cols.mkString(", "))
+    }
   }
 }

@@ -4,7 +4,7 @@ import graft.config.ConfigParser
 import graft.sinks.SingerSink
 import graft.state.Bookmarks
 import java.io.{ByteArrayOutputStream, PrintStream}
-import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -498,6 +498,16 @@ class TapSpec extends AnyFunSuite {
     assert(msg.contains("unsupported column type"))
     assert(msg.contains("batch_size must be positive"))
     assert(msg.contains("batch_config: unsupported batch format 'parquet'"))
+    // a batch stream whose file name a local root's charset cannot encode
+    val aliased = ConfigParser.parseTap(
+      """{"streams":[{"name":"full","sql":"SELECT 1 AS y","columns":[{"name":"y","type":"int"}]}],
+        |"stream_maps":{"full":{"__alias__":"full_ålias"}},
+        |"batch_config":{"storage":{"root":"/tmp/graft-batch"}}}""".stripMargin)
+    val ascii = intercept[IllegalArgumentException](ConfigParser.validate(aliased, US_ASCII)).getMessage
+    assert(ascii.contains("stream 'full'") && ascii.contains("'full_ålias'") && ascii.contains("LC_ALL=C.UTF-8"))
+    ConfigParser.validate(aliased, UTF_8)
+    ConfigParser.validate(aliased.copy(batchConfig = aliased.batchConfig.map(b =>
+      b.copy(storage = b.storage.copy(root = "s3a://bucket/out")))), US_ASCII)
     // a clean config passes
     ConfigParser.validate(ConfigParser.parseTap(cfgJson))
   }
