@@ -40,7 +40,8 @@ object Bench {
     "sim_ivfpq", "pipeline_full", "text_pack",
     // round-5: exact duplicate-span removal (boilerplate scrubbing),
     // whole-doc next-fit bin packing, and incremental cross-corpus dedup
-    // (index build + probe in one number; ProfIncremental splits them)
+    // (index build + probe in one number; the split profile is
+    // `git show 4a60afe:src/main/scala/graft/tools/ProfIncremental.scala`)
     "dedup_spans", "text_pack_bins", "dedup_incremental",
     // round-5 second wave: clustered (SemDeDup-style) semantic dedup,
     // weighted priority sampling, boilerplate top-k n-grams, and
@@ -214,22 +215,22 @@ object Bench {
     // serialize with any other heavyweight graft JVM — the artifact
     // number must be the isolated number (VERDICT r9 item 6)
     graft.tools.RunLock.acquire("bench")
-    benchFp = Some(graft.tools.BuildFingerprint.compute())
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(Headline)
-    if (!sys.env.contains("SPARK_GRAFT_NO_SHARD") && names.size > ChunkSize)
-      runCoordinator(sfDir, names)
-    else
-      runInline(sfDir, names)
+    if (sys.env.contains("SPARK_GRAFT_NO_SHARD")) runInline(sfDir, names)
+    else runCoordinator(sfDir, names)
   }
 
-  /** Shard coordinator: measure `names` in fresh child JVMs of
-    * [[ChunkSize]], at the base SF and (unless skipped) the 10× dir,
-    * then emit the single merged JSON line the driver parses.
+  /** Shard coordinator, the one top-level path: measure `names` in fresh
+    * child JVMs of [[ChunkSize]], at the base SF and (unless skipped) the
+    * 10× dir, then emit the single merged JSON result line.
     */
   private def runCoordinator(sfDir: String, names: Seq[String]): Unit = {
+    // a bench artifact can never mix timings from two builds (VERDICT
+    // r10 item 1): captured here, checked before emit
+    val fp = graft.tools.BuildFingerprint.compute()
     val chunks = names.grouped(ChunkSize).toSeq
     def sweep(dir: String): Option[Seq[(String, Double)]] = {
       val parts = chunks.zipWithIndex.map { case (ch, i) =>
@@ -243,10 +244,10 @@ object Bench {
       System.err.println("[bench] base-sf sweep lost a chunk — aborting")
       sys.exit(54)
     }
-    def qJson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
-        .mkString("{", ",", "}")
     val total = base.map(_._2).sum
+    // 10× sweep in the SAME json (VERDICT r6 item 7): round-over-round
+    // scale regressions become machine-diffable instead of living in
+    // SCALING.md prose; headline `value` stays the base-sf total
     val tenxDir = sys.env.get("SPARK_GRAFT_SF10_DIR").orElse {
       if (new java.io.File(sfDir).getName == "sf0.1") Some("/tmp/sf1")
       else None
@@ -254,7 +255,7 @@ object Bench {
     val tenx = tenxDir.flatMap { dir =>
       if (!new java.io.File(s"$dir/documents.parquet").exists()) {
         System.err.println(s"[bench] generating 10x fixture at $dir")
-        val spark = buildSession(sfDir)
+        val spark = buildSession()
         try graft.tools.ScaleUp.scale(spark, sfDir, dir, 10)
         finally spark.stop()
       }
@@ -263,10 +264,20 @@ object Bench {
     val tenxJson = tenx.map { case (t, qs, dir) =>
       f""","value_10x":$t%.3f,"queries_10x":$qs,"sf_10x":"$dir""""
     }.getOrElse("")
+    // refuse to seal a bench artifact whose code moved mid-run
+    graft.tools.BuildFingerprint.check(fp, "bench")(())
+    System.err.println(s"[bench] build fingerprint: ${fp.render}")
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${qJson(base)},"sf":"$sfDir"$tenxJson}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${qJson(base)},"sf":"$sfDir"$tenxJson,"build_fingerprint":${fp.json}}"""
     emit(json, total, sfDir, base, tenx.map(_._1))
   }
+
+  private def qJson(rs: Seq[(String, Double)]): String =
+    rs.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
+      .mkString("{", ",", "}")
+
+  private def resultFile: java.nio.file.Path = java.nio.file.Paths.get(
+    sys.env.getOrElse("SPARK_GRAFT_RESULT_FILE", "bench_result.json"))
 
   /** Final stdout emission. The full JSON goes to the sidecar file and to
     * stdout; the LAST stdout line is a compact (< 1.5 KB) summary that a
@@ -277,36 +288,19 @@ object Bench {
     * Keys mirror the full JSON; `queries` carries the 15 slowest entries,
     * with the complete set in the sidecar (`bench_result.json`).
     */
-  /** Captured at main() start; checked before emit so a bench artifact can
-    * never mix timings from two builds (VERDICT r10 item 1). */
-  @volatile private var benchFp: Option[graft.tools.BuildFingerprint.FP] = None
-
-  private def emit(json0: String, total: Double, sfDir: String,
+  private def emit(json: String, total: Double, sfDir: String,
                    results: Seq[(String, Double)],
                    tenxTotal: Option[Double]): Unit = {
-    // refuse to seal a bench artifact whose code moved mid-run
-    val json = benchFp match {
-      case Some(fp) =>
-        graft.tools.BuildFingerprint.check(fp, "bench")(())
-        System.err.println(s"[bench] build fingerprint: ${fp.render}")
-        json0.stripSuffix("}") + s""","build_fingerprint":${fp.json}}"""
-      case None => json0 // inline child chunks emit raw; coordinator stamps
-    }
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_RESULT_FILE", "bench_result.json")),
-      (json + "\n").getBytes("UTF-8"))
+    try java.nio.file.Files.write(resultFile, (json + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
     println(json)
     val slowest = results.sortBy(-_._2).take(15)
-    val qj = slowest.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
-      .mkString("{", ",", "}")
     val tenx = tenxTotal.map(t => f""","value_10x":$t%.3f""").getOrElse("")
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"queries":$qj,"queries_note":"15 slowest of ${results.size}; full set in bench_result.json"$tenx}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"queries":${qJson(slowest)},"queries_note":"15 slowest of ${results.size}; full set in bench_result.json"$tenx}""")
   }
 
-  private def buildSession(sfDir: String): SparkSession = {
+  private def buildSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -320,22 +314,26 @@ object Bench {
     spark
   }
 
+  /** Child-JVM body ([[spawnChild]] sets `SPARK_GRAFT_NO_SHARD`): time
+    * `names` against `sfDir` and write `{"queries":{...}}` to the result
+    * file the coordinator reads.
+    */
   private def runInline(sfDir: String, names: Seq[String]): Unit = {
-    val spark = buildSession(sfDir)
+    val spark = buildSession()
 
     // one trivial action to absorb session/codegen cold start
     spark.range(1000000).selectExpr("sum(id)").collect()
 
-    def once(name: String, dir: String): Double = {
+    def once(name: String): Double = {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      try fn(spark, dir).write.format("noop").mode("overwrite").save()
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         // a query that killed the context (executor OOM → uncaught-
         // handler shutdown) would make every later query "fail" in 10 ms
         // and shrink the total SILENTLY — abort instead, so the missing
-        // suite is visible (nonzero exit; a 10× child reports None)
+        // chunk is visible (nonzero exit; the coordinator reports None)
         if (spark.sparkContext.isStopped) {
           System.err.println(s"[bench] SparkContext died during $name — aborting suite")
           sys.exit(53)
@@ -347,68 +345,15 @@ object Bench {
     // two runs, report the faster: the first pays parquet footer reads and
     // whole-stage codegen compilation; the second is the steady state a
     // long-running cluster job actually sees
-    def suite(dir: String, tag: String): Seq[(String, Double)] =
-      names.map { name =>
-        val secs = math.min(once(name, dir), once(name, dir))
-        System.err.println(f"[bench]$tag $name%-22s $secs%.2fs")
-        name -> secs
-      }
-    def qJson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
-        .mkString("{", ",", "}")
-
-    val results = suite(sfDir, "")
-    val total = results.map(_._2).sum
-
-    // 10× sweep in the SAME json (VERDICT r6 item 7): round-over-round
-    // scale regressions become machine-diffable instead of living in
-    // SCALING.md prose. The 10× dir derives from the bench dir (ScaleUp
-    // regenerates it when absent); headline `value` stays the base-sf
-    // total so the series remains comparable across rounds.
-    //
-    // The 10× suite runs in a CHILD JVM: after ~150 query executions in
-    // local mode the shared driver+executor heap carries enough residue
-    // (codegen caches, localCheckpoint blocks pending ContextCleaner GC)
-    // that a same-JVM second suite measures GC pressure, not plans —
-    // observed 358 s in-JVM vs 187 s fresh for the identical sweep. The
-    // child inherits this JVM's flags (-Xmx, --add-opens) and classpath.
-    val tenxDir = sys.env.get("SPARK_GRAFT_SF10_DIR").orElse {
-      if (new java.io.File(sfDir).getName == "sf0.1") Some("/tmp/sf1")
-      else None
-    }.filter(_ => !sys.env.contains("SPARK_GRAFT_SKIP_10X"))
-    val tenx = tenxDir.flatMap { dir =>
-      if (!new java.io.File(s"$dir/documents.parquet").exists()) {
-        System.err.println(s"[bench] generating 10x fixture at $dir")
-        graft.tools.ScaleUp.scale(spark, sfDir, dir, 10)
-      }
-      runChildSuite(dir, names).map { case (childTotal, childQueries) =>
-        (childTotal,
-         f""","value_10x":$childTotal%.3f,"queries_10x":$childQueries,"sf_10x":"$dir"""")
-      }
+    val results = names.map { name =>
+      val secs = math.min(once(name), once(name))
+      System.err.println(f"[bench] $name%-22s $secs%.2fs")
+      name -> secs
     }
-    val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${qJson(results)},"sf":"$sfDir"${tenx.map(_._2).getOrElse("")}}"""
     spark.stop()
-    emit(json, total, sfDir, results, tenx.map(_._1))
+    java.nio.file.Files.write(resultFile,
+      s"""{"queries":${qJson(results)}}\n""".getBytes("UTF-8"))
   }
-
-  /** Run the headline suite against `dir` in a fresh child JVM (same
-    * flags/classpath, 10× re-entry disabled) and return (total,
-    * queries-json) parsed from its sidecar file. None on any failure —
-    * the base-sf headline still reports.
-    */
-  private def runChildSuite(dir: String,
-                            names: Seq[String]): Option[(Double, String)] =
-    try {
-      val resultFile = spawnChild(dir, names, shard = true)
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readString(
-          java.nio.file.Paths.get(resultFile)))
-      Some((node.get("value").asDouble(), node.get("queries").toString))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] 10x child failed: ${e.getMessage}")
-      None
-    }
 
   /** Measure one chunk of queries in a fresh child JVM; per-query
     * timings in chunk order, None if the child failed.
@@ -416,7 +361,7 @@ object Bench {
   private def runChunk(dir: String,
                        names: Seq[String]): Option[Seq[(String, Double)]] =
     try {
-      val resultFile = spawnChild(dir, names, shard = false)
+      val resultFile = spawnChild(dir, names)
       val node = new com.fasterxml.jackson.databind.ObjectMapper()
         .readTree(java.nio.file.Files.readString(
           java.nio.file.Paths.get(resultFile)))
@@ -427,12 +372,11 @@ object Bench {
       None
     }
 
-  /** Launch `graft.Bench` in a child JVM (same flags/classpath) against
-    * `dir` restricted to `names`, 10× re-entry disabled; returns the
-    * sidecar result path. Throws on nonzero exit.
+  /** Launch `graft.Bench` in a child JVM (same flags/classpath) that
+    * times `names` against `dir` ([[runInline]]); returns the sidecar
+    * result path. Throws on nonzero exit.
     */
-  private def spawnChild(dir: String, names: Seq[String],
-                         shard: Boolean): String = {
+  private def spawnChild(dir: String, names: Seq[String]): String = {
     import scala.jdk.CollectionConverters._
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val jvmArgs = java.lang.management.ManagementFactory
@@ -443,9 +387,8 @@ object Bench {
     val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench")
     val pb = new ProcessBuilder(cmd.asJava)
     pb.environment().put("SPARK_GRAFT_SF_DIR", dir)
-    pb.environment().put("SPARK_GRAFT_SKIP_10X", "1")
     pb.environment().put("SPARK_GRAFT_BENCH_ONLY", names.mkString(","))
-    if (!shard) pb.environment().put("SPARK_GRAFT_NO_SHARD", "1")
+    pb.environment().put("SPARK_GRAFT_NO_SHARD", "1")
     // parent already holds the run lock — child must not self-deadlock
     pb.environment().put("GRAFT_LOCK_HELD", "1")
     pb.environment().put("SPARK_GRAFT_RESULT_FILE", resultFile)

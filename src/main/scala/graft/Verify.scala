@@ -32,7 +32,8 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (driver leaves it unset → full gate): comma-
-    // separated exact names in SPARK_GRAFT_ONLY limits which entries run.
+    // separated exact names in SPARK_GRAFT_ONLY limits which entries run;
+    // tools/check.py then checks just the dumped entries.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet).filter(_.nonEmpty)
     SparkEntry.queries.toSeq.sortBy(_._1)
@@ -52,26 +53,17 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Pair-value-verification oracles (sim_ann_lsh, dedup_minhash, …)
     // read the entry's own output pairs back via read_parquet and recompute
     // the value columns from the base tables; `__OUT__` resolves to this
     // run's dump directory (absolute, so the DuckDB run's cwd is irrelevant).
+    // Rendered by the Singer wire writer, which escapes every control
+    // char in the oracle SQL, so a json.load of the file holds.
     val outAbs = Paths.get(outDir).toAbsolutePath.toString
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__OUT__", outAbs))}" }
-      .mkString("{", ",", "}")
+    val json = graft.sinks.SingerSink.render(
+      SparkEntry.oracleSql.foldLeft(graft.sinks.SingerSink.obj()) {
+        case (o, (k, v)) => o.put(k, v.replace("__OUT__", outAbs))
+      })
     // final drift check BEFORE the oracle dump: a fingerprint that moved
     // invalidates every row above, so abort rather than seal the dump
     fpCheck()

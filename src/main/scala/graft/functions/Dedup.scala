@@ -481,63 +481,6 @@ object Dedup {
     ab.unionAll(ba).where(col("containment") >= threshold)
   }
 
-  /** Exact n-gram Jaccard pairs with PREFIX FILTERING (PPJoin-style,
-    * Xiao et al., WWW'08): identical output to [[ngramJaccardPairs]] at a
-    * fraction of the candidate pairs.
-    *
-    * Property: order every document's shingle set by a global total order
-    * (rarest-first by document frequency). Two sets with Jaccard ≥ t must
-    * overlap within each other's first `|s| − ⌈t·|s|⌉ + 1` shingles — so
-    * only prefix shingles need to enter the self-join. Rare-first ordering
-    * makes those prefixes the *rarest* shingles, collapsing the quadratic
-    * blowup on common shingles that dominates the naive explode-join.
-    * Candidates are then verified with the exact Jaccard over the full
-    * sets, preserving exactness.
-    *
-    * Shuffle shape: one df-count aggregate over (shingleHash), one
-    * explode-join on prefix hashes, one verify join on ids — each row
-    * narrow (hashes + ids).
-    *
-    * When to use: corpora with Zipfian shingle frequencies (real text) —
-    * the prefix prune then removes the quadratic hot-shingle buckets.
-    * Measured on THIS repo's synthetic fixtures (tiny ~30-word vocabulary,
-    * every shingle common) it is ~35% SLOWER than [[ngramJaccardPairs]]
-    * (4.9s vs 3.6s at sf0.1): the df-aggregate + per-doc sort + per-pair
-    * array_intersect verify outweigh the weak pruning, so the naive form
-    * stays the default there.
-    */
-  def ngramJaccardPairsPrefix(df: DataFrame, textCol: String, idCol: String,
-                              k: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val sets = df.select(col(idCol).as("id"),
-      shingleHashes(col(textCol), k).as("sh"))
-    val exploded = sets.select(col("id"), explode(col("sh")).as("h"))
-    val dfCounts = exploded.groupBy("h").agg(count(lit(1)).as("df"))
-
-    // per-doc shingles ordered rare-first; prefix length n − ⌈t·n⌉ + 1
-    val ordered = exploded.join(dfCounts, "h")
-      .groupBy("id")
-      .agg(transform(sort_array(collect_list(struct(col("df"), col("h")))),
-        x => x.getField("h")).as("sorted_sh"))
-      .select(col("id"), col("sorted_sh"),
-        (size(col("sorted_sh")) -
-          ceil(size(col("sorted_sh")) * threshold).cast("int") + 1).as("plen"))
-    val prefixes = ordered.select(col("id"),
-      explode(slice(col("sorted_sh"), lit(1), col("plen"))).as("h"))
-
-    val candidates = prefixes.as("x").join(prefixes.as("y"), "h")
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .where(col("id_a") < col("id_b"))
-      .distinct()
-
-    val setsA = sets.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val setsB = sets.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    candidates.join(setsA, "id_a").join(setsB, "id_b")
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-  }
-
   /** ALL word k-shingle hashes of normalized text, WITH multiplicity —
     * the term stream for TF-weighted sparse similarity (unlike
     * [[shingleHashes]], which dedups for set semantics). Short docs yield

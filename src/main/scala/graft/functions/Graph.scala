@@ -9,6 +9,21 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** Row bound of every node-sized broadcast below (two-long rows; 4M
+    * keys ≈ tens of MB). A localCheckpoint scan reports no stats, so
+    * without the hint the per-round joins against the checkpointed edge
+    * table plan as SortMergeJoin and re-exchange + re-sort ALL edges
+    * every round (r12, plan-verified); above the bound SMJ is the right
+    * strategy and the hint backs off.
+    */
+  private[graft] val BroadcastMaxNodes = 4000000L
+
+  /** `df` broadcast-hinted when its counted size `n` is within
+    * [[BroadcastMaxNodes]], unhinted above it.
+    */
+  private[graft] def gatedBroadcast(df: DataFrame, n: Long): DataFrame =
+    if (n <= BroadcastMaxNodes) broadcast(df) else df
+
   /** Fixed-point-arithmetic PageRank — power iteration with every step
     * in EXACT integer (Long) arithmetic so the result is bit-portable
     * across partitionings, reduce orders, and engines (a double-sum
@@ -41,11 +56,8 @@ object Graph {
   def pageRankFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
                          iters: Int, scale: Long = 1000000L,
                          dampNum: Int = 85, dampDen: Int = 100,
-                         edgesDistinct: Boolean = false,
-                         checkpointEvery: Int = 1,
-                         broadcastMaxNodes: Long = 4000000L): DataFrame = {
+                         edgesDistinct: Boolean = false): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
     // `edgesDistinct = true` skips the defensive dedup when the caller
     // already guarantees one row per directed edge (the gate queries
     // union two orientation-disjoint distinct pair sets) — dropping a
@@ -64,34 +76,25 @@ object Graph {
       .distinct()
       .localCheckpoint(true)
     val base = (dampDen - dampNum).toLong * scale / dampDen
-    // r12: a localCheckpoint scan reports no stats, so each superstep's
-    // ranks ⋈ eDeg planned as SortMergeJoin, re-exchanging AND re-sorting
-    // the edge-sized eDeg EVERY round (plan-verified; the partitioning the
-    // checkpoint physically has is invisible to the planner). The rank
-    // table is |V| rows of two longs — broadcast it (and the superstep's
-    // node-sized aggregate) whenever the counted |V| is bounded; above
-    // the bound SMJ is the right strategy and the hint backs off.
+    // r12: the rank table is |V| rows of two longs — broadcast it (and
+    // the superstep's node-sized aggregate) so the edge-sized eDeg is
+    // streamed, never re-exchanged and re-sorted per round
     val nNodes = nodes.count()
-    val bcast: DataFrame => DataFrame =
-      if (nNodes <= broadcastMaxNodes) broadcast else identity
     var ranks = nodes.withColumn("rank", lit(scale))
-    // checkpointEvery = 1 (re-measured, r11): each superstep references
-    // `ranks` exactly once, so rounds CAN stack into one linear plan —
-    // but fresh-JVM A/B showed per-round materialization faster at BOTH
-    // scales (10×: 13.6-14.9 s vs 16.1-22.5 s stacked; sf0.1: 5.9-6.9
-    // vs 7.1-8.0): the stacked plan chains 2·iters shuffle stages into
-    // one job, serializing AQE stage scheduling and re-planning, while
-    // the per-round form keeps every stage shallow. Raise only with a
-    // measurement at the target scale.
+    // one checkpoint per round (re-measured, r11): each superstep
+    // references `ranks` exactly once, so rounds CAN stack into one
+    // linear plan — but fresh-JVM A/B showed per-round materialization
+    // faster at BOTH scales (10×: 13.6-14.9 s vs 16.1-22.5 s stacked;
+    // sf0.1: 5.9-6.9 vs 7.1-8.0): the stacked plan chains 2·iters
+    // shuffle stages into one job, serializing AQE stage scheduling and
+    // re-planning, while the per-round form keeps every stage shallow.
+    // Change the cadence only with a measurement at the target scale.
     var i = 0
     while (i < iters) {
-      ranks = superstep(ranks, eDeg, nodes, base, dampNum, dampDen, bcast)
-      if (i == 1 && sys.env.contains("GRAFT_PR_EXPLAIN"))
-        System.err.println(ranks.queryExecution.explainString(
-          org.apache.spark.sql.execution.SimpleMode))
+      ranks = superstep(ranks, eDeg, nodes, base, dampNum, dampDen,
+        gatedBroadcast(_, nNodes))
       i += 1
-      if (i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint(true)
+      if (i < iters) ranks = ranks.localCheckpoint(true)
     }
     ranks
   }
@@ -174,8 +177,7 @@ object Graph {
     */
   def bfsLevels(edges: DataFrame, srcCol: String, dstCol: String,
                 seeds: DataFrame, seedCol: String,
-                maxHops: Int, edgesDistinct: Boolean = false,
-                broadcastMaxNodes: Long = 4000000L): DataFrame = {
+                maxHops: Int, edgesDistinct: Boolean = false): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     val e0 = edges
       .select(col(srcCol).cast("long").as("src"),
@@ -199,19 +201,17 @@ object Graph {
     // pays ONE materialization (its own frontier) instead of two.
     var visited = seed
     var frontier = seed
-    // r12: checkpoint scans report no stats, so the per-hop frontier ⋈
-    // edges join (and the visited anti-join) planned as SortMergeJoin
-    // re-exchanging the EDGE table every hop — broadcast the frontier
-    // and the visited union while their counted sizes stay bounded
-    // (count replaces the old isEmpty action: same one job per hop)
+    // r12: broadcast the frontier and the visited union while their
+    // counted sizes stay bounded, so the per-hop frontier ⋈ edges join
+    // and the visited anti-join never re-exchange the EDGE table (count
+    // replaces the old isEmpty action: same one job per hop)
     var nFrontier = seed.count()
     var nVisited = nFrontier
-    def mb(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastMaxNodes) broadcast(df) else df
     var i = 1
     while (i <= maxHops && nFrontier > 0) {
-      val next = bfsStep(mb(frontier, nFrontier), e,
-        mb(visited.select("node"), nVisited), i).localCheckpoint(true)
+      val next = bfsStep(gatedBroadcast(frontier, nFrontier), e,
+        gatedBroadcast(visited.select("node"), nVisited), i)
+        .localCheckpoint(true)
       nFrontier = next.count()
       visited = visited.unionByName(next)
       nVisited += nFrontier
@@ -328,8 +328,7 @@ object Graph {
     */
   def ssspBounded(edges: DataFrame, srcCol: String, dstCol: String,
                   wCol: String, seeds: DataFrame, seedCol: String,
-                  rounds: Int, edgesMinimal: Boolean = false,
-                  broadcastMaxNodes: Long = 4000000L): DataFrame = {
+                  rounds: Int, edgesMinimal: Boolean = false): DataFrame = {
     require(rounds >= 0, "rounds must be >= 0")
     val e0 = edges
       .select(col(srcCol).cast("long").as("src"),
@@ -348,17 +347,15 @@ object Graph {
       .distinct()
       .withColumn("dist", lit(0L))
       .localCheckpoint(true)
-    // r12: checkpoint scans report no stats, so the per-round dists ⋈
-    // edges join planned as SortMergeJoin re-exchanging + re-sorting the
-    // EDGE table every round (plan-verified on pagerank, same shape) —
-    // broadcast the node-sized dist table while its counted size stays
-    // bounded; the count is one tiny job on the already-materialized
-    // checkpoint
+    // r12: broadcast the node-sized dist table while its counted size
+    // stays bounded, so the per-round dists ⋈ edges join never
+    // re-exchanges the EDGE table; the count is one tiny job on the
+    // already-materialized checkpoint
     var nDist = dist.count()
     var i = 0
     while (i < rounds) {
-      val distB = if (nDist <= broadcastMaxNodes) broadcast(dist) else dist
-      val relaxed = distB.join(e, col("node") === col("src"))
+      val relaxed = gatedBroadcast(dist, nDist)
+        .join(e, col("node") === col("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
         .groupBy("node").agg(min(col("dist")).as("dist"))
       dist = dist.unionByName(relaxed)
@@ -393,8 +390,7 @@ object Graph {
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, maxRounds: Int = 50,
-            edgesDistinct: Boolean = false,
-            broadcastMaxNodes: Long = 4000000L): DataFrame = {
+            edgesDistinct: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // src-partitioned before the checkpoint (and re-established by
     // ending each round on the src-keyed semi join) so the per-round
@@ -422,9 +418,7 @@ object Graph {
         // semi joins while n is bounded, so the surviving edge set is
         // filtered in one streaming pass instead of two SortMergeJoin
         // semi joins that each re-exchange + re-sort the edge table
-        // (checkpoint scans report no stats, so the planner never picked
-        // the broadcast on its own; plan-verified on pagerank/coreness)
-        val keepB = if (n <= broadcastMaxNodes) broadcast(keep) else keep
+        val keepB = gatedBroadcast(keep, n)
         cur = cur
           .join(keepB.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
           .join(keepB.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
@@ -466,12 +460,12 @@ object Graph {
     * input at cap+1 rows even when a 10⁸-degree hub's neighbors carry
     * that many DISTINCT values. Both paths are exact (same identity,
     * below), so the routing never changes results. The per-round vals
-    * join is broadcast-hinted when |V| ≤ `broadcastMaxNodes` (two-long
-    * rows; 4M keys ≈ tens of MB): a localCheckpoint scan reports no
-    * stats, so the unhinted plan was SortMergeJoin re-exchanging and
-    * re-sorting ALL edges every round — the measured dominant cost.
-    * Above the bound SMJ is the right strategy and the hint backs off
-    * (scale-adaptive on the counted |V|, not a local-mode constant).
+    * join is broadcast-hinted while the current vals table is within
+    * [[BroadcastMaxNodes]]: unhinted, it planned as SortMergeJoin
+    * re-exchanging and re-sorting ALL edges every round — the measured
+    * dominant cost. The size is re-counted every round (in the job that
+    * sums the values), because on a directed edge list destination-only
+    * nodes join vals after round 0.
     * No collect (the hot SET is node-metadata and stays distributed;
     * only its emptiness is checked), no global sort; each round's
     * value table localCheckpoints so rounds never stack one plan.
@@ -525,7 +519,6 @@ object Graph {
                oracleUnroll: Option[Int] = None,
                hotDegree: Long = 20000000L,
                edgesDistinct: Boolean = false,
-               broadcastMaxNodes: Long = 4000000L,
                roundProbe: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame = {
     // src-partitioned before the checkpoint: every round joins the value
     // table on `src`, and a (src,dst)-partitioned edge list would
@@ -546,16 +539,10 @@ object Graph {
     val hot = vals.where(col("v") >= hotDegree)
       .select(col("node").as("dst")).localCheckpoint(true)
     val hasHot = hot.limit(1).count() > 0
-    val nNodes = vals.count()
+    // current size of vals, gating its per-round broadcast
+    var nVals = vals.count()
     var rounds = 0
     var converged = false
-    // a localCheckpoint scan reports no stats, so without the hint the
-    // per-round vals join planned as SortMergeJoin and re-exchanged +
-    // re-sorted ALL edges every round (measured: the dominant round
-    // cost at 10×); vals is |V| rows of two longs, broadcast whenever
-    // the counted size is provably bounded, SMJ above the bound
-    def maybeBroadcast(df: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastMaxNodes) broadcast(df) else df
     val wHist = org.apache.spark.sql.expressions.Window
       .partitionBy("dst").orderBy(col("cv").desc)
     // histogram h-index: distinct-value counts (map-side combine
@@ -577,8 +564,8 @@ object Graph {
     // neighbors carry that many DISTINCT values
     def capped(j1: DataFrame, cur: DataFrame): DataFrame = j1
       .groupBy("dst", "v").agg(count(lit(1)).as("cnt"))
-      .join(maybeBroadcast(
-        cur.select(col("node").as("dst"), col("v").as("cap")), nNodes), "dst")
+      .join(gatedBroadcast(
+        cur.select(col("node").as("dst"), col("v").as("cap")), nVals), "dst")
       .groupBy(col("dst"), least(col("v"), col("cap")).as("cv"))
       .agg(sum(col("cnt")).as("cnt"))
       .withColumn("cum", sum(col("cnt")).over(wHist))
@@ -587,7 +574,7 @@ object Graph {
     var prevSum = -1L
     while (!converged && rounds < maxRounds) {
       val j1 = e.join(
-          maybeBroadcast(vals.withColumnRenamed("node", "src"), nNodes),
+          gatedBroadcast(vals.withColumnRenamed("node", "src"), nVals),
           "src")
         .select(col("dst"), col("v"))
       val nextPlan = if (!hasHot) hist(j1)
@@ -595,17 +582,12 @@ object Graph {
           hist(j1.join(broadcast(hot), Seq("dst"), "left_anti"))
             .unionByName(
               capped(j1.join(broadcast(hot), Seq("dst"), "left_semi"), vals))
-      // dev probe: round-1 physical plan (the per-round shape never
-      // appears in the entry's final explain — that is just the last
-      // checkpoint scan)
-      if (rounds == 0 && sys.env.contains("GRAFT_CORENESS_EXPLAIN"))
-        System.err.println(nextPlan.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
       val next = nextPlan.localCheckpoint(true)
       roundProbe(rounds + 1, next)
-      val s = next.agg(sum(col("v"))).head().getLong(0)
+      val r = next.agg(sum(col("v")), count(lit(1))).head()
+      val s = r.getLong(0)
       if (s == prevSum) converged = true
-      else { prevSum = s; vals = next; rounds += 1 }
+      else { prevSum = s; vals = next; nVals = r.getLong(1); rounds += 1 }
     }
     require(converged, s"coreness: no fixpoint within $maxRounds rounds")
     oracleUnroll.foreach { r =>

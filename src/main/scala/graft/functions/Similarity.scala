@@ -1008,8 +1008,9 @@ object Similarity {
     * speedup, never a pair. Long ids only (the gate path); other id
     * types delegate to the exact form.
     *
-    * MEASURED (graft.tools.ProfSemantic, 10× fixture, verify-bound
-    * nClusters=16, warm): dim 64 — exact 2.5 s vs PQ 3.4 s; dim 512
+    * MEASURED (the deleted profiler `git show
+    * 4a60afe:src/main/scala/graft/tools/ProfSemantic.scala`; 10× fixture,
+    * verify-bound nClusters=16, warm): dim 64 — exact 2.5 s vs PQ 3.4 s; dim 512
     * (sign-tiled, identical pair structure) — exact 5.2 s vs best PQ
     * 6.6 s (m ∈ {8,64} × ksub ∈ {16,64} swept). The prune loses at BOTH
     * dims on this fixture because its power is distribution-bound: the

@@ -113,26 +113,6 @@ object Flattener {
     }
   }
 
-  /** Candidate detection for discovery/tooling: string columns whose
-    * sampled non-null values are ALL JSON objects — a REPORT for a human
-    * or a catalog writer to turn into an explicit `json_columns` entry,
-    * never an implicit parse decision (r9 ADVICE: a catalog-declared
-    * string that happens to look like JSON must not restructure).
-    */
-  def detectJsonObjectColumns(df: DataFrame, sampleRows: Int = 256,
-                              orderBy: Seq[String] = Nil): Seq[String] = {
-    val stringCols = df.schema.fields
-      .filter(_.dataType == StringType).map(_.name).toSeq
-    if (stringCols.isEmpty) return Nil
-    val sample = sampleFor(df, stringCols, sampleRows, orderBy)
-    stringCols.zipWithIndex.collect {
-      case (c, i) if {
-        val nonNull = sample.flatMap(r => Option(r.getString(i)))
-        nonNull.nonEmpty && nonNull.forall(_.trim.startsWith("{"))
-      } => c
-    }
-  }
-
   /** Bounded driver-side sample of `cols`, ordered by any `orderBy`
     * columns present in the frame (ascending, nulls-default) so the
     * result — and everything inferred from it — is plan-independent.

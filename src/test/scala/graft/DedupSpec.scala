@@ -376,21 +376,6 @@ class DedupSpec extends AnyFunSuite {
     assert(!pairs.exists { case (a, b) => a == 4L || b == 4L })
   }
 
-  test("prefix-filtered jaccard equals the naive explode-join exactly") {
-    val docs500 = Tables.read(spark, SparkTestSession.Sf, "documents")
-    def normalize(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b", "jaccard")
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          math.rint(r.getDouble(2) * 1e12))).toSet
-    val naive = normalize( // cap off: comparing the two EXACT algorithms
-      Dedup.ngramJaccardPairs(docs500, "text", "doc_id", k = 3,
-        threshold = 0.5, maxDocFreq = None))
-    val prefix = normalize(
-      Dedup.ngramJaccardPairsPrefix(docs500, "text", "doc_id", k = 3, threshold = 0.5))
-    assert(naive.nonEmpty)
-    assert(prefix === naive)
-  }
-
   test("cross-corpus pairs = self-minhash pairs restricted to cross side") {
     // same banding + seed ⇒ identical candidate buckets ⇒ the incremental
     // matcher must find exactly the cross-parity subset of the self-join's

@@ -106,22 +106,13 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("id", "props")
     assert(Flattener.parseJsonStrings(bad, Seq("props"))
       .schema("props").dataType === org.apache.spark.sql.types.StringType)
-  }
-
-  test("detectJsonObjectColumns reports candidates; sample is key-ordered") {
-    val df = Seq(
-      (2L, """{"a": 2}""", "plain"),
-      (1L, """{"a": 1}""", """{"o": 1}""")
-    ).toDF("id", "props", "note")
-    // props is all-object → candidate; note has a non-object value → not
-    assert(Flattener.detectJsonObjectColumns(df, orderBy = Seq("id")) ===
-      Seq("props"))
     // determinism (r9 ADVICE medium): with sampleRows=1 the ordered
-    // sample must pick id=1 regardless of input row order, so `note`
-    // (object-shaped at id=1 only) IS detected — plan-independent
-    assert(Flattener.detectJsonObjectColumns(
-      df.repartition(4), sampleRows = 1, orderBy = Seq("id")) ===
-      Seq("props", "note"))
+    // sample must pick id=1 (the only object) regardless of input row
+    // order, so the column parses — plan-independent
+    val mixed = Seq((2L, "plain"), (1L, """{"a": 1}""")).toDF("id", "props")
+    assert(Flattener.parseJsonStrings(mixed.repartition(4), Seq("props"),
+        sampleRows = 1, orderBy = Seq("id"))
+      .schema("props").dataType.isInstanceOf[org.apache.spark.sql.types.StructType])
   }
 
   test("stream maps: filter sees pre-drop columns; compute/alias/drop apply") {

@@ -394,18 +394,25 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(lists.length <= 4, s"probe must prune to ≤4 of 16 lists: $lists")
   }
 
-  test("graph_pagerank superstep: partial-agg contribution sum, hash joins only") {
-    // the loop localCheckpoints each round (the executed top-level plan
-    // is just the final RDD scan), so the auditable unit is one
-    // superstep: rank⋈edges hash join → map-side-combined sum on dst
+  /** One pagerank superstep over a 3-cycle, node-sized sides passed
+    * through `bcast`. The loop localCheckpoints each round (the executed
+    * top-level plan is just the final RDD scan), so the auditable unit
+    * is one superstep.
+    */
+  private def superstep(bcast: org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame = identity) = {
     import spark.implicits._
     import org.apache.spark.sql.functions.lit
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val eDeg = e.withColumn("deg", lit(1L))
     val nodes = Seq(1L, 2L, 3L).toDF("node")
-    val ranks = nodes.withColumn("rank", lit(1000000L))
-    val df = graft.functions.Graph.superstep(ranks, eDeg, nodes,
-      base = 150000L, dampNum = 85, dampDen = 100)
+    graft.functions.Graph.superstep(nodes.withColumn("rank", lit(1000000L)),
+      e.withColumn("deg", lit(1L)), nodes,
+      base = 150000L, dampNum = 85, dampDen = 100, bcast)
+  }
+
+  test("graph_pagerank superstep: partial-agg contribution sum, hash joins only") {
+    // rank⋈edges hash join → map-side-combined sum on dst
+    val df = superstep()
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
@@ -413,6 +420,24 @@ class PlanAuditSpec extends AnyFunSuite {
       s"superstep must not plan a cartesian/nested-loop join:\n$plan")
     assert(plan.contains("partial_sum"),
       s"contribution sum must partial-aggregate:\n$plan")
+  }
+
+  test("graph broadcast gate: hinted at the node bound, unhinted above it") {
+    // the graph operators' per-round joins broadcast a node-sized table
+    // only while its counted size is within Graph.BroadcastMaxNodes;
+    // auto-broadcast off so only the gate's hint can broadcast
+    import graft.functions.Graph
+    def plan(n: Long): String =
+      superstep(Graph.gatedBroadcast(_, n)).queryExecution.executedPlan.toString
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val at = plan(Graph.BroadcastMaxNodes)
+      assert(at.contains("BroadcastHashJoin"),
+        s"n == bound must broadcast:\n$at")
+      val above = plan(Graph.BroadcastMaxNodes + 1)
+      assert(!above.contains("Broadcast"),
+        s"n == bound + 1 must not broadcast:\n$above")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 
   test("er_match: block self-join is a hash join with the length prefilter below the edit distance") {
