@@ -2,7 +2,7 @@ package graft
 
 import graft.config.{ConfigParser, StreamConfig, TapConfig}
 import graft.operators.StreamMaps
-import graft.sinks.{BatchChunk, BatchManifest, BatchSink, MaxKey, SingerSink}
+import graft.sinks.{BatchManifest, BatchSink, MaxKey, SingerSink}
 import graft.sinks.SingerSink.{line, obj, strings}
 import graft.sources.StreamSource
 import graft.state.{Bookmarks, TapState}
@@ -53,9 +53,9 @@ object Tap {
     // JDBC pushdown, or auto (native with pushdown fallback for SQL
     // Spark can't parse — the reference's execute-anything contract,
     // client.py:300-304).
-    def planStream(s: StreamConfig, st: TapState)
+    def planStream(s: StreamConfig)
         : (DataFrame, StreamConfig, Option[graft.operators.StreamMap]) = {
-      val source = StreamSource.execute(spark, tap, s, st, flattenDepth)
+      val source = StreamSource.execute(spark, tap, s, state, flattenDepth)
       // STREAM_MAPS transform the conformed stream (reference tap.py:256);
       // key properties + replication key always survive an __else__ drop,
       // and validate() rejects maps that drop/rename the replication key,
@@ -71,95 +71,58 @@ object Tap {
         .map(a => s.copy(name = a)).getOrElse(s)
       (df, emitStream, smap)
     }
-    // Batch-mode emission: one BATCH message per chunk, each followed by a
-    // STATE over the chunks ANNOUNCED so far. A sorted stream commits that
-    // max — a target that persists the last STATE line before a crash
-    // resumes from the last chunk it actually received. An unsorted
-    // stream's later chunks may still hold rows below it, so, as in RECORD
-    // mode, it rides in progress markers until the last chunk commits it.
-    def announce(s: StreamConfig, emitStream: StreamConfig,
-                 chunks: Seq[BatchChunk]): StreamResult = {
-      val max = new MaxKey
-      chunks.zipWithIndex.foreach { case (c, i) =>
-        SingerSink.emitBatch(emitStream, c.manifest, out)
-        max.merge(c.maxKey)
-        (max.value, s.replicationKey) match {
-          case (Some(v), Some(k)) if !s.isSorted && i < chunks.size - 1 =>
-            SingerSink.emitState(state, out, Some(SingerSink.Progress(s.streamId, k, v)))
-          case (committed, _) =>
-            committed.foreach(v => state = state.advanced(s.streamId, v))
-            SingerSink.emitState(state, out)
-        }
+    // One STATE point of a stream, after a batch chunk or `stateEvery`
+    // records. A sorted stream commits the max emitted so far: a target
+    // that persists the last STATE line before a crash resumes from what
+    // it actually received. An unsorted stream's later rows may still lie
+    // below that max, so until its `last` point the max rides in progress
+    // markers and the bookmark stays put (at-least-once, never skipping).
+    // A stream without a max (full table, or nothing emitted yet) gets a
+    // heartbeat.
+    def checkpoint(s: StreamConfig, maxSoFar: Option[String], last: Boolean): Unit =
+      (maxSoFar, s.replicationKey) match {
+        case (Some(v), Some(k)) if !s.isSorted && !last =>
+          SingerSink.emitState(state, out, Some(SingerSink.Progress(s.streamId, k, v)))
+        case _ =>
+          maxSoFar.foreach(v => state = state.advanced(s.streamId, v))
+          SingerSink.emitState(state, out)
       }
-      StreamResult(s, chunks.map(_.records).sum, chunks.map(_.manifest))
-    }
-    val active = tap.streams.filterNot(s => tap.removedStreams.contains(s.name))
-    // Concurrent batch-mode extraction (config `sync_parallelism`, r10
-    // verdict item 7): up to N streams' BatchSink writes run in flight at
-    // once — each on its own FAIR scheduler pool slot so one long
-    // extraction cannot starve the others (set spark.scheduler.mode=FAIR
-    // to activate; under FIFO the jobs still interleave by stage).
-    // Watermark resolution reads the INITIAL state (bookmarks are
-    // per-stream, so order never mattered), and everything user-visible —
-    // BATCH/STATE message emission, state advancement — happens AFTER the
-    // writes, sequentially in config order: byte-identical output to a
-    // sequential run. Singer RECORD mode is one ordered stdout by
-    // construction and stays sequential regardless.
-    val results: Seq[StreamResult] = (tap.batchConfig, tap.syncParallelism) match {
-      case (Some(bc), par) if par > 1 && active.nonEmpty =>
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(par, active.size))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val state0 = state
-        try {
-          val written = active.zipWithIndex.map { case (s, i) =>
-            Future {
-              spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", s"graft-sync-${i % par}")
-              val (df, emitStream, _) = planStream(s, state0)
-              (s, emitStream, BatchSink.write(df, emitStream, bc))
-            }
-          }.map(Await.result(_, Duration.Inf))
-          written.map { case (s, emitStream, chunks) => announce(s, emitStream, chunks) }
-        } finally pool.shutdown()
-      case _ => active.map { s =>
-        val (df, emitStream, smap) = planStream(s, state)
-        tap.batchConfig match {
-          case Some(bc) => announce(s, emitStream, BatchSink.write(df, emitStream, bc))
-          case None =>
-            // a mapped stream's SCHEMA reflects the transformed shape
-            val shape = if (smap.isDefined) df.schema else TypeMapper.structType(s.columns)
-            SingerSink.emitSchema(emitStream, TypeMapper.jsonSchema(s, shape), out)
-            val te = java.time.OffsetDateTime.now(java.time.ZoneOffset.UTC)
-              .format(java.time.format.DateTimeFormatter
-                .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"))
-            // Periodic STATE (SDK STATE_MSG_FREQUENCY): a sorted stream's
-            // bookmark may advance over the max emitted so far — resume is
-            // exact; an unsorted stream only gets progress markers (rows
-            // below the running max may still be in flight), so resume
-            // re-extracts — at-least-once, never skipping.
-            val (n, bookmark) = SingerSink.emitRecords(df, emitStream, out, Some(te),
-              stateEvery = tap.stateMessageFrequency,
-              onProgress = maxSoFar => (maxSoFar, s.replicationKey) match {
-                case (Some(v), Some(k)) =>
-                  if (s.isSorted) {
-                    state = state.advanced(s.streamId, v)
-                    SingerSink.emitState(state, out)
-                  } else SingerSink.emitState(state, out,
-                    Some(SingerSink.Progress(s.streamId, k, v)))
-                case _ => SingerSink.emitState(state, out) // heartbeat
-              })
-            bookmark.foreach(v => state = state.advanced(s.streamId, v))
-            // FULL_TABLE resync handshake: stamp this sync's version
-            // after its last RECORD so a version-aware target can
-            // hard-delete stale rows (the singer_sdk ACTIVATE_VERSION
-            // behavior); incremental streams never emit it
-            if (s.replicationKey.isEmpty)
-              SingerSink.emitActivateVersion(emitStream, syncStartMs, out)
-            StreamResult(s, n, Nil)
-        }
+    // Streams extract one after another, in config order, as the
+    // reference's single cursor does (client.py:300-304).
+    val results = tap.streams.filterNot(s => tap.removedStreams.contains(s.name)).map { s =>
+      val (df, emitStream, smap) = planStream(s)
+      tap.batchConfig match {
+        case Some(bc) =>
+          // one BATCH message per chunk, each followed by a STATE over
+          // the chunks announced so far
+          val chunks = BatchSink.write(df, emitStream, bc)
+          val max = new MaxKey
+          chunks.zipWithIndex.foreach { case (c, i) =>
+            SingerSink.emitBatch(emitStream, c.manifest, out)
+            max.merge(c.maxKey)
+            checkpoint(s, max.value, last = i == chunks.size - 1)
+          }
+          StreamResult(s, chunks.map(_.records).sum, chunks.map(_.manifest))
+        case None =>
+          // a mapped stream's SCHEMA reflects the transformed shape
+          val shape = if (smap.isDefined) df.schema else TypeMapper.structType(s.columns)
+          SingerSink.emitSchema(emitStream, TypeMapper.jsonSchema(s, shape), out)
+          val te = java.time.OffsetDateTime.now(java.time.ZoneOffset.UTC)
+            .format(java.time.format.DateTimeFormatter
+              .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSSxxx"))
+          // periodic STATE (SDK STATE_MSG_FREQUENCY); the stream's end
+          // only advances the bookmark, which the final STATE carries
+          val (n, bookmark) = SingerSink.emitRecords(df, emitStream, out, Some(te),
+            stateEvery = tap.stateMessageFrequency,
+            onProgress = checkpoint(s, _, last = false))
+          bookmark.foreach(v => state = state.advanced(s.streamId, v))
+          // FULL_TABLE resync handshake: stamp this sync's version
+          // after its last RECORD so a version-aware target can
+          // hard-delete stale rows (the singer_sdk ACTIVATE_VERSION
+          // behavior); incremental streams never emit it
+          if (s.replicationKey.isEmpty)
+            SingerSink.emitActivateVersion(emitStream, syncStartMs, out)
+          StreamResult(s, n, Nil)
       }
     }
     SingerSink.emitState(state, out)
@@ -280,7 +243,7 @@ object Tap {
     .set[ObjectNode]("settings", strings(Seq("host", "port", "user", "password", "database",
       "streams", "batch_config", "batch_size", "stream_maps", "stream_map_config",
       "flattening_enabled", "flattening_max_depth", "json_columns", "state_message_frequency",
-      "execution", "sync_parallelism", "jdbc_url", "jdbc_driver")))
+      "execution", "jdbc_url", "jdbc_driver")))
 }
 
 /** CLI entry point mirroring the reference's (`tap.py:262-263`):

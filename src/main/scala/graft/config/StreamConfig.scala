@@ -122,16 +122,7 @@ final case class TapConfig(
       * `Tap.STATE_MSG_FREQUENCY`, default 10,000) so an interrupted 100 TB
       * sync resumes from the last flushed bookmark instead of re-extracting.
       */
-    stateMessageFrequency: Int = TapConfig.DefaultStateMessageFrequency,
-    /** How many streams extract CONCURRENTLY in batch mode (config key
-      * `sync_parallelism`, default 1 = the reference's sequential cursor,
-      * client.py:300-304). A 50-stream tap on a large cluster wants N
-      * extractions in flight; emission (BATCH/STATE messages) and state
-      * advancement stay sequential in config order, so output is
-      * deterministic and bookmarks per-stream exactly as at 1. Singer
-      * RECORD mode is inherently one ordered stdout and ignores this.
-      */
-    syncParallelism: Int = 1) {
+    stateMessageFrequency: Int = TapConfig.DefaultStateMessageFrequency) {
   def resolvedJdbcUrl: String =
     jdbcUrl.getOrElse(s"jdbc:postgresql://$host:$port/$database")
   def resolvedJdbcDriver: String =
@@ -181,8 +172,7 @@ object ConfigParser {
       flatteningEnabled = opt(n, "flattening_enabled").exists(_.asBoolean(false)),
       flatteningMaxDepth = int(n, "flattening_max_depth"),
       stateMessageFrequency = int(n, "state_message_frequency")
-        .getOrElse(TapConfig.DefaultStateMessageFrequency),
-      syncParallelism = int(n, "sync_parallelism").getOrElse(1))
+        .getOrElse(TapConfig.DefaultStateMessageFrequency))
   }
 
   /** SDK-style `stream_maps` object (README.md:35): per stream, either
@@ -339,8 +329,6 @@ object ConfigParser {
     }
     if (tap.stateMessageFrequency <= 0)
       problems += "state_message_frequency must be positive"
-    if (tap.syncParallelism <= 0)
-      problems += "sync_parallelism must be positive"
     tap.batchConfig.map(_.encoding.format).filter(_ != "jsonl").foreach(f =>
       problems += s"batch_config: unsupported batch format '$f'")
     // a local filesystem writes a character its charset cannot encode as

@@ -901,7 +901,7 @@ object Curation {
     * so later steps can (and do) merge previously-fused tokens —
     * real BPE behavior.
     */
-  def bpeMergeTable(df: DataFrame, textCol: String, idCol: String,
+  def bpeMergeTable(df: DataFrame, textCol: String,
                     k: Int, joiner: String = "+"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = df.sparkSession

@@ -76,39 +76,15 @@ object Dedup {
 
   // ---------------------------------------------------------------- MinHash
 
-  /** Mersenne prime 2^31−1: permutation modulus. Shingle hashes and the
-    * (a·h+b) mod p arithmetic stay well inside Long range.
-    */
-  val MinhashPrime = 2147483647L
-
-  /** Deterministic permutation coefficients from a seed. */
-  def permutations(nPerm: Int, seed: Long): Seq[(Long, Long)] = {
-    val r = new scala.util.Random(seed)
-    Seq.fill(nPerm)((1L + r.nextInt(Int.MaxValue - 2).toLong,
-      r.nextInt(Int.MaxValue - 1).toLong))
-  }
-
   /** MinHash signature (array of nPerm Longs) over a shingle array —
     * one projection, no shuffle. Delegates to the native Catalyst
     * expression ([[graft.plans.MinHashSig]]): one tight loop per row vs
     * ~nPerm×|shingles| interpreted lambda steps for the builtin-HOF form
-    * below (kept as [[minhashSignatureHof]]; both produce identical
-    * signatures).
+    * (the specs' `ReferenceForms.minhashSignatureHof`; both produce
+    * identical signatures).
     */
   def minhashSignature(shingleCol: Column, nPerm: Int = 64, seed: Long = 42L): Column =
     graft.plans.SignatureExpressions.minhashSig(shingleCol, nPerm, seed)
-
-  /** Builtin-higher-order-function formulation of [[minhashSignature]]. */
-  def minhashSignatureHof(shingleCol: Column, nPerm: Int = 64, seed: Long = 42L): Column = {
-    val hashes = transform(shingleCol, s => pmod(xxhash64(s), lit(MinhashPrime)))
-    // bind `hashes` once via the single-element-array trick: otherwise each
-    // of the nPerm permutation rows would re-hash every shingle string
-    element_at(
-      transform(array(hashes), hs =>
-        array(permutations(nPerm, seed).map { case (a, b) =>
-          array_min(transform(hs, h => pmod(h * lit(a) + lit(b), lit(MinhashPrime))))
-        }: _*)), 1)
-  }
 
   /** Choose (bands, rowsPerBand) for an `nPerm`-permutation signature so
     * the LSH S-curve threshold lands nearest the target Jaccard threshold.
@@ -161,23 +137,11 @@ object Dedup {
     * `bands = 0` (the default) derives the band count from the Jaccard
     * `threshold` via [[lshParams]], so callers state intent (the
     * similarity cutoff) and the S-curve is tuned for them.
-    *
-    * `sigPrefilter = true` inserts a signature-agreement estimate between
-    * candidate generation and the exact verify: pairs whose estimated
-    * Jaccard (matching signature positions / nPerm) falls more than 3
-    * binomial σ below the threshold are dropped BEFORE the verify join —
-    * cutting the shuffle of (heavier) shingle-hash arrays on corpora
-    * where LSH emits many false candidates. Costs one extra join of
-    * (id, signature) rows; recall loss is the 3σ tail (≲0.1% of
-    * borderline-true pairs) on top of LSH's own miss rate. Off by
-    * default: exact-verify-all is the reference behavior and the cheaper
-    * plan on high-duplicate corpora.
     */
   def minhashDupPairs(df: DataFrame, textCol: String, idCol: String,
                       k: Int = 3, nPerm: Int = 64, bands: Int = 0,
                       threshold: Double = 0.5, seed: Long = 42L,
-                      maxBucket: Int = 1000,
-                      sigPrefilter: Boolean = false): DataFrame = {
+                      maxBucket: Int = 1000): DataFrame = {
     val nBands = if (bands > 0) bands else lshParams(nPerm, threshold)._1
     // shingle HASHES (array<long>), not strings: signatures are identical
     // (MinHashSig hashes strings to exactly these values first) and the
@@ -207,7 +171,7 @@ object Dedup {
         .groupBy("band")
         .agg(sort_array(collect_list(col("id"))).as("ids"))
     }).where(size(col("ids")) > 1)
-    if (idIsLong && !sigPrefilter) {
+    if (idIsLong) {
       // Bucket-LOCAL verification (same redesign as
       // [[graft.functions.Similarity.cosineDupPairsBucketed]], measured
       // there first): gather each capped bucket's (id, shingle-set)
@@ -261,25 +225,13 @@ object Dedup {
         out.result()
       }.toDF("id_a", "id_b", "jaccard").distinct()
     } else {
-      // generic-id / prefiltered fallback: explode candidates, verify via
-      // joins back to the shingle sets
-      val rawCandidates = buckets
+      // generic-id fallback: explode candidates, verify via joins back to
+      // the shingle sets
+      val candidates = buckets
         .select(explode(col("ids")).as("id_a"), col("ids"))
         .select(col("id_a"), explode(col("ids")).as("id_b"))
         .where(col("id_a") < col("id_b"))
         .distinct()
-      val candidates = if (!sigPrefilter) rawCandidates else {
-        val sa = sigs.select(col("id").as("id_a"), col("sig").as("sig_a"))
-        val sb = sigs.select(col("id").as("id_b"), col("sig").as("sig_b"))
-        val margin = 3.0 * math.sqrt(threshold * (1 - threshold) / nPerm)
-        rawCandidates.join(sa, "id_a").join(sb, "id_b")
-          .withColumn("__est",
-            aggregate(zip_with(col("sig_a"), col("sig_b"),
-              (x, y) => when(x === y, 1).otherwise(0)), lit(0), (s, x) => s + x)
-              .cast("double") / nPerm)
-          .where(col("__est") >= threshold - margin)
-          .select("id_a", "id_b")
-      }
 
       val shA = withShingles.select(col("id").as("id_a"), col("sh").as("sh_a"))
       val shB = withShingles.select(col("id").as("id_b"), col("sh").as("sh_b"))
@@ -486,21 +438,10 @@ object Dedup {
     * [[shingleHashes]], which dedups for set semantics). Short docs yield
     * their full token span as one shingle. Native one-pass byte-range
     * form ([[graft.plans.WordShingleHashesAll]]); bit-equality with the
-    * HOF reference ([[shingleHashesAllHof]]) is spec-pinned.
+    * HOF reference (`ReferenceForms.shingleHashesAllHof`) is spec-pinned.
     */
   def shingleHashesAll(c: Column, k: Int): Column =
     graft.plans.ShingleExpressions.wordShingleHashesAll(normalizeText(c), k)
-
-  /** Builtin-HOF reference formulation of [[shingleHashesAll]] (an
-    * allocation + rehash per position — kept for the equality spec).
-    */
-  def shingleHashesAllHof(c: Column, k: Int): Column = {
-    val toks = split(normalizeText(c), " ")
-    // bind the token array once (single-element-array trick) — see shingles()
-    element_at(transform(array(toks), ts =>
-      transform(sequence(lit(1), greatest(size(ts) - lit(k - 1), lit(1))),
-        i => xxhash64(concat_ws(" ", slice(ts, i, lit(k)))))), 1)
-  }
 
   /** ExactSubstr-style duplicate-SPAN detection at ARBITRARY token
     * offsets: every maximal token span of length ≥ `minLen` whose text
@@ -781,28 +722,6 @@ object Dedup {
     buildSubstrIndex(batch, textCol, idCol, minLen)
       .write.mode("append").parquet(path)
 
-  /** Persist the window index as a BUCKETED metastore table
-    * (`bucketBy(nBuckets, h)`) — the exchange-free probe layout: both
-    * probe joins key on `h`, so the corpus-sized index side reads
-    * bucket-aligned with ZERO exchange per probe (only the small batch
-    * side shuffles to the bucket count; BucketingSpec asserts the plan).
-    * The layout shuffle is paid once at registration — the
-    * [[graft.Catalog.ensureBucketed]] contract; the flat-parquet form
-    * ([[appendSubstrIndex]]) stays the zero-infrastructure path.
-    */
-  def saveSubstrIndexBucketed(index: DataFrame, table: String,
-                              nBuckets: Int): Unit =
-    graft.Catalog.ensureBucketed(index, table, nBuckets, Seq("h"))
-
-  /** Append a batch's windows into the bucketed index table. `nBuckets`
-    * must match the registered spec (Spark enforces it).
-    */
-  def appendSubstrIndexBucketed(batch: DataFrame, textCol: String,
-                                idCol: String, minLen: Int, table: String,
-                                nBuckets: Int): Unit =
-    buildSubstrIndex(batch, textCol, idCol, minLen)
-      .write.mode("append").bucketBy(nBuckets, "h").saveAsTable(table)
-
   def probeSubstrIndex(batch: DataFrame, index: DataFrame,
                        textCol: String, idCol: String,
                        minLen: Int): DataFrame = {
@@ -958,63 +877,6 @@ object Dedup {
           .as("sim"))
   }
 
-  /** TF-IDF-weighted shingle cosine pairs — [[shingleTfCosinePairs]] with
-    * inverse-document-frequency downweighting: each shingle's weight is
-    * `tf · (N/df)` (the RATIONAL idf variant — `ln(N/df)` differs across
-    * libm implementations, so the log form cannot be oracle-hash-exact;
-    * N/df keeps every per-term weight an IEEE-exact double while giving
-    * the same rare-term emphasis, monotone in the usual idf). Spec-level
-    * operator: the double SUMs over weights are partition-order-dependent
-    * (unlike the integer sums of the TF form), so correctness is pinned
-    * by DedupSpec against a driver-side brute force with tolerance, not
-    * by the DuckDB hash gate. Same postings shape and stop-shingle cap
-    * as the TF form; the cap also bounds idf's df denominator below.
-    */
-  def shingleTfIdfCosinePairs(df: DataFrame, textCol: String, idCol: String,
-                              k: Int = 3, threshold: Double = 0.5,
-                              maxDocFreq: Option[Int] = Some(AutoMaxDocFreq)
-                             ): DataFrame = {
-    val base = rebalance(df.select(col(idCol).as("id"),
-      shingleHashesAll(col(textCol), k).as("shs")))
-    val p0 = base.select(col("id"), explode(col("shs")).as("h"))
-      .groupBy("id", "h").agg(count(lit(1)).as("tf"))
-    val pCapped = maxDocFreq match {
-      case Some(maxDf) =>
-        val capCol =
-          if (maxDf == AutoMaxDocFreq)
-            least(lit(MaxDocFreqCeiling.toLong),
-              greatest(lit(MinDocFreqFloor.toLong),
-                ceil(col("__n") * HotShingleFraction)))
-          else lit(maxDf.toLong)
-        val dfCounts = p0.groupBy("h").agg(count(lit(1)).as("df"))
-        val hot = (if (maxDf == AutoMaxDocFreq)
-          dfCounts.crossJoin(base.select(count(lit(1)).as("__n")))
-        else dfCounts.withColumn("__n", lit(0L)))
-          .where(col("df") > capCol).select("h")
-        p0.join(hot, Seq("h"), "left_anti")
-      case None => p0
-    }
-    // idf factors from the PRUNED postings (df of surviving shingles) and
-    // the corpus size via a one-row broadcastable aggregate
-    val dfs = pCapped.groupBy("h").agg(count(lit(1)).as("df"))
-    val p = pCapped.join(dfs, "h")
-      .crossJoin(base.select(count(lit(1)).as("__nn")))
-      .select(col("id"), col("h"),
-        (col("tf").cast("double") *
-          (col("__nn").cast("double") / col("df").cast("double"))).as("w"))
-    val sq = p.groupBy("id").agg(sum(col("w") * col("w")).as("sq"))
-    val dots = p.as("x").join(p.as("y"), "h")
-      .where(col("x.id") < col("y.id"))
-      .groupBy(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .agg(sum(col("x.w") * col("y.w")).as("dot"))
-    dots
-      .join(sq.select(col("id").as("id_a"), col("sq").as("__sqa")), "id_a")
-      .join(sq.select(col("id").as("id_b"), col("sq").as("__sqb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (col("dot") / sqrt(col("__sqa") * col("__sqb"))).as("sim"))
-      .where(col("sim") >= threshold)
-  }
-
   // ---------------------------------------------------------------- SimHash
 
   /** Number of SimHash bits. 63 (not 64) keeps every power of two inside a
@@ -1022,33 +884,13 @@ object Dedup {
     */
   val SimhashBits = 63
 
-  private val Pow2: Seq[Long] = (0 until SimhashBits).map(1L << _)
-
   /** 63-bit SimHash over whitespace tokens: per-token xxhash64, each bit
     * votes ±1, sign of the vote sum becomes the signature bit. Native
-    * Catalyst expression ([[graft.plans.SimHash64]]); the builtin-HOF
-    * form is kept as [[simhashHof]] (identical output).
+    * Catalyst expression ([[graft.plans.SimHash64]]); the specs pin the
+    * builtin-HOF form (`ReferenceForms.simhashHof`) to identical output.
     */
   def simhash(c: Column): Column =
     graft.plans.SignatureExpressions.simhash64(split(normalizeText(c), " "))
-
-  /** Builtin-higher-order-function formulation of [[simhash]]. */
-  def simhashHof(c: Column): Column = {
-    val hashes = transform(split(normalizeText(c), " "), t => xxhash64(t))
-    val zeros = array((0 until SimhashBits).map(_ => lit(0L)): _*)
-    val pow2 = array(Pow2.map(lit(_)): _*)
-    // bind [pow2, hashes] once — a literal array referenced inside a
-    // per-token lambda would be re-materialized for every token
-    element_at(transform(array(array(pow2, hashes)), ba => {
-      val p2 = element_at(ba, 1)
-      val hs = element_at(ba, 2)
-      val votes = aggregate(hs, zeros, (acc, h) =>
-        zip_with(acc, p2, (a, p) =>
-          a + when((h.bitwiseAND(p)) =!= 0, lit(1L)).otherwise(lit(-1L))))
-      aggregate(zip_with(votes, p2, (v, p) => when(v > 0, p).otherwise(lit(0L))),
-        lit(0L), (s, x) => s + x)
-    }), 1)
-  }
 
   /** Hamming distance between two SimHash values. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

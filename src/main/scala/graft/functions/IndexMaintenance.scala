@@ -105,31 +105,6 @@ object IndexMaintenance {
     fs.delete(old, true)
   }
 
-  /** One file per `bucket=` partition of a saved semantic index. */
-  def compactSemanticIndex(spark: SparkSession, path: String): (Long, Long) =
-    compact(spark, s"$path/members", Some("bucket"))
-
-  /** One file per `list_id=` partition of a saved IVF-PQ index. */
-  def compactIvfPqIndex(spark: SparkSession, path: String): (Long, Long) =
-    compact(spark, s"$path/codes", Some("list_id"))
-
-  /** Re-pack a flat ExactSubstr window index into `targetFiles` files
-    * (size to ~shuffle-partition count at production scale).
-    */
-  def compactSubstrIndex(spark: SparkSession, path: String,
-                         targetFiles: Int = 1): (Long, Long) =
-    compact(spark, path, None, targetFiles)
-
-  /** Re-pack a flat retrieval postings index ([[Retrieval.appendPostings]]
-    * accumulation). Postings rows are unique per (term, doc) by
-    * construction, so the distinct pass is a no-op on correct data and
-    * heals a double-submitted batch; BM25 stats re-derive at search time,
-    * so scores are unchanged by contract (spec-pinned).
-    */
-  def compactPostings(spark: SparkSession, path: String,
-                      targetFiles: Int = 1): (Long, Long) =
-    compact(spark, path, None, targetFiles)
-
   /** Shuffle-FREE compaction of a term-bucketed postings index
     * ([[Retrieval.appendPostingsBucketed]] accumulation): each
     * `bucket=` partition's files merge through one `coalesce(1)` read
@@ -139,7 +114,7 @@ object IndexMaintenance {
     * contract (batch doc ids are new), so there is nothing to
     * de-duplicate or re-cluster (VERDICT r10 item 4; append ≡ rebuild
     * spec-pinned). A double-submitted batch needs the healing
-    * [[compactPostings]] distinct instead — this is the fast path for
+    * [[compact]] distinct instead — this is the fast path for
     * the normal cadence. Buckets compact independently: at production
     * scale run them as concurrent jobs; cost is bounded by the touched
     * bucket's size, never the index's.

@@ -58,16 +58,16 @@ object IvfIndex {
     * ASSIGNMENT touches the full corpus, and it is one codegen'd
     * nearest-centroid projection, no MLlib job per Lloyd round.
     */
-  def build(corpus: DataFrame, idCol: String, vecCol: String,
+  def build(corpus: DataFrame, vecCol: String,
             nLists: Int, seed: Long = 42L): Index =
-    buildReturningSample(corpus, idCol, vecCol, nLists, seed)._1
+    buildReturningSample(corpus, vecCol, nLists, seed)._1
 
   /** [[build]] + the collected fit sample, so composed builds (IVF-PQ)
     * can derive their own quantizer fits from the SAME single collect
     * instead of re-scanning the corpus per quantizer.
     */
   private[functions] def buildReturningSample(
-      corpus: DataFrame, idCol: String, vecCol: String,
+      corpus: DataFrame, vecCol: String,
       nLists: Int, seed: Long = 42L): (Index, Array[Array[Double]]) = {
     val sample = LocalKMeans.sampleVectors(corpus, vecCol,
       cap = fitSampleCap, seed = seed)
@@ -84,20 +84,11 @@ object IvfIndex {
 
   /** Nearest-centroid id as a codegen'd projection (first index on exact
     * ties — deterministic). Native fused loop
-    * ([[graft.plans.PqExpressions.nearestCentroid]]); the HOF form below
-    * is kept for the bit-equality spec.
+    * ([[graft.plans.PqExpressions.nearestCentroid]]); the specs pin it
+    * bit-equal to the HOF form (`ReferenceForms.nearestCentroidHof`).
     */
   private[functions] def nearestCentroid(v: Column, centers: Array[Array[Double]]): Column =
     graft.plans.PqExpressions.nearestCentroid(v, centers)
-
-  /** Builtin-HOF formulation of [[nearestCentroid]] (nLists interpreted
-    * folds per row — the measured reason the native form exists).
-    */
-  private[graft] def nearestCentroidHof(v: Column, centers: Array[Array[Double]]): Column = {
-    val dists = array(centers.map(c =>
-      sqDist(v, array(c.map(lit(_)): _*))): _*)
-    (array_position(dists, array_min(dists)) - 1).cast("int")
-  }
 
   /** Squared euclidean distance between a float-array column and a
     * double-array column.
@@ -189,13 +180,13 @@ object IvfIndex {
     * still decides membership; the static filter only prunes the scan).
     */
   private def scoreLists(index: Index, probed: DataFrame, idCol: String,
-                         vecCol: String, excludeSelf: Boolean,
+                         vecCol: String,
                          allowedLists: Array[Int]): DataFrame = {
     val c = index.assigned.select(col(idCol).as("neighbor_id"),
         col(vecCol).as("cv"), col("list_id"))
       .where(col("list_id").isin(allowedLists.map(Int.box): _*))
     c.join(broadcast(probed.select("query_id", "qv", "list_id")), "list_id")
-      .where(if (excludeSelf) col("neighbor_id") =!= col("query_id") else lit(true))
+      .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         Similarity.cosine(col("qv"), col("cv")).as("sim"))
   }
@@ -204,9 +195,9 @@ object IvfIndex {
     * corpus side is filtered to probed lists *before* scoring.
     */
   def search(index: Index, queries: DataFrame, idCol: String, vecCol: String,
-             k: Int, nProbe: Int, excludeSelf: Boolean = true): DataFrame = {
+             k: Int, nProbe: Int): DataFrame = {
     val probed = probeRange(index, queries, idCol, vecCol, 0, nProbe)
-    val candidates = scoreLists(index, probed, idCol, vecCol, excludeSelf,
+    val candidates = scoreLists(index, probed, idCol, vecCol,
       listSet(probed))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
     candidates.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
@@ -232,8 +223,7 @@ object IvfIndex {
   def searchFiltered(index: Index, queries: DataFrame, idCol: String,
                      vecCol: String, attrCol: String,
                      pred: (Column, Column) => Column,
-                     k: Int, nProbe: Int,
-                     excludeSelf: Boolean = true): DataFrame = {
+                     k: Int, nProbe: Int): DataFrame = {
     val probed = probeRange(index, queries, idCol, vecCol, 0, nProbe)
       .join(broadcast(queries.select(col(idCol).as("query_id"),
         col(attrCol).as("__qattr"))), "query_id")
@@ -243,7 +233,7 @@ object IvfIndex {
     val cands = c
       .join(broadcast(probed.select(col("query_id"), col("qv"),
         col("list_id"), col("__qattr"))), "list_id")
-      .where(if (excludeSelf) col("neighbor_id") =!= col("query_id") else lit(true))
+      .where(col("neighbor_id") =!= col("query_id"))
       .where(pred(col("__cattr"), col("__qattr")))
       .select(col("query_id"), col("neighbor_id"),
         Similarity.cosine(col("qv"), col("cv")).as("sim"))
@@ -265,7 +255,7 @@ object IvfIndex {
     *  - each vector's `nProbe` nearest lists come from ONE fused
     *    codegen'd projection ([[graft.plans.NearestListsF]]: O(nProbe)
     *    insertion buffer over the literal centroid matrix, bit-equal to
-    *    the HOF `array_sort(struct(dist, list_id))` twin below) —
+    *    the HOF `array_sort(struct(dist, list_id))` twin in the specs) —
     *    corpus × nProbe rows out, no corpus × nLists intermediate, and
     *    the same (dist, list_id) tie rule as [[probeRange]], so probe 1
     *    IS the assigned list (spec-pinned);
@@ -275,9 +265,8 @@ object IvfIndex {
     *  - per-vector top-k is a bounded window: a vector's candidate set
     *    is its nProbe lists' members, ≈ nProbe/nLists of the corpus.
     *
-    * Scan fraction per vector ≈ nProbe/nLists, like [[search]];
-    * `excludeSelf` semantics are implicit (a vector never reports
-    * itself). Output (query_id, neighbor_id, sim, rank) — emitted sims
+    * Scan fraction per vector ≈ nProbe/nLists, like [[search]]; as in
+    * every search here, a vector never reports itself. Output (query_id, neighbor_id, sim, rank) — emitted sims
     * are exact cosines, so the ANN pair-value oracle applies unchanged.
     */
   def knnGraph(index: Index, idCol: String, vecCol: String, k: Int,
@@ -300,22 +289,6 @@ object IvfIndex {
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
     cands.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-  }
-
-  /** Builtin-HOF formulation of the multi-probe list assignment
-    * ([[graft.plans.NearestListsF]]) — nLists interpreted distance
-    * folds plus an nLists-element sort per row; kept for the
-    * bit-equality spec, like [[nearestCentroidHof]].
-    */
-  private[graft] def nearestListsHof(v: Column, centers: Array[Array[Double]],
-                                     nProbe: Int): Column = {
-    val nLists = centers.length
-    val dists = transform(
-      array(centers.map(c => array(c.map(lit(_)): _*)): _*),
-      c => sqDist(v, c))
-    slice(array_sort(zip_with(dists, sequence(lit(0), lit(nLists - 1)),
-      (d, i) => struct(d.as("d"), i.as("list_id")))), 1, nProbe)
-      .getField("list_id")
   }
 
   /** TWO-WAVE probe with residual-bound pruning — the recall/cost
@@ -344,13 +317,12 @@ object IvfIndex {
     * probe every wave-2 list (their k-th similarity is −∞).
     */
   def searchRefined(index: Index, queries: DataFrame, idCol: String,
-                    vecCol: String, k: Int, nProbe1: Int, nProbe2: Int,
-                    excludeSelf: Boolean = true): DataFrame = {
+                    vecCol: String, k: Int, nProbe1: Int, nProbe2: Int): DataFrame = {
     require(nProbe2 >= nProbe1, s"nProbe2 ($nProbe2) must be >= nProbe1 ($nProbe1)")
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
 
     val probed1 = probeRange(index, queries, idCol, vecCol, 0, nProbe1)
-    val wave1 = scoreLists(index, probed1, idCol, vecCol, excludeSelf,
+    val wave1 = scoreLists(index, probed1, idCol, vecCol,
         listSet(probed1))
       .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
 
@@ -383,7 +355,7 @@ object IvfIndex {
     // the per-query residual bound still decides membership in the join
     val wave2Superset = probeRange(index, queries, idCol, vecCol,
       nProbe1, nProbe2)
-    val wave2 = scoreLists(index, probed2, idCol, vecCol, excludeSelf,
+    val wave2 = scoreLists(index, probed2, idCol, vecCol,
       listSet(wave2Superset))
 
     wave1.select("query_id", "neighbor_id", "sim").unionByName(wave2)

@@ -204,23 +204,21 @@ object Layout {
     * ~256 rows), and the decision matrix is keys × buckets BY DESIGN —
     * it answers "which buckets may hold each key" exhaustively. At the
     * 100 TB end, broadcasting the full bucket list (and emitting the
-    * full matrix) stops being metadata-sized; bound the probed set with
-    * `bucketPred` (e.g. a partition/date range the caller already
-    * knows, the standard mins/maxes-then-bloom pruning order), which
-    * filters BOTH the broadcast bucket list and the emitted matrix.
+    * full matrix) stops being metadata-sized; bound the probed set by
+    * filtering `index` first (e.g. to a partition/date range the caller
+    * already knows, the standard mins/maxes-then-bloom pruning order),
+    * which bounds BOTH the broadcast bucket list and the emitted matrix.
     */
-  def bloomPrune(index: DataFrame, keys: DataFrame, keyCol: String,
-                 bucketPred: Option[Column] = None): DataFrame = {
-    val idx = bucketPred.map(index.where).getOrElse(index)
+  def bloomPrune(index: DataFrame, keys: DataFrame, keyCol: String): DataFrame = {
     val probes = keys.select(col(keyCol).as("key")).distinct()
       .select(col("key"),
         explode(array((0 until BloomK).map(j =>
           bloomBitPos(col("key"), j)): _*)).as("bit"))
       .select(col("key"), expr("CAST(bit div 32 AS INT)").as("word"),
         expr("shiftleft(1L, bit % 32)").as("mask"))
-    val buckets = idx.select("bucket").distinct()
+    val buckets = index.select("bucket").distinct()
     probes.crossJoin(broadcast(buckets))
-      .join(broadcast(idx), Seq("bucket", "word"), "left")
+      .join(broadcast(index), Seq("bucket", "word"), "left")
       .select(col("key"), col("bucket"),
         when(col("bits").isNotNull &&
           (col("bits").bitwiseAND(col("mask")) =!= 0L), 1L)

@@ -43,28 +43,6 @@ object Multimodal {
         i => binCol.substr(i * frameBytes + 1, lit(frameBytes))),
       f => length(f) > 0)
 
-  /** STUB feature extraction as a pure projection: `dim` pseudo-features
-    * derived deterministically from the payload hash. A real extractor
-    * replaces this expression with a codec UDF or the [[decodePartitions]]
-    * path; the surrounding plan (projection over binary, no shuffle) is
-    * identical.
-    */
-  def fakeFeatures(binCol: Column, dim: Int): Column =
-    transform(sequence(lit(1), lit(dim)),
-      i => (pmod(xxhash64(binCol, i), lit(2000L)) - lit(1000L)).cast("double") / lit(1000.0))
-
-  /** STUB resize: deterministic byte-domain downsample — keep every
-    * `factor`-th byte. A real image resize replaces the kernel; the plan
-    * shape (pure projection over binary) is identical.
-    */
-  def resizeStub(binCol: Column, factor: Int): Column = {
-    val idx = sequence(lit(1), greatest(
-      ((length(binCol) + lit(factor - 1)) / lit(factor)).cast("int"), lit(1)))
-    // substr per kept byte, concatenated — deterministic fake for tests
-    array_join(transform(idx, i =>
-      hex(binCol.substr((i - 1) * factor + 1, lit(1)))), "")
-  }
-
   /** Pluggable decode kernel. Implementations must be deterministic per
     * byte payload for replayability.
     */

@@ -34,14 +34,6 @@ object PqIndex {
                          codebooks: Array[Array[Array[Double]]],
                          codes: DataFrame)
 
-  /** Squared distance of subspace `i` of `v` to a literal sub-centroid. */
-  private def subSqDist(v: Column, i: Int, dsub: Int,
-                        cent: Array[Double]): Column =
-    aggregate(zip_with(slice(v, i * dsub + 1, dsub),
-      array(cent.map(lit(_)): _*),
-      (x, y) => { val d = x.cast("double") - y; d * d }),
-      lit(0.0), (s, x) => s + x)
-
   /** Dot product of subspace `i` of `v` with a literal sub-centroid. */
   private def subDot(v: Column, i: Int, dsub: Int,
                      cent: Array[Double]): Column =
@@ -52,22 +44,12 @@ object PqIndex {
 
   /** PQ codes of a vector column: per subspace, the index of the nearest
     * sub-centroid (first index on exact ties — deterministic). Native
-    * one-loop codegen ([[graft.plans.PqExpressions.pqEncode]]); the HOF
-    * form below is kept for the bit-equality spec.
+    * one-loop codegen ([[graft.plans.PqExpressions.pqEncode]]); the specs
+    * pin it bit-equal to the HOF form (`ReferenceForms.encodeExprHof`).
     */
   def encodeExpr(v: Column, codebooks: Array[Array[Array[Double]]],
                  dsub: Int): Column =
     graft.plans.PqExpressions.pqEncode(v, codebooks, dsub)
-
-  /** Builtin-HOF formulation of [[encodeExpr]] (m·ksub interpreted
-    * folds per row — the measured reason the native form exists).
-    */
-  def encodeExprHof(v: Column, codebooks: Array[Array[Array[Double]]],
-                    dsub: Int): Column =
-    array(codebooks.zipWithIndex.map { case (cb, i) =>
-      val dists = array(cb.map(c => subSqDist(v, i, dsub, c)): _*)
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    }: _*)
 
   /** The query-side ADC table: `m × ksub` exact subspace dot products. */
   private def adcTable(qv: Column, codebooks: Array[Array[Array[Double]]],
@@ -168,7 +150,7 @@ object PqIndex {
                  nLists: Int = 16, m: Int = 8, ksub: Int = 16,
                  seed: Long = 42L): IvfPq = {
     val (ivf, sample) =
-      IvfIndex.buildReturningSample(corpus, idCol, vecCol, nLists, seed)
+      IvfIndex.buildReturningSample(corpus, vecCol, nLists, seed)
     val resid = ivf.assigned.select(col(idCol), col("list_id"),
       residualExpr(ivf.centroids, col(vecCol)).as("__r"))
     val dim = ivf.centroids.head._2.length
@@ -265,7 +247,7 @@ object PqIndex {
     */
   def searchIvfPq(index: IvfPq, corpus: DataFrame, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int, nProbe: Int,
-                  shortlist: Int, excludeSelf: Boolean = true): DataFrame = {
+                  shortlist: Int): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val probed = IvfIndex.probeRange(index.ivf, queries, idCol, vecCol,
         0, nProbe)
@@ -278,7 +260,7 @@ object PqIndex {
       .where(col("list_id").isin(IvfIndex.listSet(probed).map(Int.box): _*))
       .join(broadcast(probed.select("query_id", "list_id", "qdotc", "qtab")),
         "list_id")
-      .where(if (excludeSelf) col(idCol) =!= col("query_id") else lit(true))
+      .where(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol).as("neighbor_id"),
         (col("qdotc") + graft.plans.PqExpressions.adcSum(col("codes"),
           col("qtab"))).as("approx_dot"))
@@ -350,8 +332,7 @@ object PqIndex {
     * join back to the corpus for exact cosine. Emitted `sim` is exact.
     */
   def search(index: Index, corpus: DataFrame, queries: DataFrame,
-             idCol: String, vecCol: String, k: Int, shortlist: Int,
-             excludeSelf: Boolean = true): DataFrame = {
+             idCol: String, vecCol: String, k: Int, shortlist: Int): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must be >= k ($k)")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("qtab", adcTable(col("qv"), index.codebooks, index.dsub))
@@ -359,7 +340,7 @@ object PqIndex {
     // approx dot: m table lookups per (query, code-row)
     val approx = index.codes
       .crossJoin(broadcast(q.select("query_id", "qtab")))
-      .where(if (excludeSelf) col(idCol) =!= col("query_id") else lit(true))
+      .where(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol).as("neighbor_id"),
         graft.plans.PqExpressions.adcSum(col("codes"), col("qtab"))
           .as("approx_dot"))

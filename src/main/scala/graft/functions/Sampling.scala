@@ -23,19 +23,6 @@ object Sampling {
     df.where(pmod(xxhash64(col(keyCol), lit(seed)), lit(1L << 32)) < cut)
   }
 
-  /** Per-stratum hash sampling: fractions by stratum value, default 0 for
-    * unlisted strata (drop).
-    */
-  def stratifiedHashSample(df: DataFrame, keyCol: String, strataCol: String,
-                           fractions: Map[String, Double],
-                           seed: Long = 42L): DataFrame = {
-    val cutExpr = fractions.foldLeft(lit(0L)) { case (acc, (stratum, f)) =>
-      when(col(strataCol) === stratum, lit((f * (1L << 32).toDouble).toLong))
-        .otherwise(acc)
-    }
-    df.where(pmod(xxhash64(col(keyCol), lit(seed)), lit(1L << 32)) < cutExpr)
-  }
-
   // ------------------------------------------------- cross-engine portable
 
   /** `floor(fraction · 16^8)` as 8 lowercase hex digits — the membership
@@ -285,9 +272,6 @@ object Sampling {
                    weights: Map[String, Double]): DataFrame = {
     require(weights.nonEmpty, "weights must not be empty")
     require(weights.values.forall(_ >= 0), "weights must be >= 0")
-    val weightExpr = weights.foldLeft(lit(0.0)) { case (acc, (g, w)) =>
-      when(col(groupCol) === g, lit(w)).otherwise(acc)
-    }
     val counts = df.groupBy(col(groupCol).as("__g"))
       .agg(count(lit(1)).cast("double").as("__n"))
       .withColumn("__w", weights.foldLeft(lit(0.0)) { case (acc, (g, w)) =>

@@ -32,11 +32,6 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.plans.SignatureExpressions.dotF(a, b)
 
-  /** Builtin-HOF formulation of [[dot]] (kept for the equality spec). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (s, x) => s + x)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity; null-safe for zero vectors (returns 0). */
@@ -75,8 +70,7 @@ object Similarity {
     * @param queries (idCol, vecCol) rows — must be broadcast-small.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
-                     idCol: String, vecCol: String, k: Int,
-                     excludeSelf: Boolean = true): DataFrame = {
+                     idCol: String, vecCol: String, k: Int): DataFrame = {
     // norms are precomputed once per side, not per pair: sqrt(dot(v,v)) is
     // the same IEEE value wherever it is computed, so cosine results are
     // unchanged while the per-pair cost drops to one dot + one multiply
@@ -86,7 +80,7 @@ object Similarity {
       norm(col(vecCol)).as("cn"))
     val joined = c.crossJoin(broadcast(q))
     val scored = joined
-      .where(if (excludeSelf) col("neighbor_id") =!= col("query_id") else lit(true))
+      .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosinePrenormed(col("qv"), col("cv"), col("qn") * col("cn")).as("sim"))
     val w = Window.partitionBy("query_id")
@@ -187,8 +181,7 @@ object Similarity {
     */
   def annTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, k: Int,
-              nBits: Int = 12, dim: Int = 64, seed: Long = 42L,
-              excludeSelf: Boolean = true): DataFrame = {
+              nBits: Int = 12, dim: Int = 64, seed: Long = 42L): DataFrame = {
     val planes = hyperplanes(nBits, dim, seed)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       norm(col(vecCol)).as("cn"),
@@ -197,7 +190,7 @@ object Similarity {
       norm(col(vecCol)).as("qn"),
       explode(probeBuckets(lshBucket(col(vecCol), planes), nBits)).as("bucket"))
     val candidates = c.join(broadcast(q), "bucket")
-      .where(if (excludeSelf) col("neighbor_id") =!= col("query_id") else lit(true))
+      .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosinePrenormed(col("qv"), col("cv"), col("qn") * col("cn")).as("sim"))
       .dropDuplicates("query_id", "neighbor_id")
@@ -487,7 +480,6 @@ object Similarity {
                     k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = corpus.sparkSession
-    import spark.implicits._
     val base = corpus.select(col(idCol).cast("long").as("vec_id"),
         col(vecCol).as("v"), norm(col(vecCol)).as("nrm"))
       .persist()
@@ -680,14 +672,6 @@ object Similarity {
       transform(xd, x => floor(x * scale + lit(0.5)).cast("int")).as("codes"),
       scale.as("scale"))
   }
-
-  /** Inverse of [[int8Quantize]] for re-scoring: `code / scale` (0 for
-    * scale 0). Max per-element reconstruction error is
-    * `1/(2·scale)` = max|x|/254.
-    */
-  def int8Dequantize(codes: Column, scale: Column): Column =
-    transform(codes, c =>
-      when(scale === 0.0, lit(0.0)).otherwise(c.cast("double") / scale))
 
   /** Sign-bit binary quantization: dim floats → ceil(dim/32) Long words,
     * bit i of word w set iff `vec[32w+i] >= 0`. 1 bit per dimension —

@@ -30,7 +30,6 @@ object Sketches {
     * the audit-dashboard operating point; raise p for tighter bounds.
     */
   val HllP = 6
-  val HllM = 64
 
   /** 60-bit md5-prefix hash (15 hex chars — stays positive in a Long,
     * identical to DuckDB's `('0x' || substring(md5(v),1,15))::BIGINT`).
@@ -142,11 +141,6 @@ object Sketches {
                             width: Int = CmWidth): Column =
     (conv(substring(h, 1 + 8 * j, 8), 16, 10).cast("long") % width)
       .cast("int")
-
-  /** Column index of `term` under hash row `j` ([[cmHash]] lane `j`). */
-  private[graft] def cmCol(term: Column, j: Int,
-                           width: Int = CmWidth): Column =
-    cmLane(cmHash(term), j, width)
 
   /** Build a count-min sketch over one string column: one md5 per item
     * (lane-sliced across the depth rows), one explode + ONE

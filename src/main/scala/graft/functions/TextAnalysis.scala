@@ -259,18 +259,6 @@ object TextAnalysis {
         regexp_replace(c, "[\\x00-\\x1F\\x7F]", "")),
       "\\s+", " "))
 
-  /** Word 3-shingles of normalized text as STRINGS (vs the hashed form
-    * the dedup family uses): for token count n, shingles start at
-    * 1..max(n−2, 1), each taking up to 3 tokens — short docs yield their
-    * whole text as one shingle. Matches the dedup oracle's DuckDB
-    * construction token-for-token.
-    */
-  def wordShingles(c: Column): Column = {
-    val t = split(regexp_replace(lower(trim(c)), "\\s+", " "), " ")
-    transform(sequence(lit(1), greatest(size(t) - 2, lit(1))),
-      i => concat_ws(" ", slice(t, i, lit(3))))
-  }
-
   /** Hashed linear text-classifier scoring — the fastText/DCLM-style
     * quality-classifier APPLY step: every token hashes into a bucket of
     * a weight table and the document's margin is the mean bucket weight,
@@ -288,22 +276,6 @@ object TextAnalysis {
       s"nBuckets must be even >= 2, got $nBuckets")
     when(length(trim(c)) === 0, lit(0.0))
       .otherwise(graft.plans.LinearScoreF.linearScore(c, nBuckets))
-  }
-
-  /** HOF twin of [[linearScore]] — the declarative reference the native
-    * single-pass expression is spec-pinned bit-equal to (the HOF
-    * interprets its lambda per token and hex-round-trips every hash;
-    * ~3× slower at 10×, same bits).
-    */
-  def linearScoreHof(c: Column, nBuckets: Int = 512): Column = {
-    require(nBuckets >= 2 && nBuckets % 2 == 0,
-      s"nBuckets must be even >= 2, got $nBuckets")
-    val toks = split(regexp_replace(lower(trim(c)), "\\s+", " "), " ")
-    val wsum = aggregate(toks, lit(0L), (acc, w) =>
-      acc + (conv(substring(md5(w.cast("binary")), 1, 8), 16, 10)
-        .cast("long") % nBuckets) - lit(nBuckets / 2))
-    when(length(trim(c)) === 0, lit(0.0))
-      .otherwise(wsum.cast("double") / size(toks).cast("double"))
   }
 
   /** Character-bigram novelty — the garbled-text detector: the fraction
@@ -462,8 +434,9 @@ object TextAnalysis {
     */
   def topNgramsByDocFreq(df: org.apache.spark.sql.DataFrame, textCol: String,
                          k: Int): org.apache.spark.sql.DataFrame = {
-    // native fused shingle pass (distinct built in); the HOF twin
-    // [[wordShingles]] + array_distinct is the bit-equality reference
+    // native fused shingle pass (distinct built in); the specs' HOF twin
+    // `ReferenceForms.wordShingles` + array_distinct is the bit-equality
+    // reference
     val toks = split(regexp_replace(lower(trim(col(textCol))), "\\s+", " "), " ")
     df.select(explode(
         graft.plans.ShingleStringsF.shingleStrings(toks, 3)).as("ngram"))

@@ -182,7 +182,4 @@ object MisraGries {
       MisraGries(org.apache.spark.sql.GraftBridge.expression(c), capacity)
         .toAggregateExpression())
 
-  /** Convenience: the top `k` of a capacity-`capacity` sketch. */
-  def approxTopK(c: Column, k: Int, capacity: Int): Column =
-    org.apache.spark.sql.functions.slice(sketch(c, capacity), 1, k)
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Native tight-loop expressions for the PQ hot paths. The HOF
-  * formulations ([[graft.functions.PqIndex]]'s `subSqDist`-based encode
+  * formulations (the specs' `ReferenceForms.encodeExprHof`
   * and `aggregate(sequence(...))` ADC sum) are semantically right but
   * interpret a lambda per element and allocate slices per subspace —
   * for encode that is m·ksub (=128 at the defaults) interpreted folds

@@ -131,11 +131,6 @@ object ReservoirSample {
     }
   }
 
-  def reservoir(c: Column, k: Int, seed: Long = 42L): Column =
-    org.apache.spark.sql.GraftBridge.column(
-      ReservoirSample(org.apache.spark.sql.GraftBridge.expression(c), k, seed)
-        .toAggregateExpression())
-
   /** Cross-engine-reproducible bottom-k: keys on md5 instead of xxhash64,
     * so a DuckDB/PostgreSQL oracle recomputes the exact same sample.
     */

@@ -820,8 +820,7 @@ object PipelineQueries {
       val emb = Tables.read(spark, dir, "embeddings")
       val nLists = math.max(16,
         math.ceil(math.sqrt(emb.count().toDouble / 4.0)).toInt)
-      val index = graft.functions.IvfIndex.build(emb, "vec_id",
-        "embedding", nLists = nLists)
+      val index = graft.functions.IvfIndex.build(emb, "embedding", nLists = nLists)
       val queries = emb.filter(col("vec_id") < 32)
       val exact = Similarity.bruteForceTopK(emb, queries, "vec_id",
         "embedding", k = 5)
@@ -848,8 +847,7 @@ object PipelineQueries {
     // Same pair-value verification contract as sim_ann_lsh.
     "sim_ivf" -> ((spark, dir) => {
       val emb = Tables.read(spark, dir, "embeddings")
-      val index = graft.functions.IvfIndex.build(emb, "vec_id", "embedding",
-        nLists = 16)
+      val index = graft.functions.IvfIndex.build(emb, "embedding", nLists = 16)
       graft.functions.IvfIndex.search(index,
         emb.filter(col("vec_id") < 8), "vec_id", "embedding",
         k = 10, nProbe = 4)
@@ -870,8 +868,7 @@ object PipelineQueries {
       // oracle verifies the emitted cosines whatever they are
       val nLists = math.max(16,
         math.ceil(math.sqrt(emb.count().toDouble / 4.0)).toInt)
-      val index = graft.functions.IvfIndex.build(emb, "vec_id",
-        "embedding", nLists = nLists)
+      val index = graft.functions.IvfIndex.build(emb, "embedding", nLists = nLists)
       graft.functions.IvfIndex.knnGraph(index, "vec_id", "embedding",
         k = 5, nProbe = 2)
         .select(col("query_id"), col("neighbor_id"),
@@ -939,7 +936,6 @@ object PipelineQueries {
     // re-loaded index answers the same search. Same pair-value oracle as
     // sim_ivfpq — the streamed index must produce identical exact sims.
     "sim_ivfpq_stream" -> ((spark, dir) => {
-      import spark.implicits._
       val emb = Tables.read(spark, dir, "embeddings")
       val index = graft.functions.PqIndex.buildIvfPq(emb, "vec_id",
         "embedding", nLists = 16, m = 8, ksub = 16)
@@ -970,8 +966,7 @@ object PipelineQueries {
     // equality with the full 4-probe search). Same pair-value oracle.
     "sim_ivf_refined" -> ((spark, dir) => {
       val emb = Tables.read(spark, dir, "embeddings")
-      val index = graft.functions.IvfIndex.build(emb, "vec_id", "embedding",
-        nLists = 16)
+      val index = graft.functions.IvfIndex.build(emb, "embedding", nLists = 16)
       graft.functions.IvfIndex.searchRefined(index,
         emb.filter(col("vec_id") < 8), "vec_id", "embedding",
         k = 10, nProbe1 = 2, nProbe2 = 4)
@@ -1380,7 +1375,7 @@ object PipelineQueries {
     // evolving corpus — in one recursive CTE.
     "text_bpe_vocab" -> ((spark, dir) =>
       graft.functions.Curation.bpeMergeTable(
-        Tables.read(spark, dir, "documents"), "text", "doc_id", k = 6)),
+        Tables.read(spark, dir, "documents"), "text", k = 6)),
 
     // The tokenizer ENCODE step: induce the 6-merge table, then apply
     // it to every document (later merges see earlier fusions). The
@@ -1389,7 +1384,7 @@ object PipelineQueries {
     "text_bpe_apply" -> ((spark, dir) => {
       val docs = Tables.read(spark, dir, "documents")
       val merges = graft.functions.Curation
-        .bpeMergeTable(docs, "text", "doc_id", k = 6)
+        .bpeMergeTable(docs, "text", k = 6)
         .orderBy("step").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
       graft.functions.Curation.bpeApply(docs, "text", "doc_id", merges)
@@ -4057,8 +4052,7 @@ object PipelineQueries {
     // row → row-count mismatch).
     "sim_filtered" -> ((spark, dir) => {
       val emb = Tables.read(spark, dir, "embeddings")
-      val index = graft.functions.IvfIndex.build(emb, "vec_id",
-        "embedding", nLists = 16)
+      val index = graft.functions.IvfIndex.build(emb, "embedding", nLists = 16)
       graft.functions.IvfIndex.searchFiltered(index,
         emb.filter(col("vec_id") < 8), "vec_id", "embedding", "label",
         (c, q) => c =!= q, k = 10, nProbe = 4)
@@ -4308,8 +4302,7 @@ object PipelineQueries {
       // candidate sets were.
       val nLists = math.max(16,
         math.ceil(math.sqrt(emb.count().toDouble / 4.0)).toInt)
-      val index = graft.functions.IvfIndex.build(emb, "vec_id",
-        "embedding", nLists = nLists)
+      val index = graft.functions.IvfIndex.build(emb, "embedding", nLists = nLists)
       val knn = graft.functions.IvfIndex.knnGraph(index, "vec_id",
         "embedding", k = 5, nProbe = 2)
       Similarity.labelVoteDetail(knn, emb, "vec_id", "label")
@@ -5058,7 +5051,7 @@ object PipelineQueries {
       val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
       val docs = webDocs(spark, dir)
         .select(col("doc_id"), col("url"), lit(t0).as("ts"))
-      val sentinel = Seq((-1L, " sentinel",
+      val sentinel = Seq((-1L, "\u0000sentinel",
         java.sql.Timestamp.valueOf("2024-01-03 00:00:00")))
         .toDF("doc_id", "url", "ts")
       val agg = streamWithSentinel(spark, docs, sentinel, delaySec = 3600L)

@@ -25,7 +25,6 @@ object SqlQueries {
   type Q = (SparkSession, String) => DataFrame
 
   private def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
-  private def dec6(c: Column): Column = c.cast(DecimalType(18, 6))
 
   def queries: Map[String, Q] = Map[String, Q](
 

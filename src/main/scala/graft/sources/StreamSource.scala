@@ -36,18 +36,13 @@ object StreamSource {
              flattenDepth: Option[Int] = None): DataFrame = {
     require(stream.sql.trim.nonEmpty,
       s"stream '${stream.name}': sql must not be empty") // reference: client.py:255-258
-    val start = Bookmarks.resolveStart(stream, state)
-    val repKeyType = stream.replicationKey.map(k =>
-      TypeMapper.toDataType(stream.column(k).typeName))
-      .getOrElse(org.apache.spark.sql.types.StringType)
-    val sql = SqlDialect.bindRepKeyVal(
-      SqlDialect.rewrite(stream.sql), start, repKeyType)
+    val sql = boundSql(stream, state, SqlDialect.rewrite(stream.sql))
     // PG '...' literals are backslash-LITERAL (standard_conforming_strings,
     // PG default since 9.1); Spark's parser processes \-escapes unless
     // escapedStringLiterals is on. The parse runs under a clone of the
     // session conf with it on, so regex/SIMILAR TO patterns like '\d+' or
-    // 'NATION\.5' survive intact, and the shared conf — which concurrent
-    // plannings (sync_parallelism) and other queries read — is never set.
+    // 'NATION\.5' survive intact, and the shared conf, which other queries
+    // read, is never set.
     PgFunctions.ensureRegistered(spark)
     val parseConf = spark.sessionState.conf.clone()
     parseConf.setConfString("spark.sql.parser.escapedStringLiterals", "true")
@@ -71,13 +66,26 @@ object StreamSource {
     else graft.operators.Flattener.parseJsonStrings(df, jsonCols,
       orderBy = (stream.replicationKey.toSeq ++ stream.keyProperties).distinct)
 
-  /** Watermark-bound stream SQL — the exact text the remote executes. */
-  private def boundSql(stream: StreamConfig, state: TapState): String = {
+  /** `sql` with the stream's watermark bound as a typed literal; over the
+    * stream's own SQL, the exact text the remote executes.
+    */
+  private def boundSql(stream: StreamConfig, state: TapState,
+                       sql: String): String = {
     val start = Bookmarks.resolveStart(stream, state)
     val repKeyType = stream.replicationKey.map(k =>
       TypeMapper.toDataType(stream.column(k).typeName))
       .getOrElse(org.apache.spark.sql.types.StringType)
-    SqlDialect.bindRepKeyVal(stream.sql, start, repKeyType)
+    SqlDialect.bindRepKeyVal(sql, start, repKeyType)
+  }
+
+  /** `f` over a plain driver-side connection to the tap's database. */
+  private def withConnection[A](tap: TapConfig)(f: java.sql.Connection => A): A = {
+    Class.forName(tap.resolvedJdbcDriver)
+    val props = new java.util.Properties()
+    if (tap.user.nonEmpty) props.setProperty("user", tap.user)
+    if (tap.password.nonEmpty) props.setProperty("password", tap.password)
+    val conn = java.sql.DriverManager.getConnection(tap.resolvedJdbcUrl, props)
+    try f(conn) finally conn.close()
   }
 
   /** Columns whose DECLARED remote type is json/jsonb, via one
@@ -86,14 +94,8 @@ object StreamSource {
     * decide by the declared column type, never by content sniffing).
     * Nil when the driver exposes no metadata for the query.
     */
-  def jsonTypedColumns(tap: TapConfig, sql: String): Seq[String] = {
-    Class.forName(tap.resolvedJdbcDriver)
-    val props = new java.util.Properties()
-    if (tap.user.nonEmpty) props.setProperty("user", tap.user)
-    if (tap.password.nonEmpty) props.setProperty("password", tap.password)
-    val conn = java.sql.DriverManager
-      .getConnection(tap.resolvedJdbcUrl, props)
-    try {
+  def jsonTypedColumns(tap: TapConfig, sql: String): Seq[String] =
+    withConnection(tap) { conn =>
       val md = conn.prepareStatement(sql).getMetaData
       if (md == null) Nil
       else (1 to md.getColumnCount).toSeq.flatMap { i =>
@@ -102,8 +104,7 @@ object StreamSource {
           case _ => None
         }
       }
-    } finally conn.close()
-  }
+    }
 
   /** JDBC pushdown options for a stream. `partitionColumn`/bounds enable
     * parallel extraction when the stream declares a numeric/timestamp
@@ -115,7 +116,7 @@ object StreamSource {
                   bounds: Option[(String, String)] = None): Map[String, String] = {
     // No bind params in Spark JDBC either: render the typed literal
     // before pushdown (reference binds server-side at client.py:300-303).
-    val sql = boundSql(stream, state)
+    val sql = boundSql(stream, state, stream.sql)
     val base = Map(
       "url" -> tap.resolvedJdbcUrl,
       "user" -> tap.user,
@@ -150,7 +151,7 @@ object StreamSource {
     val flat = flattenDepth.map { d =>
       val jsonCols =
         if (stream.jsonColumns.nonEmpty) stream.jsonColumns
-        else scala.util.Try(jsonTypedColumns(tap, boundSql(stream, state)))
+        else scala.util.Try(jsonTypedColumns(tap, boundSql(stream, state, stream.sql)))
           .getOrElse(Nil)
       graft.operators.Flattener.flatten(
         parseDeclaredJson(df, stream, jsonCols), d)
@@ -219,14 +220,8 @@ object StreamSource {
                           numPartitions: Int = 8,
                           flattenDepth: Option[Int] = None): DataFrame = {
     val boundsOpt = stream.replicationKey.flatMap { k =>
-      val sql = boundSql(stream, state)
-      Class.forName(tap.resolvedJdbcDriver)
-      val props = new java.util.Properties()
-      if (tap.user.nonEmpty) props.setProperty("user", tap.user)
-      if (tap.password.nonEmpty) props.setProperty("password", tap.password)
-      val conn = java.sql.DriverManager
-        .getConnection(tap.resolvedJdbcUrl, props)
-      try {
+      val sql = boundSql(stream, state, stream.sql)
+      withConnection(tap) { conn =>
         // unquoted: the key name follows the same case-folding rules as
         // its references inside the stream's own SQL
         val rs = conn.createStatement().executeQuery(
@@ -238,7 +233,7 @@ object StreamSource {
             case _ => None // empty result: nothing to slice
           }
         } finally rs.close()
-      } finally conn.close()
+      }
     }
     boundsOpt match {
       case Some(b) => jdbc(spark, tap, stream, state, numPartitions, Some(b),

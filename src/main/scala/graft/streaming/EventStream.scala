@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /** Structured Streaming over the events table: the unbounded-stream
   * counterpart of the tap's bounded incremental extraction. The reference
@@ -12,31 +11,13 @@ import org.apache.spark.sql.types._
   * event analytics expressed as continuous queries with watermarks and
   * stateful aggregation.
   *
-  * `readEvents` streams the parquet directory; in production the source
-  * would be Kafka/files landing continuously — the downstream plan is
-  * identical, which is the point of the unified Dataset API.
+  * Each operator takes a streaming DataFrame or Dataset: the gate entries
+  * feed them from a `MemoryStream`, StreamingSpec from the events parquet;
+  * in production the source would be Kafka/files landing continuously —
+  * the downstream plan is identical, which is the point of the unified
+  * Dataset API.
   */
 object EventStream {
-
-  def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    // The fixture's physical ts type has varied across driver
-    // generations (TIMESTAMP(NANOS) → Long under nanosAsLong;
-    // TIMESTAMP(MICROS) ntz → TimestampNTZType) — peek at the footer
-    // with a batch read and normalize to µs TimestampType exactly like
-    // [[graft.Tables.read]], so stream and batch plans see one type.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    // the fixture is a single file; the file stream source needs a
-    // directory basePath with a glob that selects just the events table
-    val raw = spark.readStream.schema(fileSchema)
-      .option("basePath", sfDir)
-      .parquet(s"$sfDir/{events}.parquet")
-    fileSchema("ts").dataType match {
-      case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
-  }
 
   /** Tumbling-window counts/sums per event type with a 1-hour watermark:
     * late events beyond the watermark are dropped, state is bounded —
@@ -50,42 +31,6 @@ object EventStream {
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("value_sum"))
 
-  final case class UserEvent(user_id: Long, event_id: Long, value: Double)
-  final case class UserTotals(user_id: Long, n_events: Long, value_sum: Double)
-
-  /** Stateful per-user running totals via mapGroupsWithState — the
-    * KeyValueGroupedDataset state API the pipeline uses for custom
-    * accumulators (one state row per user key, hash-partitioned).
-    */
-  def userTotals(events: Dataset[UserEvent]): Dataset[UserTotals] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[UserTotals, UserTotals](GroupStateTimeout.NoTimeout) {
-        (user: Long, evts: Iterator[UserEvent], state: GroupState[UserTotals]) =>
-          val prev = state.getOption.getOrElse(UserTotals(user, 0L, 0.0))
-          var n = prev.n_events
-          var s = prev.value_sum
-          evts.foreach { e => n += 1; s += e.value }
-          val next = UserTotals(user, n, s)
-          state.update(next)
-          next
-      }
-  }
-
-  /** Streaming exact dedup: `dropDuplicatesWithinWatermark` on a content
-    * key — the continuous counterpart of [[graft.functions.Dedup
-    * .dropExactDuplicates]]. State holds one entry per distinct key seen
-    * within the watermark horizon and is evicted after it, which is what
-    * makes exact dedup feasible on an unbounded stream (a plain
-    * dropDuplicates would grow state forever).
-    */
-  def dedupWithinWatermark(events: DataFrame, keyCols: Seq[String],
-                           watermark: String = "1 hour",
-                           tsCol: String = "ts"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  final case class DocIn(doc_id: Long, minhash: Seq[Long], ts: java.sql.Timestamp)
   final case class NearDupVerdict(doc_id: Long, dup_of: Long, overlap: Int)
 
   /** Streaming MinHash near-dup index via flatMapGroupsWithState: documents
@@ -170,57 +115,6 @@ object EventStream {
           }
           st.foreach(state.update)
           out.iterator
-      }
-  }
-
-  final case class SemVerdict(doc_id: Long, rep_id: Long, cos_sim: Double)
-
-  /** Streaming SEMANTIC near-dup index — the embedding analogue of
-    * [[minhashBucketIndex]], and the never-sealed sibling of
-    * [[cosinePairsStream]]: vectors arrive keyed by their k-means
-    * cluster (stateless assignment against fixed centers, the
-    * train-once contract); each cluster's state keeps the FIRST
-    * (id, vector, norm) seen — the kept representative — and every
-    * later arrival is emitted with its exact cosine against it, the
-    * continuous keep/drop signal. State is one vector per active
-    * cluster (bounded by ProcessingTimeTimeout in production; NoTimeout
-    * here for deterministic tests); arrivals stream through lazily, so
-    * a hot cluster never buffers.
-    */
-  def semanticClusterIndex(docs: Dataset[(Long, Long, Seq[Double])])
-      : Dataset[SemVerdict] = {
-    import docs.sparkSession.implicits._
-    docs.groupByKey(_._2)
-      .flatMapGroupsWithState[(Long, Seq[Double], Double), SemVerdict](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (_: Long, rows: Iterator[(Long, Long, Seq[Double])],
-         state: GroupState[(Long, Seq[Double], Double)]) =>
-          val rep = state.getOption.orElse {
-            if (!rows.hasNext) None
-            else {
-              val (id, _, v) = rows.next()
-              var s = 0.0; var i = 0
-              while (i < v.length) { s += v(i) * v(i); i += 1 }
-              val entry = (id, v, math.sqrt(s))
-              state.update(entry)
-              Some(entry)
-            }
-          }
-          val (repId, repSeq, repN) = rep.getOrElse((-1L, Seq.empty[Double], 0.0))
-          val rv = repSeq.toArray
-          rows.collect {
-            case (id, _, v) if id != repId =>
-              var dot = 0.0; var sq = 0.0
-              var i = 0
-              val n = math.min(v.length, rv.length)
-              while (i < n) { dot += v(i) * rv(i); i += 1 }
-              i = 0
-              while (i < v.length) { sq += v(i) * v(i); i += 1 }
-              val denom = math.sqrt(sq) * repN
-              val cos = if (denom == 0.0) 0.0 else dot / denom
-              SemVerdict(id, repId, java.math.BigDecimal.valueOf(cos)
-                .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
-          }
       }
   }
 
@@ -1116,17 +1010,4 @@ object EventStream {
     q.processAllAvailable()
     q.stop()
   }
-
-  /** Start a DURABLE file-sink run: parquet append + named checkpoint —
-    * the production emission path (exactly-once across kill/resume: the
-    * file sink's transaction log and the checkpoint's offsets/state
-    * commit together). Caller drives and stops the returned query.
-    */
-  def startToParquet(df: DataFrame, name: String, outPath: String,
-                     checkpointRoot: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream.outputMode(OutputMode.Append()).format("parquet")
-      .option("path", outPath)
-      .option("checkpointLocation", s"$checkpointRoot/$name")
-      .start()
 }

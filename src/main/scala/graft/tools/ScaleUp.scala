@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Derive a larger synthetic scale factor from an existing fixture

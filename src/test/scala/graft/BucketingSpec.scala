@@ -11,7 +11,23 @@ import org.scalatest.funsuite.AnyFunSuite
 class BucketingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
-  // Catalog.ensureBucketed: pay the layout shuffle once at registration,
+  /** Register `df` as the managed bucketed table `name`. Idempotent: an
+    * existing table is left untouched, so repeated pipeline runs reuse the
+    * layout. Sorted buckets additionally satisfy sorted-merge operators'
+    * ordering requirements (sort-merge join, AsOfJoinExec) without a
+    * per-query sort.
+    */
+  private def ensureBucketed(df: org.apache.spark.sql.DataFrame, name: String,
+                             nBuckets: Int, bucketCols: Seq[String],
+                             sortCols: Seq[String] = Nil): Unit =
+    if (!spark.catalog.tableExists(name)) {
+      val w = df.write.bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
+      val sorted =
+        if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
+      sorted.saveAsTable(name)
+    }
+
+  // ensureBucketed: pay the layout shuffle once at registration,
   // then EVERY downstream query keyed on the bucket columns — the custom
   // as-of operator AND a plain aggregation — reads bucket-aligned with no
   // exchange. Registration is idempotent across pipeline runs.
@@ -19,17 +35,17 @@ class BucketingSpec extends AnyFunSuite {
     val ev = Tables.read(spark, SparkTestSession.Sf, "events")
       .withColumn("ts", date_trunc("second", col("ts")))
     try {
-      Catalog.ensureBucketed(
+      ensureBucketed(
         ev.filter(col("event_type") === "purchase")
           .select("user_id", "event_id", "ts"),
         "cat_purchases", 4, Seq("user_id"), Seq("user_id", "ts"))
-      Catalog.ensureBucketed(
+      ensureBucketed(
         ev.filter(col("event_type") === "click")
           .selectExpr("user_id AS c_user", "ts AS c_ts"),
         "cat_clicks", 4, Seq("c_user"), Seq("c_user", "c_ts"))
       val before = spark.table("cat_purchases").count()
       // idempotent: re-registering (even with different data) is a no-op
-      Catalog.ensureBucketed(ev.limit(0).select("user_id", "event_id", "ts"),
+      ensureBucketed(ev.limit(0).select("user_id", "event_id", "ts"),
         "cat_purchases", 4, Seq("user_id"))
       assert(spark.table("cat_purchases").count() === before)
 
@@ -52,8 +68,9 @@ class BucketingSpec extends AnyFunSuite {
     }
   }
 
-  // The bucketed substr-index layout: identical probed spans, and the
-  // index side of both h-keyed probe joins reads bucket-aligned — the
+  // The substr index registered as a bucketed table (bucketBy(h) through
+  // ensureBucketed, plus a bucketed append): identical probed spans, and
+  // the index side of both h-keyed probe joins reads bucket-aligned — the
   // probe plan drops the index-side exchanges the flat layout pays.
   test("bucketed substr index probes exchange-free on the index side") {
     import graft.functions.Dedup
@@ -66,9 +83,9 @@ class BucketingSpec extends AnyFunSuite {
       .withColumn("text", concat(lit(plant + " "), col("text")))
     try {
       val idx = Dedup.buildSubstrIndex(a, "text", "doc_id", minLen = 8)
-      Dedup.saveSubstrIndexBucketed(idx, "substr_idx_bkt", 8)
-      Dedup.appendSubstrIndexBucketed(b, "text", "doc_id", minLen = 8,
-        "substr_idx_bkt", 8)
+      ensureBucketed(idx, "substr_idx_bkt", 8, Seq("h"))
+      Dedup.buildSubstrIndex(b, "text", "doc_id", minLen = 8)
+        .write.mode("append").bucketBy(8, "h").saveAsTable("substr_idx_bkt")
       val flat = idx.unionByName(
         Dedup.buildSubstrIndex(b, "text", "doc_id", minLen = 8))
       def spans(ix: org.apache.spark.sql.DataFrame) =

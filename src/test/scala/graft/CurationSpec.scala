@@ -429,14 +429,14 @@ class CurationSpec extends AnyFunSuite {
     // two of them -> "w+w w+w"; step 2 fuses those; a single token
     // remains -> early stop before k
     val docs = Seq((1L, "w w w w")).toDF("doc_id", "text")
-    val m = Curation.bpeMergeTable(docs, "text", "doc_id", k = 5)
+    val m = Curation.bpeMergeTable(docs, "text", k = 5)
       .as[(Int, String, String, Long)].collect().sortBy(_._1)
     assert(m.length === 2)
     assert(m(0) === ((1, "w", "w", 3L)))
     assert(m(1) === ((2, "w+w", "w+w", 1L)))
     // empty corpus -> empty merge table, correct schema
     val empty = Curation.bpeMergeTable(
-      Seq((1L, "   ")).toDF("doc_id", "text"), "text", "doc_id", k = 3)
+      Seq((1L, "   ")).toDF("doc_id", "text"), "text", k = 3)
     assert(empty.columns.toSeq === Seq("step", "a", "b", "n"))
     assert(empty.count() === 0)
   }

@@ -243,53 +243,6 @@ class DedupSpec extends AnyFunSuite {
     assert(jac === Seq((1L, 2L, 1.0)))
   }
 
-  // TF-IDF variant: rare-shingle emphasis with rational idf (tf · N/df),
-  // pinned against a driver-side brute force with float tolerance (the
-  // weight sums are partition-order-dependent doubles — deliberately a
-  // spec-level check, not a hash-gate one).
-  test("shingle TF-IDF cosine matches a driver-side brute force") {
-    val got = Dedup.shingleTfIdfCosinePairs(docs, "text", "doc_id",
-        k = 3, threshold = 0.3, maxDocFreq = None)
-      .as[(Long, Long, Double)].collect()
-      .map { case (a, b, s) => (a, b) -> s }.toMap
-
-    // brute force over the same definition
-    val texts = docs.as[(Long, String)].collect().toMap
-    def sh(t: String): Seq[String] = {
-      val toks = t.trim.toLowerCase.replaceAll("\\s+", " ").split(" ").toSeq
-      if (toks.length <= 3) Seq(toks.mkString(" "))
-      else toks.sliding(3).map(_.mkString(" ")).toSeq
-    }
-    val tf = texts.view.mapValues(t =>
-      sh(t).groupBy(identity).view.mapValues(_.size.toDouble).toMap).toMap
-    val n = texts.size.toDouble
-    val dfm = tf.values.flatMap(_.keys).groupBy(identity).view
-      .mapValues(_.size.toDouble).toMap
-    def w(d: Long): Map[String, Double] =
-      tf(d).map { case (g, f) => g -> f * (n / dfm(g)) }
-    def cos(a: Long, b: Long): Double = {
-      val (wa, wb) = (w(a), w(b))
-      val dot = wa.keySet.intersect(wb.keySet).toSeq.map(g => wa(g) * wb(g)).sum
-      dot / math.sqrt(wa.values.map(x => x * x).sum * wb.values.map(x => x * x).sum)
-    }
-    val ids = texts.keys.toSeq.sorted
-    val want = (for {
-      i <- ids; j <- ids if i < j
-      c = cos(i, j) if c >= 0.3
-    } yield (i, j) -> c).toMap
-    assert(got.keySet === want.keySet)
-    want.foreach { case (k2, v) =>
-      assert(math.abs(got(k2) - v) < 1e-9, s"$k2: ${got(k2)} vs $v")
-    }
-    // idf downweights the common trigrams: the near-dup pair (1,3) must
-    // score LOWER under tf-idf than under plain tf cosine
-    val tfSim = Dedup.shingleTfCosinePairs(docs, "text", "doc_id",
-        k = 3, threshold = 0.3)
-      .as[(Long, Long, Long, Double)].collect()
-      .map { case (a, b, _, s) => (a, b) -> s }.toMap
-    assert(got((1L, 3L)) < tfSim((1L, 3L)))
-  }
-
   test("exact ngram jaccard finds the near-dup pair with the exact value") {
     val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id", k = 3, threshold = 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -321,18 +274,6 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(math.abs(uncapped((1L, 2L)) - 1.0 / 7.0) < 1e-12)
     assert(uncapped((1L, 3L)) === 1.0)
-  }
-
-  test("signature-estimate prefilter preserves the verified pairs") {
-    // the 3σ margin keeps every true ≥-threshold pair on this corpus:
-    // output equals the exact-verify-all form
-    def pairs(pf: Boolean) = Dedup.minhashDupPairs(docs, "text", "doc_id",
-        k = 3, nPerm = 64, bands = 16, threshold = 0.4, sigPrefilter = pf)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)),
-        math.rint(r.getDouble(2) * 1e12))).toMap
-    val without = pairs(pf = false)
-    assert(without.nonEmpty)
-    assert(pairs(pf = true) === without)
   }
 
   test("adaptive LSH parameters track the target threshold") {

@@ -27,7 +27,7 @@ class ExactSubstrSpec extends AnyFunSuite {
       (17L, "p q r p q r p q r")
     ).toDF("doc_id", "text")
     val both = edge.select(
-      Dedup.shingleHashesAllHof(col("text"), 3).as("hof"),
+      ReferenceForms.shingleHashesAllHof(col("text"), 3).as("hof"),
       graft.plans.ShingleExpressions.wordShingleHashesAll(
         Dedup.normalizeText(col("text")), 3).as("native"))
       .collect()

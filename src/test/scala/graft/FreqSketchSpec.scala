@@ -10,7 +10,7 @@ class FreqSketchSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def gramStream = Tables.read(spark, SparkTestSession.Sf, "documents")
-    .select(explode(TextAnalysis.wordShingles(col("text"))).as("g"))
+    .select(explode(ReferenceForms.wordShingles(col("text"))).as("g"))
 
   test("sketch with capacity >= distinct items is exact") {
     val df = Seq("a", "b", "a", "c", "a", "b").toDF("g")
@@ -52,7 +52,7 @@ class FreqSketchSpec extends AnyFunSuite {
       .select(when(col("id") % 3 === 0, "heavy")
         .otherwise(concat(lit("light_"), col("id"))).as("g"))
       .repartition(8)
-    val top = df.agg(MisraGries.approxTopK(col("g"), 1, 16).as("s"))
+    val top = df.agg(MisraGries.sketch(col("g"), 16).as("s"))
       .select(col("s")(0).getField("item")).as[String].head()
     assert(top === "heavy")
   }
@@ -64,13 +64,13 @@ class FreqSketchSpec extends AnyFunSuite {
     val toks = split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
     val both = docs.select(
       graft.plans.ShingleStringsF.shingleStrings(toks, 3).as("native"),
-      array_distinct(TextAnalysis.wordShingles(col("text"))).as("hof"))
+      array_distinct(ReferenceForms.wordShingles(col("text"))).as("hof"))
     assert(both.where(not(col("native") <=> col("hof"))).count() === 0)
     val edge = Seq("", "one", "two words").toDF("text")
     val toksE = split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
     val bothE = edge.select(
       graft.plans.ShingleStringsF.shingleStrings(toksE, 3).as("native"),
-      array_distinct(TextAnalysis.wordShingles(col("text"))).as("hof"))
+      array_distinct(ReferenceForms.wordShingles(col("text"))).as("hof"))
     assert(bothE.where(not(col("native") <=> col("hof"))).count() === 0)
   }
 
@@ -79,7 +79,7 @@ class FreqSketchSpec extends AnyFunSuite {
       Tables.read(spark, SparkTestSession.Sf, "documents"), "text", k = 20)
       .as[(String, Long)].collect()
     val brute = Tables.read(spark, SparkTestSession.Sf, "documents")
-      .select(explode(array_distinct(TextAnalysis.wordShingles(col("text")))).as("g"))
+      .select(explode(array_distinct(ReferenceForms.wordShingles(col("text")))).as("g"))
       .as[String].collect()
       .groupBy(identity).map { case (g, xs) => (g, xs.length.toLong) }
       .toSeq.sortBy { case (g, c) => (-c, g) }.take(20)

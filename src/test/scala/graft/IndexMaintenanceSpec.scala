@@ -32,7 +32,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
         "vec_id", "embedding", 0.3)
       .as[(Long, Long, Double)].collect().toSet
     val before = probe()
-    val (nb, na) = IndexMaintenance.compactSemanticIndex(spark, s"$tmp/i")
+    val (nb, na) = IndexMaintenance.compact(spark, s"$tmp/i/members", Some("bucket"))
     assert(na < nb, s"file count must drop: $nb -> $na")
     val loaded = Similarity.loadSemanticIndex(spark, s"$tmp/i")
     val buckets = loaded.members.select("bucket").distinct().count()
@@ -98,7 +98,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       .collect().map(_.toString).toSet
     val before = probe()
     assert(before.nonEmpty, "planted span must be probed")
-    val (nb, na) = IndexMaintenance.compactSubstrIndex(spark, s"$tmp/idx",
+    val (nb, na) = IndexMaintenance.compact(spark, s"$tmp/idx", None,
       targetFiles = 2)
     assert(na === 2L && na < nb, s"$nb -> $na")
     assert(probe() === before)
@@ -117,7 +117,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
         k = 10, nProbe = 4, shortlist = 64)
       .as[(Long, Long, Double, Int)].collect().toSet
     val before = run()
-    val (nb, na) = IndexMaintenance.compactIvfPqIndex(spark, s"$tmp/i")
+    val (nb, na) = IndexMaintenance.compact(spark, s"$tmp/i/codes", Some("list_id"))
     assert(na < nb, s"$nb -> $na")
     val lists = spark.read.parquet(s"$tmp/i/codes")
       .select("list_id").distinct().count()
@@ -152,7 +152,7 @@ class IndexMaintenanceSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
         java.lang.Double.doubleToLongBits(r.getDouble(3))))
       .sortBy(x => (x._1, x._3)).toSeq
-    val (nb, na) = IndexMaintenance.compactPostings(spark, s"$tmp/idx")
+    val (nb, na) = IndexMaintenance.compact(spark, s"$tmp/idx", None)
     assert(na === 1L && na < nb, s"$nb -> $na")
     assert(probe() === healthy,
       "compacted (deduped) index must score like a from-scratch build")

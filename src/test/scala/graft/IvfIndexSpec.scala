@@ -17,7 +17,7 @@ class IvfIndexSpec extends AnyFunSuite {
         graft.plans.PqExpressions.nearestCentroid(col("embedding"), centers).as("l"))
       .as[(Long, Int)].collect().toMap
     val hof = emb.select(col("vec_id"),
-        IvfIndex.nearestCentroidHof(col("embedding"), centers).as("l"))
+        ReferenceForms.nearestCentroidHof(col("embedding"), centers).as("l"))
       .as[(Long, Int)].collect().toMap
     assert(native === hof)
   }
@@ -25,7 +25,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("IVF search beats its scan fraction on recall and is exact at full probe") {
     val emb = Tables.read(spark, SparkTestSession.Sf, "embeddings")
     val queries = emb.filter(col("vec_id") < 8)
-    val index = IvfIndex.build(emb, "vec_id", "embedding", nLists = 8)
+    val index = IvfIndex.build(emb, "embedding", nLists = 8)
     assert(index.centroids.length === 8)
 
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 10)
@@ -50,7 +50,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("filtered search: always-true pred equals search; filter is exact at full probe") {
     val emb = Tables.read(spark, SparkTestSession.Sf, "embeddings")
     val queries = emb.filter(col("vec_id") < 8)
-    val index = IvfIndex.build(emb, "vec_id", "embedding", nLists = 8)
+    val index = IvfIndex.build(emb, "embedding", nLists = 8)
 
     // degenerate predicate ⇒ bit-identical to the unfiltered probe
     val unfiltered = IvfIndex.search(index, queries, "vec_id", "embedding",
@@ -96,7 +96,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("two-wave refined search equals the full-probe search it prunes") {
     val emb = Tables.read(spark, SparkTestSession.Sf, "embeddings")
     val queries = emb.filter(col("vec_id") < 8)
-    val index = IvfIndex.build(emb, "vec_id", "embedding", nLists = 8)
+    val index = IvfIndex.build(emb, "embedding", nLists = 8)
 
     val full = IvfIndex.search(index, queries, "vec_id", "embedding",
         k = 10, nProbe = 8)
@@ -132,7 +132,7 @@ class IvfIndexSpec extends AnyFunSuite {
     val index = IvfIndex.Index(centroids, corpus)
     val queries = corpus.where(col("vec_id") === 0L)
       .select("vec_id", "embedding")
-    // wave 1 = list 0 = {query itself} → zero candidates after excludeSelf
+    // wave 1 = list 0 = {query itself} → zero candidates once self is excluded
     val got = IvfIndex.searchRefined(index, queries, "vec_id", "embedding",
         k = 3, nProbe1 = 1, nProbe2 = 2)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
@@ -143,7 +143,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("IVF index persists: save/load round-trip, list-partitioned layout") {
     val emb = Tables.read(spark, SparkTestSession.Sf, "embeddings")
     val queries = emb.filter(col("vec_id") < 4)
-    val index = IvfIndex.build(emb, "vec_id", "embedding", nLists = 6)
+    val index = IvfIndex.build(emb, "embedding", nLists = 6)
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
     IvfIndex.save(index, dir)
 
@@ -204,7 +204,7 @@ class IvfIndexSpec extends AnyFunSuite {
           graft.plans.PqExpressions.nearestLists(col("embedding"), centers, np).as("l"))
         .as[(Long, Seq[Int])].collect().toMap
       val hof = emb.select(col("vec_id"),
-          IvfIndex.nearestListsHof(col("embedding"), centers, np).as("l"))
+          ReferenceForms.nearestListsHof(col("embedding"), centers, np).as("l"))
         .as[(Long, Seq[Int])].collect().toMap
       assert(native === hof, s"nProbe=$np")
     }
@@ -221,7 +221,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("knnGraph: full probe equals brute force; probe 1 is the assigned list") {
     val emb = Tables.read(spark, SparkTestSession.Sf, "embeddings")
-    val index = IvfIndex.build(emb, "vec_id", "embedding", nLists = 8)
+    val index = IvfIndex.build(emb, "embedding", nLists = 8)
 
     // probing every list must reproduce the exact self-KNN graph
     val full = IvfIndex.knnGraph(index, "vec_id", "embedding", k = 5,

@@ -134,10 +134,10 @@ class LayoutSpec extends AnyFunSuite {
     // a key in no bucket is skippable everywhere (2 hashes, 1024 bits,
     // 4 keys total -- a double collision would be a broken hash)
     assert(dec(("zz", 0L)) === true && dec(("zz", 1L)) === true)
-    // bucketPred bounds BOTH the broadcast bucket list and the emitted
-    // decision matrix (the 100 TB contract): only bucket 1 is probed
-    val bounded = Layout.bloomPrune(idx, keys, "k",
-        bucketPred = Some(col("bucket") === 1L))
+    // filtering the index first bounds BOTH the broadcast bucket list and
+    // the emitted decision matrix (the 100 TB contract): only bucket 1 is
+    // probed
+    val bounded = Layout.bloomPrune(idx.where(col("bucket") === 1L), keys, "k")
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getBoolean(2))
       .toMap
     assert(bounded.keySet.forall(_._2 === 1L))

@@ -214,11 +214,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(frames(0).map(new String(_)).toSeq === Seq("abcd", "efgh", "ij"))
     assert(frames(1).map(new String(_)).toSeq === Seq("xy"))
 
-    val resized = ingested.select(
-      Multimodal.resizeStub(col("content"), 2).as("rz")).collect()
-    // "abcdefghij" → every 2nd byte: a c e g i → hex
-    assert(resized(0).getString(0) === "6163656769")
-
     val feats = Multimodal.decodePartitions(
       ingested.select("doc_id", "content"), "content", new Multimodal.FakeCodec(4))
     val row = feats.filter(col("doc_id") === 1L).select("features").collect()(0)

@@ -32,7 +32,7 @@ class PqIndexSpec extends AnyFunSuite {
         PqIndex.encodeExpr(col("embedding"), idx.codebooks, idx.dsub).as("c"))
       .as[(Long, Seq[Int])].collect().toMap
     val hof = emb.select(col("vec_id"),
-        PqIndex.encodeExprHof(col("embedding"), idx.codebooks, idx.dsub).as("c"))
+        ReferenceForms.encodeExprHof(col("embedding"), idx.codebooks, idx.dsub).as("c"))
       .as[(Long, Seq[Int])].collect().toMap
     assert(native === hof)
     val df = Seq((Seq(0, 2, 1),

@@ -1,6 +1,7 @@
 package graft
 
 import graft.plans.ReservoirSample
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,11 +9,16 @@ class ReservoirSampleSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  // the xxhash64-keyed sample, as SQL's graft_reservoir(s, k) builds it
+  private def reservoir(c: Column, k: Int): Column =
+    GraftBridge.column(ReservoirSample(GraftBridge.expression(c), k, 42L)
+      .toAggregateExpression())
+
   test("bottom-k reservoir is deterministic and partitioning-independent") {
     val df = spark.range(0, 5000).select(concat(lit("v"), col("id")).as("s"))
-    val a = df.agg(ReservoirSample.reservoir(col("s"), 20).as("sample"))
+    val a = df.agg(reservoir(col("s"), 20).as("sample"))
       .collect()(0).getSeq[String](0)
-    val b = df.repartition(17).agg(ReservoirSample.reservoir(col("s"), 20).as("sample"))
+    val b = df.repartition(17).agg(reservoir(col("s"), 20).as("sample"))
       .collect()(0).getSeq[String](0)
     assert(a.length === 20)
     assert(a === b) // merge-order independence
@@ -20,9 +26,9 @@ class ReservoirSampleSpec extends AnyFunSuite {
 
   test("smaller k is a prefix of larger k (bottom-k nesting)") {
     val df = spark.range(0, 1000).select(concat(lit("x"), col("id")).as("s"))
-    val k10 = df.agg(ReservoirSample.reservoir(col("s"), 10).as("r"))
+    val k10 = df.agg(reservoir(col("s"), 10).as("r"))
       .collect()(0).getSeq[String](0)
-    val k50 = df.agg(ReservoirSample.reservoir(col("s"), 50).as("r"))
+    val k50 = df.agg(reservoir(col("s"), 50).as("r"))
       .collect()(0).getSeq[String](0)
     assert(k50.take(10) === k10)
   }
@@ -49,7 +55,7 @@ class ReservoirSampleSpec extends AnyFunSuite {
     val df = Seq(("a", "x1"), ("a", "x2"), ("a", null), ("b", "y1"))
       .toDF("g", "s")
     val out = df.groupBy("g")
-      .agg(ReservoirSample.reservoir(col("s"), 5).as("r"))
+      .agg(reservoir(col("s"), 5).as("r"))
       .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
     assert(out("a").toSet === Set("x1", "x2"))
     assert(out("b") === Seq("y1"))

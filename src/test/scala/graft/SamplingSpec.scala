@@ -20,15 +20,6 @@ class SamplingSpec extends AnyFunSuite {
     assert(math.abs(s05.size / 10000.0 - 0.05) < 0.01)
   }
 
-  test("stratified hash sample respects per-stratum fractions") {
-    val df = spark.range(0, 10000)
-      .select(col("id"), when(col("id") % 2 === 0, "a").otherwise("b").as("s"))
-    val out = Sampling.stratifiedHashSample(df, "id", "s", Map("a" -> 0.5, "b" -> 0.1))
-      .groupBy("s").count().as[(String, Long)].collect().toMap
-    assert(math.abs(out("a") / 5000.0 - 0.5) < 0.05)
-    assert(math.abs(out("b") / 5000.0 - 0.1) < 0.03)
-  }
-
   test("portable md5 sample: deterministic, composable, correct hex cuts") {
     val df = spark.range(0, 10000).toDF("id")
     val s20a = Sampling.portableHashSample(df, "id", 0.2).select("id").as[Long].collect().toSet

@@ -35,7 +35,7 @@ class SimilaritySpec extends AnyFunSuite {
     val pairs = a.crossJoin(b).where(col("ia") < col("ib")).limit(5000)
     val diff = pairs.select(
       Similarity.dot(col("va"), col("vb")).as("native"),
-      Similarity.dotHof(col("va"), col("vb")).as("hof"))
+      ReferenceForms.dotHof(col("va"), col("vb")).as("hof"))
       .where(col("native") =!= col("hof")).count()
     assert(diff === 0)
   }
@@ -286,7 +286,9 @@ class SimilaritySpec extends AnyFunSuite {
     val q = Similarity.int8Quantize(emb, "vec_id", "embedding")
     val joined = q.join(emb, "vec_id")
       .select(col("embedding").cast("array<double>").as("v"),
-        Similarity.int8Dequantize(col("codes"), col("scale")).as("d"),
+        // the inverse: code / scale (0 for scale 0)
+        transform(col("codes"), c => when(col("scale") === 0.0, lit(0.0))
+          .otherwise(c.cast("double") / col("scale"))).as("d"),
         col("codes"), col("scale"))
       .as[(Seq[Double], Seq[Double], Seq[Int], Double)].collect()
     joined.foreach { case (v, d, codes, scale) =>
@@ -381,9 +383,9 @@ class SimilaritySpec extends AnyFunSuite {
 
     // independent completeness: brute cross-cosine + HOF bucket agreement
     val ca = corpus.select(col("vec_id").as("id_a"), col("embedding").as("va"),
-      graft.functions.IvfIndex.nearestCentroidHof(col("embedding"), idx.centers).as("ba"))
+      ReferenceForms.nearestCentroidHof(col("embedding"), idx.centers).as("ba"))
     val cb = batch.select(col("vec_id").as("id_b"), col("embedding").as("vb"),
-      graft.functions.IvfIndex.nearestCentroidHof(col("embedding"), idx.centers).as("bb"))
+      ReferenceForms.nearestCentroidHof(col("embedding"), idx.centers).as("bb"))
     val expect = ca.join(cb, col("ba") === col("bb"))
       .select(col("id_a"), col("id_b"),
         round(Similarity.cosine(col("va"), col("vb")), 6).as("cos_sim"))
@@ -415,9 +417,9 @@ class SimilaritySpec extends AnyFunSuite {
 
     val union = corpus.unionByName(batch1)
     val ca = union.select(col("vec_id").as("id_a"), col("embedding").as("va"),
-      graft.functions.IvfIndex.nearestCentroidHof(col("embedding"), idx.centers).as("ba"))
+      ReferenceForms.nearestCentroidHof(col("embedding"), idx.centers).as("ba"))
     val cb = batch2.select(col("vec_id").as("id_b"), col("embedding").as("vb"),
-      graft.functions.IvfIndex.nearestCentroidHof(col("embedding"), idx.centers).as("bb"))
+      ReferenceForms.nearestCentroidHof(col("embedding"), idx.centers).as("bb"))
     val expect = ca.join(cb, col("ba") === col("bb"))
       .select(col("id_a"), col("id_b"),
         round(Similarity.cosine(col("va"), col("vb")), 6).as("cos_sim"))
@@ -566,8 +568,7 @@ class SimilaritySpec extends AnyFunSuite {
     val brute = Similarity.labelVote(
       Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", k = 5),
       emb, "vec_id", "label")
-    val index = graft.functions.IvfIndex.build(emb, "vec_id", "embedding",
-      nLists = 8)
+    val index = graft.functions.IvfIndex.build(emb, "embedding", nLists = 8)
     val graph = Similarity.labelVote(
       graft.functions.IvfIndex.knnGraph(index, "vec_id", "embedding",
         k = 5, nProbe = 8),
@@ -683,7 +684,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("knn sweep: recall weakly increases with nProbe; full probe is exact") {
     import graft.functions.IvfIndex
     val emb = Tables.read(spark, SparkTestSession.Sf, "embeddings")
-    val index = IvfIndex.build(emb, "vec_id", "embedding", nLists = 8)
+    val index = IvfIndex.build(emb, "embedding", nLists = 8)
     val queries = emb.filter(col("vec_id") < 8)
     val exact = Similarity.bruteForceTopK(emb, queries, "vec_id",
       "embedding", k = 5).select("query_id", "neighbor_id")

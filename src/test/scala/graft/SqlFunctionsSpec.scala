@@ -24,8 +24,8 @@ class SqlFunctionsSpec extends AnyFunSuite {
       graft.functions.Dedup.minhashSignature(array(col("text"))).as("sig"),
       graft.functions.Dedup.simhash(col("text")).as("sh")).collect()(0)
     val hofRow = spark.table("sqlfn_t").select(
-      graft.functions.Dedup.minhashSignatureHof(array(col("text"))).as("sig"),
-      graft.functions.Dedup.simhashHof(col("text")).as("sh")).collect()(0)
+      ReferenceForms.minhashSignatureHof(array(col("text"))).as("sig"),
+      ReferenceForms.simhashHof(col("text")).as("sh")).collect()(0)
 
     assert(sqlSig.getSeq[Long](0) === apiRow.getSeq[Long](0))
     assert(apiRow.getSeq[Long](0) === hofRow.getSeq[Long](0))

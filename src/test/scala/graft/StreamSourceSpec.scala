@@ -99,9 +99,9 @@ class StreamSourceSpec extends AnyFunSuite {
   }
 
   // native parses with PG literal semantics (backslash literal) under a
-  // private clone of the session conf. Under sync_parallelism several
-  // plannings run at once; none may flip the shared setting, which every
-  // other query on the session parses with.
+  // private clone of the session conf. Plannings on a shared session may
+  // run at once; none may flip the shared setting, which every other
+  // query on the session parses with.
   test("concurrent native plannings leave the session's string escaping alone") {
     val key = "spark.sql.parser.escapedStringLiterals"
     val before = spark.conf.getOption(key)

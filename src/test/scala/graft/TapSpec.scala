@@ -329,16 +329,16 @@ class TapSpec extends AnyFunSuite {
     assert(committed.last === 6)
   }
 
-  // sync_parallelism (VERDICT r10 item 7): three streams extract
-  // concurrently in batch mode; message emission and state advancement
-  // stay sequential in config order, so the output is byte-identical
-  // (modulo generated file/sync ids) to a sequential run — bookmarks,
-  // manifest counts, message ordering all unchanged.
-  test("concurrent batch sync: 3 streams in flight, deterministic output") {
-    def cfg(root: String, par: Int) =
-      s"""{"database":"db1","sync_parallelism":$par,
+  // Batch streams extract one after another in config order, as the
+  // reference's single cursor does: each stream's BATCH messages, each
+  // followed by a STATE, come before the next stream's, and one more STATE
+  // closes the sync.
+  test("sequential batch sync: 3 streams in config order") {
+    val tmp = Files.createTempDirectory("graft-seq").toString
+    val cfg =
+      s"""{"database":"db1",
          |"batch_config":{"encoding":{"format":"jsonl","compression":"gzip"},
-         |  "storage":{"root":"file://$root"}},
+         |  "storage":{"root":"file://$tmp"}},
          |"streams":[
          |{"name":"p1","sql":"SELECT id FROM range(7) WHERE id > :rep_key_val",
          | "key_properties":["id"],"replication_key":"id","replication_key_value_start":-1,
@@ -349,27 +349,22 @@ class TapSpec extends AnyFunSuite {
          |{"name":"p3","sql":"SELECT 'z' AS a","key_properties":["a"],
          | "columns":[{"name":"a","type":"text"}]}
          |]}""".stripMargin
-    def run(par: Int): (Seq[Tap.StreamResult], graft.state.TapState, Seq[String]) = {
-      val tmp = Files.createTempDirectory(s"graft-par$par").toString
-      val buf = new ByteArrayOutputStream()
-      val (res, st) = Tap.syncAll(spark, ConfigParser.parseTap(cfg(tmp, par)),
-        None, new PrintStream(buf, true, "UTF-8"))
-      // strip the generated ids (file uuids) so runs compare structurally
-      val lines = buf.toString("UTF-8").split("\n").toSeq
-        .map(_.replaceAll("graft-par\\d+[^\"]*", "<file>")
-          .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<id>"))
-      (res, st, lines)
-    }
-    val (resSeq, stSeq, linesSeq) = run(par = 1)
-    val (resPar, stPar, linesPar) = run(par = 3)
-    assert(resPar.map(_.stream.name) === resSeq.map(_.stream.name))
-    assert(resPar.map(_.manifests.size) === resSeq.map(_.manifests.size))
-    assert(stPar.bookmark("db1-public-p1") === Some("6"))
-    assert(stPar.bookmark("db1-public-p2") === Some("40"))
-    assert(stPar.bookmark("db1-public-p1") === stSeq.bookmark("db1-public-p1"))
-    assert(stPar.bookmark("db1-public-p2") === stSeq.bookmark("db1-public-p2"))
-    assert(linesPar === linesSeq,
-      "parallel batch sync must emit the identical message sequence")
+    val buf = new ByteArrayOutputStream()
+    val (res, st) = Tap.syncAll(spark, ConfigParser.parseTap(cfg),
+      None, new PrintStream(buf, true, "UTF-8"))
+    assert(res.map(_.stream.name) === Seq("p1", "p2", "p3"))
+    assert(res.forall(_.manifests.nonEmpty))
+    assert(st.bookmark("db1-public-p1") === Some("6"))
+    assert(st.bookmark("db1-public-p2") === Some("40"))
+    val msgs = buf.toString("UTF-8").split("\n").toSeq.map(SingerSink.mapper.readTree)
+    val types = msgs.map(_.get("type").asText)
+    val batchStreams = msgs.filter(_.get("type").asText == "BATCH").map(_.get("stream").asText)
+    assert(batchStreams === res.flatMap(r => r.manifests.map(_ => r.stream.name)),
+      "each stream's BATCH messages come before the next stream's")
+    assert(types.sliding(2).forall(w => w.head != "BATCH" || w(1) == "STATE"),
+      "every BATCH is followed by a STATE")
+    assert(types.count(_ == "STATE") === batchStreams.size + 1)
+    assert(types.last === "STATE")
   }
 
   // Singer --catalog selection: streams deselect via root-breadcrumb
@@ -597,7 +592,7 @@ class TapSpec extends AnyFunSuite {
         |"batch_size":10,"stream_maps":{"s":{"w":"v + 1"}},
         |"stream_map_config":{"k":1},"flattening_enabled":true,
         |"flattening_max_depth":2,"state_message_frequency":5,
-        |"execution":"native","sync_parallelism":2,
+        |"execution":"native",
         |"jdbc_url":"jdbc:derby:memory:about","jdbc_driver":"org.apache.derby.jdbc.EmbeddedDriver"
         |}""".stripMargin
     ConfigParser.validate(ConfigParser.parseTap(everyKey))
@@ -605,6 +600,22 @@ class TapSpec extends AnyFunSuite {
     val settings = Tap.aboutJson.get("settings").elements().asScala.map(_.asText).toSet
     val keys = SingerSink.mapper.readTree(everyKey).fieldNames().asScala.toSeq
     assert(keys.filterNot(settings).isEmpty, keys.filterNot(settings))
+
+    // a config that still carries the dropped `sync_parallelism` key
+    // validates and syncs to the same lines as one without it
+    def sync(json: String): Seq[String] = {
+      val tap = ConfigParser.parseTap(json)
+      ConfigParser.validate(tap)
+      val buf = new ByteArrayOutputStream()
+      Tap.syncAll(spark, tap, None, new PrintStream(buf, true, UTF_8))
+      buf.toString(UTF_8).split("\n").toSeq.map(_
+        .replaceAll("\"time_extracted\":\"[^\"]*\"", "")
+        .replaceAll("\"version\":\\d+", ""))
+    }
+    val legacy = cfgJson.replaceFirst("\\{", "{\"sync_parallelism\":3,")
+    assert(legacy.contains("\"sync_parallelism\":3"))
+    assert(!settings("sync_parallelism"))
+    assert(sync(legacy) === sync(cfgJson))
   }
 
   // stdout is UTF-8 whatever the platform charset: a non-ASCII column

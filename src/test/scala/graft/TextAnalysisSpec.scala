@@ -333,7 +333,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       ).toDF("doc_id", "text"))
     val both = docs.select(col("doc_id"),
         TextAnalysis.linearScore(col("text")).as("native"),
-        TextAnalysis.linearScoreHof(col("text")).as("hof"))
+        ReferenceForms.linearScoreHof(col("text")).as("hof"))
       .as[(Long, Double, Double)].collect()
     both.foreach { case (id, n, h) =>
       assert(java.lang.Double.doubleToRawLongBits(n) ===
