@@ -50,45 +50,6 @@ object IndexMaintenance {
     (before, countDataFiles(fs, src))
   }
 
-  /** Compact only FRAGMENTED partitions: every `partitionCol=value`
-    * directory holding at least `minFiles` data files is rewritten as
-    * one file (distinct rows); partitions below the threshold are not
-    * touched at all — their files keep their names, nothing is read.
-    * The swap is per-partition, so maintenance cost is bounded by the
-    * fragmented fraction of the index, not its total size — the
-    * steady-state cadence form for huge indexes where full [[compact]]
-    * would be a corpus-sized job. Returns (filesBefore, filesAfter)
-    * over the whole layout.
-    */
-  def compactFragmented(spark: SparkSession, path: String,
-                        partitionCol: String,
-                        minFiles: Int = 2): (Long, Long) = {
-    require(minFiles >= 2, s"minFiles must be >= 2, got $minFiles")
-    val src = new HadoopPath(path)
-    val fs: FileSystem =
-      src.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts = fs.listStatus(src).filter(s =>
-      s.isDirectory && s.getPath.getName.startsWith(partitionCol + "="))
-    var before = 0L
-    var after = 0L
-    parts.foreach { p =>
-      val n = countDataFiles(fs, p.getPath)
-      before += n
-      if (n >= minFiles) {
-        // reading the partition directory directly drops the partition
-        // column from the rows — exactly right: the rewritten files go
-        // back under the same `col=value` directory, which carries the
-        // value at read time just as the original layout did
-        val df = spark.read.parquet(p.getPath.toString).distinct()
-        val tmp = new HadoopPath(p.getPath.toString + ".compact-tmp")
-        df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
-        swap(fs, p.getPath, tmp)
-        after += countDataFiles(fs, p.getPath)
-      } else after += n
-    }
-    (before, after)
-  }
-
   /** Swap `tmp` into `dst`: keep the old layout until the replacement
     * is fully written, so a crash leaves either the old or the new
     * index, never neither.
@@ -143,7 +104,7 @@ object IndexMaintenance {
       if (n >= 2) {
         // reading the partition dir drops the bucket column from the
         // rows — right, the rewritten files return under the same
-        // `bucket=` directory (same note as compactFragmented)
+        // `bucket=` directory, which carries the value at read time
         val df = spark.read.parquet(p.getPath.toString).coalesce(1)
         val tmp = new HadoopPath(p.getPath.toString + ".compact-tmp")
         df.write.mode("overwrite").parquet(tmp.toString)

@@ -73,23 +73,6 @@ object Multimodal {
   def mediaHeader(binCol: Column): Column =
     graft.plans.MediaHeaderExpr.mediaHeader(binCol)
 
-  /** Config-selected codec registry: a deployment names its decode kernel
-    * in config (`"fake:16"`, `"identity"`), new codecs register here, and
-    * the plan shape ([[decodePartitions]]) never changes. The container
-    * has no image/audio libraries, so the real-codec entries are exactly
-    * the seam a deployment fills.
-    */
-  def codecFor(spec: String): MediaCodec = spec.split(":").toList match {
-    case "fake" :: dim :: Nil => new FakeCodec(dim.toInt)
-    case "fake" :: Nil => new FakeCodec(16)
-    case "bytehist" :: dim :: Nil => new ByteHistCodec(dim.toInt)
-    case "bytehist" :: Nil => new ByteHistCodec(16)
-    case "identity" :: Nil => IdentityCodec
-    case other =>
-      throw new IllegalArgumentException(
-        s"unknown codec '${other.mkString(":")}' — register it in Multimodal.codecFor")
-  }
-
   /** Integer byte-bucket histogram: `out(i % dim) += byte(i)` with NO
     * normalization. Buckets accumulate in Long (exact for any payload
     * size) and convert to Float once at the end, so the only rounding is
@@ -113,12 +96,6 @@ object Multimodal {
       while (i < dim) { out(i) = acc(i).toFloat; i += 1 }
       out
     }
-  }
-
-  /** Pass-through codec: raw bytes as floats (for byte-level models). */
-  object IdentityCodec extends MediaCodec {
-    def decode(bytes: Array[Byte]): Array[Float] =
-      bytes.map(b => (b & 0xff).toFloat)
   }
 
   /** Partition-iterator decode — the Scala analog of `mapInPandas`: one

@@ -6,11 +6,13 @@ import java.util.concurrent.atomic.AtomicInteger
 
 /** A JVM-wide count of idle cores, and the one pool of helper threads that
   * runs sink work on them: a [[LineEncoder]] block's encoding and its
-  * sink's `finish` (RECORD mode compresses the block for the driver, batch
-  * mode cuts it into gzip members). A running sink task holds one slot for as long
-  * as it runs ([[holding]]); an [[InOrder]] queue hands a unit of work to a
-  * helper only while a slot is free and otherwise runs it on the calling
-  * thread, so helpers use idle cores only.
+  * sink's `finish` (batch mode cuts the block into gzip members; RECORD
+  * mode has none, its task asks the block of the driver). A running sink
+  * task holds one slot for as long as it runs ([[holding]]), also while
+  * a RECORD-mode task waits for the driver to take its blocks; an
+  * [[InOrder]] queue hands a unit of work to a helper only while a slot is
+  * free and otherwise runs it on the calling thread, so helpers use idle
+  * cores only.
   */
 final class CoreBudget(val cores: Int) {
   private val free = new AtomicInteger(cores)

@@ -1,7 +1,6 @@
 package graft.sinks
 
 import graft.config.StreamConfig
-import org.apache.spark.io.CompressionCodec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, BoundReference, Cast, Expression, UnsafeProjection, UnsafeRow}
@@ -10,19 +9,18 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** `lines` encoded records: line `i` is `bytes(start(i) until ends(i))`,
   * its newline included. With a replication key, `keys` holds each line's
   * key as a one-field UnsafeRow that ends at `keyEnds(i)`, and `maxLine`
   * is the first line whose key is the block's max in [[MaxKey]]'s order
-  * (-1 without a key or when every key is null).
+  * (-1 without a key or when every key is null). Serializable: a task on a
+  * remote executor sends its blocks to the driver as they are.
   */
 final class LineBlock private[sinks] (val lines: Int, val bytes: Array[Byte], val ends: Array[Int],
                                       keys: Array[Byte], keyEnds: Array[Int], key: RepKey,
-                                      val maxLine: Int) {
+                                      val maxLine: Int) extends Serializable {
 
   def start(i: Int): Int = if (i == 0) 0 else ends(i - 1)
 
@@ -42,38 +40,9 @@ final class LineBlock private[sinks] (val lines: Int, val bytes: Array[Byte], va
 
   /** Offer the block's max key to `max`: the same as offering every line's. */
   def offerMax(max: MaxKey): Unit = if (maxLine >= 0) offerKey(maxLine, max)
-
-  /** The block compressed with `codec`: what a RECORD-mode task returns. */
-  def compress(codec: CompressionCodec): Array[Byte] = {
-    val buf = new ByteArrayOutputStream(ends(lines - 1) / 4)
-    val out = new DataOutputStream(codec.compressedOutputStream(buf))
-    out.writeInt(lines)
-    out.writeInt(maxLine)
-    out.write(LineBlock.packed(ends))
-    out.write(bytes, 0, ends(lines - 1))
-    if (key != null) {
-      out.write(LineBlock.packed(keyEnds))
-      out.write(keys, 0, keyEnds(lines - 1))
-    }
-    out.close()
-    buf.toByteArray
-  }
 }
 
 object LineBlock {
-  private def packed(a: Array[Int]): Array[Byte] = {
-    val b = ByteBuffer.allocate(4 * a.length)
-    b.asIntBuffer().put(a)
-    b.array()
-  }
-
-  private def unpacked(in: DataInputStream, n: Int): Array[Int] = {
-    val b = in.readNBytes(4 * n)
-    val a = new Array[Int](n)
-    ByteBuffer.wrap(b).asIntBuffer().get(a)
-    a
-  }
-
   private def key(keys: Array[Byte], keyEnds: Array[Int], i: Int): UnsafeRow = {
     val from = if (i == 0) 0 else keyEnds(i - 1)
     val row = new UnsafeRow(1)
@@ -98,21 +67,6 @@ object LineBlock {
       i += 1
     }
     new LineBlock(lines, bytes, ends, keys, keyEnds, key, at)
-  }
-
-  private[sinks] def decompress(codec: CompressionCodec, data: Array[Byte], key: RepKey): LineBlock = {
-    val in = new DataInputStream(codec.compressedInputStream(new ByteArrayInputStream(data)))
-    try {
-      val lines = in.readInt()
-      val maxLine = in.readInt()
-      val ends = unpacked(in, lines)
-      val bytes = in.readNBytes(ends(lines - 1))
-      if (key == null) new LineBlock(lines, bytes, ends, null, null, null, maxLine)
-      else {
-        val keyEnds = unpacked(in, lines)
-        new LineBlock(lines, bytes, ends, in.readNBytes(keyEnds(lines - 1)), keyEnds, key, maxLine)
-      }
-    } finally in.close()
   }
 }
 
@@ -173,10 +127,6 @@ final class LineEncoder private (schema: StructType, zone: String, keyExpr: Expr
       pending.flush()
     } finally pending.close()
   }
-
-  /** A block back from [[LineBlock.compress]]. */
-  def decompress(codec: CompressionCodec, data: Array[Byte]): LineBlock =
-    LineBlock.decompress(codec, data, key)
 
   private def encodeBatch(rows: Array[InternalRow], n: Int): LineBlock = {
     val w = writers.get()

@@ -4,14 +4,18 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode}
 import graft.config.StreamConfig
 import graft.state.TapState
-import org.apache.spark.FutureAction
+import org.apache.spark.{FutureAction, SparkException, TaskContext}
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 import java.io.PrintStream
-import scala.collection.mutable.ArrayBuffer
-import scala.concurrent.Await
+import java.util.concurrent.LinkedBlockingQueue
+import java.util.concurrent.atomic.AtomicLong
+import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.{Failure, Try}
 
 /** Singer protocol emission: SCHEMA, then RECORDs, then STATE, one JSON
   * object per stdout line (inherited behavior of `singer_sdk.Stream.sync`;
@@ -24,10 +28,10 @@ import scala.concurrent.duration.Duration
   * Message serialization is inherently a driver-side, ordered, line-oriented
   * concern (the Singer spec is a stdout pipe), so this is the one place the
   * engine iterates records on the driver: one partition at a time, as the
-  * compressed blocks of final RECORD lines its task encoded on the
-  * executor's idle cores ([[LineEncoder]]), printed one STATE-free span of
-  * a block at a time while the next partition's job runs, where the
-  * reference streams rows through one sequential generator
+  * blocks of final RECORD lines its task encodes on the executor's idle
+  * cores ([[LineEncoder]]) and streams to the driver while it encodes the
+  * next ones, printed one STATE-free span of a block at a time, as the
+  * reference emits each row as its single cursor yields it
   * (client.py:247-304).
   */
 object SingerSink {
@@ -74,12 +78,11 @@ object SingerSink {
     * strict Singer targets check schema parity), with timestamps and dates
     * in their reference string forms. Each partition's task encodes its
     * rows into [[LineBlock]]s of final RECORD lines on the executor's idle
-    * cores ([[LineEncoder]]) and returns them compressed with
-    * `spark.io.compression.codec`. The driver runs one job per partition,
-    * in order, with the next partition's job in flight while it prints
-    * this one's; it decompresses blocks through an [[InOrder]] queue on
-    * [[CoreBudget.shared]]'s idle cores and prints each run of a block's
-    * lines between two STATE points with one `println`.
+    * cores ([[LineEncoder]]) and streams them to the driver as it encodes
+    * them ([[RecordBlocks]]): the driver runs one job per partition, in
+    * order, with the next partition's job in flight while it prints this
+    * one's, and prints each run of a block's lines between two STATE
+    * points with one `println` while the task encodes later blocks.
     *
     * Returns (records emitted, max replication-key value among them as its
     * Spark string cast). The bookmark is tracked INSIDE the single emit
@@ -89,14 +92,16 @@ object SingerSink {
     * (singer_sdk likewise derives state from processed records). A block
     * without a STATE point offers its own max key ([[LineBlock.offerMax]]),
     * a block with one offers each line's. O(1) driver state; the driver
-    * holds the compressed blocks of at most two partitions, plus
-    * [[LineEncoder.MaxInFlight]] decompressed blocks.
+    * holds at most [[LineEncoder.MaxInFlight]] unprinted blocks of each of
+    * the two partitions in flight, however large a partition is.
     *
     * `onProgress` fires after every `stateEvery` emitted records with the
     * max replication-key string among records emitted SO FAR — the caller
     * turns it into a mid-sync STATE message (the SDK's
     * `Tap.STATE_MSG_FREQUENCY` behavior), so a 100 TB extraction killed
-    * mid-stream resumes from the last flushed bookmark.
+    * mid-stream resumes from the last flushed bookmark. A task that fails
+    * after its first block was printed fails the sync, with no STATE after
+    * the records it printed.
     */
   def emitRecords(df: DataFrame, stream: StreamConfig,
                   out: PrintStream = System.out,
@@ -124,48 +129,9 @@ object SingerSink {
         }
         if (from < block.lines) out.println(block.span(from, block.lines))
       }
-    val encoder = LineEncoder(df, stream, envelope(stream, timeExtracted))
-    val blocks = df.queryExecution.toRdd.mapPartitions { rows =>
-      val codec = GraftBridge.compressionCodec
-      val done = ArrayBuffer.empty[Array[Byte]]
-      CoreBudget.shared.holding(encoder.encode(rows)((block, _) => block.compress(codec))(done += _))
-      done.iterator
-    }
-    val codec = GraftBridge.compressionCodec
-    val decoded = new InOrder[LineBlock](CoreBudget.shared, LineEncoder.MaxInFlight, print)
-    val jobs = new java.util.ArrayDeque[FutureAction[Array[Array[Byte]]]]()
-    try {
-      for (p <- 0 until blocks.getNumPartitions) {
-        while (jobs.size < JobWindow && p + jobs.size < blocks.getNumPartitions)
-          jobs.add(partition(blocks, p + jobs.size))
-        Await.result(jobs.peek, Duration.Inf).foreach { data =>
-          decoded.submit(() => encoder.decompress(codec, data))
-        }
-        jobs.poll()
-        decoded.flush()
-      }
-    } finally {
-      jobs.forEach(_.cancel())
-      decoded.close()
-    }
+    val blocks = new RecordBlocks(df.queryExecution.toRdd, LineEncoder(df, stream, envelope(stream, timeExtracted)))
+    try blocks.print(print) finally blocks.close()
     (n, max.value)
-  }
-
-  /** Partition jobs in flight at once in [[emitRecords]]: the one it
-    * prints and the next.
-    */
-  private val JobWindow = 2
-
-  /** The job that fetches partition `p` of `rdd`. It runs over an RDD of
-    * its own: the scheduler aborts every active job whose final RDD is the
-    * one a failed task ran on, so with `rdd` itself a failure in the next
-    * partition would fail this one's job too.
-    */
-  private def partition(rdd: RDD[Array[Byte]], p: Int): FutureAction[Array[Array[Byte]]] = {
-    var result: Array[Array[Byte]] = null
-    rdd.sparkContext.submitJob(PartitionPruningRDD.create(rdd, _ == p),
-      (it: Iterator[Array[Byte]]) => it.toArray, Seq(0),
-      (_: Int, r: Array[Array[Byte]]) => result = r, result)
   }
 
   /** `ACTIVATE_VERSION` — the singer_sdk FULL_TABLE resync handshake: a
@@ -257,4 +223,152 @@ final class MaxKey extends Serializable {
     if (best == null || v.compareTo(best) > 0) { best = v; bookmark = rks }
 
   def value: Option[String] = Option(bookmark)
+}
+
+/** Block `seq` of partition `partition`, from the task attempt numbered
+  * `attempt`; a null `block` ends the partition.
+  */
+private[graft] final case class RecordBlock(partition: Int, attempt: Int, seq: Int, block: LineBlock)
+
+/** A RECORD-mode stream's blocks, from the tasks that encode `rows` to
+  * the driver that prints them. The driver runs one job per partition, in
+  * order, with the next partition's job in flight, and registers one
+  * uniquely named RPC endpoint, of which each task asks one
+  * [[RecordBlock]] at a time ([[RecordBlocks.send]]), with at most
+  * [[LineEncoder.MaxInFlight]] asks unanswered. The driver answers a block
+  * when it takes it to print, so a task waits while the driver holds that
+  * many of its unprinted blocks: the driver's memory is bounded by the
+  * window, not by the partition.
+  *
+  * One attempt of a partition is printed: the first to send a block, or a
+  * later one that replaces it before any of its blocks was printed. A
+  * block of any other attempt is refused, which fails that attempt, so a
+  * retry after printing has begun fails the partition's job. A job's
+  * failure fails [[print]] when it reaches the partition: the printed
+  * lines are a prefix of the stream. [[close]] cancels the jobs and fails
+  * every ask it holds before it stops the endpoint.
+  */
+private final class RecordBlocks(rows: RDD[InternalRow], encoder: LineEncoder) {
+  import RecordBlocks._
+
+  private val name = s"graft-records-${Endpoints.incrementAndGet()}"
+  private val events = new LinkedBlockingQueue[Event]
+  private var closed = false // guarded by `events`
+  private val stop = GraftBridge.serve(name) { (msg, answer) =>
+    events.synchronized {
+      if (closed) answer(Left(new SparkException(s"$name is closed")))
+      else events.put(Asked(msg.asInstanceOf[RecordBlock], answer))
+    }
+  }
+  private val jobs = new java.util.ArrayDeque[FutureAction[Unit]]()
+  // the partitions from `printing` on that have sent a block or failed
+  private val parts = mutable.Map.empty[Int, Part]
+  private var printing = 0
+
+  /** Print the blocks of every partition through `emit`, in order. */
+  def print(emit: LineBlock => Unit): Unit =
+    for (p <- 0 until rows.getNumPartitions) {
+      while (jobs.size < JobWindow && p + jobs.size < rows.getNumPartitions) submit(p + jobs.size)
+      printing = p
+      val part = parts.getOrElseUpdate(p, new Part)
+      var seq = 0
+      while (seq >= 0) {
+        part.failure.foreach(throw _)
+        part.asked.remove(seq) match {
+          case Some(Asked(msg, answer)) =>
+            part.printed = true
+            answer(Right(()))
+            if (msg.block == null) seq = -1 else { emit(msg.block); seq += 1 }
+          case None => route(events.take())
+        }
+      }
+      parts.remove(p)
+      jobs.poll()
+    }
+
+  /** Start partition `p`'s job, over an RDD of its own: the scheduler
+    * aborts every active job whose final RDD is the one a failed task ran
+    * on, so over `rows` itself a failure in the next partition would fail
+    * this one's job too.
+    */
+  private def submit(p: Int): Unit = {
+    val (endpoint, encode) = (name, encoder) // the task gets these, not `this`
+    val job = rows.sparkContext.submitJob(PartitionPruningRDD.create(rows, _ == p),
+      (it: Iterator[InternalRow]) => send(endpoint, p, encode, it), Seq(0), (_: Int, _: Unit) => (), ())
+    job.onComplete(r => events.put(Ended(p, r)))(ExecutionContext.parasitic)
+    jobs.add(job)
+  }
+
+  private def route(event: Event): Unit = event match {
+    case Ended(p, Failure(e)) if p >= printing => parts.getOrElseUpdate(p, new Part).failure = Some(e)
+    case Ended(_, _) =>
+    case asked @ Asked(RecordBlock(p, attempt, seq, _), answer) =>
+      def refuse(why: String) = Left(new SparkException(s"$name refused attempt $attempt of partition $p: $why"))
+      if (p < printing) answer(refuse("the partition is printed"))
+      else {
+        val part = parts.getOrElseUpdate(p, new Part)
+        if (part.attempt < 0 || attempt > part.attempt && !part.printed) {
+          part.asked.values.foreach(_.answer(refuse(s"attempt $attempt replaces it")))
+          part.asked.clear()
+          part.attempt = attempt
+        }
+        if (attempt == part.attempt) part.asked(seq) = asked
+        else answer(refuse(s"attempt ${part.attempt} is printed"))
+      }
+  }
+
+  def close(): Unit = {
+    jobs.forEach(_.cancel())
+    events.synchronized { closed = true }
+    val closing = Left(new SparkException(s"$name is closed"))
+    parts.values.foreach(_.asked.values.foreach(_.answer(closing)))
+    events.forEach { case Asked(_, answer) => answer(closing); case _ => }
+    stop()
+  }
+}
+
+private[graft] object RecordBlocks {
+  /** Endpoints registered so far; the n-th is named `graft-records-n`. */
+  private[graft] val Endpoints = new AtomicLong
+
+  /** Partition jobs in flight at once: the one printed and the next. One
+    * job over every partition could give each task slot to a later
+    * partition whose task waits for the driver, with the partition it
+    * prints never scheduled.
+    */
+  private val JobWindow = 2
+
+  private sealed trait Event
+  private final case class Asked(msg: RecordBlock, answer: Either[Throwable, Unit] => Unit) extends Event
+  private final case class Ended(partition: Int, result: Try[Unit]) extends Event
+
+  private final class Part {
+    var attempt = -1
+    var printed = false
+    val asked = mutable.Map.empty[Int, Asked]
+    var failure: Option[Throwable] = None
+  }
+
+  /** In the task of partition `p`: encode `rows` and ask each block, then
+    * the partition's end, of the driver's `endpoint`, with at most
+    * [[LineEncoder.MaxInFlight]] asks unanswered. Returns when the driver
+    * has taken every block; a refused block fails the task. No ask waits
+    * forever: the driver answers it, or fails it when the sync ends.
+    */
+  def send(endpoint: String, p: Int, encoder: LineEncoder, rows: Iterator[InternalRow]): Unit = {
+    val attempt = TaskContext.get().attemptNumber()
+    val ask = GraftBridge.asker(endpoint)
+    val unanswered = new java.util.ArrayDeque[Future[Any]]
+    var seq = 0
+    def put(block: LineBlock): Unit = {
+      if (unanswered.size == LineEncoder.MaxInFlight) Await.result(unanswered.poll(), Duration.Inf)
+      unanswered.add(ask(RecordBlock(p, attempt, seq, block)))
+      seq += 1
+    }
+    CoreBudget.shared.holding {
+      encoder.encode(rows)((block, _) => block)(put)
+      put(null)
+      unanswered.forEach(Await.result(_, Duration.Inf))
+    }
+  }
 }

@@ -106,6 +106,13 @@ object StreamSource {
       }
     }
 
+  /** Rows a JDBC cursor fetches per round trip. A positive fetch size is
+    * also what makes Spark's PostgreSQL dialect turn autocommit off
+    * (`PostgresDialect.beforeFetch`), without which the PostgreSQL driver
+    * reads a partition's whole result before its first row.
+    */
+  val FetchSize = 10000
+
   /** JDBC pushdown options for a stream. `partitionColumn`/bounds enable
     * parallel extraction when the stream declares a numeric/timestamp
     * replication key — each Spark task opens its own cursor over a slice.
@@ -122,6 +129,7 @@ object StreamSource {
       "user" -> tap.user,
       "password" -> tap.password,
       "driver" -> tap.resolvedJdbcDriver,
+      "fetchsize" -> FetchSize.toString,
       "query" -> sql)
     val partitioned = for {
       (lo, hi) <- bounds

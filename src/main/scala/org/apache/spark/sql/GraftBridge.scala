@@ -4,9 +4,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge into `private[sql]` surface needed by custom Catalyst
   * expressions: Column ⇄ Expression conversion (Spark 4 Columns wrap
-  * ColumnNodes, not Expressions) and temp-function registration. Standard
-  * extension-library technique — the only code in this repo living outside
-  * the graft package.
+  * ColumnNodes, not Expressions) and temp-function registration, and into
+  * the `private[spark]` RPC that streams RECORD-mode blocks to the driver.
+  * Standard extension-library technique — the only code in this repo
+  * living outside the graft package.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -50,9 +51,33 @@ object GraftBridge {
     else env.conf.getInt("spark.executor.cores", Runtime.getRuntime.availableProcessors)
   }
 
-  /** The codec of `spark.io.compression.codec` (LZ4 by default), the one
-    * Spark compresses its own task results and shuffle blocks with.
+  /** Register endpoint `name` on the driver's RPC environment. `handle`
+    * gets each message asked of it, one at a time, with the answer it
+    * owes: `Right(())` replies, `Left(e)` fails the ask. Returns the
+    * endpoint's stop.
     */
-  def compressionCodec: org.apache.spark.io.CompressionCodec =
-    org.apache.spark.io.CompressionCodec.createCodec(org.apache.spark.SparkEnv.get.conf)
+  def serve(name: String)(handle: (Any, Either[Throwable, Unit] => Unit) => Unit): () => Unit = {
+    import org.apache.spark.rpc.{RpcCallContext, RpcEnv, ThreadSafeRpcEndpoint}
+    val env = org.apache.spark.SparkEnv.get.rpcEnv
+    val ref = env.setupEndpoint(name, new ThreadSafeRpcEndpoint {
+      override val rpcEnv: RpcEnv = env
+      override def receiveAndReply(context: RpcCallContext): PartialFunction[Any, Unit] = {
+        case msg => handle(msg, _.fold(context.sendFailure, _ => context.reply(true)))
+      }
+    })
+    () => env.stop(ref)
+  }
+
+  /** In a task: the asker of the driver's endpoint `name`, looked up as
+    * Spark's `BarrierTaskContext` looks up its coordinator. An ask's future
+    * completes when the driver answers it, with no timeout. A local-mode
+    * task's message reaches the driver as the object itself; a remote
+    * one's through Java serialization.
+    */
+  def asker(name: String): Any => scala.concurrent.Future[Any] = {
+    import org.apache.spark.util.RpcUtils
+    val env = org.apache.spark.SparkEnv.get
+    val ref = RpcUtils.makeDriverRef(name, env.conf, env.rpcEnv)
+    ref.ask[Any](_, RpcUtils.INFINITE_TIMEOUT)
+  }
 }

@@ -44,42 +44,6 @@ class IndexMaintenanceSpec extends AnyFunSuite {
     assert(loaded.centers.map(_.toSeq).toSeq === idx.centers.map(_.toSeq).toSeq)
   }
 
-  test("fragmented-only compaction touches only multi-file partitions") {
-    val corpus = emb.where(pmod(col("vec_id"), lit(3)) === 0)
-    // appended batch restricted to ONE vector: only its bucket fragments
-    val batch1 = emb.where(col("vec_id") === 1)
-    val batch2 = emb.where(pmod(col("vec_id"), lit(3)) === 2)
-    val idx = Similarity.buildSemanticIndex(corpus, "vec_id", "embedding",
-      nClusters = 4)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_fragcmp").toString
-    Similarity.saveSemanticIndex(idx, s"$tmp/i")
-    Similarity.appendSemanticIndex(spark, s"$tmp/i", batch1, "vec_id", "embedding")
-    def probe() = Similarity.probeSemanticIndex(
-        Similarity.loadSemanticIndex(spark, s"$tmp/i"), batch2,
-        "vec_id", "embedding", 0.3)
-      .as[(Long, Long, Double)].collect().toSet
-    def filesByBucket(): Map[String, Set[String]] = {
-      val root = new java.io.File(s"$tmp/i/members")
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .map(d => d.getName -> d.listFiles().map(_.getName)
-          .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSet).toMap
-    }
-    val beforeProbe = probe()
-    val beforeFiles = filesByBucket()
-    val fragmented = beforeFiles.filter(_._2.size >= 2).keySet
-    assert(fragmented.size === 1, s"exactly one bucket fragments: $beforeFiles")
-    val (nb, na) = IndexMaintenance.compactFragmented(
-      spark, s"$tmp/i/members", "bucket")
-    assert(na < nb)
-    val afterFiles = filesByBucket()
-    fragmented.foreach { b => assert(afterFiles(b).size === 1, s"$b") }
-    // untouched buckets keep their exact file names
-    (beforeFiles.keySet -- fragmented).foreach { b =>
-      assert(afterFiles(b) === beforeFiles(b), s"untouched bucket $b rewritten")
-    }
-    assert(probe() === beforeProbe)
-  }
-
   test("substr index: compact keeps probed spans, packs to targetFiles") {
     val a = docs.where(col("doc_id") % 3 === 0)
     val b = docs.where(col("doc_id") % 3 === 1)

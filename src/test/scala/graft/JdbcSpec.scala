@@ -2,6 +2,10 @@ package graft
 
 import graft.config.ConfigParser
 import graft.sources.StreamSource
+import org.apache.spark.sql.jdbc.JdbcDialects
+import java.lang.reflect.{Method, Proxy}
+import java.sql.Connection
+import scala.collection.mutable.ArrayBuffer
 import org.scalatest.funsuite.AnyFunSuite
 
 /** JDBC pushdown path: option-map construction (no live database in this
@@ -33,6 +37,29 @@ class JdbcSpec extends AnyFunSuite {
     assert(opts("dbtable").startsWith("(SELECT id, at FROM t WHERE at > TIMESTAMP"))
     assert(opts("partitionColumn") === "at")
     assert(opts("numPartitions") === "8")
+  }
+
+  // Spark's PostgreSQL dialect turns autocommit off before a read only
+  // when the options carry a positive fetch size, and the PostgreSQL
+  // driver streams through a server-side cursor only with autocommit off.
+  // A proxy Connection records what the dialect does with the tap's
+  // options, with no driver or server.
+  test("the tap's JDBC options make the PostgreSQL dialect read through a cursor") {
+    val calls = ArrayBuffer.empty[String]
+    val conn = Proxy.newProxyInstance(getClass.getClassLoader, Array(classOf[Connection]),
+      (_: AnyRef, m: Method, args: Array[AnyRef]) => {
+        calls += s"${m.getName}(${Option(args).map(_.mkString(",")).getOrElse("")})"
+        null
+      }).asInstanceOf[Connection]
+    val url = "jdbc:postgresql://h/db"
+    val opts = StreamSource.jdbcOptions(tap, tap.streams.head)
+    assert(opts("fetchsize").toInt > 0)
+    JdbcDialects.get(url).beforeFetch(conn, opts)
+    assert(calls.toSeq === Seq("setAutoCommit(false)"))
+    // without the option the dialect leaves autocommit alone
+    calls.clear()
+    JdbcDialects.get(url).beforeFetch(conn, opts - "fetchsize")
+    assert(calls.isEmpty)
   }
 
   test("live end-to-end JDBC extraction against embedded Derby") {

@@ -2,10 +2,12 @@ package graft
 
 import com.fasterxml.jackson.databind.util.RawValue
 import graft.config.{BatchConfig, BatchEncoding, BatchStorage, ConfigParser, StreamConfig}
-import graft.sinks.{BatchSink, CoreBudget, LineBlock, LineEncoder, MaxKey, SingerSink}
+import graft.sinks.{BatchSink, CoreBudget, LineBlock, LineEncoder, MaxKey, RecordBlock, RecordBlocks, SingerSink}
 import graft.sources.StreamSource
 import org.apache.spark.JobExecutionStatus
-import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
+import org.apache.spark.GraftRpcProbe
+import org.apache.spark.serializer.JavaSerializer
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import java.io.{BufferedReader, ByteArrayOutputStream, InputStreamReader, OutputStream, PrintStream}
@@ -89,14 +91,13 @@ class LineEncoderSpec extends AnyFunSuite {
       if (key.isDefined) encoded.foreach(r => expectedMax.add(r.get(1), r.getString(2)))
       val rows = df.queryExecution.toRdd.map(_.copy()).collect()
       assert(rows.length === 60000)
-      val codec = GraftBridge.compressionCodec
       for (budget <- Seq(new CoreBudget(0), new CoreBudget(8))) {
         val encoder = LineEncoder(df, stream)
         val got = ArrayBuffer.empty[String]
         val max = new MaxKey
-        // the compressed form too: that is what RECORD-mode tasks return
-        encoder.encode(rows.iterator, budget)((block, _) => block.compress(codec)) { data =>
-          val block = encoder.decompress(codec, data)
+        // as a remote task's block message reaches the driver
+        encoder.encode(rows.iterator, budget)((block, _) => block) { sent =>
+          val block = viaMessage(sent)
           assert(block.lines <= B)
           got ++= rawLines(block)
           (0 until block.lines).foreach(block.offerKey(_, max))
@@ -110,14 +111,25 @@ class LineEncoderSpec extends AnyFunSuite {
     }
   }
 
-  /** `df`'s blocks, encoded under `budget` and back through compression. */
+  /** `block` back from a Java serialization round trip of its
+    * [[RecordBlock]] message: the form in which a remote executor's task
+    * sends it to the driver.
+    */
+  private def viaMessage(block: LineBlock): LineBlock = {
+    val serializer = new JavaSerializer(spark.sparkContext.getConf).newInstance()
+    serializer.deserialize[RecordBlock](serializer.serialize(RecordBlock(3, 1, 7, block))) match {
+      case RecordBlock(3, 1, 7, got) => got
+      case other => fail(s"not the message sent: $other")
+    }
+  }
+
+  /** `df`'s blocks, encoded under `budget` and sent as block messages. */
   private def blocks(df: DataFrame, stream: StreamConfig, budget: CoreBudget,
                      envelope: (String, String) = ("", "")): Seq[LineBlock] = {
-    val codec = GraftBridge.compressionCodec
     val encoder = LineEncoder(df, stream, envelope)
     val got = ArrayBuffer.empty[LineBlock]
     encoder.encode(df.queryExecution.toRdd.map(_.copy()).collect().iterator, budget)(
-      (block, _) => block.compress(codec))(got += encoder.decompress(codec, _))
+      (block, _) => block)(got += viaMessage(_))
     got.toSeq
   }
 
@@ -253,17 +265,17 @@ class LineEncoderSpec extends AnyFunSuite {
   }
 
   // A row of the third of four partitions fails the sync while the task
-  // has line blocks in flight on helpers: emitRecords throws, and every
-  // core slot comes back once the task has stopped. A leaked slot would
-  // serialize every later sync in this JVM. A partition job still in
-  // flight behind the failed one is cancelled: no job outlives the sync.
+  // has line blocks in flight on helpers and asked of the driver:
+  // emitRecords throws within seconds, not after an RPC ask timeout, and
+  // every core slot comes back once the task has stopped. A leaked slot
+  // would serialize every later sync in this JVM. A partition job still in
+  // flight behind the failed one is cancelled and the block endpoint is
+  // stopped: nothing outlives the sync.
   test("a failed RECORD-mode sync gives back every core slot") {
     val s = ConfigParser.parseStream(
       """{"name":"f","key_properties":["id"],
         |"sql":"SELECT id, CASE WHEN id = 250000 THEN raise_error('boom') ELSE id END AS v, repeat('x', 100) AS pad FROM range(0, 400000, 1, 4)",
         |"columns":[{"name":"id","type":"bigint"},{"name":"v","type":"bigint"},{"name":"pad","type":"text"}]}""".stripMargin)
-    val sc = spark.sparkContext
-    val budget = CoreBudget.shared // sized by the running session
     // the third partition fails, or the second, behind a 100k-row first
     // one, while the third's job is in flight and must be cancelled
     for ((failAt, before) <- Seq((250000, 200000), (100000, 100000))) {
@@ -274,25 +286,89 @@ class LineEncoderSpec extends AnyFunSuite {
         override def write(b: Array[Byte], off: Int, len: Int): Unit =
           (off until off + len).foreach(i => write(b(i).toInt))
       }, false, UTF_8)
+      val endpoints = RecordBlocks.Endpoints.get
+      val t0 = System.nanoTime()
       val e = intercept[Exception](SingerSink.emitRecords(df, s, out))
+      assert(System.nanoTime() - t0 < 30L * 1000 * 1000 * 1000, s"fail at $failAt")
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => String.valueOf(t.getMessage).contains("boom")))
-      assert(printed === before) // the earlier partitions, nothing of the failed one
-      // the status tracker learns of jobs late, from the listener bus: once
-      // it has seen a job submitted after the sync end, it has seen every
-      // job the sync started
-      val marker = s"after-$failAt"
-      sc.setJobGroup(marker, marker)
-      sc.parallelize(Seq(0), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      def settled = budget.available == budget.cores &&
-        sc.statusTracker.getJobIdsForGroup(marker).flatMap(sc.statusTracker.getJobInfo)
-          .exists(_.status == JobExecutionStatus.SUCCEEDED) &&
-        sc.statusTracker.getActiveJobIds.isEmpty
-      while (!settled && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(settled, s"fail at $failAt: active jobs ${sc.statusTracker.getActiveJobIds.toSeq}")
-      assert(budget.available === budget.cores, s"fail at $failAt")
+      // the earlier partitions in full, and of the failed one at most the
+      // blocks before its failing row: the printed lines are a prefix
+      assert(printed >= before && printed <= failAt, s"fail at $failAt: $printed lines")
+      SyncCleanup.assertSettled(spark, s"after-$failAt", endpoints)
     }
+  }
+
+  // A one-partition stream of 60 blocks into a stdout that blocks on its
+  // first line: the task stops pulling rows once the driver holds
+  // MaxInFlight of its unprinted blocks and its encoder queue is full, and
+  // waits; released, every line arrives in order.
+  test("RECORD mode: a blocked stdout holds the task at the block window") {
+    val rows = 60 * B
+    val schema = StructType(Seq(StructField("id", LongType), StructField("pad", StringType)))
+    val source = spark.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
+      Iterator.range(0, rows).map { i => SyncCleanup.pulled.incrementAndGet(); Row(i.toLong, "x" * 40) }
+    }
+    val df = spark.createDataFrame(source, schema)
+    SyncCleanup.pulled.set(0)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val buf = new ByteArrayOutputStream()
+    val out = new PrintStream(buf, false, UTF_8) {
+      override def println(x: String): Unit = { release.await(); super.println(x) }
+    }
+    val sync = scala.concurrent.Future(SingerSink.emitRecords(df, StreamConfig("win", ""), out))(
+      scala.concurrent.ExecutionContext.global)
+    // wait until the task has pulled no row for a second
+    var (last, still) = (-1L, 0)
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (still < 10 && System.nanoTime() < deadline) {
+      Thread.sleep(100)
+      val now = SyncCleanup.pulled.get
+      if (now == last && now > 0) still += 1 else { last = now; still = 0 }
+    }
+    assert(still === 10, s"the task kept pulling rows: $last of $rows")
+    // one block printing, MaxInFlight asked of the driver, MaxInFlight
+    // queued in the encoder and one batch filling
+    assert(last <= (2 * LineEncoder.MaxInFlight + 2) * B, s"$last of $rows rows pulled")
+    assert(!sync.isCompleted)
+    release.countDown()
+    val (n, _) = scala.concurrent.Await.result(sync, scala.concurrent.duration.Duration(60, "s"))
+    assert(n === rows)
+    out.flush()
+    val printed = buf.toString(UTF_8).split("\n")
+    assert(printed.length === rows)
+    assert(printed.indices.forall(i => printed(i).startsWith(s"""{"type":"RECORD","stream":"win","record":{"id":$i,""")))
+  }
+}
+
+/** What a finished or failed sync leaves behind, for the specs. */
+object SyncCleanup {
+  /** Rows the blocked-stdout case's source has produced. */
+  val pulled = new java.util.concurrent.atomic.AtomicLong
+
+  /** Within 30 s of a sync's end: no active job, every slot of
+    * [[CoreBudget.shared]] free, and none of the block endpoints after the
+    * first `endpoints` registered.
+    */
+  def assertSettled(spark: SparkSession, label: String, endpoints: Long): Unit = {
+    val sc = spark.sparkContext
+    val budget = CoreBudget.shared // sized by the running session
+    // the status tracker learns of jobs late, from the listener bus: once
+    // it has seen a job submitted after the sync end, it has seen every
+    // job the sync started
+    sc.setJobGroup(label, label)
+    sc.parallelize(Seq(0), 1).count()
+    sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    def settled = budget.available == budget.cores &&
+      sc.statusTracker.getJobIdsForGroup(label).flatMap(sc.statusTracker.getJobInfo)
+        .exists(_.status == JobExecutionStatus.SUCCEEDED) &&
+      sc.statusTracker.getActiveJobIds.isEmpty
+    while (!settled && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(settled, s"$label: active jobs ${sc.statusTracker.getActiveJobIds.toSeq}")
+    assert(budget.available == budget.cores, label)
+    val live = (endpoints + 1 to RecordBlocks.Endpoints.get).map(i => s"graft-records-$i")
+      .filter(GraftRpcProbe.registered)
+    assert(live.isEmpty, s"$label: endpoints still registered: $live")
   }
 }

@@ -253,13 +253,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got(5L) === (("unknown", -1, -1)))
   }
 
-  test("multimodal: codec registry resolves config-named codecs") {
-    assert(Multimodal.codecFor("fake:8").decode("ab".getBytes).length === 8)
-    assert(Multimodal.codecFor("identity").decode(Array[Byte](0, 65, -1)).toSeq
-      === Seq(0.0f, 65.0f, 255.0f))
-    assertThrows[IllegalArgumentException](Multimodal.codecFor("h264"))
-  }
-
   test("phashPairs: one-byte flip is near, unrelated payloads are silent") {
     import spark.implicits._
     val rnd = new scala.util.Random(3)

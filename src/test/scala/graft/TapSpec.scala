@@ -1,7 +1,7 @@
 package graft
 
 import graft.config.ConfigParser
-import graft.sinks.SingerSink
+import graft.sinks.{RecordBlocks, SingerSink}
 import graft.state.Bookmarks
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
@@ -217,6 +217,70 @@ class TapSpec extends AnyFunSuite {
       .map(l => """"id":(\d+)""".r.findFirstMatchIn(l).get.group(1).toInt).toSeq
     assert(ids2 === (4 to 9))
     assert(st2.bookmark("db1-public-srt") === Some("9"))
+  }
+
+  // The pipe dies in the middle of a partition while its task and the
+  // next partition's wait for the driver to take their blocks: the sync
+  // ends with the pipe's exception at once, not after an RPC ask timeout,
+  // and leaves no job, block endpoint or core slot behind.
+  test("a pipe killed mid-partition ends the sync and leaves nothing running") {
+    val tap = ConfigParser.parseTap(
+      """{"database":"db1","streams":[
+        |{"name":"big","sql":"SELECT id, repeat('x', 100) AS pad FROM range(0, 300000, 1, 3)",
+        | "key_properties":["id"],
+        | "columns":[{"name":"id","type":"bigint"},{"name":"pad","type":"text"}]}]}""".stripMargin)
+    val endpoints = RecordBlocks.Endpoints.get
+    val buf = new ByteArrayOutputStream()
+    val t0 = System.nanoTime()
+    intercept[KilledPipe](Tap.syncAll(spark, tap, None, killingStream(buf, 5000)))
+    assert(System.nanoTime() - t0 < 30L * 1000 * 1000 * 1000)
+    assert(buf.toString("UTF-8").split("\n").length === 5000)
+    SyncCleanup.assertSettled(spark, "after-killed-pipe", endpoints)
+  }
+
+  // The remote path: on a local-cluster master every task runs in an
+  // executor JVM of its own, so each block reaches the driver as a Java
+  // serialized message over the network, not as the object a local task
+  // hands over. graft.Main runs in a child JVM (one SparkContext per JVM)
+  // with this build's Spark jars, and its stdout must be the lines an
+  // in-process sync prints, modulo time_extracted.
+  test("RECORD mode on a local-cluster master prints what local mode prints") {
+    val cfg = Files.createTempFile("tap-cluster", ".json")
+    Files.writeString(cfg,
+      """{"database":"db1","state_message_frequency":997,"streams":[
+        |{"name":"srt","sql":"SELECT id, id * 3 AS k, repeat('x', 20) AS pad FROM range(0, 30000, 1, 3) WHERE id * 3 > :rep_key_val",
+        | "key_properties":["id"],"replication_key":"k","replication_key_value_start":-1,"is_sorted":true,
+        | "columns":[{"name":"id","type":"bigint"},{"name":"k","type":"bigint"},{"name":"pad","type":"text"}]}]}""".stripMargin)
+    val classes = sys.props("java.class.path").split(java.io.File.pathSeparator)
+      .filter(p => new java.io.File(p).isDirectory).mkString(java.io.File.pathSeparator)
+    val opens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net", "java.nio",
+      "java.util", "java.util.concurrent", "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
+      "sun.security.action", "sun.util.calendar").map(p => s"--add-opens=java.base/$p=ALL-UNNAMED")
+    val child = new ProcessBuilder((Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ opens ++ Seq(
+      "-Dspark.ui.enabled=false", s"-Dspark.executor.extraClassPath=$classes",
+      "-cp", sys.props("java.class.path"), "graft.Main", "--config", cfg.toString)): _*)
+    // a Spark home of our own over the jars Spark runs from here: the
+    // workers launch executors from its jars and write their work
+    // directories under it
+    val jars = java.nio.file.Paths.get(classOf[org.apache.spark.SparkContext].getProtectionDomain
+      .getCodeSource.getLocation.toURI).getParent
+    val home = Files.createTempDirectory("tap-cluster-home")
+    Files.createSymbolicLink(home.resolve("jars"), jars)
+    child.environment().put("SPARK_MASTER", "local-cluster[2,1,1024]")
+    child.environment().put("SPARK_HOME", home.toString)
+    child.environment().put("SPARK_SCALA_VERSION", "2.13")
+    val (stdout, stderr) = (Files.createTempFile("tap-cluster", ".out"), Files.createTempFile("tap-cluster", ".err"))
+    val proc = child.redirectOutput(stdout.toFile).redirectError(stderr.toFile).start()
+    import scala.jdk.CollectionConverters._
+    if (!proc.waitFor(240, java.util.concurrent.TimeUnit.SECONDS)) proc.destroyForcibly().waitFor()
+    Files.walk(home).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    assert(proc.exitValue() === 0, Files.readAllLines(stderr).asScala.takeRight(20).mkString("\n"))
+    val remote = Files.readString(stdout)
+    val buf = new ByteArrayOutputStream()
+    Tap.syncAll(spark, ConfigParser.parseTap(Files.readString(cfg)), None, new PrintStream(buf, true, "UTF-8"))
+    def stable(out: String) = out.split("\n").toSeq.map(_.replaceAll(""""time_extracted":"[^"]*"""", ""))
+    assert(stable(remote).count(_.contains(""""type":"RECORD"""")) === 30000)
+    assert(stable(remote) === stable(buf.toString("UTF-8")))
   }
 
   // An UNSORTED stream's mid-sync STATE carries progress_markers only:
