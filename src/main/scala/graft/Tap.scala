@@ -93,15 +93,21 @@ object Tap {
       val (df, emitStream, smap) = planStream(s)
       tap.batchConfig match {
         case Some(bc) =>
-          // one BATCH message per chunk, each followed by a STATE over
-          // the chunks announced so far
-          val chunks = BatchSink.write(df, emitStream, bc)
+          // one BATCH message per chunk as soon as the sink announces it,
+          // each followed by a STATE over the chunks announced so far. An
+          // unsorted stream's STATE depends on whether its chunk is the
+          // last, so it waits for the next chunk or the write's end.
           val max = new MaxKey
-          chunks.zipWithIndex.foreach { case (c, i) =>
+          val holds = s.replicationKey.isDefined && !s.isSorted
+          var held = false
+          val chunks = BatchSink.write(df, emitStream, bc, announce = { c =>
+            if (held) checkpoint(s, max.value, last = false)
             SingerSink.emitBatch(emitStream, c.manifest, out)
+            out.flush()
             max.merge(c.maxKey)
-            checkpoint(s, max.value, last = i == chunks.size - 1)
-          }
+            if (holds) held = true else checkpoint(s, max.value, last = false)
+          })
+          if (held) checkpoint(s, max.value, last = true)
           StreamResult(s, chunks.map(_.records).sum, chunks.map(_.manifest))
         case None =>
           // a mapped stream's SCHEMA reflects the transformed shape

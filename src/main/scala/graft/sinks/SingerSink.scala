@@ -4,18 +4,11 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode}
 import graft.config.StreamConfig
 import graft.state.TapState
-import org.apache.spark.{FutureAction, SparkException, TaskContext}
 import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 import java.io.PrintStream
-import java.util.concurrent.LinkedBlockingQueue
-import java.util.concurrent.atomic.AtomicLong
-import scala.collection.mutable
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-import scala.util.{Failure, Try}
 
 /** Singer protocol emission: SCHEMA, then RECORDs, then STATE, one JSON
   * object per stdout line (inherited behavior of `singer_sdk.Stream.sync`;
@@ -200,7 +193,7 @@ object SingerSink {
   * `Bookmarks.advance` produced from a whole-column max. A String
   * compares as UTF8String (UTF-8 byte order), not by its UTF-16 code units,
   * so bookmarks agree with `max()` on supplementary-plane values.
-  * Serializable: batch write tasks return one per chunk.
+  * Serializable: a batch write task sends one per chunk to the driver.
   */
 final class MaxKey extends Serializable {
   private var best: Comparable[Any] = _
@@ -225,25 +218,14 @@ final class MaxKey extends Serializable {
   def value: Option[String] = Option(bookmark)
 }
 
-/** Block `seq` of partition `partition`, from the task attempt numbered
-  * `attempt`; a null `block` ends the partition.
-  */
-private[graft] final case class RecordBlock(partition: Int, attempt: Int, seq: Int, block: LineBlock)
-
 /** A RECORD-mode stream's blocks, from the tasks that encode `rows` to
-  * the driver that prints them. The driver runs one job per partition, in
-  * order, with the next partition's job in flight, and registers one
-  * uniquely named RPC endpoint, of which each task asks one
-  * [[RecordBlock]] at a time ([[RecordBlocks.send]]), with at most
-  * [[LineEncoder.MaxInFlight]] asks unanswered. The driver answers a block
-  * when it takes it to print, so a task waits while the driver holds that
-  * many of its unprinted blocks: the driver's memory is bounded by the
-  * window, not by the partition.
-  *
-  * One attempt of a partition is printed: the first to send a block, or a
-  * later one that replaces it before any of its blocks was printed. A
-  * block of any other attempt is refused, which fails that attempt, so a
-  * retry after printing has begun fails the partition's job. A job's
+  * the driver that prints them, over a [[TaskChannel]] that answers a
+  * block when the driver takes it to print: a task waits while the driver
+  * holds [[LineEncoder.MaxInFlight]] of its unprinted blocks, so the
+  * driver's memory is bounded by the window, not by the partition. The
+  * driver runs one job per partition, in order, with the next
+  * partition's job in flight. One attempt of a partition is printed, and
+  * a retry after printing has begun fails the partition's job. A job's
   * failure fails [[print]] when it reaches the partition: the printed
   * lines are a prefix of the stream. [[close]] cancels the jobs and fails
   * every ask it holds before it stops the endpoint.
@@ -251,40 +233,17 @@ private[graft] final case class RecordBlock(partition: Int, attempt: Int, seq: I
 private final class RecordBlocks(rows: RDD[InternalRow], encoder: LineEncoder) {
   import RecordBlocks._
 
-  private val name = s"graft-records-${Endpoints.incrementAndGet()}"
-  private val events = new LinkedBlockingQueue[Event]
-  private var closed = false // guarded by `events`
-  private val stop = GraftBridge.serve(name) { (msg, answer) =>
-    events.synchronized {
-      if (closed) answer(Left(new SparkException(s"$name is closed")))
-      else events.put(Asked(msg.asInstanceOf[RecordBlock], answer))
-    }
-  }
-  private val jobs = new java.util.ArrayDeque[FutureAction[Unit]]()
-  // the partitions from `printing` on that have sent a block or failed
-  private val parts = mutable.Map.empty[Int, Part]
-  private var printing = 0
+  private val channel = new TaskChannel[LineBlock](answerOnTake = true)
 
   /** Print the blocks of every partition through `emit`, in order. */
-  def print(emit: LineBlock => Unit): Unit =
-    for (p <- 0 until rows.getNumPartitions) {
-      while (jobs.size < JobWindow && p + jobs.size < rows.getNumPartitions) submit(p + jobs.size)
-      printing = p
-      val part = parts.getOrElseUpdate(p, new Part)
-      var seq = 0
-      while (seq >= 0) {
-        part.failure.foreach(throw _)
-        part.asked.remove(seq) match {
-          case Some(Asked(msg, answer)) =>
-            part.printed = true
-            answer(Right(()))
-            if (msg.block == null) seq = -1 else { emit(msg.block); seq += 1 }
-          case None => route(events.take())
-        }
-      }
-      parts.remove(p)
-      jobs.poll()
+  def print(emit: LineBlock => Unit): Unit = {
+    val n = rows.getNumPartitions
+    var submitted = 0
+    for (p <- 0 until n) {
+      while (submitted < math.min(n, p + JobWindow)) { submit(submitted); submitted += 1 }
+      channel.foreach(p)(emit)
     }
+  }
 
   /** Start partition `p`'s job, over an RDD of its own: the scheduler
     * aborts every active job whose final RDD is the one a failed task ran
@@ -292,45 +251,15 @@ private final class RecordBlocks(rows: RDD[InternalRow], encoder: LineEncoder) {
     * this one's job too.
     */
   private def submit(p: Int): Unit = {
-    val (endpoint, encode) = (name, encoder) // the task gets these, not `this`
-    val job = rows.sparkContext.submitJob(PartitionPruningRDD.create(rows, _ == p),
-      (it: Iterator[InternalRow]) => send(endpoint, p, encode, it), Seq(0), (_: Int, _: Unit) => (), ())
-    job.onComplete(r => events.put(Ended(p, r)))(ExecutionContext.parasitic)
-    jobs.add(job)
+    val (endpoint, encode) = (channel.name, encoder) // the task gets these, not `this`
+    channel.watch(rows.sparkContext.submitJob(PartitionPruningRDD.create(rows, _ == p),
+      (it: Iterator[InternalRow]) => send(endpoint, p, encode, it), Seq(0), (_: Int, _: Unit) => (), ()), p to p)
   }
 
-  private def route(event: Event): Unit = event match {
-    case Ended(p, Failure(e)) if p >= printing => parts.getOrElseUpdate(p, new Part).failure = Some(e)
-    case Ended(_, _) =>
-    case asked @ Asked(RecordBlock(p, attempt, seq, _), answer) =>
-      def refuse(why: String) = Left(new SparkException(s"$name refused attempt $attempt of partition $p: $why"))
-      if (p < printing) answer(refuse("the partition is printed"))
-      else {
-        val part = parts.getOrElseUpdate(p, new Part)
-        if (part.attempt < 0 || attempt > part.attempt && !part.printed) {
-          part.asked.values.foreach(_.answer(refuse(s"attempt $attempt replaces it")))
-          part.asked.clear()
-          part.attempt = attempt
-        }
-        if (attempt == part.attempt) part.asked(seq) = asked
-        else answer(refuse(s"attempt ${part.attempt} is printed"))
-      }
-  }
-
-  def close(): Unit = {
-    jobs.forEach(_.cancel())
-    events.synchronized { closed = true }
-    val closing = Left(new SparkException(s"$name is closed"))
-    parts.values.foreach(_.asked.values.foreach(_.answer(closing)))
-    events.forEach { case Asked(_, answer) => answer(closing); case _ => }
-    stop()
-  }
+  def close(): Unit = channel.close()
 }
 
-private[graft] object RecordBlocks {
-  /** Endpoints registered so far; the n-th is named `graft-records-n`. */
-  private[graft] val Endpoints = new AtomicLong
-
+private object RecordBlocks {
   /** Partition jobs in flight at once: the one printed and the next. One
     * job over every partition could give each task slot to a later
     * partition whose task waits for the driver, with the partition it
@@ -338,37 +267,15 @@ private[graft] object RecordBlocks {
     */
   private val JobWindow = 2
 
-  private sealed trait Event
-  private final case class Asked(msg: RecordBlock, answer: Either[Throwable, Unit] => Unit) extends Event
-  private final case class Ended(partition: Int, result: Try[Unit]) extends Event
-
-  private final class Part {
-    var attempt = -1
-    var printed = false
-    val asked = mutable.Map.empty[Int, Asked]
-    var failure: Option[Throwable] = None
-  }
-
   /** In the task of partition `p`: encode `rows` and ask each block, then
-    * the partition's end, of the driver's `endpoint`, with at most
-    * [[LineEncoder.MaxInFlight]] asks unanswered. Returns when the driver
-    * has taken every block; a refused block fails the task. No ask waits
-    * forever: the driver answers it, or fails it when the sync ends.
+    * the partition's end, of the driver's `endpoint`. Returns when the
+    * driver has taken every block.
     */
   def send(endpoint: String, p: Int, encoder: LineEncoder, rows: Iterator[InternalRow]): Unit = {
-    val attempt = TaskContext.get().attemptNumber()
-    val ask = GraftBridge.asker(endpoint)
-    val unanswered = new java.util.ArrayDeque[Future[Any]]
-    var seq = 0
-    def put(block: LineBlock): Unit = {
-      if (unanswered.size == LineEncoder.MaxInFlight) Await.result(unanswered.poll(), Duration.Inf)
-      unanswered.add(ask(RecordBlock(p, attempt, seq, block)))
-      seq += 1
-    }
+    val sender = new TaskChannel.Sender(endpoint, p)
     CoreBudget.shared.holding {
-      encoder.encode(rows)((block, _) => block)(put)
-      put(null)
-      unanswered.forEach(Await.result(_, Duration.Inf))
+      encoder.encode(rows)((block, _) => block)(sender.send)
+      sender.end()
     }
   }
 }

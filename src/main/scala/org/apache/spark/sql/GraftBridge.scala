@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Bridge into `private[sql]` surface needed by custom Catalyst
   * expressions: Column ⇄ Expression conversion (Spark 4 Columns wrap
   * ColumnNodes, not Expressions) and temp-function registration, and into
-  * the `private[spark]` RPC that streams RECORD-mode blocks to the driver.
+  * the `private[spark]` RPC over which sink tasks send the driver what
+  * they write.
   * Standard extension-library technique — the only code in this repo
   * living outside the graft package.
   */
@@ -79,5 +80,12 @@ object GraftBridge {
     val env = org.apache.spark.SparkEnv.get
     val ref = RpcUtils.makeDriverRef(name, env.conf, env.rpcEnv)
     ref.ask[Any](_, RpcUtils.INFINITE_TIMEOUT)
+  }
+
+  /** In a task: whether the driver still serves endpoint `name`. */
+  def served(name: String): Boolean = {
+    import org.apache.spark.util.RpcUtils
+    val env = org.apache.spark.SparkEnv.get
+    scala.util.Try(RpcUtils.makeDriverRef(name, env.conf, env.rpcEnv)).isSuccess
   }
 }

@@ -1,11 +1,14 @@
 package graft
 
 import graft.config.{BatchConfig, BatchEncoding, BatchStorage, ConfigParser}
-import graft.sinks.{BatchChunk, BatchSink}
+import graft.sinks.{BatchChunk, BatchSink, CoreBudget, LineEncoder, TaskChannel}
 import graft.sources.StreamSource
+import org.apache.spark.sql.functions.{col, udf}
 import java.io.{BufferedReader, ByteArrayInputStream, ByteArrayOutputStream, InputStreamReader}
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -188,37 +191,115 @@ class BatchSinkSpec extends AnyFunSuite {
     assert(chunks.flatMap(chunkLines) === Seq("""{"one":"a","two":null}"""))
   }
 
+  /** The names of the files in `root`. */
+  private def files(root: String): Set[String] = new java.io.File(root).list().toSet
+
+  private def fileName(c: BatchChunk): String =
+    Paths.get(java.net.URI.create(c.manifest.files.head)).getFileName.toString
+
+  // The first chunk of a one-partition stream is announced while its task
+  // still writes: the task's rows after the first batch_size block on a
+  // latch that only the announcement of chunk 0 opens. The test holds
+  // every other core slot, so the task encodes its blocks itself and
+  // closes chunk 0 before it pulls the row that blocks. A chunk announced
+  // only after the job would time the latch out, which fails the write.
+  test("a chunk is announced while its task is still writing") {
+    val tmp = Files.createTempDirectory("graft-batch-early").toString
+    val bs = LineEncoder.BatchRows
+    val budget = { spark; CoreBudget.shared } // sized by the running session
+    val idle = new CountDownLatch(1)
+    val holders = (1 until budget.cores).map { _ =>
+      val t = new Thread(() => budget.holding(idle.await()))
+      t.start()
+      t
+    }
+    try {
+      while (budget.available > 1) Thread.sleep(5)
+      AnnounceGate.latch = new CountDownLatch(1)
+      val gate = udf { (id: Long) =>
+        if (id == bs) require(AnnounceGate.latch.await(30, TimeUnit.SECONDS), "chunk 0 was not announced")
+        id
+      }.asNondeterministic()
+      val df = spark.range(0, 3L * bs, 1, 1).select(gate(col("id")).as("id"))
+      val s = ConfigParser.parseStream(
+        s"""{"name":"early","sql":"SELECT 1","key_properties":["id"],"batch_size":$bs,
+           |"columns":[{"name":"id","type":"bigint"}]}""".stripMargin)
+      val announced = ArrayBuffer.empty[Long]
+      val t0 = System.nanoTime()
+      val chunks = BatchSink.write(df, s, gzipBatch(tmp), announce = { c =>
+        announced += c.records
+        AnnounceGate.latch.countDown()
+      })
+      assert(System.nanoTime() - t0 < 30L * 1000 * 1000 * 1000)
+      assert(announced.toSeq === Seq(bs, bs, bs))
+      assert(chunks.map(_.records) === Seq(bs, bs, bs))
+      assert(chunks.flatMap(chunkLines).map(_.stripPrefix("{\"id\":").stripSuffix("}").toLong) === (0L until 3L * bs))
+    } finally {
+      idle.countDown()
+      holders.foreach(_.join())
+    }
+  }
+
   // A row of a later partition fails the write job after other tasks have
-  // written their chunks: the sink deletes its staging dir before
-  // rethrowing, so the root holds nothing. Run 20 times: the other tasks
+  // written chunks: the root then holds exactly the chunks announced
+  // before the failure, as the reference leaves the files it yielded
+  // before a failure, with no staging dir. Run 20 times: the other tasks
   // are still creating chunk files while the directory is deleted.
-  test("a failed write job leaves the batch root empty") {
-    val tmp = Files.createTempDirectory("graft-batch-fail").toString
+  test("a failed write job leaves only the announced chunks in the batch root") {
     val s = ConfigParser.parseStream(
       """{"name":"f","key_properties":["id"],"batch_size":2,
         |"sql":"SELECT id, CASE WHEN id = 10 THEN raise_error('boom') ELSE id END AS v FROM range(0, 12, 1, 4)",
         |"columns":[{"name":"id","type":"bigint"},{"name":"v","type":"bigint"}]}""".stripMargin)
     for (_ <- 0 until 20) {
+      val tmp = Files.createTempDirectory("graft-batch-fail").toString
+      val announced = ArrayBuffer.empty[String]
       val e = intercept[Exception](
-        BatchSink.write(StreamSource.native(spark, s), s, gzipBatch(tmp)))
+        BatchSink.write(StreamSource.native(spark, s), s, gzipBatch(tmp), announce = announced += fileName(_)))
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => String.valueOf(t.getMessage).contains("boom")))
+      assert(files(tmp) === announced.toSet)
     }
-    assert(new java.io.File(tmp).list().isEmpty)
 
     // The same failure while every task has blocks in flight on
     // helpers: each task's encoder drains them, so every core slot comes
     // back once the killed tasks have stopped. A leaked slot would
     // serialize every later write in this JVM.
-    val budget = graft.sinks.CoreBudget.shared
+    val budget = CoreBudget.shared
+    val wideSql = "SELECT id, CASE WHEN id = 250000 THEN raise_error('boom') ELSE id END AS v, " +
+      "repeat('x', 100) AS pad FROM range(0, 400000, 1, 4)"
     val wide = ConfigParser.parseStream(
-      """{"name":"f","key_properties":["id"],
-        |"sql":"SELECT id, CASE WHEN id = 250000 THEN raise_error('boom') ELSE id END AS v, repeat('x', 100) AS pad FROM range(0, 400000, 1, 4)",
+      s"""{"name":"f","key_properties":["id"],"sql":"$wideSql",
         |"columns":[{"name":"id","type":"bigint"},{"name":"v","type":"bigint"},{"name":"pad","type":"text"}]}""".stripMargin)
-    intercept[Exception](BatchSink.write(StreamSource.native(spark, wide), wide, gzipBatch(tmp)))
+    val tmp = Files.createTempDirectory("graft-batch-fail").toString
+    val announced = ArrayBuffer.empty[String]
+    intercept[Exception](BatchSink.write(StreamSource.native(spark, wide), wide, gzipBatch(tmp),
+      announce = announced += fileName(_)))
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     while (budget.available != budget.cores && System.nanoTime() < deadline) Thread.sleep(20)
     assert(budget.available === budget.cores)
-    assert(new java.io.File(tmp).list().isEmpty)
+    assert(files(tmp) === announced.toSet)
+
+    // The driver fails as it announces the first chunk (a target that
+    // went away) while the tasks still write: the root holds that chunk
+    // alone, and the tasks the write's end stops end as killed, with no
+    // executor ERROR, job, sink endpoint or core slot left behind.
+    val cut = Files.createTempDirectory("graft-batch-cut").toString
+    val clean = wide.copy(sql = wideSql.replace("250000", "-1"), batchSize = 10000)
+    val endpoints = TaskChannel.Endpoints.get
+    val first = ArrayBuffer.empty[String]
+    val errors = SyncCleanup.executorErrors {
+      val e = intercept[IllegalStateException](BatchSink.write(StreamSource.native(spark, clean), clean,
+        gzipBatch(cut), announce = { c => first += fileName(c); throw new IllegalStateException("target gone") }))
+      assert(e.getMessage === "target gone")
+      SyncCleanup.assertSettled(spark, "after-announce-failure", endpoints)
+    }
+    assert(first.size === 1)
+    assert(files(cut) === first.toSet)
+    assert(errors.isEmpty, errors.mkString("\n"))
   }
+}
+
+/** The latch the announced-while-writing case's rows wait on. */
+object AnnounceGate {
+  @volatile var latch = new java.util.concurrent.CountDownLatch(0)
 }

@@ -2,7 +2,7 @@ package graft
 
 import com.fasterxml.jackson.databind.util.RawValue
 import graft.config.{BatchConfig, BatchEncoding, BatchStorage, ConfigParser, StreamConfig}
-import graft.sinks.{BatchSink, CoreBudget, LineBlock, LineEncoder, MaxKey, RecordBlock, RecordBlocks, SingerSink}
+import graft.sinks.{BatchSink, CoreBudget, LineBlock, LineEncoder, MaxKey, Sent, SingerSink, TaskChannel}
 import graft.sources.StreamSource
 import org.apache.spark.JobExecutionStatus
 import org.apache.spark.GraftRpcProbe
@@ -112,13 +112,13 @@ class LineEncoderSpec extends AnyFunSuite {
   }
 
   /** `block` back from a Java serialization round trip of its
-    * [[RecordBlock]] message: the form in which a remote executor's task
+    * [[Sent]] message: the form in which a remote executor's task
     * sends it to the driver.
     */
   private def viaMessage(block: LineBlock): LineBlock = {
     val serializer = new JavaSerializer(spark.sparkContext.getConf).newInstance()
-    serializer.deserialize[RecordBlock](serializer.serialize(RecordBlock(3, 1, 7, block))) match {
-      case RecordBlock(3, 1, 7, got) => got
+    serializer.deserialize[Sent](serializer.serialize(Sent(3, 1, 7, block))) match {
+      case Sent(3, 1, 7, got: LineBlock) => got
       case other => fail(s"not the message sent: $other")
     }
   }
@@ -286,16 +286,21 @@ class LineEncoderSpec extends AnyFunSuite {
         override def write(b: Array[Byte], off: Int, len: Int): Unit =
           (off until off + len).foreach(i => write(b(i).toInt))
       }, false, UTF_8)
-      val endpoints = RecordBlocks.Endpoints.get
-      val t0 = System.nanoTime()
-      val e = intercept[Exception](SingerSink.emitRecords(df, s, out))
-      assert(System.nanoTime() - t0 < 30L * 1000 * 1000 * 1000, s"fail at $failAt")
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => String.valueOf(t.getMessage).contains("boom")))
+      val endpoints = TaskChannel.Endpoints.get
+      val errors = SyncCleanup.executorErrors {
+        val t0 = System.nanoTime()
+        val e = intercept[Exception](SingerSink.emitRecords(df, s, out))
+        assert(System.nanoTime() - t0 < 30L * 1000 * 1000 * 1000, s"fail at $failAt")
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(t => String.valueOf(t.getMessage).contains("boom")))
+        SyncCleanup.assertSettled(spark, s"after-$failAt", endpoints)
+      }
       // the earlier partitions in full, and of the failed one at most the
       // blocks before its failing row: the printed lines are a prefix
       assert(printed >= before && printed <= failAt, s"fail at $failAt: $printed lines")
-      SyncCleanup.assertSettled(spark, s"after-$failAt", endpoints)
+      // only the failed task's exception: the job in flight behind it ends
+      // as killed
+      assert(errors.size === 1, errors.mkString("\n"))
     }
   }
 
@@ -346,9 +351,9 @@ object SyncCleanup {
   /** Rows the blocked-stdout case's source has produced. */
   val pulled = new java.util.concurrent.atomic.AtomicLong
 
-  /** Within 30 s of a sync's end: no active job, every slot of
-    * [[CoreBudget.shared]] free, and none of the block endpoints after the
-    * first `endpoints` registered.
+  /** Within 30 s of a sync's end: no active job, no running task, every
+    * slot of [[CoreBudget.shared]] free, and none of the sink endpoints
+    * after the first `endpoints` registered.
     */
   def assertSettled(spark: SparkSession, label: String, endpoints: Long): Unit = {
     val sc = spark.sparkContext
@@ -361,14 +366,37 @@ object SyncCleanup {
     sc.clearJobGroup()
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
     def settled = budget.available == budget.cores &&
+      sc.statusTracker.getExecutorInfos.forall(_.numRunningTasks == 0) &&
       sc.statusTracker.getJobIdsForGroup(label).flatMap(sc.statusTracker.getJobInfo)
         .exists(_.status == JobExecutionStatus.SUCCEEDED) &&
       sc.statusTracker.getActiveJobIds.isEmpty
     while (!settled && System.nanoTime() < deadline) Thread.sleep(20)
     assert(settled, s"$label: active jobs ${sc.statusTracker.getActiveJobIds.toSeq}")
     assert(budget.available == budget.cores, label)
-    val live = (endpoints + 1 to RecordBlocks.Endpoints.get).map(i => s"graft-records-$i")
+    val live = (endpoints + 1 to TaskChannel.Endpoints.get).map(i => s"graft-sink-$i")
       .filter(GraftRpcProbe.registered)
     assert(live.isEmpty, s"$label: endpoints still registered: $live")
+  }
+
+  /** What `org.apache.spark.executor.Executor` logs at ERROR (such as
+    * `Exception in task …`, with its stack trace) while `body` runs, seen
+    * through a log4j2 appender attached for the call only.
+    */
+  def executorErrors(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("executor-errors", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.ERROR)) errors.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger("org.apache.spark.executor.Executor").asInstanceOf[Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try body finally { logger.removeAppender(appender); appender.stop() }
+    import scala.jdk.CollectionConverters._
+    errors.asScala.toSeq
   }
 }

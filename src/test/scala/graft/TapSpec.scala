@@ -1,7 +1,7 @@
 package graft
 
 import graft.config.ConfigParser
-import graft.sinks.{RecordBlocks, SingerSink}
+import graft.sinks.{SingerSink, TaskChannel}
 import graft.state.Bookmarks
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
@@ -222,35 +222,31 @@ class TapSpec extends AnyFunSuite {
   // The pipe dies in the middle of a partition while its task and the
   // next partition's wait for the driver to take their blocks: the sync
   // ends with the pipe's exception at once, not after an RPC ask timeout,
-  // and leaves no job, block endpoint or core slot behind.
+  // and leaves no job, sink endpoint, core slot or executor ERROR behind.
   test("a pipe killed mid-partition ends the sync and leaves nothing running") {
     val tap = ConfigParser.parseTap(
       """{"database":"db1","streams":[
         |{"name":"big","sql":"SELECT id, repeat('x', 100) AS pad FROM range(0, 300000, 1, 3)",
         | "key_properties":["id"],
         | "columns":[{"name":"id","type":"bigint"},{"name":"pad","type":"text"}]}]}""".stripMargin)
-    val endpoints = RecordBlocks.Endpoints.get
+    val endpoints = TaskChannel.Endpoints.get
     val buf = new ByteArrayOutputStream()
-    val t0 = System.nanoTime()
-    intercept[KilledPipe](Tap.syncAll(spark, tap, None, killingStream(buf, 5000)))
-    assert(System.nanoTime() - t0 < 30L * 1000 * 1000 * 1000)
+    val errors = SyncCleanup.executorErrors {
+      val t0 = System.nanoTime()
+      intercept[KilledPipe](Tap.syncAll(spark, tap, None, killingStream(buf, 5000)))
+      assert(System.nanoTime() - t0 < 30L * 1000 * 1000 * 1000)
+      SyncCleanup.assertSettled(spark, "after-killed-pipe", endpoints)
+    }
     assert(buf.toString("UTF-8").split("\n").length === 5000)
-    SyncCleanup.assertSettled(spark, "after-killed-pipe", endpoints)
+    // the tasks the sync's end stops end as killed: the tap's stderr
+    // carries only its CRITICAL line
+    assert(errors.isEmpty, errors.mkString("\n"))
   }
 
-  // The remote path: on a local-cluster master every task runs in an
-  // executor JVM of its own, so each block reaches the driver as a Java
-  // serialized message over the network, not as the object a local task
-  // hands over. graft.Main runs in a child JVM (one SparkContext per JVM)
-  // with this build's Spark jars, and its stdout must be the lines an
-  // in-process sync prints, modulo time_extracted.
-  test("RECORD mode on a local-cluster master prints what local mode prints") {
-    val cfg = Files.createTempFile("tap-cluster", ".json")
-    Files.writeString(cfg,
-      """{"database":"db1","state_message_frequency":997,"streams":[
-        |{"name":"srt","sql":"SELECT id, id * 3 AS k, repeat('x', 20) AS pad FROM range(0, 30000, 1, 3) WHERE id * 3 > :rep_key_val",
-        | "key_properties":["id"],"replication_key":"k","replication_key_value_start":-1,"is_sorted":true,
-        | "columns":[{"name":"id","type":"bigint"},{"name":"k","type":"bigint"},{"name":"pad","type":"text"}]}]}""".stripMargin)
+  /** stdout of `graft.Main --config cfg` in a child JVM (one SparkContext
+    * per JVM) on a `local-cluster` master, with this build's Spark jars.
+    */
+  private def onLocalCluster(cfg: java.nio.file.Path): String = {
     val classes = sys.props("java.class.path").split(java.io.File.pathSeparator)
       .filter(p => new java.io.File(p).isDirectory).mkString(java.io.File.pathSeparator)
     val opens = Seq("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net", "java.nio",
@@ -275,12 +271,56 @@ class TapSpec extends AnyFunSuite {
     if (!proc.waitFor(240, java.util.concurrent.TimeUnit.SECONDS)) proc.destroyForcibly().waitFor()
     Files.walk(home).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
     assert(proc.exitValue() === 0, Files.readAllLines(stderr).asScala.takeRight(20).mkString("\n"))
-    val remote = Files.readString(stdout)
-    val buf = new ByteArrayOutputStream()
-    Tap.syncAll(spark, ConfigParser.parseTap(Files.readString(cfg)), None, new PrintStream(buf, true, "UTF-8"))
+    Files.readString(stdout)
+  }
+
+  // The remote path: on a local-cluster master every task runs in an
+  // executor JVM of its own, so each RECORD block and each batch chunk
+  // descriptor reaches the driver as a Java serialized message over the
+  // network, not as the object a local task hands over, from a task that
+  // looks the driver's endpoint up remotely and reads the batch write's
+  // broadcast Hadoop conf. stdout must be the lines an in-process sync
+  // prints, modulo time_extracted and the batch files' uuids and root,
+  // and the batch files must hold the same lines.
+  test("RECORD mode on a local-cluster master prints what local mode prints") {
+    def stream(extra: String) =
+      s"""{"database":"db1","state_message_frequency":997$extra,"streams":[
+         |{"name":"srt","sql":"SELECT id, id * 3 AS k, repeat('x', 20) AS pad FROM range(0, 30000, 1, 3) WHERE id * 3 > :rep_key_val",
+         | "key_properties":["id"],"replication_key":"k","replication_key_value_start":-1,"is_sorted":true,"batch_size":4000,
+         | "columns":[{"name":"id","type":"bigint"},{"name":"k","type":"bigint"},{"name":"pad","type":"text"}]}]}""".stripMargin
+    def inProcess(cfg: String): String = {
+      val buf = new ByteArrayOutputStream()
+      Tap.syncAll(spark, ConfigParser.parseTap(cfg), None, new PrintStream(buf, true, "UTF-8"))
+      buf.toString("UTF-8")
+    }
+    val cfg = Files.createTempFile("tap-cluster", ".json")
+    Files.writeString(cfg, stream(""))
+    val remote = onLocalCluster(cfg)
     def stable(out: String) = out.split("\n").toSeq.map(_.replaceAll(""""time_extracted":"[^"]*"""", ""))
     assert(stable(remote).count(_.contains(""""type":"RECORD"""")) === 30000)
-    assert(stable(remote) === stable(buf.toString("UTF-8")))
+    assert(stable(remote) === stable(inProcess(Files.readString(cfg))))
+
+    def batch(root: java.nio.file.Path) = stream(
+      s""","batch_config":{"encoding":{"format":"jsonl","compression":"gzip"},"storage":{"root":"${root.toUri}"}}""")
+    val (remoteRoot, localRoot) = (Files.createTempDirectory("tap-cluster-batch"), Files.createTempDirectory("tap-batch"))
+    Files.writeString(cfg, batch(remoteRoot))
+    val Chunk = """"file:[^"]*--srt-[0-9a-f-]{36}-(\d+)\.json\.gz"""".r
+    /** The BATCH/STATE lines with each manifest's file as its chunk
+      * index, and the lines of the files in announcement order.
+      */
+    def announced(out: String): (Seq[String], Seq[String]) = {
+      val lines = out.split("\n").toSeq
+      val files = lines.flatMap(l => Chunk.findAllMatchIn(l).map(_.matched.drop(1).dropRight(1)))
+      (lines.map(Chunk.replaceAllIn(_, m => s""""chunk-${m.group(1)}"""")),
+        files.flatMap(f => scala.io.Source.fromInputStream(new java.util.zip.GZIPInputStream(
+          Files.newInputStream(java.nio.file.Paths.get(java.net.URI.create(f)))), "UTF-8").getLines().toSeq))
+    }
+    val (remoteMessages, remoteLines) = announced(onLocalCluster(cfg))
+    val (localMessages, localLines) = announced(inProcess(batch(localRoot)))
+    assert(remoteMessages.count(_.contains(""""type":"BATCH"""")) === 9) // 3 partitions of 4000/4000/2000
+    assert(remoteMessages === localMessages)
+    assert(remoteLines.size === 30000)
+    assert(remoteLines === localLines)
   }
 
   // An UNSORTED stream's mid-sync STATE carries progress_markers only:
