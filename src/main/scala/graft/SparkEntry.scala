@@ -1,18 +1,31 @@
 package graft
 
-import graft.queries.{PipelineQueries, SqlQueries, TapQueries}
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` is the full operator inventory: the tap's own surface
-  * (SURVEY §2.1/§2.2), the SQL surface the reference delegates to
-  * PostgreSQL (§2.3), and the training-data pipeline extensions.
-  * `oracleSql` carries the DuckDB-equivalent SQL for every entry whose
-  * semantics are SQL-expressible; hash-based operators get rows-only
-  * checks plus value-level ScalaTest coverage.
+  * The catalog is composed from one registry per query family under
+  * `graft.queries`: the tap's own surface (SURVEY §2.1/§2.2,
+  * [[TapQueries]]), the SQL surface the reference delegates to PostgreSQL
+  * (§2.3, [[SqlQueries]]), and the training-data pipeline extensions
+  * (text, events, dedup, search, sampling, tables, composed pipelines,
+  * graphs, web/multimodal, entity resolution). Each family registers an
+  * entry once, with its plan and its DuckDB oracle side by side.
   */
 object SparkEntry {
+
+  private val families: Seq[QueryFamily] = Seq(
+    TapQueries, SqlQueries, TextQueries, EventQueries, DedupQueries,
+    SearchQueries, SampleQueries, TableQueries, CompositionQueries,
+    GraphQueries, WebQueries, EntityResolutionQueries)
+
+  private lazy val entries: Seq[Entry] = {
+    val all = families.flatMap(_.entries)
+    val dup = all.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }
+    require(dup.isEmpty, s"entries registered twice: ${dup.mkString(", ")}")
+    all
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -20,12 +33,12 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    TapQueries.queries ++ SqlQueries.queries ++ PipelineQueries.queries
+    entries.map(e => e.name -> e.plan).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops (the
     * driver records a weaker rows-only check for those).
     */
   def oracleSql: Map[String, String] =
-    TapQueries.oracles ++ SqlQueries.oracles ++ PipelineQueries.oracles
+    entries.flatMap(e => e.oracle.map(e.name -> _)).toMap
 }

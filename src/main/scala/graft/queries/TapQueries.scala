@@ -4,7 +4,7 @@ import graft.Tables
 import graft.config.ConfigParser
 import graft.operators.{Flattener, StreamMap, StreamMaps}
 import graft.sources.StreamSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Queries exercising the tap's own operator surface (SURVEY §2.1/§2.2):
@@ -13,9 +13,7 @@ import org.apache.spark.sql.functions._
   * path (config JSON → parse → StreamSource.native → conformance), not a
   * hand-built equivalent.
   */
-object TapQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object TapQueries extends QueryFamily {
 
   private def run(json: String): Q = (spark, dir) => {
     Tables.register(spark, dir)
@@ -228,14 +226,17 @@ object TapQueries {
       |"key_properties":["n_nationkey"],"execution":"auto",
       |"columns":[{"name":"n_nationkey","type":"int"},{"name":"n_name","type":"text"}]}""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "tap_pushdown_fallback" -> ((spark, dir) => {
+  lazy val entries: Seq[Entry] = Seq(
+
+    entry("tap_pushdown_fallback", (spark, dir) => {
       Tables.register(spark, dir)
       val tap = derbyNationTap(spark, dir, "graftpush")
       StreamSource.execute(spark, tap, ConfigParser.parseStream(pushdownJson))
-    }),
+    },
+      """SELECT n_nationkey, n_name FROM nation
+        |ORDER BY n_nationkey FETCH FIRST 5 ROWS ONLY""".stripMargin),
 
-    "tap_jdbc_partitioned" -> ((spark, dir) => {
+    entry("tap_jdbc_partitioned", (spark, dir) => {
       import graft.state.Bookmarks
       val tap = derbyOrdersTap(spark, dir, "graftpart")
       val stream = ConfigParser.parseStream(jdbcPartitionedJson)
@@ -256,109 +257,18 @@ object TapQueries {
         .withColumn("bookmark", lit(bm(single)))
         .unionByName(part.withColumn("path", lit("partitioned"))
           .withColumn("bookmark", lit(bm(part))))
-    }),
-
-    "tap_to_char_numeric" -> run(toCharNumericJson),
-    "tap_raw_sql_scan" -> run(rawScanJson),
-    "tap_incremental" -> run(incrementalJson),
-    "tap_conform_cast" -> run(conformJson),
-    "tap_dialect_rewrite" -> run(dialectJson),
-    "tap_distinct_on" -> run(distinctOnJson),
-    "tap_json_ops" -> run(jsonOpsJson),
-    "tap_any_array" -> run(anyArrayJson),
-    "tap_similar_to" -> run(similarToJson),
-    "tap_operator_collate" -> run(operatorCollateJson),
-    "tap_projection" -> run(projectionJson),
-    "tap_interval" -> run(intervalJson),
-    "tap_array_agg" -> run(arrayAggJson),
-
-    "tap_stream_map" -> ((spark, dir) => {
-      val li = Tables.read(spark, dir, "lineitem")
-        .select("l_orderkey", "l_linenumber", "l_quantity",
-          "l_extendedprice", "l_discount", "l_returnflag")
-      StreamMaps(li, StreamMap(
-        computed = Seq("revenue" -> "l_extendedprice * (1 - l_discount)"),
-        aliases = Seq("l_returnflag" -> "flag"),
-        dropped = Seq("l_quantity", "l_extendedprice", "l_discount"),
-        filter = Some("l_quantity > 10.0")))
-    }),
-
-    "tap_flatten" -> ((spark, dir) => {
-      val df = Tables.read(spark, dir, "customer").select(
-        struct(col("c_custkey").as("custkey"),
-          struct(col("c_acctbal").as("bal"),
-            col("c_mktsegment").as("seg")).as("acct")).as("c"),
-        col("c_name"))
-      Flattener.flatten(df)
-    }),
-
-    // JSON-value flattening (VERDICT r8 missing #3, r9-ADVICE form): a
-    // PG json/jsonb value arriving as a STRING column — EXPLICITLY
-    // declared via json_columns, with the inference sample ordered by
-    // the key — parses through the bounded schema-inference hop, then
-    // flattens to `__` names like any struct, leaving a `props__raw`
-    // fallback (all-null here: every value is a matching object). The
-    // JSON text is constructed deterministically from fixture columns,
-    // so the oracle replays the flattened values straight from the base
-    // table — the whole hop (inference, parse, name mangling, value
-    // extraction, raw fallback) is hash-checked.
-    "tap_flatten_json" -> ((spark, dir) => {
-      val o = Tables.read(spark, dir, "orders").select(
-        col("o_orderkey").cast("long").as("okey"),
-        concat(lit("{\"cust\":"), col("o_custkey").cast("string"),
-          lit(",\"meta\":{\"status\":\""), col("o_orderstatus"),
-          lit("\"}}")).as("props"))
-      Flattener.flatten(Flattener.parseJsonStrings(o, Seq("props"),
-        orderBy = Seq("okey")))
-    }),
-
-    // The lossless-hop pin (r9 ADVICE high, r10 ADVICE null-literal
-    // gap): PG json routinely mixes objects with arrays, scalars and
-    // the JSON `null` LITERAL in ONE column. Object rows parse and
-    // flatten; every non-object row — INCLUDING the literal "null",
-    // which from_json turns into a null struct without touching the
-    // corrupt-record channel — keeps its ORIGINAL text in
-    // `props__raw`; nothing silently NULLs. The four shapes key off
-    // o_orderkey % 4, so the oracle replays both the parsed field and
-    // the raw fallback exactly.
-    "tap_flatten_json_mixed" -> ((spark, dir) => {
-      val o = Tables.read(spark, dir, "orders").select(
-        col("o_orderkey").cast("long").as("okey"),
-        when(col("o_orderkey") % 4 === 0,
-            concat(lit("{\"cust\":"), col("o_custkey").cast("string"),
-              lit("}")))
-          .when(col("o_orderkey") % 4 === 1,
-            concat(lit("["), col("o_custkey").cast("string"), lit(",7]")))
-          .when(col("o_orderkey") % 4 === 2, lit("null"))
-          .otherwise(lit("plain text, not json")).as("props"))
-      Flattener.flatten(Flattener.parseJsonStrings(o, Seq("props"),
-        orderBy = Seq("okey")))
-    }))
-
-  def oracles: Map[String, String] = Map(
-    "tap_pushdown_fallback" ->
-      """SELECT n_nationkey, n_name FROM nation
-        |ORDER BY n_nationkey FETCH FIRST 5 ROWS ONLY""".stripMargin,
-    "tap_jdbc_partitioned" ->
+    },
       """WITH base AS (SELECT o_orderkey, o_custkey, o_totalprice
         |    FROM orders WHERE o_orderkey > 32),
         |  bm AS (SELECT CAST(max(o_orderkey) AS VARCHAR) AS bookmark FROM base)
         |SELECT 'single' AS path, b.*, bm.bookmark FROM base b CROSS JOIN bm
         |UNION ALL
-        |SELECT 'partitioned' AS path, b.*, bm.bookmark FROM base b CROSS JOIN bm""".stripMargin,
-    "tap_raw_sql_scan" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate
-        |FROM orders WHERE o_totalprice > 1000.0""".stripMargin,
-    "tap_incremental" ->
-      """SELECT o_orderkey, o_custkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate
-        |FROM orders WHERE o_orderdate > TIMESTAMP '1995-06-01 00:00:00'""".stripMargin,
-    "tap_conform_cast" ->
-      """SELECT CAST(c_custkey AS VARCHAR) AS c_custkey, c_name,
-        |CAST(c_nationkey AS BIGINT) AS c_nationkey, c_acctbal FROM customer""".stripMargin,
-    // fixed-template DuckDB replay of the PG numeric to_char rules:
-    // grouped format + lpad for the sign column, printf %0 for forced
-    // zeros, floating '-' adjacent to the digits
-    "tap_to_char_numeric" ->
+        |SELECT 'partitioned' AS path, b.*, bm.bookmark FROM base b CROSS JOIN bm""".stripMargin),
+
+    entry("tap_to_char_numeric", run(toCharNumericJson),
+      // fixed-template DuckDB replay of the PG numeric to_char rules:
+      // grouped format + lpad for the sign column, printf %0 for forced
+      // zeros, floating '-' adjacent to the digits
       """WITH v AS (SELECT c_custkey,
         |    CAST(c_acctbal AS DECIMAL(12,2)) AS a FROM customer),
         |f AS (SELECT c_custkey, a,
@@ -371,71 +281,152 @@ object TapQueries {
         |  CASE WHEN a < 0 THEN '-' || g ELSE g END AS amt_fm,
         |  concat(CASE WHEN a < 0 THEN '-' ELSE ' ' END, z) AS amt_zero,
         |  concat(g, CASE WHEN a < 0 THEN '-' ELSE '+' END) AS amt_s
-        |FROM f""".stripMargin,
-    "tap_dialect_rewrite" ->
+        |FROM f""".stripMargin),
+
+    entry("tap_raw_sql_scan", run(rawScanJson),
+      """SELECT o_orderkey, o_custkey, o_totalprice, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate
+        |FROM orders WHERE o_totalprice > 1000.0""".stripMargin),
+
+    entry("tap_incremental", run(incrementalJson),
+      """SELECT o_orderkey, o_custkey, CAST(o_orderdate AS TIMESTAMP) AS o_orderdate
+        |FROM orders WHERE o_orderdate > TIMESTAMP '1995-06-01 00:00:00'""".stripMargin),
+
+    entry("tap_conform_cast", run(conformJson),
+      """SELECT CAST(c_custkey AS VARCHAR) AS c_custkey, c_name,
+        |CAST(c_nationkey AS BIGINT) AS c_nationkey, c_acctbal FROM customer""".stripMargin),
+
+    entry("tap_dialect_rewrite", run(dialectJson),
       """SELECT lower('1441C21D-9921-4a1d-B239-9C6EA18AF234') AS id,
         |TIMESTAMP '2021-11-22 11:45:11.062824' AS last_updated,
         |CAST(epoch(TIMESTAMP '2021-11-22 00:00:00') AS BIGINT) AS epoch_s,
         |n_nationkey, n_name,
         |CASE WHEN regexp_matches(n_name, '^A') THEN 1 ELSE 0 END AS starts_a
-        |FROM nation""".stripMargin,
-    "tap_distinct_on" ->
+        |FROM nation""".stripMargin),
+
+    entry("tap_distinct_on", run(distinctOnJson),
       """SELECT DISTINCT ON (l_orderkey) l_orderkey, l_linenumber, l_quantity
-        |FROM lineitem ORDER BY l_orderkey, l_quantity DESC, l_linenumber""".stripMargin,
-    "tap_json_ops" ->
+        |FROM lineitem ORDER BY l_orderkey, l_quantity DESC, l_linenumber""".stripMargin),
+
+    entry("tap_json_ops", run(jsonOpsJson),
       """SELECT event_id, props ->> 'k' AS k_txt,
         |json_extract_string('{"a": {"b": [5,' || (props ->> 'k') || ']}}', '$.a.b[1]') AS nested,
         |json_extract_string('{"arr": [10,20,30]}', '$.arr[1]') AS second
-        |FROM events WHERE CAST(props ->> 'k' AS INTEGER) >= 50""".stripMargin,
-    "tap_any_array" ->
+        |FROM events WHERE CAST(props ->> 'k' AS INTEGER) >= 50""".stripMargin),
+
+    entry("tap_any_array", run(anyArrayJson),
       """SELECT n_nationkey, n_name, 3 AS n_tags FROM nation
-        |WHERE n_name IN ('FRANCE','GERMANY','CANADA','JAPAN') OR n_nationkey IN (1,2)""".stripMargin,
-    // DuckDB's SIMILAR TO is raw regex, NOT PG SIMILAR TO — the oracle
-    // states the PG semantics (\_ literal, _ any-char, . ^ $ literal).
-    "tap_similar_to" ->
+        |WHERE n_name IN ('FRANCE','GERMANY','CANADA','JAPAN') OR n_nationkey IN (1,2)""".stripMargin),
+
+    entry("tap_similar_to", run(similarToJson),
+      // DuckDB's SIMILAR TO is raw regex, NOT PG SIMILAR TO — the oracle
+      // states the PG semantics (\_ literal, _ any-char, . ^ $ literal).
       """SELECT n_nationkey, n_name FROM nation
         |WHERE regexp_full_match(n_name, 'NATION_(1|2).')
         |OR regexp_full_match(n_name, 'NATION\.5')
-        |OR regexp_full_match(n_name, 'NATION.1\$')""".stripMargin,
-    "tap_operator_collate" ->
+        |OR regexp_full_match(n_name, 'NATION.1\$')""".stripMargin),
+
+    entry("tap_operator_collate", run(operatorCollateJson),
       """SELECT n_nationkey, n_name FROM nation
         |WHERE n_name LIKE 'NATION_1%' OR n_name ILIKE 'nation_2_'
-        |OR n_name NOT ILIKE '%2%'""".stripMargin,
-    "tap_projection" -> "SELECT doc_id, lang, source FROM documents",
-    "tap_array_agg" ->
+        |OR n_name NOT ILIKE '%2%'""".stripMargin),
+
+    entry("tap_projection", run(projectionJson),
+      "SELECT doc_id, lang, source FROM documents"),
+
+    entry("tap_interval", run(intervalJson),
+      // non-point normalized periods: the standard OVERLAPS formula
+      // reduces to the half-open check s1 < e2 AND s2 < e1
+      """SELECT o_orderkey,
+        |CAST(o_orderdate AS TIMESTAMP) + INTERVAL '30 days' AS due,
+        |CAST(o_orderdate AS TIMESTAMP) + INTERVAL '12 hours' AS due_h
+        |FROM orders
+        |WHERE CAST(o_orderdate AS TIMESTAMP) < TIMESTAMP '1995-06-08 00:00:00'
+        |AND TIMESTAMP '1995-06-01 00:00:00' < CAST(o_orderdate AS TIMESTAMP) + INTERVAL '7 days'""".stripMargin),
+
+    entry("tap_array_agg", run(arrayAggJson),
       """SELECT o_custkey, array_to_string(array_agg(o_orderkey
         |    ORDER BY o_orderkey DESC), ',') AS recent_desc,
         |  array_to_string(array_agg(o_orderkey ORDER BY o_orderkey), ',')
         |    AS all_asc,
         |  count(*) AS n
         |FROM orders WHERE o_totalprice > 100000.0
-        |GROUP BY o_custkey""".stripMargin,
-    // non-point normalized periods: the standard OVERLAPS formula
-    // reduces to the half-open check s1 < e2 AND s2 < e1
-    "tap_interval" ->
-      """SELECT o_orderkey,
-        |CAST(o_orderdate AS TIMESTAMP) + INTERVAL '30 days' AS due,
-        |CAST(o_orderdate AS TIMESTAMP) + INTERVAL '12 hours' AS due_h
-        |FROM orders
-        |WHERE CAST(o_orderdate AS TIMESTAMP) < TIMESTAMP '1995-06-08 00:00:00'
-        |AND TIMESTAMP '1995-06-01 00:00:00' < CAST(o_orderdate AS TIMESTAMP) + INTERVAL '7 days'""".stripMargin,
-    "tap_stream_map" ->
+        |GROUP BY o_custkey""".stripMargin),
+
+    entry("tap_stream_map", (spark, dir) => {
+      val li = Tables.read(spark, dir, "lineitem")
+        .select("l_orderkey", "l_linenumber", "l_quantity",
+          "l_extendedprice", "l_discount", "l_returnflag")
+      StreamMaps(li, StreamMap(
+        computed = Seq("revenue" -> "l_extendedprice * (1 - l_discount)"),
+        aliases = Seq("l_returnflag" -> "flag"),
+        dropped = Seq("l_quantity", "l_extendedprice", "l_discount"),
+        filter = Some("l_quantity > 10.0")))
+    },
       """SELECT l_orderkey, l_linenumber, l_returnflag AS flag,
         |l_extendedprice * (1 - l_discount) AS revenue
-        |FROM lineitem WHERE l_quantity > 10.0""".stripMargin,
-    "tap_flatten" ->
+        |FROM lineitem WHERE l_quantity > 10.0""".stripMargin),
+
+    entry("tap_flatten", (spark, dir) => {
+      val df = Tables.read(spark, dir, "customer").select(
+        struct(col("c_custkey").as("custkey"),
+          struct(col("c_acctbal").as("bal"),
+            col("c_mktsegment").as("seg")).as("acct")).as("c"),
+        col("c_name"))
+      Flattener.flatten(df)
+    },
       """SELECT c_custkey AS c__custkey, c_acctbal AS c__acct__bal,
-        |c_mktsegment AS c__acct__seg, c_name FROM customer""".stripMargin,
-    // the JSON hop replayed from the base columns the JSON was built of;
-    // every value parses, so the raw fallback is uniformly NULL
-    "tap_flatten_json" ->
+        |c_mktsegment AS c__acct__seg, c_name FROM customer""".stripMargin),
+
+    // JSON-value flattening (VERDICT r8 missing #3, r9-ADVICE form): a
+    // PG json/jsonb value arriving as a STRING column — EXPLICITLY
+    // declared via json_columns, with the inference sample ordered by
+    // the key — parses through the bounded schema-inference hop, then
+    // flattens to `__` names like any struct, leaving a `props__raw`
+    // fallback (all-null here: every value is a matching object). The
+    // JSON text is constructed deterministically from fixture columns,
+    // so the oracle replays the flattened values straight from the base
+    // table — the whole hop (inference, parse, name mangling, value
+    // extraction, raw fallback) is hash-checked.
+    entry("tap_flatten_json", (spark, dir) => {
+      val o = Tables.read(spark, dir, "orders").select(
+        col("o_orderkey").cast("long").as("okey"),
+        concat(lit("{\"cust\":"), col("o_custkey").cast("string"),
+          lit(",\"meta\":{\"status\":\""), col("o_orderstatus"),
+          lit("\"}}")).as("props"))
+      Flattener.flatten(Flattener.parseJsonStrings(o, Seq("props"),
+        orderBy = Seq("okey")))
+    },
+      // the JSON hop replayed from the base columns the JSON was built of;
+      // every value parses, so the raw fallback is uniformly NULL
       """SELECT CAST(o_orderkey AS BIGINT) AS okey,
         |CAST(o_custkey AS BIGINT) AS props__cust,
         |o_orderstatus AS props__meta__status,
-        |CAST(NULL AS VARCHAR) AS props__raw FROM orders""".stripMargin,
-    // mixed-shape hop: objects parse; arrays/scalars/the JSON null
-    // literal keep their exact original text in the raw fallback
-    "tap_flatten_json_mixed" ->
+        |CAST(NULL AS VARCHAR) AS props__raw FROM orders""".stripMargin),
+
+    // The lossless-hop pin (r9 ADVICE high, r10 ADVICE null-literal
+    // gap): PG json routinely mixes objects with arrays, scalars and
+    // the JSON `null` LITERAL in ONE column. Object rows parse and
+    // flatten; every non-object row — INCLUDING the literal "null",
+    // which from_json turns into a null struct without touching the
+    // corrupt-record channel — keeps its ORIGINAL text in
+    // `props__raw`; nothing silently NULLs. The four shapes key off
+    // o_orderkey % 4, so the oracle replays both the parsed field and
+    // the raw fallback exactly.
+    entry("tap_flatten_json_mixed", (spark, dir) => {
+      val o = Tables.read(spark, dir, "orders").select(
+        col("o_orderkey").cast("long").as("okey"),
+        when(col("o_orderkey") % 4 === 0,
+            concat(lit("{\"cust\":"), col("o_custkey").cast("string"),
+              lit("}")))
+          .when(col("o_orderkey") % 4 === 1,
+            concat(lit("["), col("o_custkey").cast("string"), lit(",7]")))
+          .when(col("o_orderkey") % 4 === 2, lit("null"))
+          .otherwise(lit("plain text, not json")).as("props"))
+      Flattener.flatten(Flattener.parseJsonStrings(o, Seq("props"),
+        orderBy = Seq("okey")))
+    },
+      // mixed-shape hop: objects parse; arrays/scalars/the JSON null
+      // literal keep their exact original text in the raw fallback
       """SELECT CAST(o_orderkey AS BIGINT) AS okey,
         |CASE WHEN o_orderkey % 4 = 0 THEN CAST(o_custkey AS BIGINT) END
         |  AS props__cust,
@@ -444,5 +435,5 @@ object TapQueries {
         |  WHEN o_orderkey % 4 = 2 THEN 'null'
         |  WHEN o_orderkey % 4 = 3 THEN 'plain text, not json' END
         |  AS props__raw
-        |FROM orders""".stripMargin)
+        |FROM orders""".stripMargin))
 }

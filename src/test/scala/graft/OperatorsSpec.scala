@@ -31,7 +31,7 @@ class OperatorsSpec extends AnyFunSuite {
       (7L, "purchase", new java.sql.Timestamp(base.getTime + 500000L * 1000L)),
       (8L, "view", base)) // user with no signup: all stages null
     .toDF("user_id", "event_type", "ts_s")
-    val out = graft.queries.PipelineQueries
+    val out = graft.queries.EventQueries
       .funnelBounded(bot.union(anchors))
       .orderBy("user_id")
       .collect()

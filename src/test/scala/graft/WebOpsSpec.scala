@@ -38,7 +38,7 @@ class WebOpsSpec extends AnyFunSuite {
   }
 
   test("canonicalization is idempotent on the synthetic corpus") {
-    val docs = graft.queries.PipelineQueries
+    val docs = graft.queries.WebQueries
       .webDocs(spark, "/root/testdata/sf0.001")
     val twice = docs
       .select(WebOps.canonicalizeUrl(col("url")).as("c1"))
@@ -65,7 +65,7 @@ class WebOpsSpec extends AnyFunSuite {
   }
 
   test("urlDedup keeps exactly the min id per canonical group") {
-    val docs = graft.queries.PipelineQueries
+    val docs = graft.queries.WebQueries
       .webDocs(spark, "/root/testdata/sf0.001")
     val out = WebOps.urlDedup(docs, "url", "doc_id").cache()
     val n = out.count()
@@ -84,7 +84,7 @@ class WebOpsSpec extends AnyFunSuite {
   }
 
   test("domain stats and cap agree with a recomputed flat pass") {
-    val docs = graft.queries.PipelineQueries
+    val docs = graft.queries.WebQueries
       .webDocs(spark, "/root/testdata/sf0.001")
     val stats = WebOps.domainStats(docs, "url", "n_chars").cache()
     val flat = docs.select(
