@@ -2,11 +2,11 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Dedup, Similarity, TextAnalysis}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import DedupQueries.substrApplyCtesForPipeline
-import SqlFragments.{markerList, stopList}
+import SqlFragments.{markerList, qualityRatios, qualityScore, stopList}
 import StreamFixtures.{sentinelBounds, streamWithSentinel}
 
 /** Composed `pipeline_*` entries: several operators chained the way a
@@ -25,19 +25,7 @@ object CompositionQueries extends QueryFamily {
     // record. Plants guarantee each stage fires: some corpus and batch
     // docs share an exact text, others share an appended span.
     entry("pipeline_ingest", (spark, dir) => {
-      val raven = "the raven sat on the bust of pallas above the chamber door"
-      val plant =
-        "by the riverbank the quiet fox waited for the morning light to come"
-      val docs = Tables.read(spark, dir, "documents")
-      val aug = docs.withColumn("text",
-        when(col("doc_id") % 3 =!= 2 && col("doc_id") % 17 === 0, lit(raven))
-          .when(col("doc_id") % 3 === 2 && col("doc_id") % 13 === 0, lit(raven))
-          .otherwise(concat(col("text"),
-            when(col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 0,
-              lit(" " + plant))
-              .when(col("doc_id") % 3 === 2 && col("doc_id") % 7 === 0,
-                lit(" " + plant))
-              .otherwise(lit("")))))
+      val aug = ingestCorpus(spark, dir)
       val corpus = aug.where(col("doc_id") % 3 =!= 2)
       val batch = aug.where(col("doc_id") % 3 === 2)
       val exact = batch.join(
@@ -73,19 +61,7 @@ object CompositionQueries extends QueryFamily {
     entry("pipeline_ingest_stream", (spark, dir) => {
       import spark.implicits._
       import org.apache.spark.sql.streaming.OutputMode
-      val raven = "the raven sat on the bust of pallas above the chamber door"
-      val plant =
-        "by the riverbank the quiet fox waited for the morning light to come"
-      val docs = Tables.read(spark, dir, "documents")
-      val aug = docs.withColumn("text",
-        when(col("doc_id") % 3 =!= 2 && col("doc_id") % 17 === 0, lit(raven))
-          .when(col("doc_id") % 3 === 2 && col("doc_id") % 13 === 0, lit(raven))
-          .otherwise(concat(col("text"),
-            when(col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 0,
-              lit(" " + plant))
-              .when(col("doc_id") % 3 === 2 && col("doc_id") % 7 === 0,
-                lit(" " + plant))
-              .otherwise(lit("")))))
+      val aug = ingestCorpus(spark, dir)
       val corpus = aug.where(col("doc_id") % 3 =!= 2)
       val batch = aug.where(col("doc_id") % 3 === 2)
       val corpusTexts = corpus.select(col("text")).distinct()
@@ -148,47 +124,12 @@ object CompositionQueries extends QueryFamily {
       // fold (sorted list, one float sum) → floored budgets → per-lang
       // quality-ordered prefix sums, admission while cum ≤ budget
       s"""
-        |WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\\s+') AS toks,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
-        |  FROM documents),
-        |sc AS (SELECT doc_id,
-        |  len(list_filter(toks, x -> list_contains(${markerList("en")}, x))) AS s_en,
-        |  len(list_filter(toks, x -> list_contains(${markerList("fr")}, x))) AS s_fr,
-        |  len(list_filter(toks, x -> list_contains(${markerList("es")}, x))) AS s_es,
-        |  len(list_filter(toks, x -> list_contains(${markerList("de")}, x))) AS s_de,
-        |  len(list_filter(toks, x -> list_contains(${markerList("zh")}, x))) AS s_zh
-        |  FROM t),
-        |lg AS (SELECT doc_id, CASE
-        |  WHEN greatest(s_en, s_fr, s_es, s_de, s_zh) = 0 THEN 'und'
-        |  WHEN s_en = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'en'
-        |  WHEN s_fr = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'fr'
-        |  WHEN s_es = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'es'
-        |  WHEN s_de = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'de'
-        |  WHEN s_zh = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'zh'
-        |  ELSE 'und' END AS lang
-        |  FROM sc),
-        |c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
-        |  FROM lg GROUP BY 1),
-        |pp AS (SELECT list(struct_pack(lang := lang, n := n)
-        |    ORDER BY lang, n) AS arr FROM c),
-        |dd AS (SELECT arr, list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(arr, x -> sqrt(CAST(x.n AS DOUBLE)))),
-        |    (a, b) -> a + b) AS denom FROM pp),
-        |bb AS (SELECT x.lang AS lang,
-        |    CAST(floor(sqrt(CAST(x.n AS DOUBLE)) / denom * 16000.0)
-        |      AS BIGINT) AS budget
-        |  FROM (SELECT unnest(arr) AS x, denom FROM dd)),
+        |$multilingualBudgetCtes
         |m AS (SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
-        |  CAST(length(regexp_replace(text, '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-        |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS digit_ratio,
-        |  CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / CAST(greatest(ntok, 1) AS DOUBLE) AS stopword_ratio
+        |$qualityRatios
         |  FROM t),
         |q AS (SELECT doc_id, n_tokens,
-        |  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4 +
-        |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
-        |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality
+        |$qualityScore
         |  FROM m),
         |o AS (SELECT lg.lang, q.doc_id, q.quality, q.n_tokens,
         |  CAST(sum(q.n_tokens) OVER (PARTITION BY lg.lang
@@ -245,38 +186,7 @@ object CompositionQueries extends QueryFamily {
       // per-language ID-ordered prefix sums (event order is id order by
       // construction; arrival replaces quality as the admission order)
       s"""
-        |WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\\s+') AS toks,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
-        |  FROM documents),
-        |sc AS (SELECT doc_id,
-        |  len(list_filter(toks, x -> list_contains(${markerList("en")}, x))) AS s_en,
-        |  len(list_filter(toks, x -> list_contains(${markerList("fr")}, x))) AS s_fr,
-        |  len(list_filter(toks, x -> list_contains(${markerList("es")}, x))) AS s_es,
-        |  len(list_filter(toks, x -> list_contains(${markerList("de")}, x))) AS s_de,
-        |  len(list_filter(toks, x -> list_contains(${markerList("zh")}, x))) AS s_zh
-        |  FROM t),
-        |lg AS (SELECT doc_id, CASE
-        |  WHEN greatest(s_en, s_fr, s_es, s_de, s_zh) = 0 THEN 'und'
-        |  WHEN s_en = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'en'
-        |  WHEN s_fr = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'fr'
-        |  WHEN s_es = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'es'
-        |  WHEN s_de = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'de'
-        |  WHEN s_zh = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'zh'
-        |  ELSE 'und' END AS lang
-        |  FROM sc),
-        |c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
-        |  FROM lg GROUP BY 1),
-        |pp AS (SELECT list(struct_pack(lang := lang, n := n)
-        |    ORDER BY lang, n) AS arr FROM c),
-        |dd AS (SELECT arr, list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(arr, x -> sqrt(CAST(x.n AS DOUBLE)))),
-        |    (a, b) -> a + b) AS denom FROM pp),
-        |bb AS (SELECT x.lang AS lang,
-        |    CAST(floor(sqrt(CAST(x.n AS DOUBLE)) / denom * 16000.0)
-        |      AS BIGINT) AS budget
-        |  FROM (SELECT unnest(arr) AS x, denom FROM dd)),
+        |$multilingualBudgetCtes
         |o AS (SELECT lg.lang, t.doc_id, CAST(t.ntok AS BIGINT) AS n_tokens,
         |  CAST(sum(t.ntok) OVER (PARTITION BY lg.lang ORDER BY t.doc_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
@@ -304,58 +214,12 @@ object CompositionQueries extends QueryFamily {
       val clean = ragCleanCorpus(docs)
       // 2. context-window chunking of the CLEAN corpus slice; ckey packs
       //    (doc, chunk) with search_passages' loud overflow guard
-      val chunks = graft.functions.Curation.chunkByTokens(
-          clean.where(col("doc_id") % 97 =!= 0), "clean", "doc_id",
-          window = 16, stride = 8)
-        .select((col("doc_id") * lit(1000000L) +
-            when(col("chunk_id") < lit(1000000L), col("chunk_id"))
-              .otherwise(raise_error(concat(
-                lit("pipeline_rag: chunk_id >= 1000000 breaks ckey packing: "),
-                col("chunk_id").cast("string"))))).as("ckey"),
-          col("chunk_text"))
-        .localCheckpoint(true)
-      val qdocs = clean.where(col("doc_id") % 97 === 0 &&
-        col("doc_id") < 1000 && length(trim(col("clean"))) > 0)
-      val qt = qdocs.select(col("doc_id").as("query_id"),
-        explode(array_distinct(slice(
-          split(Dedup.normalizeText(col("clean")), " "), 1, 5))).as("term"))
+      val chunks = ragChunks(clean, "pipeline_rag")
+      val (qdocs, qt) = ragQueries(clean)
       // 3. passage BM25: chunk hits → per-parent best chunk → doc top-10
       val hits = graft.functions.Retrieval.bm25TopK(
         chunks, "chunk_text", "ckey", qt, k = 50)
-      val lex = hits
-        .groupBy(col("query_id"), expr("doc_id div 1000000").as("parent"))
-        .agg(max(struct(col("score"), (-col("doc_id")).as("nck"))).as("m"))
-        .select(col("query_id"), col("parent").as("doc_id"),
-          col("m.score").as("score"))
-        .withColumn("rank", row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("score").desc, col("doc_id"))))
-        .where(col("rank") <= 10)
-      // 4. dense exact-cosine top-10 over the SAME query set, RRF-fused
-      val qv = emb
-        .join(broadcast(qdocs.select(col("doc_id").as("query_id"))),
-          col("vec_id") === col("query_id"))
-        .select(col("query_id"), col("embedding").as("qv"),
-          Similarity.norm(col("embedding")).as("qn"))
-      val vec = emb.where(col("vec_id") % 97 =!= 0)
-        .select(col("vec_id").as("doc_id"), col("embedding").as("cv"),
-          Similarity.norm(col("embedding")).as("cn"))
-        .crossJoin(broadcast(qv))
-        .select(col("query_id"), col("doc_id"),
-          round(Similarity.cosinePrenormed(col("qv"), col("cv"),
-            col("qn") * col("cn")), 6).as("sim"))
-        .withColumn("rank", row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("sim").desc, col("doc_id"))))
-        .where(col("rank") <= 10)
-      val fused = graft.functions.Retrieval.rrfFuse(lex, vec, k = 10)
-      // 5. MMR diversity rerank of the fused list: rel = rrf normalized
-      //    by the max achievable fused score 2·(10⁹ div 61) — ONE IEEE
-      //    division, bit-portable; diversity cosines come from the
-      //    embedding table through mmrRerank's bounded candidate join
-      val maxRrf = 2L * (1000000000L / 61L)
-      Similarity.mmrRerank(
-        fused.select(col("query_id"), col("doc_id"),
-          (col("rrf").cast("double") / lit(maxRrf.toDouble)).as("rel")),
-        emb, "vec_id", "embedding", k = 5)
+      ragRerank(qdocs, emb, hits)
     },
       // full composed replay: strip → chunk → passage BM25 → RRF fusion →
       // MMR recursion with rel = rrf/32786884.0 (= 2·(10⁹ div 61), the
@@ -563,14 +427,10 @@ object CompositionQueries extends QueryFamily {
         |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
         |  FROM kept),
         |m AS (SELECT doc_id, toks, CAST(ntok AS BIGINT) AS n_tokens,
-        |  CAST(length(regexp_replace(text, '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-        |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS digit_ratio,
-        |  CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / CAST(greatest(ntok, 1) AS DOUBLE) AS stopword_ratio
+        |$qualityRatios
         |  FROM t),
         |q AS (SELECT doc_id, toks, n_tokens,
-        |  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4 +
-        |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
-        |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality
+        |$qualityScore
         |  FROM m),
         |s AS (SELECT doc_id, n_tokens, quality,
         |  len(list_filter(toks, x -> list_contains(${markerList("en")}, x))) AS s_en,
@@ -628,14 +488,10 @@ object CompositionQueries extends QueryFamily {
         |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
         |  FROM kept),
         |m AS (SELECT doc_id, toks, CAST(ntok AS BIGINT) AS n_tokens,
-        |  CAST(length(regexp_replace(text, '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-        |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS digit_ratio,
-        |  CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / CAST(greatest(ntok, 1) AS DOUBLE) AS stopword_ratio
+        |$qualityRatios
         |  FROM t),
         |q AS (SELECT doc_id,
-        |  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4 +
-        |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
-        |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality
+        |$qualityScore
         |  FROM m),
         |good AS (SELECT k.doc_id, k.text FROM q JOIN kept k USING (doc_id)
         |  WHERE q.quality >= 0.5),
@@ -703,14 +559,10 @@ object CompositionQueries extends QueryFamily {
         |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
         |  FROM documents),
         |m AS (SELECT doc_id, toks, CAST(ntok AS BIGINT) AS n_tokens,
-        |  CAST(length(regexp_replace(text, '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-        |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS digit_ratio,
-        |  CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / CAST(greatest(ntok, 1) AS DOUBLE) AS stopword_ratio
+        |$qualityRatios
         |  FROM t),
         |q AS (SELECT doc_id,
-        |  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4 +
-        |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
-        |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality
+        |$qualityScore
         |  FROM m),
         |ntoks AS (SELECT doc_id,
         |  string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS t
@@ -843,21 +695,24 @@ object CompositionQueries extends QueryFamily {
     if (checkpoint) c.localCheckpoint(true) else c
   }
 
-  /** The hybrid query tail shared by the persisted-index RAG twins:
-    * passage BM25 from the postings index → per-parent best chunk →
-    * RRF fusion with exact dense cosine → MMR rerank. Identical to
-    * pipeline_rag's tail, so all three entries share ONE oracle.
+  /** The RAG query set: the %97 slice of the clean corpus below id 1000,
+    * and its first five distinct normalized terms per query.
     */
-  private[graft] def ragQueryFromPostings(clean: DataFrame, emb: DataFrame,
-                                   postings: DataFrame,
-                                   doclens: Option[DataFrame] = None): DataFrame = {
+  private def ragQueries(clean: DataFrame): (DataFrame, DataFrame) = {
     val qdocs = clean.where(col("doc_id") % 97 === 0 &&
       col("doc_id") < 1000 && length(trim(col("clean"))) > 0)
     val qt = qdocs.select(col("doc_id").as("query_id"),
       explode(array_distinct(slice(
         split(Dedup.normalizeText(col("clean")), " "), 1, 5))).as("term"))
-    val hits = graft.functions.Retrieval.bm25TopKFromPostings(
-      postings, qt, k = 50, doclens = doclens)
+    (qdocs, qt)
+  }
+
+  /** The hybrid tail shared by every RAG entry: passage hits → per-parent
+    * best chunk → doc top-10, RRF-fused with the exact dense top-10, then
+    * MMR-reranked — so all three entries share ONE oracle.
+    */
+  private def ragRerank(qdocs: DataFrame, emb: DataFrame,
+                        hits: DataFrame): DataFrame = {
     val lex = hits
       .groupBy(col("query_id"), expr("doc_id div 1000000").as("parent"))
       .agg(max(struct(col("score"), (-col("doc_id")).as("nck"))).as("m"))
@@ -866,6 +721,7 @@ object CompositionQueries extends QueryFamily {
       .withColumn("rank", row_number().over(Window.partitionBy("query_id")
         .orderBy(col("score").desc, col("doc_id"))))
       .where(col("rank") <= 10)
+    // dense exact-cosine top-10 over the SAME query set, RRF-fused
     val qv = emb
       .join(broadcast(qdocs.select(col("doc_id").as("query_id"))),
         col("vec_id") === col("query_id"))
@@ -882,11 +738,79 @@ object CompositionQueries extends QueryFamily {
         .orderBy(col("sim").desc, col("doc_id"))))
       .where(col("rank") <= 10)
     val fused = graft.functions.Retrieval.rrfFuse(lex, vec, k = 10)
+    // MMR diversity rerank of the fused list: rel = rrf normalized by the
+    // max achievable fused score 2·(10⁹ div 61) — ONE IEEE division,
+    // bit-portable; diversity cosines come from the embedding table
+    // through mmrRerank's bounded candidate join
     val maxRrf = 2L * (1000000000L / 61L)
     Similarity.mmrRerank(
       fused.select(col("query_id"), col("doc_id"),
         (col("rrf").cast("double") / lit(maxRrf.toDouble)).as("rel")),
       emb, "vec_id", "embedding", k = 5)
+  }
+
+  /** [[ragRerank]] over passage BM25 from a persisted postings index. */
+  private[graft] def ragQueryFromPostings(clean: DataFrame, emb: DataFrame,
+                                   postings: DataFrame,
+                                   doclens: Option[DataFrame] = None): DataFrame = {
+    val (qdocs, qt) = ragQueries(clean)
+    ragRerank(qdocs, emb, graft.functions.Retrieval.bm25TopKFromPostings(
+      postings, qt, k = 50, doclens = doclens))
+  }
+
+  /** Multilingual-mix replay prefix: langid markers (`lg`) → per-lang
+    * sqrt-share fold (sorted list, one float sum) → floored budgets (`bb`).
+    */
+  private lazy val multilingualBudgetCtes: String =
+    s"""WITH t AS (SELECT doc_id, text,
+       |  string_split_regex(trim(text), '\\s+') AS toks,
+       |  CASE WHEN length(trim(text)) = 0 THEN 0
+       |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
+       |  FROM documents),
+       |sc AS (SELECT doc_id,
+       |  len(list_filter(toks, x -> list_contains(${markerList("en")}, x))) AS s_en,
+       |  len(list_filter(toks, x -> list_contains(${markerList("fr")}, x))) AS s_fr,
+       |  len(list_filter(toks, x -> list_contains(${markerList("es")}, x))) AS s_es,
+       |  len(list_filter(toks, x -> list_contains(${markerList("de")}, x))) AS s_de,
+       |  len(list_filter(toks, x -> list_contains(${markerList("zh")}, x))) AS s_zh
+       |  FROM t),
+       |lg AS (SELECT doc_id, CASE
+       |  WHEN greatest(s_en, s_fr, s_es, s_de, s_zh) = 0 THEN 'und'
+       |  WHEN s_en = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'en'
+       |  WHEN s_fr = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'fr'
+       |  WHEN s_es = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'es'
+       |  WHEN s_de = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'de'
+       |  WHEN s_zh = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'zh'
+       |  ELSE 'und' END AS lang
+       |  FROM sc),
+       |c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
+       |  FROM lg GROUP BY 1),
+       |pp AS (SELECT list(struct_pack(lang := lang, n := n)
+       |    ORDER BY lang, n) AS arr FROM c),
+       |dd AS (SELECT arr, list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+       |    list_transform(arr, x -> sqrt(CAST(x.n AS DOUBLE)))),
+       |    (a, b) -> a + b) AS denom FROM pp),
+       |bb AS (SELECT x.lang AS lang,
+       |    CAST(floor(sqrt(CAST(x.n AS DOUBLE)) / denom * 16000.0)
+       |      AS BIGINT) AS budget
+       |  FROM (SELECT unnest(arr) AS x, denom FROM dd)),""".stripMargin
+
+  /** The admission fixture: exact-duplicate and appended-span plants on
+    * the corpus (id % 3 ≠ 2) and batch (id % 3 = 2) sides.
+    */
+  private def ingestCorpus(spark: SparkSession, dir: String): DataFrame = {
+    val raven = "the raven sat on the bust of pallas above the chamber door"
+    val plant =
+      "by the riverbank the quiet fox waited for the morning light to come"
+    Tables.read(spark, dir, "documents").withColumn("text",
+      when(col("doc_id") % 3 =!= 2 && col("doc_id") % 17 === 0, lit(raven))
+        .when(col("doc_id") % 3 === 2 && col("doc_id") % 13 === 0, lit(raven))
+        .otherwise(concat(col("text"),
+          when(col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 0,
+            lit(" " + plant))
+            .when(col("doc_id") % 3 === 2 && col("doc_id") % 7 === 0,
+              lit(" " + plant))
+            .otherwise(lit("")))))
   }
 
   private lazy val ingestAdmissionOracle: String = s"""

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
-import SqlFragments.{shingleCtes, stopList}
+import SqlFragments.{qualityRatios, qualityScore, shingleCtes}
 import StreamFixtures.streamWithSentinel
 
 /** Deduplication entries: exact, n-gram Jaccard / containment, MinHash-LSH,
@@ -391,14 +391,10 @@ object DedupQueries extends QueryFamily {
         |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
         |  FROM documents),
         |m AS (SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
-        |  CAST(length(regexp_replace(text, '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-        |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS digit_ratio,
-        |  CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / CAST(greatest(ntok, 1) AS DOUBLE) AS stopword_ratio
+        |$qualityRatios
         |  FROM t),
         |q AS (SELECT doc_id,
-        |  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4 +
-        |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
-        |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality
+        |$qualityScore
         |  FROM m),
         |lab AS (SELECT d.doc_id, COALESCE(c.rep, d.doc_id) AS rep_id, q.quality
         |  FROM documents d LEFT JOIN comp c USING (doc_id)

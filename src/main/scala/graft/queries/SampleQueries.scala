@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
-import SqlFragments.stopList
+import SqlFragments.{qualityRatios, qualityScore}
 import StreamFixtures.{sentinelBounds, streamWithSentinel}
 
 /** Sampling and mixing entries: hash, stratified, weighted, reservoir,
@@ -204,14 +204,10 @@ object SampleQueries extends QueryFamily {
         |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
         |  FROM documents),
         |m AS (SELECT doc_id, source, CAST(ntok AS BIGINT) AS n_tokens,
-        |  CAST(length(regexp_replace(text, '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-        |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS digit_ratio,
-        |  CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / CAST(greatest(ntok, 1) AS DOUBLE) AS stopword_ratio
+        |$qualityRatios
         |  FROM t),
         |q AS (SELECT doc_id, source,
-        |  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4 +
-        |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
-        |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality
+        |$qualityScore
         |  FROM m),
         |r AS (SELECT doc_id, source, quality,
         |  CAST(row_number() OVER (PARTITION BY source
@@ -362,14 +358,10 @@ object SampleQueries extends QueryFamily {
         |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
         |  FROM documents),
         |m AS (SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
-        |  CAST(length(regexp_replace(text, '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-        |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS digit_ratio,
-        |  CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / CAST(greatest(ntok, 1) AS DOUBLE) AS stopword_ratio
+        |$qualityRatios
         |  FROM t),
         |q AS (SELECT doc_id, n_tokens,
-        |  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4 +
-        |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
-        |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality
+        |$qualityScore
         |  FROM m),
         |o AS (SELECT doc_id, quality, n_tokens,
         |  CAST(sum(n_tokens) OVER (ORDER BY quality DESC, doc_id

@@ -22,4 +22,20 @@ private[queries] object SqlFragments {
 
   private[queries] def markerList(lang: String): String =
     TextAnalysis.LangMarkers.toMap.apply(lang).map(s => s"'$s'").mkString("[", ",", "]")
+
+  /** The quality-formula ratios of [[TextAnalysis.stats]] over `text`, its
+    * whitespace tokens `toks` and their count `ntok`, as select items.
+    */
+  private[queries] val qualityRatios: String =
+    s"""  CAST(length(regexp_replace(text, '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
+       |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS digit_ratio,
+       |  CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / CAST(greatest(ntok, 1) AS DOUBLE) AS stopword_ratio""".stripMargin
+
+  /** [[TextAnalysis.qualityScoreFromStats]] over `n_tokens` and the three
+    * [[qualityRatios]], as a select item named `quality`.
+    */
+  private[queries] val qualityScore: String =
+    s"""  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4 +
+       |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
+       |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality""".stripMargin
 }

@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.{Dedup, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import SqlFragments.{markerList, shingleCtes, stopList}
+import SqlFragments.{markerList, qualityRatios, qualityScore, shingleCtes}
 import StreamFixtures.streamWithSentinel
 
 /** Text-analysis entries: normalization, quality scoring, tokenizer
@@ -524,14 +524,10 @@ object TextQueries extends QueryFamily {
         |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
         |  FROM documents),
         |m AS (SELECT doc_id, source, CAST(ntok AS BIGINT) AS n_tokens,
-        |  CAST(length(regexp_replace(text, '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-        |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS digit_ratio,
-        |  CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / CAST(greatest(ntok, 1) AS DOUBLE) AS stopword_ratio
+        |$qualityRatios
         |  FROM t),
         |q AS (SELECT doc_id, source,
-        |  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4 +
-        |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
-        |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality
+        |$qualityScore
         |  FROM m),
         |r AS (SELECT doc_id, source, quality,
         |  row_number() OVER (PARTITION BY source ORDER BY quality, doc_id) AS rn,
@@ -1895,16 +1891,12 @@ object TextQueries extends QueryFamily {
         |  CAST(ntok AS BIGINT) AS n_tokens,
         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_bpeish,
         |  CAST(length(text) AS BIGINT) AS char_len,
-        |  CAST(length(regexp_replace(text, '[^.,;:!?''"()\\[\\]-]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-        |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS digit_ratio,
-        |  CAST(len(list_filter(toks, x -> list_contains($stopList, x))) AS DOUBLE) / CAST(greatest(ntok, 1) AS DOUBLE) AS stopword_ratio,
+        |$qualityRatios,
         |  CAST(list_sum(list_transform(toks, x -> CAST(length(x) AS BIGINT))) AS DOUBLE) / CAST(greatest(ntok, 1) AS DOUBLE) AS mean_tok_len
         |  FROM t)
         |SELECT doc_id, n_tokens, n_bpeish, char_len, punct_ratio, digit_ratio,
         |  stopword_ratio, mean_tok_len,
-        |  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4 +
-        |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
-        |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality
+        |$qualityScore
         |FROM m""".stripMargin
 
   /** Unigram-LM shared CTE prefix: word histogram → bounded substring
