@@ -549,7 +549,7 @@ object TextQueries extends QueryFamily {
       // six-iteration replay: the recursive CTE carries the evolving
       // corpus as a list and re-derives each step's argmax with the
       // min(struct(-n, a, b)) trick (max count, then smallest pair)
-      """WITH RECURSIVE it AS (
+      raw"""WITH RECURSIVE it AS (
         |  SELECT 0 AS step, CAST(NULL AS VARCHAR) AS a,
         |    CAST(NULL AS VARCHAR) AS b, CAST(NULL AS BIGINT) AS n,
         |    (SELECT list(struct_pack(d := doc_id,
@@ -559,29 +559,7 @@ object TextQueries extends QueryFamily {
         |  SELECT g.step + 1,
         |    struct_extract(g.m, 'a'), struct_extract(g.m, 'b'),
         |    -struct_extract(g.m, 'negn'),
-        |    list_transform(g.corpus, e -> struct_pack(
-        |      d := struct_extract(e, 'd'),
-        |      t := trim(replace(replace(
-        |        ' ' || replace(struct_extract(e, 't'), ' ', '  ') || ' ',
-        |        ' ' || struct_extract(g.m, 'a') || '  ' ||
-        |          struct_extract(g.m, 'b') || ' ',
-        |        ' ' || struct_extract(g.m, 'a') || '+' ||
-        |          struct_extract(g.m, 'b') || ' '),
-        |        '  ', ' '))))
-        |  FROM (
-        |    SELECT it.step, it.corpus,
-        |      min(struct_pack(negn := -c.n, a := c.a, b := c.b)) AS m
-        |    FROM it, LATERAL (
-        |      SELECT p.a AS a, p.b AS b, count(*) AS n FROM (
-        |        SELECT unnest(list_transform(range(1, len(tk.toks)),
-        |          i -> struct_pack(a := tk.toks[i], b := tk.toks[i + 1]))) AS p
-        |        FROM (SELECT string_split(struct_extract(e2, 't'), ' ') AS toks
-        |              FROM unnest(it.corpus) AS u(e2)) tk
-        |        WHERE len(tk.toks) >= 2) bp
-        |      GROUP BY 1, 2) c
-        |    WHERE it.step < 6
-        |    GROUP BY it.step, it.corpus
-        |  ) g
+        |$bpeWordStep
         |)
         |SELECT step, a, b, n FROM it WHERE step >= 1""".stripMargin),
 
@@ -599,36 +577,14 @@ object TextQueries extends QueryFamily {
     },
       // the induction CTE's final corpus IS the encoded output; blank
       // docs (dropped from the evolving corpus) come back as ''
-      """WITH RECURSIVE it AS (
+      raw"""WITH RECURSIVE it AS (
         |  SELECT 0 AS step,
         |    (SELECT list(struct_pack(d := doc_id,
         |       t := regexp_replace(lower(trim(text)), '\s+', ' ', 'g')))
         |     FROM documents WHERE length(trim(text)) > 0) AS corpus
         |  UNION ALL
         |  SELECT g.step + 1,
-        |    list_transform(g.corpus, e -> struct_pack(
-        |      d := struct_extract(e, 'd'),
-        |      t := trim(replace(replace(
-        |        ' ' || replace(struct_extract(e, 't'), ' ', '  ') || ' ',
-        |        ' ' || struct_extract(g.m, 'a') || '  ' ||
-        |          struct_extract(g.m, 'b') || ' ',
-        |        ' ' || struct_extract(g.m, 'a') || '+' ||
-        |          struct_extract(g.m, 'b') || ' '),
-        |        '  ', ' '))))
-        |  FROM (
-        |    SELECT it.step, it.corpus,
-        |      min(struct_pack(negn := -c.n, a := c.a, b := c.b)) AS m
-        |    FROM it, LATERAL (
-        |      SELECT p.a AS a, p.b AS b, count(*) AS n FROM (
-        |        SELECT unnest(list_transform(range(1, len(tk.toks)),
-        |          i -> struct_pack(a := tk.toks[i], b := tk.toks[i + 1]))) AS p
-        |        FROM (SELECT string_split(struct_extract(e2, 't'), ' ') AS toks
-        |              FROM unnest(it.corpus) AS u(e2)) tk
-        |        WHERE len(tk.toks) >= 2) bp
-        |      GROUP BY 1, 2) c
-        |    WHERE it.step < 6
-        |    GROUP BY it.step, it.corpus
-        |  ) g
+        |$bpeWordStep
         |),
         |fin AS (SELECT struct_extract(e3, 'd') AS doc_id,
         |  struct_extract(e3, 't') AS merged_text
@@ -650,7 +606,7 @@ object TextQueries extends QueryFamily {
       // char-level replay: the recursion carries the WEIGHTED vocab (word
       // histogram, char-split with the '</w>' marker); pair counts are
       // frequency-weighted sums, fuse concatenates (empty joiner)
-      """WITH RECURSIVE it AS (
+      raw"""WITH RECURSIVE it AS (
         |  SELECT 0 AS step, CAST(NULL AS VARCHAR) AS a,
         |    CAST(NULL AS VARCHAR) AS b, CAST(NULL AS BIGINT) AS n,
         |    (SELECT list(struct_pack(t := array_to_string(
@@ -666,30 +622,7 @@ object TextQueries extends QueryFamily {
         |    struct_extract(g.m, 'a'), struct_extract(g.m, 'b'),
         |    -struct_extract(g.m, 'negn'),
         |    list_transform(g.vocab, e -> struct_pack(
-        |      t := trim(replace(replace(
-        |        ' ' || replace(struct_extract(e, 't'), ' ', '  ') || ' ',
-        |        ' ' || struct_extract(g.m, 'a') || '  ' ||
-        |          struct_extract(g.m, 'b') || ' ',
-        |        ' ' || struct_extract(g.m, 'a') ||
-        |          struct_extract(g.m, 'b') || ' '),
-        |        '  ', ' ')),
-        |      n := struct_extract(e, 'n')))
-        |  FROM (
-        |    SELECT it.step, it.vocab,
-        |      min(struct_pack(negn := -c.cnt, a := c.a, b := c.b)) AS m
-        |    FROM it, LATERAL (
-        |      SELECT p.a AS a, p.b AS b, CAST(sum(pn) AS BIGINT) AS cnt FROM (
-        |        SELECT unnest(list_transform(range(1, len(tk.toks)),
-        |          i -> struct_pack(a := tk.toks[i], b := tk.toks[i + 1]))) AS p,
-        |          tk.n AS pn
-        |        FROM (SELECT string_split(struct_extract(e2, 't'), ' ') AS toks,
-        |              struct_extract(e2, 'n') AS n
-        |              FROM unnest(it.vocab) AS u(e2)) tk
-        |        WHERE len(tk.toks) >= 2) bp
-        |      GROUP BY 1, 2) c
-        |    WHERE it.step < 8
-        |    GROUP BY it.step, it.vocab
-        |  ) g
+        |$charBpeStep
         |)
         |SELECT step, a, b, n FROM it WHERE step >= 1""".stripMargin),
 
@@ -1645,30 +1578,7 @@ object TextQueries extends QueryFamily {
         |  SELECT g.step + 1,
         |    list_transform(g.vocab, e -> struct_pack(
         |      w := struct_extract(e, 'w'),
-        |      t := trim(replace(replace(
-        |        ' ' || replace(struct_extract(e, 't'), ' ', '  ') || ' ',
-        |        ' ' || struct_extract(g.m, 'a') || '  ' ||
-        |          struct_extract(g.m, 'b') || ' ',
-        |        ' ' || struct_extract(g.m, 'a') ||
-        |          struct_extract(g.m, 'b') || ' '),
-        |        '  ', ' ')),
-        |      n := struct_extract(e, 'n')))
-        |  FROM (
-        |    SELECT it.step, it.vocab,
-        |      min(struct_pack(negn := -c.cnt, a := c.a, b := c.b)) AS m
-        |    FROM it, LATERAL (
-        |      SELECT p.a AS a, p.b AS b, CAST(sum(pn) AS BIGINT) AS cnt FROM (
-        |        SELECT unnest(list_transform(range(1, len(tk.toks)),
-        |          i -> struct_pack(a := tk.toks[i], b := tk.toks[i + 1]))) AS p,
-        |          tk.n AS pn
-        |        FROM (SELECT string_split(struct_extract(e2, 't'), ' ') AS toks,
-        |              struct_extract(e2, 'n') AS n
-        |              FROM unnest(it.vocab) AS u(e2)) tk
-        |        WHERE len(tk.toks) >= 2) bp
-        |      GROUP BY 1, 2) c
-        |    WHERE it.step < 8
-        |    GROUP BY it.step, it.vocab
-        |  ) g
+        |$charBpeStep
         |),
         |enc AS (SELECT struct_extract(e3, 'w') AS w,
         |    struct_extract(e3, 't') AS t
@@ -1705,65 +1615,16 @@ object TextQueries extends QueryFamily {
       |    CAST(NULL AS VARCHAR) AS b, CAST(NULL AS BIGINT) AS cnt_ab,
       |    CAST(NULL AS BIGINT) AS cnt_a, CAST(NULL AS BIGINT) AS cnt_b,
       |    CAST(NULL AS BIGINT) AS score_fp,
-      |    (SELECT list(struct_pack(t := array_to_string(
-      |        list_transform(range(1, length(w) + 1),
-      |          i -> CASE WHEN i = 1 THEN w[i:i] ELSE '##' || w[i:i] END),
-      |        ' '), n := cnt))
-      |     FROM (SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
-      |        SELECT unnest(string_split(
-      |          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
-      |        FROM documents WHERE length(trim(text)) > 0) u
-      |      WHERE length(w) > 0 GROUP BY w)) AS vocab
-      |  UNION ALL
-      |  SELECT g.step + 1,
-      |    struct_extract(g.m, 'a'), struct_extract(g.m, 'b'),
+      |$wpSeed
       |    struct_extract(g.m, 'cnt'), struct_extract(g.m, 'ca'),
       |    struct_extract(g.m, 'cb'), -struct_extract(g.m, 'negfp'),
-      |    list_transform(g.vocab, e -> struct_pack(
-      |      t := trim(replace(replace(
-      |        ' ' || replace(struct_extract(e, 't'), ' ', '  ') || ' ',
-      |        ' ' || struct_extract(g.m, 'a') || '  ' ||
-      |          struct_extract(g.m, 'b') || ' ',
-      |        ' ' || struct_extract(g.m, 'a') ||
-      |          CASE WHEN struct_extract(g.m, 'b') LIKE '##%'
-      |               THEN struct_extract(g.m, 'b')[3:]
-      |               ELSE struct_extract(g.m, 'b') END || ' '),
-      |        '  ', ' ')),
-      |      n := struct_extract(e, 'n')))
-      |  FROM (
-      |    SELECT it.step, it.vocab,
+      |$wpFuse
       |      min(struct_pack(negfp := -c.fp, a := c.a, b := c.b,
       |        cnt := c.cnt, ca := c.ca, cb := c.cb)) AS m
       |    FROM it, LATERAL (
       |      SELECT pc.a AS a, pc.b AS b, pc.cnt AS cnt,
       |        ta.c AS ca, tb.c AS cb,
-      |        CAST((CAST(pc.cnt AS HUGEINT) * 1000000000000000000) //
-      |             (CAST(ta.c AS HUGEINT) * CAST(tb.c AS HUGEINT))
-      |          AS BIGINT) AS fp
-      |      FROM (SELECT p.a AS a, p.b AS b, CAST(sum(pn) AS BIGINT) AS cnt
-      |        FROM (
-      |          SELECT unnest(list_transform(range(1, len(tk.toks)),
-      |            i -> struct_pack(a := tk.toks[i], b := tk.toks[i + 1]))) AS p,
-      |            tk.n AS pn
-      |          FROM (SELECT string_split(struct_extract(e2, 't'), ' ') AS toks,
-      |                struct_extract(e2, 'n') AS n
-      |                FROM unnest(it.vocab) AS u(e2)) tk
-      |          WHERE len(tk.toks) >= 2) bp
-      |        GROUP BY 1, 2) pc
-      |      JOIN (SELECT tok, CAST(sum(n2) AS BIGINT) AS c FROM (
-      |            SELECT unnest(string_split(struct_extract(e3, 't'), ' ')) AS tok,
-      |              struct_extract(e3, 'n') AS n2
-      |            FROM unnest(it.vocab) AS u2(e3)) tt
-      |          GROUP BY tok) ta ON ta.tok = pc.a
-      |      JOIN (SELECT tok, CAST(sum(n3) AS BIGINT) AS c FROM (
-      |            SELECT unnest(string_split(struct_extract(e4, 't'), ' ')) AS tok,
-      |              struct_extract(e4, 'n') AS n3
-      |            FROM unnest(it.vocab) AS u3(e4)) tt2
-      |          GROUP BY tok) tb ON tb.tok = pc.b
-      |      ) c
-      |    WHERE it.step < 8
-      |    GROUP BY it.step, it.vocab
-      |  ) g
+      |$wpScoredPairs
       |)
       |SELECT step, a, b, cnt_ab, cnt_a, cnt_b, score_fp
       |FROM it WHERE step >= 1""".stripMargin
@@ -1779,61 +1640,12 @@ object TextQueries extends QueryFamily {
     raw"""WITH RECURSIVE it AS (
       |  SELECT 0 AS step, CAST(NULL AS VARCHAR) AS a,
       |    CAST(NULL AS VARCHAR) AS b,
-      |    (SELECT list(struct_pack(t := array_to_string(
-      |        list_transform(range(1, length(w) + 1),
-      |          i -> CASE WHEN i = 1 THEN w[i:i] ELSE '##' || w[i:i] END),
-      |        ' '), n := cnt))
-      |     FROM (SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
-      |        SELECT unnest(string_split(
-      |          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
-      |        FROM documents WHERE length(trim(text)) > 0) u
-      |      WHERE length(w) > 0 GROUP BY w)) AS vocab
-      |  UNION ALL
-      |  SELECT g.step + 1,
-      |    struct_extract(g.m, 'a'), struct_extract(g.m, 'b'),
-      |    list_transform(g.vocab, e -> struct_pack(
-      |      t := trim(replace(replace(
-      |        ' ' || replace(struct_extract(e, 't'), ' ', '  ') || ' ',
-      |        ' ' || struct_extract(g.m, 'a') || '  ' ||
-      |          struct_extract(g.m, 'b') || ' ',
-      |        ' ' || struct_extract(g.m, 'a') ||
-      |          CASE WHEN struct_extract(g.m, 'b') LIKE '##%'
-      |               THEN struct_extract(g.m, 'b')[3:]
-      |               ELSE struct_extract(g.m, 'b') END || ' '),
-      |        '  ', ' ')),
-      |      n := struct_extract(e, 'n')))
-      |  FROM (
-      |    SELECT it.step, it.vocab,
+      |$wpSeed
+      |$wpFuse
       |      min(struct_pack(negfp := -c.fp, a := c.a, b := c.b)) AS m
       |    FROM it, LATERAL (
       |      SELECT pc.a AS a, pc.b AS b,
-      |        CAST((CAST(pc.cnt AS HUGEINT) * 1000000000000000000) //
-      |             (CAST(ta.c AS HUGEINT) * CAST(tb.c AS HUGEINT))
-      |          AS BIGINT) AS fp
-      |      FROM (SELECT p.a AS a, p.b AS b, CAST(sum(pn) AS BIGINT) AS cnt
-      |        FROM (
-      |          SELECT unnest(list_transform(range(1, len(tk.toks)),
-      |            i -> struct_pack(a := tk.toks[i], b := tk.toks[i + 1]))) AS p,
-      |            tk.n AS pn
-      |          FROM (SELECT string_split(struct_extract(e2, 't'), ' ') AS toks,
-      |                struct_extract(e2, 'n') AS n
-      |                FROM unnest(it.vocab) AS u(e2)) tk
-      |          WHERE len(tk.toks) >= 2) bp
-      |        GROUP BY 1, 2) pc
-      |      JOIN (SELECT tok, CAST(sum(n2) AS BIGINT) AS c FROM (
-      |            SELECT unnest(string_split(struct_extract(e3, 't'), ' ')) AS tok,
-      |              struct_extract(e3, 'n') AS n2
-      |            FROM unnest(it.vocab) AS u2(e3)) tt
-      |          GROUP BY tok) ta ON ta.tok = pc.a
-      |      JOIN (SELECT tok, CAST(sum(n3) AS BIGINT) AS c FROM (
-      |            SELECT unnest(string_split(struct_extract(e4, 't'), ' ')) AS tok,
-      |              struct_extract(e4, 'n') AS n3
-      |            FROM unnest(it.vocab) AS u3(e4)) tt2
-      |          GROUP BY tok) tb ON tb.tok = pc.b
-      |      ) c
-      |    WHERE it.step < 8
-      |    GROUP BY it.step, it.vocab
-      |  ) g
+      |$wpScoredPairs
       |),
       |words AS (SELECT DISTINCT w FROM (
       |    SELECT unnest(string_split(
@@ -2002,4 +1814,130 @@ object TextQueries extends QueryFamily {
          |  CAST(round(1048576.0 * ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE))
          |    / ${graft.functions.Unigram.Ln2}) AS BIGINT) AS cost_fp
          |FROM emc CROSS JOIN emt""".stripMargin
+
+  /** One word-level BPE step over the evolving `corpus`: rewrite every
+    * doc by the argmax pair `g.m`, re-derived with min(struct(-n, a, b))
+    * (max count, then smallest pair); six steps.
+    */
+  private lazy val bpeWordStep: String =
+    """    list_transform(g.corpus, e -> struct_pack(
+      |      d := struct_extract(e, 'd'),
+      |      t := trim(replace(replace(
+      |        ' ' || replace(struct_extract(e, 't'), ' ', '  ') || ' ',
+      |        ' ' || struct_extract(g.m, 'a') || '  ' ||
+      |          struct_extract(g.m, 'b') || ' ',
+      |        ' ' || struct_extract(g.m, 'a') || '+' ||
+      |          struct_extract(g.m, 'b') || ' '),
+      |        '  ', ' '))))
+      |  FROM (
+      |    SELECT it.step, it.corpus,
+      |      min(struct_pack(negn := -c.n, a := c.a, b := c.b)) AS m
+      |    FROM it, LATERAL (
+      |      SELECT p.a AS a, p.b AS b, count(*) AS n FROM (
+      |        SELECT unnest(list_transform(range(1, len(tk.toks)),
+      |          i -> struct_pack(a := tk.toks[i], b := tk.toks[i + 1]))) AS p
+      |        FROM (SELECT string_split(struct_extract(e2, 't'), ' ') AS toks
+      |              FROM unnest(it.corpus) AS u(e2)) tk
+      |        WHERE len(tk.toks) >= 2) bp
+      |      GROUP BY 1, 2) c
+      |    WHERE it.step < 6
+      |    GROUP BY it.step, it.corpus
+      |  ) g""".stripMargin
+
+  /** One char-level BPE step over the weighted `vocab`: fuse the argmax
+    * pair `g.m` (empty joiner), then re-derive it from frequency-weighted
+    * pair counts by min(struct(-cnt, a, b)); eight steps.
+    */
+  private lazy val charBpeStep: String =
+    """      t := trim(replace(replace(
+      |        ' ' || replace(struct_extract(e, 't'), ' ', '  ') || ' ',
+      |        ' ' || struct_extract(g.m, 'a') || '  ' ||
+      |          struct_extract(g.m, 'b') || ' ',
+      |        ' ' || struct_extract(g.m, 'a') ||
+      |          struct_extract(g.m, 'b') || ' '),
+      |        '  ', ' ')),
+      |      n := struct_extract(e, 'n')))
+      |  FROM (
+      |    SELECT it.step, it.vocab,
+      |      min(struct_pack(negn := -c.cnt, a := c.a, b := c.b)) AS m
+      |    FROM it, LATERAL (
+      |      SELECT p.a AS a, p.b AS b, CAST(sum(pn) AS BIGINT) AS cnt FROM (
+      |        SELECT unnest(list_transform(range(1, len(tk.toks)),
+      |          i -> struct_pack(a := tk.toks[i], b := tk.toks[i + 1]))) AS p,
+      |          tk.n AS pn
+      |        FROM (SELECT string_split(struct_extract(e2, 't'), ' ') AS toks,
+      |              struct_extract(e2, 'n') AS n
+      |              FROM unnest(it.vocab) AS u(e2)) tk
+      |        WHERE len(tk.toks) >= 2) bp
+      |      GROUP BY 1, 2) c
+      |    WHERE it.step < 8
+      |    GROUP BY it.step, it.vocab
+      |  ) g""".stripMargin
+
+  /** WordPiece seed: each corpus word as its char pieces (`##` marks a
+    * continuation), weighted by its count, as the recursion's first row.
+    */
+  private lazy val wpSeed: String =
+    raw"""    (SELECT list(struct_pack(t := array_to_string(
+         |        list_transform(range(1, length(w) + 1),
+         |          i -> CASE WHEN i = 1 THEN w[i:i] ELSE '##' || w[i:i] END),
+         |        ' '), n := cnt))
+         |     FROM (SELECT w, CAST(count(*) AS BIGINT) AS cnt FROM (
+         |        SELECT unnest(string_split(
+         |          regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w
+         |        FROM documents WHERE length(trim(text)) > 0) u
+         |      WHERE length(w) > 0 GROUP BY w)) AS vocab
+         |  UNION ALL
+         |  SELECT g.step + 1,
+         |    struct_extract(g.m, 'a'), struct_extract(g.m, 'b'),""".stripMargin
+
+  /** The WordPiece rewrite of the vocab by the argmax pair `g.m`: `##`
+    * absorbed from the right element.
+    */
+  private lazy val wpFuse: String =
+    """    list_transform(g.vocab, e -> struct_pack(
+      |      t := trim(replace(replace(
+      |        ' ' || replace(struct_extract(e, 't'), ' ', '  ') || ' ',
+      |        ' ' || struct_extract(g.m, 'a') || '  ' ||
+      |          struct_extract(g.m, 'b') || ' ',
+      |        ' ' || struct_extract(g.m, 'a') ||
+      |          CASE WHEN struct_extract(g.m, 'b') LIKE '##%'
+      |               THEN struct_extract(g.m, 'b')[3:]
+      |               ELSE struct_extract(g.m, 'b') END || ' '),
+      |        '  ', ' ')),
+      |      n := struct_extract(e, 'n')))
+      |  FROM (
+      |    SELECT it.step, it.vocab,""".stripMargin
+
+  /** WordPiece pair scores on the exact fixed-point plane,
+    * `(cnt·10¹⁸) // (ca·cb)` in HUGEINT; eight steps.
+    */
+  private lazy val wpScoredPairs: String =
+    """        CAST((CAST(pc.cnt AS HUGEINT) * 1000000000000000000) //
+      |             (CAST(ta.c AS HUGEINT) * CAST(tb.c AS HUGEINT))
+      |          AS BIGINT) AS fp
+      |      FROM (SELECT p.a AS a, p.b AS b, CAST(sum(pn) AS BIGINT) AS cnt
+      |        FROM (
+      |          SELECT unnest(list_transform(range(1, len(tk.toks)),
+      |            i -> struct_pack(a := tk.toks[i], b := tk.toks[i + 1]))) AS p,
+      |            tk.n AS pn
+      |          FROM (SELECT string_split(struct_extract(e2, 't'), ' ') AS toks,
+      |                struct_extract(e2, 'n') AS n
+      |                FROM unnest(it.vocab) AS u(e2)) tk
+      |          WHERE len(tk.toks) >= 2) bp
+      |        GROUP BY 1, 2) pc
+      |      JOIN (SELECT tok, CAST(sum(n2) AS BIGINT) AS c FROM (
+      |            SELECT unnest(string_split(struct_extract(e3, 't'), ' ')) AS tok,
+      |              struct_extract(e3, 'n') AS n2
+      |            FROM unnest(it.vocab) AS u2(e3)) tt
+      |          GROUP BY tok) ta ON ta.tok = pc.a
+      |      JOIN (SELECT tok, CAST(sum(n3) AS BIGINT) AS c FROM (
+      |            SELECT unnest(string_split(struct_extract(e4, 't'), ' ')) AS tok,
+      |              struct_extract(e4, 'n') AS n3
+      |            FROM unnest(it.vocab) AS u3(e4)) tt2
+      |          GROUP BY tok) tb ON tb.tok = pc.b
+      |      ) c
+      |    WHERE it.step < 8
+      |    GROUP BY it.step, it.vocab
+      |  ) g""".stripMargin
 }
