@@ -22,9 +22,7 @@ object DedupQueries extends QueryFamily {
 
     entry("dedup_exact", (spark, dir) =>
       Dedup.exactGroups(Tables.read(spark, dir, "documents"), "text", "doc_id"),
-      """SELECT regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm_text,
-        |MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-        |FROM documents GROUP BY 1""".stripMargin),
+      dedupExactOracle),
 
     entry("dedup_exact_keep", (spark, dir) =>
       Dedup.dropExactDuplicates(Tables.read(spark, dir, "documents"), "text", "doc_id")
@@ -241,9 +239,7 @@ object DedupQueries extends QueryFamily {
     },
       // identical oracle to dedup_exact: the drained streaming aggregation
       // must reproduce the batch dedup groups bit-for-bit
-      """SELECT regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm_text,
-        |MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-        |FROM documents GROUP BY 1""".stripMargin),
+      dedupExactOracle),
 
     // STREAMING first-occurrence span dedup: the surviving span per
     // distinct text with its occurrence count — min(doc_id, span_idx)
@@ -1145,4 +1141,10 @@ object DedupQueries extends QueryFamily {
       |comp AS (SELECT u AS doc_id, MIN(r) AS rep FROM reach GROUP BY u)
       |SELECT d.doc_id, COALESCE(c.rep, d.doc_id) AS rep_id
       |FROM documents d LEFT JOIN comp c USING (doc_id)""".stripMargin
+
+  /** The oracle shared by dedup_exact, dedup_exact_stream. */
+  private lazy val dedupExactOracle: String =
+    """SELECT regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm_text,
+        |MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
+        |FROM documents GROUP BY 1""".stripMargin
 }

@@ -530,19 +530,7 @@ object EventQueries extends QueryFamily {
       funnelBounded(Tables.read(spark, dir, "events")
         .select(col("user_id"), col("event_type"),
           date_trunc("second", col("ts")).as("ts_s"))),
-      """WITH e AS (SELECT user_id, event_type, date_trunc('second', ts) AS ts_s FROM events),
-        |a AS (SELECT user_id,
-        |  min(CASE WHEN event_type = 'signup' THEN ts_s END) AS t_signup,
-        |  list(ts_s) FILTER (WHERE event_type = 'view') AS views,
-        |  list(ts_s) FILTER (WHERE event_type = 'purchase') AS buys
-        |  FROM e GROUP BY user_id),
-        |b AS (SELECT user_id, t_signup, buys,
-        |  list_min(list_filter(views, v -> v > t_signup)) AS t_view FROM a)
-        |SELECT user_id, t_signup, t_view,
-        |  list_min(list_filter(buys, x -> x > t_view)) AS t_buy,
-        |  (t_signup IS NOT NULL AND t_view IS NOT NULL) AS reached_view,
-        |  (t_view IS NOT NULL AND list_min(list_filter(buys, x -> x > t_view)) IS NOT NULL) AS reached_buy
-        |FROM b""".stripMargin),
+      eventsFunnelOracle),
 
     // The same funnel as a single-shuffle sorted-group fold (one
     // repartition by user, O(1) state) — same oracle as events_funnel.
@@ -552,19 +540,7 @@ object EventQueries extends QueryFamily {
           date_trunc("second", col("ts")).as("ts_s"))),
       // identical oracle: the single-shuffle fold must reproduce the
       // aggregation form bit-for-bit
-      """WITH e AS (SELECT user_id, event_type, date_trunc('second', ts) AS ts_s FROM events),
-        |a AS (SELECT user_id,
-        |  min(CASE WHEN event_type = 'signup' THEN ts_s END) AS t_signup,
-        |  list(ts_s) FILTER (WHERE event_type = 'view') AS views,
-        |  list(ts_s) FILTER (WHERE event_type = 'purchase') AS buys
-        |  FROM e GROUP BY user_id),
-        |b AS (SELECT user_id, t_signup, buys,
-        |  list_min(list_filter(views, v -> v > t_signup)) AS t_view FROM a)
-        |SELECT user_id, t_signup, t_view,
-        |  list_min(list_filter(buys, x -> x > t_view)) AS t_buy,
-        |  (t_signup IS NOT NULL AND t_view IS NOT NULL) AS reached_view,
-        |  (t_view IS NOT NULL AND list_min(list_filter(buys, x -> x > t_view)) IS NOT NULL) AS reached_buy
-        |FROM b""".stripMargin),
+      eventsFunnelOracle),
 
     // The SAME funnel as a real Structured Streaming query: the exact
     // watermark-ordered funnel ([[graft.streaming.EventStream.funnelExact]])
@@ -607,19 +583,7 @@ object EventQueries extends QueryFamily {
     },
       // identical oracle to events_funnel: the streaming entry must produce
       // the batch answer bit-for-bit (funnelExact's exactness contract)
-      """WITH e AS (SELECT user_id, event_type, date_trunc('second', ts) AS ts_s FROM events),
-        |a AS (SELECT user_id,
-        |  min(CASE WHEN event_type = 'signup' THEN ts_s END) AS t_signup,
-        |  list(ts_s) FILTER (WHERE event_type = 'view') AS views,
-        |  list(ts_s) FILTER (WHERE event_type = 'purchase') AS buys
-        |  FROM e GROUP BY user_id),
-        |b AS (SELECT user_id, t_signup, buys,
-        |  list_min(list_filter(views, v -> v > t_signup)) AS t_view FROM a)
-        |SELECT user_id, t_signup, t_view,
-        |  list_min(list_filter(buys, x -> x > t_view)) AS t_buy,
-        |  (t_signup IS NOT NULL AND t_view IS NOT NULL) AS reached_view,
-        |  (t_view IS NOT NULL AND list_min(list_filter(buys, x -> x > t_view)) IS NOT NULL) AS reached_buy
-        |FROM b""".stripMargin),
+      eventsFunnelOracle),
 
     // Gap sessionization as a streaming query: the watermark-ordered exact
     // sessionizer ([[graft.streaming.EventStream.sessionizeExact]], which
@@ -646,17 +610,7 @@ object EventQueries extends QueryFamily {
     },
       // identical oracle to events_session_window: the streaming sessionizer
       // must reproduce the batch session_window answer bit-for-bit
-      """WITH e AS (SELECT user_id, event_id, date_trunc('second', ts) AS ts_s FROM events),
-        |g AS (SELECT user_id, event_id, ts_s,
-        |  epoch(ts_s) - epoch(lag(ts_s, 1) OVER (PARTITION BY user_id ORDER BY ts_s, event_id)) AS gap
-        |  FROM e),
-        |s AS (SELECT user_id, ts_s,
-        |  SUM(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY ts_s, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM g)
-        |SELECT user_id, CAST(MIN(ts_s) AS TIMESTAMP) AS session_start,
-        |COUNT(*) AS n_events
-        |FROM s GROUP BY user_id, session_id""".stripMargin),
+      eventsSessionsStreamOracle),
 
     // D1/D7 retention as a streaming query: the watermark-ordered exact
     // per-user flags ([[graft.streaming.EventStream.retentionFlagsExact]])
@@ -689,18 +643,7 @@ object EventQueries extends QueryFamily {
     },
       // identical oracle to events_retention: streaming flags + stateless
       // rollup must reproduce the batch cohort table bit-for-bit
-      """WITH e AS (SELECT user_id, event_type, CAST(ts AS DATE) AS day FROM events),
-        |p AS (SELECT user_id,
-        |  min(CASE WHEN event_type = 'signup' THEN day END) AS signup_day,
-        |  list(DISTINCT day) AS days FROM e GROUP BY user_id),
-        |r AS (SELECT user_id, signup_day,
-        |  list_contains(days, signup_day + 1) AS d1,
-        |  list_contains(days, signup_day + 7) AS d7
-        |  FROM p WHERE signup_day IS NOT NULL)
-        |SELECT signup_day AS cohort_day, COUNT(*) AS n_users,
-        |  CAST(SUM(CAST(d1 AS INT)) AS BIGINT) AS n_d1,
-        |  CAST(SUM(CAST(d7 AS INT)) AS BIGINT) AS n_d7
-        |FROM r GROUP BY signup_day""".stripMargin),
+      eventsRetentionStreamOracle),
 
     // Retention cohorts: users grouped by signup day; D1/D7 retention =
     // any activity exactly 1/7 days later. Same one-row-per-user shuffle
@@ -764,18 +707,7 @@ object EventQueries extends QueryFamily {
           sum(col("d1").cast("int")).as("n_d1"),
           sum(col("d7").cast("int")).as("n_d7"))
     },
-      """WITH e AS (SELECT user_id, event_type, CAST(ts AS DATE) AS day FROM events),
-        |p AS (SELECT user_id,
-        |  min(CASE WHEN event_type = 'signup' THEN day END) AS signup_day,
-        |  list(DISTINCT day) AS days FROM e GROUP BY user_id),
-        |r AS (SELECT user_id, signup_day,
-        |  list_contains(days, signup_day + 1) AS d1,
-        |  list_contains(days, signup_day + 7) AS d7
-        |  FROM p WHERE signup_day IS NOT NULL)
-        |SELECT signup_day AS cohort_day, COUNT(*) AS n_users,
-        |  CAST(SUM(CAST(d1 AS INT)) AS BIGINT) AS n_d1,
-        |  CAST(SUM(CAST(d7 AS INT)) AS BIGINT) AS n_d7
-        |FROM r GROUP BY signup_day""".stripMargin),
+      eventsRetentionStreamOracle),
 
     // Rolling active users: DAU + trailing-7-day WAU per day — the
     // standard engagement rollup. (day,user) distinct once; each pair
@@ -846,10 +778,7 @@ object EventQueries extends QueryFamily {
         .groupBy(date_trunc("hour", col("ts")).as("hour_start"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum")),
-      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
-        |COUNT(*) AS n_events,
-        |CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-        |FROM events GROUP BY 1, 2""".stripMargin),
+      eventsHourlyOracle),
 
     // Hopping (sliding) windows — the third windowed-aggregation family
     // next to tumbling (events_hourly) and session (events_session_window):
@@ -920,10 +849,7 @@ object EventQueries extends QueryFamily {
     },
       // identical oracle to events_hourly: Append-mode windowed aggregation
       // must reproduce the batch hourly rollup bit-for-bit
-      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
-        |COUNT(*) AS n_events,
-        |CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-        |FROM events GROUP BY 1, 2""".stripMargin),
+      eventsHourlyOracle),
 
     // Native session_window (gap-based session assignment; merge iff
     // inter-event gap <= 30 min — a gap of EXACTLY the window size merges,
@@ -938,17 +864,7 @@ object EventQueries extends QueryFamily {
         .select(col("user_id"), col("session_window.start").as("session_start"),
           col("n_events"))
     },
-      """WITH e AS (SELECT user_id, event_id, date_trunc('second', ts) AS ts_s FROM events),
-        |g AS (SELECT user_id, event_id, ts_s,
-        |  epoch(ts_s) - epoch(lag(ts_s, 1) OVER (PARTITION BY user_id ORDER BY ts_s, event_id)) AS gap
-        |  FROM e),
-        |s AS (SELECT user_id, ts_s,
-        |  SUM(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY ts_s, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM g)
-        |SELECT user_id, CAST(MIN(ts_s) AS TIMESTAMP) AS session_start,
-        |COUNT(*) AS n_events
-        |FROM s GROUP BY user_id, session_id""".stripMargin),
+      eventsSessionsStreamOracle),
 
     // SCD2 change compaction (gaps-and-islands): the events change log
     // collapses into per-user validity intervals of event_type runs —
@@ -1163,10 +1079,7 @@ object EventQueries extends QueryFamily {
     },
       // merged state ≡ full recompute bit-for-bit (decimal sums are exact),
       // so the oracle IS the events_hourly oracle
-      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
-        |COUNT(*) AS n_events,
-        |CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
-        |FROM events GROUP BY 1, 2""".stripMargin),
+      eventsHourlyOracle),
 
     // Seasonal (hour-of-day) traffic profile per event type — counts,
     // exact DECIMAL value sums, and the bucket's integer-exact traffic
@@ -1741,4 +1654,56 @@ object EventQueries extends QueryFamily {
       |SELECT user_id, count(*) AS n_islands,
       |  CAST(sum(i_e - i_s) AS BIGINT) AS covered_s
       |FROM g GROUP BY 1""".stripMargin
+
+  /** The oracle shared by events_funnel, events_funnel_fold, events_funnel_stream. */
+  private lazy val eventsFunnelOracle: String =
+    """WITH e AS (SELECT user_id, event_type, date_trunc('second', ts) AS ts_s FROM events),
+        |a AS (SELECT user_id,
+        |  min(CASE WHEN event_type = 'signup' THEN ts_s END) AS t_signup,
+        |  list(ts_s) FILTER (WHERE event_type = 'view') AS views,
+        |  list(ts_s) FILTER (WHERE event_type = 'purchase') AS buys
+        |  FROM e GROUP BY user_id),
+        |b AS (SELECT user_id, t_signup, buys,
+        |  list_min(list_filter(views, v -> v > t_signup)) AS t_view FROM a)
+        |SELECT user_id, t_signup, t_view,
+        |  list_min(list_filter(buys, x -> x > t_view)) AS t_buy,
+        |  (t_signup IS NOT NULL AND t_view IS NOT NULL) AS reached_view,
+        |  (t_view IS NOT NULL AND list_min(list_filter(buys, x -> x > t_view)) IS NOT NULL) AS reached_buy
+        |FROM b""".stripMargin
+
+  /** The oracle shared by events_sessions_stream, events_session_window. */
+  private lazy val eventsSessionsStreamOracle: String =
+    """WITH e AS (SELECT user_id, event_id, date_trunc('second', ts) AS ts_s FROM events),
+        |g AS (SELECT user_id, event_id, ts_s,
+        |  epoch(ts_s) - epoch(lag(ts_s, 1) OVER (PARTITION BY user_id ORDER BY ts_s, event_id)) AS gap
+        |  FROM e),
+        |s AS (SELECT user_id, ts_s,
+        |  SUM(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END)
+        |    OVER (PARTITION BY user_id ORDER BY ts_s, event_id ROWS UNBOUNDED PRECEDING) AS session_id
+        |  FROM g)
+        |SELECT user_id, CAST(MIN(ts_s) AS TIMESTAMP) AS session_start,
+        |COUNT(*) AS n_events
+        |FROM s GROUP BY user_id, session_id""".stripMargin
+
+  /** The oracle shared by events_retention_stream, events_retention. */
+  private lazy val eventsRetentionStreamOracle: String =
+    """WITH e AS (SELECT user_id, event_type, CAST(ts AS DATE) AS day FROM events),
+        |p AS (SELECT user_id,
+        |  min(CASE WHEN event_type = 'signup' THEN day END) AS signup_day,
+        |  list(DISTINCT day) AS days FROM e GROUP BY user_id),
+        |r AS (SELECT user_id, signup_day,
+        |  list_contains(days, signup_day + 1) AS d1,
+        |  list_contains(days, signup_day + 7) AS d7
+        |  FROM p WHERE signup_day IS NOT NULL)
+        |SELECT signup_day AS cohort_day, COUNT(*) AS n_users,
+        |  CAST(SUM(CAST(d1 AS INT)) AS BIGINT) AS n_d1,
+        |  CAST(SUM(CAST(d7 AS INT)) AS BIGINT) AS n_d7
+        |FROM r GROUP BY signup_day""".stripMargin
+
+  /** The oracle shared by events_hourly, events_hourly_stream, events_hourly_incremental. */
+  private lazy val eventsHourlyOracle: String =
+    """SELECT date_trunc('hour', ts) AS hour_start, event_type,
+        |COUNT(*) AS n_events,
+        |CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
+        |FROM events GROUP BY 1, 2""".stripMargin
 }

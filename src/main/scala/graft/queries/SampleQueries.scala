@@ -225,17 +225,7 @@ object SampleQueries extends QueryFamily {
         s => lit(0.5) + (length(s) % 3).cast("double") * lit(0.7)),
       // epoch replay: same weight function, same md5 uniform, same
       // floor/fraction split — DuckDB regenerates every replica row
-      """WITH b AS (SELECT doc_id, source,
-        |  0.5 + CAST(length(source) % 3 AS DOUBLE) * 0.7 AS w,
-        |  (('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |    ::DOUBLE + 0.5) / 4294967296.0 AS u
-        |  FROM documents),
-        |n AS (SELECT doc_id, source,
-        |  CAST(floor(w) AS BIGINT) +
-        |  CASE WHEN u < w - floor(w) THEN 1 ELSE 0 END AS nrep FROM b)
-        |SELECT doc_id, source, CAST(unnest(range(1, nrep + 1)) AS INT)
-        |  AS epoch
-        |FROM n WHERE nrep >= 1""".stripMargin),
+      mixEpochsOracle),
 
     // The SAME epoch expansion as a streaming query: epochRepeat is a
     // stateless projection+generate, so it maps over microbatches with
@@ -261,17 +251,7 @@ object SampleQueries extends QueryFamily {
       spark.table("mix_epochs_stream_out").where(col("doc_id") >= 0)
     },
       // batch ≡ stream for the stateless operator: identical oracle
-      """WITH b AS (SELECT doc_id, source,
-        |  0.5 + CAST(length(source) % 3 AS DOUBLE) * 0.7 AS w,
-        |  (('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |    ::DOUBLE + 0.5) / 4294967296.0 AS u
-        |  FROM documents),
-        |n AS (SELECT doc_id, source,
-        |  CAST(floor(w) AS BIGINT) +
-        |  CASE WHEN u < w - floor(w) THEN 1 ELSE 0 END AS nrep FROM b)
-        |SELECT doc_id, source, CAST(unnest(range(1, nrep + 1)) AS INT)
-        |  AS epoch
-        |FROM n WHERE nrep >= 1""".stripMargin),
+      mixEpochsOracle),
 
     // Temperature-scaled mixture weights at tau = 1/2 (the UniMax /
     // multilingual-sampling flattening): weight = sqrt(n) per source —
@@ -633,21 +613,7 @@ object SampleQueries extends QueryFamily {
         Tables.read(spark, dir, "documents"), "doc_id", "text", "source"),
       // portable-hash admission: ('0x'||substring(md5(id),1,8))::UBIGINT
       // replays Spark's conv(substring(md5(...),1,8),16,10)
-      """WITH d AS (SELECT doc_id, source,
-        |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)
-        |      AS n_tokens
-        |  FROM documents),
-        |a AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS avail_tokens
-        |  FROM d GROUP BY 1),
-        |m AS (SELECT min(avail_tokens) AS min_avail FROM a)
-        |SELECT d.doc_id, d.source, d.n_tokens, a.avail_tokens,
-        |  least(1000000, m.min_avail * 1000000 // a.avail_tokens)
-        |    AS rate_ppm,
-        |  (('0x' || substring(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::UBIGINT
-        |    % 1000000)::BIGINT <
-        |    least(1000000, m.min_avail * 1000000 // a.avail_tokens)
-        |    AS admitted
-        |FROM d JOIN a USING (source), m""".stripMargin),
+      mixToTargetOracle),
 
     // Streaming twin #24 — continuous balanced-mix intake: the rate
     // table lives OUTSIDE the stream (search_ingest pattern — computed
@@ -677,7 +643,25 @@ object SampleQueries extends QueryFamily {
     },
       // identical oracle to mix_to_target: stateless per-arrival verdicts
       // must reproduce the batch admission bit-for-bit
-      """WITH d AS (SELECT doc_id, source,
+      mixToTargetOracle))
+
+  /** The oracle shared by mix_epochs, mix_epochs_stream. */
+  private lazy val mixEpochsOracle: String =
+    """WITH b AS (SELECT doc_id, source,
+        |  0.5 + CAST(length(source) % 3 AS DOUBLE) * 0.7 AS w,
+        |  (('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
+        |    ::DOUBLE + 0.5) / 4294967296.0 AS u
+        |  FROM documents),
+        |n AS (SELECT doc_id, source,
+        |  CAST(floor(w) AS BIGINT) +
+        |  CASE WHEN u < w - floor(w) THEN 1 ELSE 0 END AS nrep FROM b)
+        |SELECT doc_id, source, CAST(unnest(range(1, nrep + 1)) AS INT)
+        |  AS epoch
+        |FROM n WHERE nrep >= 1""".stripMargin
+
+  /** The oracle shared by mix_to_target, mix_to_target_stream. */
+  private lazy val mixToTargetOracle: String =
+    """WITH d AS (SELECT doc_id, source,
         |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)
         |      AS n_tokens
         |  FROM documents),
@@ -691,6 +675,5 @@ object SampleQueries extends QueryFamily {
         |    % 1000000)::BIGINT <
         |    least(1000000, m.min_avail * 1000000 // a.avail_tokens)
         |    AS admitted
-        |FROM d JOIN a USING (source), m""".stripMargin))
-
+        |FROM d JOIN a USING (source), m""".stripMargin
 }

@@ -482,11 +482,7 @@ object SqlQueries extends QueryFamily {
           leftTime = "ts", rightTime = "c_ts")
         .select(col("user_id"), col("event_id"), col("click_s").as("asof_click_s"))
     },
-      """WITH l AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
-        |r AS (SELECT user_id, ts, date_trunc('second', ts) AS click_s
-        |      FROM events WHERE event_type = 'click')
-        |SELECT l.user_id, l.event_id, CAST(r.click_s AS TIMESTAMP) AS asof_click_s
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts""".stripMargin),
+      qAsofJoinOracle),
 
     // Direction variant: FIRST click at-or-after each purchase
     // (nearest-after lookup); same custom operator, direction=forward.
@@ -1397,11 +1393,7 @@ object SqlQueries extends QueryFamily {
     },
       // identical oracle to q_asof_join: the streaming as-of must reproduce
       // DuckDB's native ASOF LEFT JOIN bit-for-bit
-      """WITH l AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
-        |r AS (SELECT user_id, ts, date_trunc('second', ts) AS click_s
-        |      FROM events WHERE event_type = 'click')
-        |SELECT l.user_id, l.event_id, CAST(r.click_s AS TIMESTAMP) AS asof_click_s
-        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts""".stripMargin),
+      qAsofJoinOracle),
 
     // Pure range join (NO equi-key): clicks landing inside sampled
     // one-hour post-purchase windows, via the bucketized point-in-interval
@@ -1552,4 +1544,12 @@ object SqlQueries extends QueryFamily {
         |  SELECT l_returnflag, COUNT(*) AS n,
         |    MIN(l_extendedprice) AS lo, MAX(l_extendedprice) AS hi
         |  FROM lineitem GROUP BY l_returnflag) e USING (l_returnflag)""".stripMargin))
+
+  /** The oracle shared by q_asof_join, q_asof_join_stream. */
+  private lazy val qAsofJoinOracle: String =
+    """WITH l AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
+        |r AS (SELECT user_id, ts, date_trunc('second', ts) AS click_s
+        |      FROM events WHERE event_type = 'click')
+        |SELECT l.user_id, l.event_id, CAST(r.click_s AS TIMESTAMP) AS asof_click_s
+        |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts""".stripMargin
 }

@@ -770,31 +770,7 @@ object TableQueries extends QueryFamily {
       // the engine's max(struct(seq, op, …)) election replayed as a
       // row_number over seq desc — identical because seq totally orders
       // each key's changes
-      """WITH ch AS (
-        |  SELECT o_orderkey AS k, 1 AS seq, 'U' AS op, o_custkey,
-        |    'R' AS o_orderstatus, o_totalprice + 1000.0 AS o_totalprice,
-        |    o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 7 = 3
-        |  UNION ALL
-        |  SELECT o_orderkey, 2, 'D', NULL, NULL, NULL, NULL, NULL
-        |  FROM orders WHERE o_orderkey % 11 = 5
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, 1, 'U', o_custkey, 'N',
-        |    o_totalprice, o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 13 = 7),
-        |latest AS (SELECT k, op, o_custkey, o_orderstatus, o_totalprice,
-        |    o_orderdate, o_orderpriority,
-        |    row_number() OVER (PARTITION BY k ORDER BY seq DESC) AS rn
-        |  FROM ch)
-        |SELECT s.o_orderkey, s.o_custkey, s.o_orderstatus, s.o_totalprice,
-        |  s.o_orderdate, s.o_orderpriority
-        |FROM orders s LEFT JOIN (SELECT DISTINCT k FROM ch) t
-        |  ON s.o_orderkey = t.k
-        |WHERE t.k IS NULL
-        |UNION ALL
-        |SELECT k, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-        |  o_orderpriority
-        |FROM latest WHERE rn = 1 AND op = 'U'""".stripMargin),
+      tableMergeCdcOracle),
 
     // Streaming twin #23 — continuous CDC intake: the change feed arrives
     // as TWO microbatches delivered OUT of seq order (all seq-2 deletes
@@ -825,31 +801,7 @@ object TableQueries extends QueryFamily {
     },
       // identical oracle to table_merge_cdc: the out-of-order streamed
       // election must reproduce the batch merge bit-for-bit
-      """WITH ch AS (
-        |  SELECT o_orderkey AS k, 1 AS seq, 'U' AS op, o_custkey,
-        |    'R' AS o_orderstatus, o_totalprice + 1000.0 AS o_totalprice,
-        |    o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 7 = 3
-        |  UNION ALL
-        |  SELECT o_orderkey, 2, 'D', NULL, NULL, NULL, NULL, NULL
-        |  FROM orders WHERE o_orderkey % 11 = 5
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, 1, 'U', o_custkey, 'N',
-        |    o_totalprice, o_orderdate, o_orderpriority
-        |  FROM orders WHERE o_orderkey % 13 = 7),
-        |latest AS (SELECT k, op, o_custkey, o_orderstatus, o_totalprice,
-        |    o_orderdate, o_orderpriority,
-        |    row_number() OVER (PARTITION BY k ORDER BY seq DESC) AS rn
-        |  FROM ch)
-        |SELECT s.o_orderkey, s.o_custkey, s.o_orderstatus, s.o_totalprice,
-        |  s.o_orderdate, s.o_orderpriority
-        |FROM orders s LEFT JOIN (SELECT DISTINCT k FROM ch) t
-        |  ON s.o_orderkey = t.k
-        |WHERE t.k IS NULL
-        |UNION ALL
-        |SELECT k, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-        |  o_orderpriority
-        |FROM latest WHERE rn = 1 AND op = 'U'""".stripMargin),
+      tableMergeCdcOracle),
 
     // Join-key skew profile on events.user_id — the pre-join diagnostic
     // feeding the salted-join decision. TakeOrderedAndProject top-10
@@ -1287,4 +1239,32 @@ object TableQueries extends QueryFamily {
       |SELECT d.key, d.bucket, d.can_skip,
       |  CAST(coalesce(a.n_match, 0) AS BIGINT) AS n_match
       |FROM dec d LEFT JOIN act a USING (key, bucket)""".stripMargin
+
+  /** The oracle shared by table_merge_cdc, table_merge_cdc_stream. */
+  private lazy val tableMergeCdcOracle: String =
+    """WITH ch AS (
+        |  SELECT o_orderkey AS k, 1 AS seq, 'U' AS op, o_custkey,
+        |    'R' AS o_orderstatus, o_totalprice + 1000.0 AS o_totalprice,
+        |    o_orderdate, o_orderpriority
+        |  FROM orders WHERE o_orderkey % 7 = 3
+        |  UNION ALL
+        |  SELECT o_orderkey, 2, 'D', NULL, NULL, NULL, NULL, NULL
+        |  FROM orders WHERE o_orderkey % 11 = 5
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, 1, 'U', o_custkey, 'N',
+        |    o_totalprice, o_orderdate, o_orderpriority
+        |  FROM orders WHERE o_orderkey % 13 = 7),
+        |latest AS (SELECT k, op, o_custkey, o_orderstatus, o_totalprice,
+        |    o_orderdate, o_orderpriority,
+        |    row_number() OVER (PARTITION BY k ORDER BY seq DESC) AS rn
+        |  FROM ch)
+        |SELECT s.o_orderkey, s.o_custkey, s.o_orderstatus, s.o_totalprice,
+        |  s.o_orderdate, s.o_orderpriority
+        |FROM orders s LEFT JOIN (SELECT DISTINCT k FROM ch) t
+        |  ON s.o_orderkey = t.k
+        |WHERE t.k IS NULL
+        |UNION ALL
+        |SELECT k, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
+        |  o_orderpriority
+        |FROM latest WHERE rn = 1 AND op = 'U'""".stripMargin
 }

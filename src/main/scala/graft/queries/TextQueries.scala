@@ -319,11 +319,7 @@ object TextQueries extends QueryFamily {
     entry("text_topk_ngrams", (spark, dir) =>
       TextAnalysis.topNgramsByDocFreq(
         Tables.read(spark, dir, "documents"), "text", k = 50),
-      s"""
-        |WITH $shingleCtes,
-        |u AS (SELECT unnest(s) AS ngram FROM sh)
-        |SELECT ngram, count(*) AS doc_freq FROM u
-        |GROUP BY ngram ORDER BY doc_freq DESC, ngram LIMIT 50""".stripMargin),
+      textTopkNgramsOracle),
 
     // The SAME top-50 through the Misra-Gries sketch run in its exact
     // regime: capacity 2¹⁹ ≥ corpus 3-gram vocabulary (27k at sf0.1,
@@ -348,11 +344,7 @@ object TextQueries extends QueryFamily {
     },
       // identical construction: in exact mode the sketch must reproduce
       // the true top-50 (same tie-break: freq desc, gram asc)
-      s"""
-        |WITH $shingleCtes,
-        |u AS (SELECT unnest(s) AS ngram FROM sh)
-        |SELECT ngram, count(*) AS doc_freq FROM u
-        |GROUP BY ngram ORDER BY doc_freq DESC, ngram LIMIT 50""".stripMargin),
+      textTopkNgramsOracle),
 
     // PII redaction over deterministically PII-augmented fixture text
     // (the synthetic corpus carries no addresses, so each doc gets an
@@ -1042,20 +1034,7 @@ object TextQueries extends QueryFamily {
     },
       // shared normalized 4-grams against the doc_id%97 benchmark slice;
       // grams per doc are DISTINCT (list_distinct mirrors array_distinct)
-      """WITH toks AS (SELECT doc_id,
-        |  string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents),
-        |g AS (SELECT doc_id, list_distinct(list_transform(
-        |  range(1, greatest(len(t) - 3, 1) + 1),
-        |  i -> array_to_string(t[i:i+3], ' '))) AS s FROM toks),
-        |bench AS (SELECT DISTINCT unnest(s) AS gram FROM g WHERE doc_id % 97 = 0),
-        |cand AS (SELECT doc_id, unnest(s) AS gram FROM g WHERE doc_id % 97 <> 0),
-        |hits AS (SELECT doc_id, COUNT(*) AS n FROM cand
-        |  JOIN bench USING (gram) GROUP BY doc_id)
-        |SELECT d.doc_id, COALESCE(h.n, 0) AS n_shared,
-        |  COALESCE(h.n, 0) > 0 AS contaminated
-        |FROM documents d LEFT JOIN hits h USING (doc_id)
-        |WHERE d.doc_id % 97 <> 0""".stripMargin),
+      textDecontaminateOracle),
 
     // CCNet-style common-line removal over deterministically augmented
     // fixture text (the synthetic corpus has no repeated lines, so docs
@@ -1109,20 +1088,7 @@ object TextQueries extends QueryFamily {
         "text", "doc_id", k = 4)
     },
       // Bloom prefilter is pure plan optimization — identical exact result
-      """WITH toks AS (SELECT doc_id,
-        |  string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents),
-        |g AS (SELECT doc_id, list_distinct(list_transform(
-        |  range(1, greatest(len(t) - 3, 1) + 1),
-        |  i -> array_to_string(t[i:i+3], ' '))) AS s FROM toks),
-        |bench AS (SELECT DISTINCT unnest(s) AS gram FROM g WHERE doc_id % 97 = 0),
-        |cand AS (SELECT doc_id, unnest(s) AS gram FROM g WHERE doc_id % 97 <> 0),
-        |hits AS (SELECT doc_id, COUNT(*) AS n FROM cand
-        |  JOIN bench USING (gram) GROUP BY doc_id)
-        |SELECT d.doc_id, COALESCE(h.n, 0) AS n_shared,
-        |  COALESCE(h.n, 0) > 0 AS contaminated
-        |FROM documents d LEFT JOIN hits h USING (doc_id)
-        |WHERE d.doc_id % 97 <> 0""".stripMargin),
+      textDecontaminateOracle),
 
     // SPAN-LEVEL decontamination: maximal >= 8-token spans of candidate
     // docs that occur anywhere in the %97 benchmark slice — located, not
@@ -1940,4 +1906,29 @@ object TextQueries extends QueryFamily {
       |    WHERE it.step < 8
       |    GROUP BY it.step, it.vocab
       |  ) g""".stripMargin
+
+  /** The oracle shared by text_topk_ngrams, text_topk_sketch. */
+  private lazy val textTopkNgramsOracle: String =
+    s"""
+        |WITH $shingleCtes,
+        |u AS (SELECT unnest(s) AS ngram FROM sh)
+        |SELECT ngram, count(*) AS doc_freq FROM u
+        |GROUP BY ngram ORDER BY doc_freq DESC, ngram LIMIT 50""".stripMargin
+
+  /** The oracle shared by text_decontaminate, text_decontaminate_bloom. */
+  private lazy val textDecontaminateOracle: String =
+    """WITH toks AS (SELECT doc_id,
+        |  string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
+        |  FROM documents),
+        |g AS (SELECT doc_id, list_distinct(list_transform(
+        |  range(1, greatest(len(t) - 3, 1) + 1),
+        |  i -> array_to_string(t[i:i+3], ' '))) AS s FROM toks),
+        |bench AS (SELECT DISTINCT unnest(s) AS gram FROM g WHERE doc_id % 97 = 0),
+        |cand AS (SELECT doc_id, unnest(s) AS gram FROM g WHERE doc_id % 97 <> 0),
+        |hits AS (SELECT doc_id, COUNT(*) AS n FROM cand
+        |  JOIN bench USING (gram) GROUP BY doc_id)
+        |SELECT d.doc_id, COALESCE(h.n, 0) AS n_shared,
+        |  COALESCE(h.n, 0) > 0 AS contaminated
+        |FROM documents d LEFT JOIN hits h USING (doc_id)
+        |WHERE d.doc_id % 97 <> 0""".stripMargin
 }
