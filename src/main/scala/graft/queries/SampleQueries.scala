@@ -64,36 +64,13 @@ object SampleQueries extends QueryFamily {
       // full greedy replay: each recursion step carries the selected
       // (vectors, norms, ids) and re-derives the next farthest point with
       // the identical IEEE arithmetic and tie-break
-      """WITH RECURSIVE n AS (
+      raw"""WITH RECURSIVE n AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> x::DOUBLE) AS v,
         |    sqrt(list_sum(list_transform(range(1, len(embedding)+1),
         |      j -> embedding[j]::DOUBLE * embedding[j]::DOUBLE))) AS nrm
         |  FROM embeddings),
-        |s0 AS (SELECT min(vec_id) AS id FROM n),
-        |r AS (
-        |  SELECT 1 AS rank, n.vec_id, CAST(0.0 AS DOUBLE) AS dist,
-        |    [n.v] AS sels, [n.nrm] AS snrms, [n.vec_id] AS sids
-        |  FROM n, s0 WHERE n.vec_id = s0.id
-        |  UNION ALL
-        |  SELECT g.rank + 1,
-        |    -struct_extract(g.m, 'nid'), struct_extract(g.m, 'd'),
-        |    list_append(g.sels, struct_extract(g.m, 'v')),
-        |    list_append(g.snrms, struct_extract(g.m, 'nrm')),
-        |    list_append(g.sids, -struct_extract(g.m, 'nid'))
-        |  FROM (
-        |    SELECT r.rank, r.sels, r.snrms, r.sids,
-        |      max(struct_pack(d := c_mind, nid := -n.vec_id,
-        |                      v := n.v, nrm := n.nrm)) AS m
-        |    FROM r JOIN n ON NOT list_contains(r.sids, n.vec_id),
-        |    LATERAL (SELECT list_min(list_transform(range(1, len(r.sels)+1),
-        |      i -> CASE WHEN n.nrm * r.snrms[i] = 0 THEN 1.0
-        |           ELSE 1.0 - list_sum(list_transform(range(1, len(n.v)+1),
-        |             j -> n.v[j] * r.sels[i][j])) / (n.nrm * r.snrms[i])
-        |           END)) AS c_mind) lat
-        |    WHERE r.rank < 12
-        |    GROUP BY r.rank, r.sels, r.snrms, r.sids
-        |  ) g
+        |$kCenterGreedySteps
         |)
         |SELECT rank, vec_id, round(dist, 6) AS dist FROM r""".stripMargin),
 
@@ -109,7 +86,7 @@ object SampleQueries extends QueryFamily {
       // sampled variant: the same greedy recursion, but over the 64-row
       // content-hash sample, then assignment count + coverage radius per
       // center over the FULL corpus (nearest center, ties to lower rank)
-      """WITH RECURSIVE n0 AS (
+      raw"""WITH RECURSIVE n0 AS (
         |  SELECT vec_id,
         |    list_transform(embedding, x -> x::DOUBLE) AS v,
         |    sqrt(list_sum(list_transform(range(1, len(embedding)+1),
@@ -118,30 +95,7 @@ object SampleQueries extends QueryFamily {
         |n AS (SELECT * FROM n0
         |  ORDER BY substring(md5(CAST(vec_id AS VARCHAR)), 1, 8), vec_id
         |  LIMIT 64),
-        |s0 AS (SELECT min(vec_id) AS id FROM n),
-        |r AS (
-        |  SELECT 1 AS rank, n.vec_id, CAST(0.0 AS DOUBLE) AS dist,
-        |    [n.v] AS sels, [n.nrm] AS snrms, [n.vec_id] AS sids
-        |  FROM n, s0 WHERE n.vec_id = s0.id
-        |  UNION ALL
-        |  SELECT g.rank + 1,
-        |    -struct_extract(g.m, 'nid'), struct_extract(g.m, 'd'),
-        |    list_append(g.sels, struct_extract(g.m, 'v')),
-        |    list_append(g.snrms, struct_extract(g.m, 'nrm')),
-        |    list_append(g.sids, -struct_extract(g.m, 'nid'))
-        |  FROM (
-        |    SELECT r.rank, r.sels, r.snrms, r.sids,
-        |      max(struct_pack(d := c_mind, nid := -n.vec_id,
-        |                      v := n.v, nrm := n.nrm)) AS m
-        |    FROM r JOIN n ON NOT list_contains(r.sids, n.vec_id),
-        |    LATERAL (SELECT list_min(list_transform(range(1, len(r.sels)+1),
-        |      i -> CASE WHEN n.nrm * r.snrms[i] = 0 THEN 1.0
-        |           ELSE 1.0 - list_sum(list_transform(range(1, len(n.v)+1),
-        |             j -> n.v[j] * r.sels[i][j])) / (n.nrm * r.snrms[i])
-        |           END)) AS c_mind) lat
-        |    WHERE r.rank < 12
-        |    GROUP BY r.rank, r.sels, r.snrms, r.sids
-        |  ) g
+        |$kCenterGreedySteps
         |),
         |a AS (
         |  SELECT e.vec_id AS pid, c.rank,
@@ -676,4 +630,34 @@ object SampleQueries extends QueryFamily {
         |    least(1000000, m.min_avail * 1000000 // a.avail_tokens)
         |    AS admitted
         |FROM d JOIN a USING (source), m""".stripMargin
+
+  /** The greedy k-center recursion over `n(vec_id, v, nrm)`: each step
+    * carries the selected (vectors, norms, ids) and re-derives the next
+    * farthest point with the (dist desc → id asc) tie-break; 12 centers.
+    */
+  private lazy val kCenterGreedySteps: String =
+    """s0 AS (SELECT min(vec_id) AS id FROM n),
+      |r AS (
+      |  SELECT 1 AS rank, n.vec_id, CAST(0.0 AS DOUBLE) AS dist,
+      |    [n.v] AS sels, [n.nrm] AS snrms, [n.vec_id] AS sids
+      |  FROM n, s0 WHERE n.vec_id = s0.id
+      |  UNION ALL
+      |  SELECT g.rank + 1,
+      |    -struct_extract(g.m, 'nid'), struct_extract(g.m, 'd'),
+      |    list_append(g.sels, struct_extract(g.m, 'v')),
+      |    list_append(g.snrms, struct_extract(g.m, 'nrm')),
+      |    list_append(g.sids, -struct_extract(g.m, 'nid'))
+      |  FROM (
+      |    SELECT r.rank, r.sels, r.snrms, r.sids,
+      |      max(struct_pack(d := c_mind, nid := -n.vec_id,
+      |                      v := n.v, nrm := n.nrm)) AS m
+      |    FROM r JOIN n ON NOT list_contains(r.sids, n.vec_id),
+      |    LATERAL (SELECT list_min(list_transform(range(1, len(r.sels)+1),
+      |      i -> CASE WHEN n.nrm * r.snrms[i] = 0 THEN 1.0
+      |           ELSE 1.0 - list_sum(list_transform(range(1, len(n.v)+1),
+      |             j -> n.v[j] * r.sels[i][j])) / (n.nrm * r.snrms[i])
+      |           END)) AS c_mind) lat
+      |    WHERE r.rank < 12
+      |    GROUP BY r.rank, r.sels, r.snrms, r.sids
+      |  ) g""".stripMargin
 }

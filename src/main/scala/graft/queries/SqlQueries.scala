@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -486,21 +486,10 @@ object SqlQueries extends QueryFamily {
 
     // Direction variant: FIRST click at-or-after each purchase
     // (nearest-after lookup); same custom operator, direction=forward.
-    entry("q_asof_forward", (spark, dir) => {
-      val ev = Tables.read(spark, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
+    entry("q_asof_forward", (spark, dir) =>
+      clickAsOf(spark, dir, direction = "forward")
         .select(col("user_id"), col("event_id"),
-          date_trunc("second", col("ts")).as("ts_s"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"),
-          date_trunc("second", col("ts")).as("click_s"))
-      graft.plans.AsOfJoinPlan.asOf(purchases, clicks,
-          leftKey = "user_id", rightKey = "c_user",
-          leftTime = "ts_s", rightTime = "click_s",
-          direction = "forward")
-        .select(col("user_id"), col("event_id"),
-          col("click_s").as("next_click_s"))
-    },
+          col("click_s").as("next_click_s")),
       // forward as-of: DuckDB's ASOF is backward-only, so the oracle takes
       // min(click ts ≥ purchase ts) per row — the forward match IS its ts
       """WITH l AS (SELECT user_id, event_id, date_trunc('second', ts) AS ts_s
@@ -515,21 +504,10 @@ object SqlQueries extends QueryFamily {
 
     // Nearest variant: the click closest in time on either side (ties →
     // backward), per purchase.
-    entry("q_asof_nearest", (spark, dir) => {
-      val ev = Tables.read(spark, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
+    entry("q_asof_nearest", (spark, dir) =>
+      clickAsOf(spark, dir, direction = "nearest")
         .select(col("user_id"), col("event_id"),
-          date_trunc("second", col("ts")).as("ts_s"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"),
-          date_trunc("second", col("ts")).as("click_s"))
-      graft.plans.AsOfJoinPlan.asOf(purchases, clicks,
-          leftKey = "user_id", rightKey = "c_user",
-          leftTime = "ts_s", rightTime = "click_s",
-          direction = "nearest")
-        .select(col("user_id"), col("event_id"),
-          col("click_s").as("near_click_s"))
-    },
+          col("click_s").as("near_click_s")),
       """WITH l AS (SELECT user_id, event_id, date_trunc('second', ts) AS ts_s
         |      FROM events WHERE event_type = 'purchase'),
         |r AS (SELECT user_id AS c_user, date_trunc('second', ts) AS click_s
@@ -548,21 +526,10 @@ object SqlQueries extends QueryFamily {
 
     // Tolerance variant: latest click at-or-before each purchase but no
     // older than 1 hour (tolerance in native ts units — micros).
-    entry("q_asof_tolerance", (spark, dir) => {
-      val ev = Tables.read(spark, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
+    entry("q_asof_tolerance", (spark, dir) =>
+      clickAsOf(spark, dir, tolerance = Some(3600L * 1000000L))
         .select(col("user_id"), col("event_id"),
-          date_trunc("second", col("ts")).as("ts_s"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"),
-          date_trunc("second", col("ts")).as("click_s"))
-      graft.plans.AsOfJoinPlan.asOf(purchases, clicks,
-          leftKey = "user_id", rightKey = "c_user",
-          leftTime = "ts_s", rightTime = "click_s",
-          tolerance = Some(3600L * 1000000L))
-        .select(col("user_id"), col("event_id"),
-          col("click_s").as("asof_click_s"))
-    },
+          col("click_s").as("asof_click_s")),
       """WITH l AS (SELECT user_id, event_id, date_trunc('second', ts) AS ts_s
         |      FROM events WHERE event_type = 'purchase'),
         |r AS (SELECT user_id AS c_user, date_trunc('second', ts) AS click_s
@@ -579,19 +546,9 @@ object SqlQueries extends QueryFamily {
     // against DuckDB's native ASOF JOIN like the window form above.
     // Second-truncated timestamps on BOTH sides: ties then resolve to
     // the same (equal) carried value in every implementation.
-    entry("q_asof_join_native", (spark, dir) => {
-      val ev = Tables.read(spark, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"),
-          date_trunc("second", col("ts")).as("ts_s"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"),
-          date_trunc("second", col("ts")).as("click_s"))
-      graft.plans.AsOfJoinPlan.asOf(purchases, clicks,
-          leftKey = "user_id", rightKey = "c_user",
-          leftTime = "ts_s", rightTime = "click_s")
-        .select(col("user_id"), col("event_id"), col("click_s").as("asof_click_s"))
-    },
+    entry("q_asof_join_native", (spark, dir) =>
+      clickAsOf(spark, dir)
+        .select(col("user_id"), col("event_id"), col("click_s").as("asof_click_s")),
       """WITH l AS (SELECT user_id, event_id, date_trunc('second', ts) AS ts_s
         |      FROM events WHERE event_type = 'purchase'),
         |r AS (SELECT user_id AS c_user, date_trunc('second', ts) AS click_s
@@ -1261,37 +1218,11 @@ object SqlQueries extends QueryFamily {
     // sentinels (one per side, reserved users) drain both watermarks.
     // The drained pairs aggregate per purchase; the oracle is the plain
     // batch theta join — batch ≡ stream for the join family too.
-    entry("q_stream_stream_join", (spark, dir) => {
-      import spark.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = Tables.read(spark, dir, "events")
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          date_trunc("second", col("ts")).as("ts"), col("value"))
-      val (delaySec, sentinelTs) = sentinelBounds(spark, ev)
-      val sentinel = Seq(
-        (-1L, "purchase", -1L, sentinelTs, 0.0),
-        (-2L, "click", -2L, sentinelTs, 0.0))
-        .toDF("user_id", "event_type", "event_id", "ts", "value")
-      val src = streamWithSentinel(spark, ev, sentinel, delaySec)
-      val p = src.where(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-          col("ts").as("p_ts"))
-      val c = src.where(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("value").as("c_value"))
-      val joined = p.join(c,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") < col("p_ts"))
-      graft.streaming.EventStream.runToMemory(
-        joined, "q_stream_stream_join_out", OutputMode.Append())
-      spark.table("q_stream_stream_join_out")
-        .where(col("p_user") >= 0)
-        .groupBy("purchase_id")
+    entry("q_stream_stream_join", (spark, dir) =>
+      purchaseClicks(spark, dir, "inner", "q_stream_stream_join_out")
         .agg(count(lit(1)).as("n_clicks"),
           sum(col("c_value").cast("decimal(18,6)")).cast("double")
-            .as("click_value"))
-    },
+            .as("click_value")),
       // the plain batch theta join defines what the watermarked
       // stream-stream join must emit
       """WITH p AS (SELECT user_id, event_id AS purchase_id,
@@ -1310,38 +1241,11 @@ object SqlQueries extends QueryFamily {
     // Spark emits the null-padded row only once the watermark proves no
     // match can arrive, the subtle outer-join-on-streams semantics. The
     // oracle is the batch LEFT JOIN; n_clicks counts matches only.
-    entry("q_stream_stream_left", (spark, dir) => {
-      import spark.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = Tables.read(spark, dir, "events")
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          date_trunc("second", col("ts")).as("ts"), col("value"))
-      val (delaySec, sentinelTs) = sentinelBounds(spark, ev)
-      val sentinel = Seq(
-        (-1L, "purchase", -1L, sentinelTs, 0.0),
-        (-2L, "click", -2L, sentinelTs, 0.0))
-        .toDF("user_id", "event_type", "event_id", "ts", "value")
-      val src = streamWithSentinel(spark, ev, sentinel, delaySec)
-      val p = src.where(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-          col("ts").as("p_ts"))
-      val c = src.where(col("event_type") === "click")
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("value").as("c_value"))
-      val joined = p.join(c,
-        col("p_user") === col("c_user") &&
-          col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-          col("c_ts") < col("p_ts"),
-        "left_outer")
-      graft.streaming.EventStream.runToMemory(
-        joined, "q_stream_stream_left_out", OutputMode.Append())
-      spark.table("q_stream_stream_left_out")
-        .where(col("p_user") >= 0)
-        .groupBy("purchase_id")
+    entry("q_stream_stream_left", (spark, dir) =>
+      purchaseClicks(spark, dir, "left_outer", "q_stream_stream_left_out")
         .agg(count(col("c_ts")).as("n_clicks"),
           sum(col("c_value").cast("decimal(18,6)")).cast("double")
-            .as("click_value"))
-    },
+            .as("click_value")),
       // batch LEFT JOIN: unmatched purchases appear with 0 clicks/null sum
       """WITH p AS (SELECT user_id, event_id AS purchase_id,
         |  date_trunc('second', ts) AS p_ts
@@ -1552,4 +1456,59 @@ object SqlQueries extends QueryFamily {
         |      FROM events WHERE event_type = 'click')
         |SELECT l.user_id, l.event_id, CAST(r.click_s AS TIMESTAMP) AS asof_click_s
         |FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts""".stripMargin
+
+  /** The stream-stream interval self-join of the second-truncated events:
+    * each purchase against the same user's clicks in the preceding hour,
+    * both sides watermarked, two sentinels (one per side, reserved users)
+    * draining both watermarks. Returns the drained pairs of the real
+    * purchases, grouped by purchase.
+    */
+  private def purchaseClicks(spark: SparkSession, dir: String,
+                             joinType: String,
+                             sink: String): RelationalGroupedDataset = {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.OutputMode
+    val ev = Tables.read(spark, dir, "events")
+      .select(col("user_id"), col("event_type"), col("event_id"),
+        date_trunc("second", col("ts")).as("ts"), col("value"))
+    val (delaySec, sentinelTs) = sentinelBounds(spark, ev)
+    val sentinel = Seq(
+      (-1L, "purchase", -1L, sentinelTs, 0.0),
+      (-2L, "click", -2L, sentinelTs, 0.0))
+      .toDF("user_id", "event_type", "event_id", "ts", "value")
+    val src = streamWithSentinel(spark, ev, sentinel, delaySec)
+    val p = src.where(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
+        col("ts").as("p_ts"))
+    val c = src.where(col("event_type") === "click")
+      .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+        col("value").as("c_value"))
+    val joined = p.join(c,
+      col("p_user") === col("c_user") &&
+        col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
+        col("c_ts") < col("p_ts"),
+      joinType)
+    graft.streaming.EventStream.runToMemory(joined, sink, OutputMode.Append())
+    spark.table(sink).where(col("p_user") >= 0).groupBy("purchase_id")
+  }
+
+  /** The custom as-of operator over the second-truncated events: each
+    * purchase `(user_id, event_id, ts_s)` against the same user's clicks
+    * `(c_user, click_s)`.
+    */
+  private def clickAsOf(spark: SparkSession, dir: String,
+                        direction: String = "backward",
+                        tolerance: Option[Long] = None): DataFrame = {
+    val ev = Tables.read(spark, dir, "events")
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id"),
+        date_trunc("second", col("ts")).as("ts_s"))
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"),
+        date_trunc("second", col("ts")).as("click_s"))
+    graft.plans.AsOfJoinPlan.asOf(purchases, clicks,
+      leftKey = "user_id", rightKey = "c_user",
+      leftTime = "ts_s", rightTime = "click_s",
+      direction = direction, tolerance = tolerance)
+  }
 }
