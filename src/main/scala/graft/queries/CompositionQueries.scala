@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import DedupQueries.substrApplyCtesForPipeline
 import SqlFragments.{markerList, qualityRatios, qualityScore, stopList}
-import StreamFixtures.{sentinelBounds, streamWithSentinel}
+import Fixtures.{boilerDocs, riverbank, sentinelBounds, streamWithSentinel}
 
 /** Composed `pipeline_*` entries: several operators chained the way a
   * training-data job runs them (ingest, clean, dedup, filter, mix, RAG).
@@ -323,13 +323,7 @@ object CompositionQueries extends QueryFamily {
     // independently hash-gated operator; the oracle replays the full
     // composition in nested CTEs.
     entry("pipeline_pretrain", (spark, dir) => {
-      val boiler =
-        "the quick brown fox jumps over the lazy dog near the river bank"
-      val aug = Tables.read(spark, dir, "documents")
-        .withColumn("text", concat(
-          when(col("doc_id") % 7 === 0, lit(boiler + " ")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 11 === 0, lit(" " + boiler)).otherwise(lit(""))))
+      val aug = boilerDocs(spark, dir)
       // the span-removal stage feeds THREE downstream consumers (lexicon
       // train, scoring, admission join) — persist it once instead of
       // recomputing the corpus-wide ExactSubstr pass per consumer; the
@@ -800,16 +794,14 @@ object CompositionQueries extends QueryFamily {
     */
   private def ingestCorpus(spark: SparkSession, dir: String): DataFrame = {
     val raven = "the raven sat on the bust of pallas above the chamber door"
-    val plant =
-      "by the riverbank the quiet fox waited for the morning light to come"
     Tables.read(spark, dir, "documents").withColumn("text",
       when(col("doc_id") % 3 =!= 2 && col("doc_id") % 17 === 0, lit(raven))
         .when(col("doc_id") % 3 === 2 && col("doc_id") % 13 === 0, lit(raven))
         .otherwise(concat(col("text"),
           when(col("doc_id") % 3 =!= 2 && col("doc_id") % 2 === 0,
-            lit(" " + plant))
+            lit(" " + riverbank))
             .when(col("doc_id") % 3 === 2 && col("doc_id") % 7 === 0,
-              lit(" " + plant))
+              lit(" " + riverbank))
             .otherwise(lit("")))))
   }
 

@@ -3,8 +3,8 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
-import SqlFragments.{qualityRatios, qualityScore, shingleCtes}
-import StreamFixtures.streamWithSentinel
+import SqlFragments.{boilerTokenCtes, crossSpanOracle, plantedTokenCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, spanRows, tokenWindowCtes}
+import Fixtures.{boilerDocs, plantedDocs, riverbank, streamWithSentinel}
 
 /** Deduplication entries: exact, n-gram Jaccard / containment, MinHash-LSH,
   * SimHash, winnowing, embedding-cosine, exact-substring spans, component
@@ -765,13 +765,7 @@ object DedupQueries extends QueryFamily {
     // 16-token grid of dedup_spans cannot align on; natural fixture
     // repeats fire too. Oracle replays windows/merge on real substrings.
     entry("dedup_exact_substr", (spark, dir) => {
-      val boiler =
-        "the quick brown fox jumps over the lazy dog near the river bank"
-      val docs = Tables.read(spark, dir, "documents")
-        .withColumn("text", concat(
-          when(col("doc_id") % 7 === 0, lit(boiler + " ")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 11 === 0, lit(" " + boiler)).otherwise(lit(""))))
+      val docs = boilerDocs(spark, dir)
       Dedup.duplicateSpans(docs, "text", "doc_id", minLen = 8)
     },
       // ExactSubstr replay on REAL window substrings (no hashes): same
@@ -788,13 +782,7 @@ object DedupQueries extends QueryFamily {
     entry("dedup_exact_substr_stream", (spark, dir) => {
       import spark.implicits._
       import org.apache.spark.sql.streaming.OutputMode
-      val boiler =
-        "the quick brown fox jumps over the lazy dog near the river bank"
-      val aug = Tables.read(spark, dir, "documents")
-        .withColumn("text", concat(
-          when(col("doc_id") % 7 === 0, lit(boiler + " ")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 11 === 0, lit(" " + boiler)).otherwise(lit(""))))
+      val aug = boilerDocs(spark, dir)
       val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
       val docs = aug.select(col("doc_id"), col("text"), lit(t0).as("ts"))
       val sentinel = Seq((-1L, "\u0000sentinel",
@@ -827,15 +815,9 @@ object DedupQueries extends QueryFamily {
     entry("dedup_substr_incremental_stream", (spark, dir) => {
       import spark.implicits._
       import org.apache.spark.sql.streaming.OutputMode
-      val plant =
-        "by the riverbank the quiet fox waited for the morning light to come"
-      val aug = Tables.read(spark, dir, "documents")
-        .withColumn("text", concat(
-          when(col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0,
-            lit(plant + " ")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 3 =!= 0 && col("doc_id") % 13 === 0,
-            lit(" " + plant)).otherwise(lit(""))))
+      val aug = plantedDocs(spark, dir, riverbank,
+        col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0,
+        col("doc_id") % 3 =!= 0 && col("doc_id") % 13 === 0)
       val idx = Dedup.buildSubstrIndex(
         aug.where(col("doc_id") % 3 === 0), "text", "doc_id", minLen = 8)
         .withColumnRenamed("wtxt", "__iw")
@@ -877,18 +859,10 @@ object DedupQueries extends QueryFamily {
     // the same sentence into corpus docs (prefix) and appended docs
     // (suffix), so the probe must match BOTH index generations.
     entry("dedup_substr_ingest", (spark, dir) => {
-      val plant =
-        "by the riverbank the quiet fox waited for the morning light to come"
-      val docs = Tables.read(spark, dir, "documents")
-        .withColumn("text", concat(
-          when(col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0,
-            lit(plant + " ")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 3 === 1 && col("doc_id") % 5 === 0,
-            lit(" " + plant))
-            .when(col("doc_id") % 3 === 2 && col("doc_id") % 13 === 0,
-              lit(" " + plant))
-            .otherwise(lit(""))))
+      val docs = plantedDocs(spark, dir, riverbank,
+        col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0,
+        col("doc_id") % 3 === 1 && col("doc_id") % 5 === 0 ||
+          col("doc_id") % 3 === 2 && col("doc_id") % 13 === 0)
       val tmp = graft.tools.Scratch.dir("graft_substr_ing")
       Dedup.buildSubstrIndex(docs.where(col("doc_id") % 3 === 0),
           "text", "doc_id", minLen = 8)
@@ -900,51 +874,14 @@ object DedupQueries extends QueryFamily {
     },
       // three-way ingest replay: index windows come from thirds 0 (build)
       // and 1 (append), probes from third 2, plants as in the entry
-      """WITH aug AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0 AND doc_id % 2 = 0
-        |      THEN 'by the riverbank the quiet fox waited for the morning light to come '
-        |      ELSE '' END || text ||
-        |    CASE WHEN doc_id % 3 = 1 AND doc_id % 5 = 0
-        |      THEN ' by the riverbank the quiet fox waited for the morning light to come'
-        |      WHEN doc_id % 3 = 2 AND doc_id % 13 = 0
-        |      THEN ' by the riverbank the quiet fox waited for the morning light to come'
-        |      ELSE '' END AS text
-        |  FROM documents),
-        |t AS (SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-        |  FROM aug),
-        |n AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 8),
-        |cpos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p
-        |  FROM n WHERE doc_id % 3 = 2),
-        |cw AS (SELECT doc_id, p, array_to_string(toks[p:p+7], ' ') AS wtxt
-        |  FROM cpos),
-        |bpos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p
-        |  FROM n WHERE doc_id % 3 <> 2),
-        |bw AS (SELECT DISTINCT array_to_string(toks[p:p+7], ' ') AS wtxt
-        |  FROM bpos),
-        |f AS (SELECT doc_id, p FROM cw WHERE wtxt IN (SELECT wtxt FROM bw)),
-        |g AS (SELECT doc_id, p,
-        |    lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev FROM f),
-        |isl AS (SELECT doc_id, p,
-        |    sum(CASE WHEN prev IS NULL OR p - prev > 8 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY p) AS island FROM g),
-        |sp AS (SELECT doc_id, min(p) AS s, max(p) - min(p) + 8 AS ln
-        |  FROM isl GROUP BY doc_id, island)
-        |SELECT sp.doc_id, CAST(s AS INT) AS span_start,
-        |  CAST(ln AS INT) AS span_len,
-        |  array_to_string(n.toks[s:s+ln-1], ' ') AS span_text
-        |FROM sp JOIN n USING (doc_id)""".stripMargin),
+      crossSpanOracle(plantedTokenCtes(riverbank,
+        "doc_id % 3 = 0 AND doc_id % 2 = 0", "doc_id % 3 = 1 AND doc_id % 5 = 0", "doc_id % 3 = 2 AND doc_id % 13 = 0"),
+        "doc_id % 3 = 2", "doc_id % 3 <> 2")),
 
     entry("dedup_substr_incremental", (spark, dir) => {
-      val plant =
-        "by the riverbank the quiet fox waited for the morning light to come"
-      val docs = Tables.read(spark, dir, "documents")
-        .withColumn("text", concat(
-          when(col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0,
-            lit(plant + " ")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 3 =!= 0 && col("doc_id") % 13 === 0,
-            lit(" " + plant)).otherwise(lit(""))))
+      val docs = plantedDocs(spark, dir, riverbank,
+        col("doc_id") % 3 === 0 && col("doc_id") % 2 === 0,
+        col("doc_id") % 3 =!= 0 && col("doc_id") % 13 === 0)
       val idx = Dedup.buildSubstrIndex(
         docs.where(col("doc_id") % 3 === 0), "text", "doc_id", minLen = 8)
       val tmp = graft.tools.Scratch.dir("graft_substr_idx")
@@ -962,13 +899,7 @@ object DedupQueries extends QueryFamily {
     // of duplicated 8-windows (corpus-first copy survives — keep-one),
     // rebuild affected docs, pass untouched docs through normalized.
     entry("dedup_exact_substr_apply", (spark, dir) => {
-      val boiler =
-        "the quick brown fox jumps over the lazy dog near the river bank"
-      val docs = Tables.read(spark, dir, "documents")
-        .withColumn("text", concat(
-          when(col("doc_id") % 7 === 0, lit(boiler + " ")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 11 === 0, lit(" " + boiler)).otherwise(lit(""))))
+      val docs = boilerDocs(spark, dir)
       // checkpointHot: measured faster for THIS standalone entry
       // (9.2-9.5 vs 11.8-14.9 s at 10×); pipeline_pretrain keeps the
       // default — the same flag cost it 5× (see the Dedup scaladoc)
@@ -1023,20 +954,8 @@ object DedupQueries extends QueryFamily {
   // the keep-one removal replay's CTE chain (aug → … → reb/unt), reused
   // verbatim as the first stage of the pipeline_pretrain composition
   private[queries] val substrApplyCtesForPipeline: String =
-    """WITH aug AS (SELECT doc_id,
-      |    CASE WHEN doc_id % 7 = 0
-      |      THEN 'the quick brown fox jumps over the lazy dog near the river bank '
-      |      ELSE '' END || text ||
-      |    CASE WHEN doc_id % 11 = 0
-      |      THEN ' the quick brown fox jumps over the lazy dog near the river bank'
-      |      ELSE '' END AS text
-      |  FROM documents),
-      |t AS (SELECT doc_id,
-      |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-      |  FROM aug),
-      |n AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 8),
-      |pos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p FROM n),
-      |w AS (SELECT doc_id, p, array_to_string(toks[p:p+7], ' ') AS wtxt FROM pos),
+    raw"""$boilerTokenCtes
+      |$tokenWindowCtes
       |dfw AS (SELECT wtxt, min(struct_pack(d := doc_id, p := p)) AS first
       |  FROM w GROUP BY wtxt HAVING count(*) > 1),
       |fw AS (SELECT w.doc_id, w.p,
@@ -1065,69 +984,19 @@ object DedupQueries extends QueryFamily {
   // streaming on-arrival probe (identical flagged set: the join is
   // stateless either way)
   private val substrIncrementalOracle: String =
-    """WITH aug AS (SELECT doc_id,
-      |    CASE WHEN doc_id % 3 = 0 AND doc_id % 2 = 0
-      |      THEN 'by the riverbank the quiet fox waited for the morning light to come '
-      |      ELSE '' END || text ||
-      |    CASE WHEN doc_id % 3 <> 0 AND doc_id % 13 = 0
-      |      THEN ' by the riverbank the quiet fox waited for the morning light to come'
-      |      ELSE '' END AS text
-      |  FROM documents),
-      |t AS (SELECT doc_id,
-      |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-      |  FROM aug),
-      |n AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 8),
-      |cpos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p
-      |  FROM n WHERE doc_id % 3 <> 0),
-      |cw AS (SELECT doc_id, p, array_to_string(toks[p:p+7], ' ') AS wtxt
-      |  FROM cpos),
-      |bpos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p
-      |  FROM n WHERE doc_id % 3 = 0),
-      |bw AS (SELECT DISTINCT array_to_string(toks[p:p+7], ' ') AS wtxt
-      |  FROM bpos),
-      |f AS (SELECT doc_id, p FROM cw WHERE wtxt IN (SELECT wtxt FROM bw)),
-      |g AS (SELECT doc_id, p,
-      |    lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev FROM f),
-      |isl AS (SELECT doc_id, p,
-      |    sum(CASE WHEN prev IS NULL OR p - prev > 8 THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY doc_id ORDER BY p) AS island FROM g),
-      |sp AS (SELECT doc_id, min(p) AS s, max(p) - min(p) + 8 AS ln
-      |  FROM isl GROUP BY doc_id, island)
-      |SELECT sp.doc_id, CAST(s AS INT) AS span_start,
-      |  CAST(ln AS INT) AS span_len,
-      |  array_to_string(n.toks[s:s+ln-1], ' ') AS span_text
-      |FROM sp JOIN n USING (doc_id)""".stripMargin
+    crossSpanOracle(plantedTokenCtes(riverbank,
+        "doc_id % 3 = 0 AND doc_id % 2 = 0", "doc_id % 3 <> 0 AND doc_id % 13 = 0"),
+        "doc_id % 3 <> 0", "doc_id % 3 = 0")
 
   // ExactSubstr span replay — shared by the batch entry and the
   // streaming flagging form (identical flagged set by construction)
   private val substrSpansOracle: String =
-    """WITH aug AS (SELECT doc_id,
-      |    CASE WHEN doc_id % 7 = 0
-      |      THEN 'the quick brown fox jumps over the lazy dog near the river bank '
-      |      ELSE '' END || text ||
-      |    CASE WHEN doc_id % 11 = 0
-      |      THEN ' the quick brown fox jumps over the lazy dog near the river bank'
-      |      ELSE '' END AS text
-      |  FROM documents),
-      |t AS (SELECT doc_id,
-      |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-      |  FROM aug),
-      |n AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 8),
-      |pos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p FROM n),
-      |w AS (SELECT doc_id, p, array_to_string(toks[p:p+7], ' ') AS wtxt FROM pos),
+    raw"""$boilerTokenCtes
+      |$tokenWindowCtes
       |dup AS (SELECT wtxt FROM w GROUP BY wtxt HAVING count(*) > 1),
       |f AS (SELECT doc_id, p FROM w WHERE wtxt IN (SELECT wtxt FROM dup)),
-      |g AS (SELECT doc_id, p,
-      |    lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev FROM f),
-      |isl AS (SELECT doc_id, p,
-      |    sum(CASE WHEN prev IS NULL OR p - prev > 8 THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY doc_id ORDER BY p) AS island FROM g),
-      |sp AS (SELECT doc_id, min(p) AS s, max(p) - min(p) + 8 AS ln
-      |  FROM isl GROUP BY doc_id, island)
-      |SELECT sp.doc_id, CAST(s AS INT) AS span_start,
-      |  CAST(ln AS INT) AS span_len,
-      |  array_to_string(n.toks[s:s+ln-1], ' ') AS span_text
-      |FROM sp JOIN n USING (doc_id)""".stripMargin
+      |$spanIslandCtes
+      |$spanRows""".stripMargin
 
   private lazy val componentsClosureOracle: String =
     """WITH RECURSIVE p AS (SELECT id_a, id_b

@@ -4,7 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import StreamFixtures.{sentinelBounds, streamWithSentinel}
+import Fixtures.{sentinelBounds, streamWithSentinel}
 
 /** Event-stream entries over the `events` table: sessionization, funnels,
   * windowed counts, sketches (HLL, quantiles), SCD2 history and the

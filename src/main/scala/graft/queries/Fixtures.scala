@@ -1,10 +1,39 @@
 package graft.queries
 
 import graft.functions.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Plan helpers shared by the streaming entries of several families. */
-private[queries] object StreamFixtures {
+/** Plan fixtures shared by several families: planted documents and the
+  * file-stream feed of the streaming twins.
+  */
+private[queries] object Fixtures {
+
+  /** The boilerplate paragraph the exact-substring entries plant. */
+  val quickFox = "the quick brown fox jumps over the lazy dog near the river bank"
+
+  /** The sentence the cross-slice span entries plant. */
+  val riverbank =
+    "by the riverbank the quiet fox waited for the morning light to come"
+
+  /** The documents with `sentence` planted as a prefix where `prefix`
+    * holds and as a suffix where `suffix` holds.
+    */
+  def plantedDocs(spark: SparkSession, dir: String, sentence: String,
+                  prefix: Column, suffix: Column): DataFrame =
+    Tables.read(spark, dir, "documents")
+      .withColumn("text", concat(
+        when(prefix, lit(sentence + " ")).otherwise(lit("")),
+        col("text"),
+        when(suffix, lit(" " + sentence)).otherwise(lit(""))))
+
+  /** [[quickFox]] planted as a prefix of the %7 docs and a suffix of the
+    * %11 docs — offsets no fixed token grid aligns on.
+    */
+  def boilerDocs(spark: SparkSession, dir: String): DataFrame =
+    plantedDocs(spark, dir, quickFox,
+      col("doc_id") % 7 === 0, col("doc_id") % 11 === 0)
 
   /** Watermark delay covering the fixture's full event-time span (any
     * arrival order is inside the lateness bound) and a sentinel timestamp

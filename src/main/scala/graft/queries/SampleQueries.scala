@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
 import SqlFragments.{qualityRatios, qualityScore}
-import StreamFixtures.{sentinelBounds, streamWithSentinel}
+import Fixtures.{sentinelBounds, streamWithSentinel}
 
 /** Sampling and mixing entries: hash, stratified, weighted, reservoir,
   * k-center, token-budget and leak-proof splits, plus the source-mix

@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.{Dedup, Similarity}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import StreamFixtures.streamWithSentinel
+import Fixtures.streamWithSentinel
 
 /** Similarity-search and retrieval entries: brute-force and ANN top-k
   * (LSH, IVF, PQ), kNN graphs, BM25 / BM25F / phrase / hybrid retrieval

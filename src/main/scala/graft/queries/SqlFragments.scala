@@ -38,4 +38,74 @@ private[queries] object SqlFragments {
     s"""  least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) * 0.4 +
        |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
        |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality""".stripMargin
+
+  /** `aug`, the documents with `sentence` planted as a prefix where
+    * `prefix` holds and as a suffix where any of `suffix` holds (the SQL
+    * twin of [[Fixtures.plantedDocs]]), then their normalized tokens `t`
+    * and the docs `n` long enough for an 8-token window.
+    */
+  private[queries] def plantedTokenCtes(sentence: String, prefix: String,
+                                        suffix: String*): String = {
+    val whens = suffix.map(c => s"WHEN $c\n      THEN ' $sentence'")
+      .mkString("\n      ")
+    s"""WITH aug AS (SELECT doc_id,
+       |    CASE WHEN $prefix
+       |      THEN '$sentence '
+       |      ELSE '' END || text ||
+       |    CASE $whens
+       |      ELSE '' END AS text
+       |  FROM documents),
+       |t AS (SELECT doc_id,
+       |    string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
+       |  FROM aug),
+       |n AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 8),""".stripMargin
+  }
+
+  /** [[plantedTokenCtes]] for [[Fixtures.boilerDocs]]. */
+  private[queries] lazy val boilerTokenCtes: String =
+    plantedTokenCtes(Fixtures.quickFox, "doc_id % 7 = 0", "doc_id % 11 = 0")
+
+  /** The 8-token windows `w(doc_id, p, wtxt)` of the docs `n`. */
+  private[queries] lazy val tokenWindowCtes: String =
+    """pos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p FROM n),
+      |w AS (SELECT doc_id, p, array_to_string(toks[p:p+7], ' ') AS wtxt FROM pos),""".stripMargin
+
+  /** Gaps-and-islands over the flagged window starts `f(doc_id, p)`:
+    * windows closer than 8 tokens merge into one maximal span `sp(doc_id,
+    * s, ln)`.
+    */
+  private[queries] lazy val spanIslandCtes: String =
+    """g AS (SELECT doc_id, p,
+      |    lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev FROM f),
+      |isl AS (SELECT doc_id, p,
+      |    sum(CASE WHEN prev IS NULL OR p - prev > 8 THEN 1 ELSE 0 END)
+      |      OVER (PARTITION BY doc_id ORDER BY p) AS island FROM g),
+      |sp AS (SELECT doc_id, min(p) AS s, max(p) - min(p) + 8 AS ln
+      |  FROM isl GROUP BY doc_id, island)""".stripMargin
+
+  /** The span rows of `sp`, span text rebuilt from the token array. */
+  private[queries] lazy val spanRows: String =
+    """SELECT sp.doc_id, CAST(s AS INT) AS span_start,
+      |  CAST(ln AS INT) AS span_len,
+      |  array_to_string(n.toks[s:s+ln-1], ' ') AS span_text
+      |FROM sp JOIN n USING (doc_id)""".stripMargin
+
+  /** Cross-slice span replay over `plants` ([[plantedTokenCtes]]): windows
+    * of the docs matching `probe` found in the window set of the docs
+    * matching `indexed`, merged into spans per probe doc.
+    */
+  private[queries] def crossSpanOracle(plants: String, probe: String,
+                                       indexed: String): String =
+    s"""$plants
+       |cpos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p
+       |  FROM n WHERE $probe),
+       |cw AS (SELECT doc_id, p, array_to_string(toks[p:p+7], ' ') AS wtxt
+       |  FROM cpos),
+       |bpos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p
+       |  FROM n WHERE $indexed),
+       |bw AS (SELECT DISTINCT array_to_string(toks[p:p+7], ' ') AS wtxt
+       |  FROM bpos),
+       |f AS (SELECT doc_id, p FROM cw WHERE wtxt IN (SELECT wtxt FROM bw)),
+       |$spanIslandCtes
+       |$spanRows""".stripMargin
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkS
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import StreamFixtures.{sentinelBounds, streamWithSentinel}
+import Fixtures.{sentinelBounds, streamWithSentinel}
 
 /** The full-SQL surface the reference delegates to PostgreSQL (SURVEY §2.3),
   * expressed through the DataFrame API so Catalyst plans it: aggregations,

@@ -5,7 +5,7 @@ import graft.functions.TextAnalysis
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import StreamFixtures.{sentinelBounds, streamWithSentinel}
+import Fixtures.{sentinelBounds, streamWithSentinel}
 
 /** Tabular entries: column profiles, checks, drift, privacy transforms
   * (k-anonymity, l-diversity, masking, DP bounds), CDC merges, layout and

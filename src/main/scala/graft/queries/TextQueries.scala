@@ -4,8 +4,8 @@ import graft.Tables
 import graft.functions.{Dedup, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import SqlFragments.{markerList, qualityRatios, qualityScore, shingleCtes}
-import StreamFixtures.streamWithSentinel
+import SqlFragments.{boilerTokenCtes, crossSpanOracle, markerList, plantedTokenCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, tokenWindowCtes}
+import Fixtures.{boilerDocs, plantedDocs, riverbank, streamWithSentinel}
 
 /** Text-analysis entries: normalization, quality scoring, tokenizer
   * induction and encoding (BPE, WordPiece, unigram LM), n-gram and
@@ -1097,15 +1097,9 @@ object TextQueries extends QueryFamily {
     // (cross-corpus, different offsets); natural fixture overlaps fire
     // too. Oracle replays windows + islands on real substrings.
     entry("text_decontaminate_spans", (spark, dir) => {
-      val plant =
-        "by the riverbank the quiet fox waited for the morning light to come"
-      val docs = Tables.read(spark, dir, "documents")
-        .withColumn("text", concat(
-          when(col("doc_id") % 97 === 0 && col("doc_id") % 2 === 0,
-            lit(plant + " ")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 97 =!= 0 && col("doc_id") % 13 === 0,
-            lit(" " + plant)).otherwise(lit(""))))
+      val docs = plantedDocs(spark, dir, riverbank,
+        col("doc_id") % 97 === 0 && col("doc_id") % 2 === 0,
+        col("doc_id") % 97 =!= 0 && col("doc_id") % 13 === 0)
       Dedup.decontaminateSpans(
         docs.where(col("doc_id") % 97 =!= 0),
         docs.where(col("doc_id") % 97 === 0),
@@ -1113,77 +1107,24 @@ object TextQueries extends QueryFamily {
     },
       // cross-corpus window replay: candidate windows IN benchmark window
       // set, islands merged per candidate doc, span text from token array
-      """WITH aug AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 97 = 0 AND doc_id % 2 = 0
-        |      THEN 'by the riverbank the quiet fox waited for the morning light to come '
-        |      ELSE '' END || text ||
-        |    CASE WHEN doc_id % 97 <> 0 AND doc_id % 13 = 0
-        |      THEN ' by the riverbank the quiet fox waited for the morning light to come'
-        |      ELSE '' END AS text
-        |  FROM documents),
-        |t AS (SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-        |  FROM aug),
-        |n AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 8),
-        |cpos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p
-        |  FROM n WHERE doc_id % 97 <> 0),
-        |cw AS (SELECT doc_id, p, array_to_string(toks[p:p+7], ' ') AS wtxt
-        |  FROM cpos),
-        |bpos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p
-        |  FROM n WHERE doc_id % 97 = 0),
-        |bw AS (SELECT DISTINCT array_to_string(toks[p:p+7], ' ') AS wtxt
-        |  FROM bpos),
-        |f AS (SELECT doc_id, p FROM cw WHERE wtxt IN (SELECT wtxt FROM bw)),
-        |g AS (SELECT doc_id, p,
-        |    lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev FROM f),
-        |isl AS (SELECT doc_id, p,
-        |    sum(CASE WHEN prev IS NULL OR p - prev > 8 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY p) AS island FROM g),
-        |sp AS (SELECT doc_id, min(p) AS s, max(p) - min(p) + 8 AS ln
-        |  FROM isl GROUP BY doc_id, island)
-        |SELECT sp.doc_id, CAST(s AS INT) AS span_start,
-        |  CAST(ln AS INT) AS span_len,
-        |  array_to_string(n.toks[s:s+ln-1], ' ') AS span_text
-        |FROM sp JOIN n USING (doc_id)""".stripMargin),
+      crossSpanOracle(plantedTokenCtes(riverbank,
+        "doc_id % 97 = 0 AND doc_id % 2 = 0", "doc_id % 97 <> 0 AND doc_id % 13 = 0"),
+        "doc_id % 97 <> 0", "doc_id % 97 = 0")),
 
     // Per-doc duplicated-token fraction (Gopher-style quality signal,
     // exact): disjoint maximal spans sum to the covered-token count;
     // the fraction is one IEEE division of exact integers. Same plant
     // as dedup_exact_substr so the signal is non-trivial on the fixture.
     entry("text_dup_fraction", (spark, dir) => {
-      val boiler =
-        "the quick brown fox jumps over the lazy dog near the river bank"
-      val docs = Tables.read(spark, dir, "documents")
-        .withColumn("text", concat(
-          when(col("doc_id") % 7 === 0, lit(boiler + " ")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 11 === 0, lit(" " + boiler)).otherwise(lit(""))))
+      val docs = boilerDocs(spark, dir)
       Dedup.duplicatedTokenFraction(docs, "text", "doc_id", minLen = 8)
     },
       // span replay + disjoint-span length sum per doc, every doc reported
-      """WITH aug AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0
-        |      THEN 'the quick brown fox jumps over the lazy dog near the river bank '
-        |      ELSE '' END || text ||
-        |    CASE WHEN doc_id % 11 = 0
-        |      THEN ' the quick brown fox jumps over the lazy dog near the river bank'
-        |      ELSE '' END AS text
-        |  FROM documents),
-        |t AS (SELECT doc_id,
-        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-        |  FROM aug),
-        |n AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 8),
-        |pos AS (SELECT doc_id, toks, unnest(range(1, n - 8 + 2)) AS p FROM n),
-        |w AS (SELECT doc_id, p, array_to_string(toks[p:p+7], ' ') AS wtxt FROM pos),
+      raw"""$boilerTokenCtes
+        |$tokenWindowCtes
         |dup AS (SELECT wtxt FROM w GROUP BY wtxt HAVING count(*) > 1),
         |f AS (SELECT doc_id, p FROM w WHERE wtxt IN (SELECT wtxt FROM dup)),
-        |g AS (SELECT doc_id, p,
-        |    lag(p) OVER (PARTITION BY doc_id ORDER BY p) AS prev FROM f),
-        |isl AS (SELECT doc_id, p,
-        |    sum(CASE WHEN prev IS NULL OR p - prev > 8 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY doc_id ORDER BY p) AS island FROM g),
-        |sp AS (SELECT doc_id, min(p) AS s, max(p) - min(p) + 8 AS ln
-        |  FROM isl GROUP BY doc_id, island),
+        |$spanIslandCtes,
         |cov AS (SELECT doc_id, sum(ln) AS dup_tokens FROM sp GROUP BY doc_id),
         |alln AS (SELECT doc_id, len(toks) AS n_tokens FROM t)
         |SELECT a.doc_id, CAST(a.n_tokens AS BIGINT) AS n_tokens,

@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.Multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import StreamFixtures.streamWithSentinel
+import Fixtures.streamWithSentinel
 
 /** Web and multimodal entries: URL canonicalization, domain statistics
   * and caps, image hashes and multimodal column plumbing.
