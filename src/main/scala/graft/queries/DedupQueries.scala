@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
-import SqlFragments.{boilerTokenCtes, crossSpanOracle, plantedTokenCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, spanRows, tokenWindowCtes}
+import SqlFragments.{boilerTokenCtes, crossSpanOracle, plantedTokenCtes, prunedShingleCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, spanRows, tokenWindowCtes}
 import Fixtures.{boilerDocs, plantedDocs, riverbank, streamWithSentinel}
 
 /** Deduplication entries: exact, n-gram Jaccard / containment, MinHash-LSH,
@@ -38,22 +38,7 @@ object DedupQueries extends QueryFamily {
       // (clamp(ceil(fraction·nDocs), floor, ceiling); pruned from both
       // intersection and union)
       s"""
-        |WITH toks AS (SELECT doc_id,
-        |  string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(
-        |  range(1, greatest(len(t) - 2, 1) + 1),
-        |  i -> array_to_string(t[i:i+2], ' '))) AS s FROM toks),
-        |ex0 AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        |hot AS (SELECT g FROM (SELECT g, COUNT(*) AS df FROM ex0 GROUP BY g) h
-        |  WHERE df > least(${graft.functions.Dedup.MaxDocFreqCeiling},
-        |    greatest(${graft.functions.Dedup.MinDocFreqFloor},
-        |      ceil(${graft.functions.Dedup.HotShingleFraction} *
-        |        (SELECT COUNT(*) FROM documents))))),
-        |ex AS (SELECT doc_id, g FROM ex0 WHERE g NOT IN (SELECT g FROM hot)),
-        |sz AS (SELECT doc_id, COUNT(*) AS sz FROM ex GROUP BY doc_id),
-        |co AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS n
-        |  FROM ex x JOIN ex y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2)
+        |WITH $prunedShingleCtes
         |SELECT id_a, id_b,
         |  CAST(n AS DOUBLE) / CAST(a.sz + b.sz - n AS DOUBLE) AS jaccard
         |FROM co JOIN sz a ON co.id_a = a.doc_id JOIN sz b ON co.id_b = b.doc_id
@@ -111,22 +96,7 @@ object DedupQueries extends QueryFamily {
       // containment replay: same shingles, same cap, both directions from
       // the undirected intersection count
       s"""
-        |WITH toks AS (SELECT doc_id,
-        |  string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(
-        |  range(1, greatest(len(t) - 2, 1) + 1),
-        |  i -> array_to_string(t[i:i+2], ' '))) AS s FROM toks),
-        |ex0 AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        |hot AS (SELECT g FROM (SELECT g, COUNT(*) AS df FROM ex0 GROUP BY g) h
-        |  WHERE df > least(${graft.functions.Dedup.MaxDocFreqCeiling},
-        |    greatest(${graft.functions.Dedup.MinDocFreqFloor},
-        |      ceil(${graft.functions.Dedup.HotShingleFraction} *
-        |        (SELECT COUNT(*) FROM documents))))),
-        |ex AS (SELECT doc_id, g FROM ex0 WHERE g NOT IN (SELECT g FROM hot)),
-        |sz AS (SELECT doc_id, COUNT(*) AS sz FROM ex GROUP BY doc_id),
-        |co AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS n
-        |  FROM ex x JOIN ex y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2),
+        |WITH $prunedShingleCtes,
         |j AS (SELECT id_a, id_b, n, a.sz AS sz_a, b.sz AS sz_b
         |  FROM co JOIN sz a ON co.id_a = a.doc_id JOIN sz b ON co.id_b = b.doc_id),
         |d AS (SELECT id_a AS id_sub, id_b AS id_sup,
@@ -181,22 +151,7 @@ object DedupQueries extends QueryFamily {
       s"""
         |WITH f AS (SELECT DISTINCT id_a, id_b
         |  FROM read_parquet('__OUT__/dedup_minhash/*.parquet')),
-        |toks AS (SELECT doc_id,
-        |  string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents),
-        |sh AS (SELECT doc_id, list_distinct(list_transform(
-        |  range(1, greatest(len(t) - 2, 1) + 1),
-        |  i -> array_to_string(t[i:i+2], ' '))) AS s FROM toks),
-        |ex0 AS (SELECT doc_id, unnest(s) AS g FROM sh),
-        |hot AS (SELECT g FROM (SELECT g, COUNT(*) AS df FROM ex0 GROUP BY g) h
-        |  WHERE df > least(${graft.functions.Dedup.MaxDocFreqCeiling},
-        |    greatest(${graft.functions.Dedup.MinDocFreqFloor},
-        |      ceil(${graft.functions.Dedup.HotShingleFraction} *
-        |        (SELECT COUNT(*) FROM documents))))),
-        |ex AS (SELECT doc_id, g FROM ex0 WHERE g NOT IN (SELECT g FROM hot)),
-        |sz AS (SELECT doc_id, COUNT(*) AS sz FROM ex GROUP BY doc_id),
-        |co AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS n
-        |  FROM ex x JOIN ex y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2),
+        |$prunedShingleCtes,
         |ep AS (SELECT id_a, id_b
         |  FROM co JOIN sz a ON co.id_a = a.doc_id JOIN sz b ON co.id_b = b.doc_id
         |  WHERE CAST(n AS DOUBLE) / CAST(a.sz + b.sz - n AS DOUBLE) >= 0.5),
