@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import EntityResolutionQueries.{erRecords, erRecsCtes}
 
@@ -20,16 +21,8 @@ object GraphQueries extends QueryFamily {
     // one hash join + one partial-agg groupBy(dst); top-20 by
     // (rank desc, node) is a TakeOrderedAndProject.
     entry("graph_pagerank", (spark, dir) => {
-      val orders = Tables.read(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val li = Tables.read(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val pairs = orders.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").cast("long").as("c"),
-          (col("l_suppkey").cast("long") + 10000000L).as("s"))
-        .distinct()
-      val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-        .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
+      val pairs = custSuppPairs(spark, dir)
+      val edges = bothWays(pairs)
       // edgesDistinct: `pairs` is distinct and the two orientations are
       // disjoint (customers < 10^7 <= shifted suppliers), so the union
       // is one row per directed edge by construction
@@ -112,16 +105,8 @@ object GraphQueries extends QueryFamily {
     // with unrolled rounds (no-ops past the fixpoint — measured 1–2
     // rounds at the fixture SFs, replayed with 12).
     entry("graph_kcore", (spark, dir) => {
-      val orders = Tables.read(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val li = Tables.read(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val pairs = orders.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").cast("long").as("c"),
-          (col("l_suppkey").cast("long") + 10000000L).as("s"))
-        .distinct()
-      val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-        .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
+      val pairs = custSuppPairs(spark, dir)
+      val edges = bothWays(pairs)
       // edgesDistinct: distinct pairs, disjoint orientations (pagerank note)
       graft.functions.Graph.kCore(edges, "src", "dst", k = 10,
           edgesDistinct = true)
@@ -139,16 +124,8 @@ object GraphQueries extends QueryFamily {
     // the oracle unrolls the identical iteration; rounds past the
     // fixpoint are no-ops.
     entry("graph_coreness", (spark, dir) => {
-      val orders = Tables.read(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val li = Tables.read(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val pairs = orders.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").cast("long").as("c"),
-          (col("l_suppkey").cast("long") + 10000000L).as("s"))
-        .distinct()
-      val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-        .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
+      val pairs = custSuppPairs(spark, dir)
+      val edges = bothWays(pairs)
       // edgesDistinct: distinct pairs, disjoint orientations (pagerank note)
       graft.functions.Graph.coreness(edges, "src", "dst",
           oracleUnroll = Some(24), edgesDistinct = true)
@@ -165,16 +142,8 @@ object GraphQueries extends QueryFamily {
     // hop-bounded min-distance set is order-invariant so the recursive
     // CTE (UNION-deduped per level) replays it exactly.
     entry("graph_bfs", (spark, dir) => {
-      val orders = Tables.read(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"))
-      val li = Tables.read(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_suppkey"))
-      val pairs = orders.join(li, col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").cast("long").as("c"),
-          (col("l_suppkey").cast("long") + 10000000L).as("s"))
-        .distinct()
-      val edges = pairs.select(col("c").as("src"), col("s").as("dst"))
-        .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
+      val pairs = custSuppPairs(spark, dir)
+      val edges = bothWays(pairs)
       val seeds = pairs.groupBy(col("c").as("node"))
         .agg(count(lit(1)).as("deg"))
         .orderBy(col("deg").desc, col("node"))
@@ -373,4 +342,23 @@ object GraphQueries extends QueryFamily {
          |  CASE WHEN node >= 10000000 THEN 'supplier' ELSE 'customer' END AS kind
          |FROM r$iters ORDER BY rank DESC, node LIMIT 20""".stripMargin
   }
+
+  /** The customer–supplier bipartite graph: distinct (customer `c`,
+    * supplier `s` + 10⁷) pairs of orders ⋈ lineitem.
+    */
+  private def custSuppPairs(spark: SparkSession, dir: String): DataFrame = {
+    val orders = Tables.read(spark, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"))
+    val li = Tables.read(spark, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_suppkey"))
+    orders.join(li, col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").cast("long").as("c"),
+        (col("l_suppkey").cast("long") + 10000000L).as("s"))
+      .distinct()
+  }
+
+  /** `pairs` as directed (src, dst) edges in both orientations. */
+  private def bothWays(pairs: DataFrame): DataFrame =
+    pairs.select(col("c").as("src"), col("s").as("dst"))
+      .unionByName(pairs.select(col("s").as("src"), col("c").as("dst")))
 }

@@ -150,16 +150,7 @@ object TableQueries extends QueryFamily {
           col("o_custkey").cast("long").as("ckey"))
       val idx = graft.functions.Layout.bloomIndex(
         o, expr("okey div 256"), "ckey")
-      val keys = o.select(col("ckey"))
-        .where(col("ckey") % 211 === 3 && col("ckey") < 2000).distinct()
-      val dec = graft.functions.Layout.bloomPrune(idx, keys, "ckey")
-      val actual = o
-        .select(col("ckey").as("key"), expr("okey div 256").as("bucket"))
-        .join(broadcast(keys.select(col("ckey").as("key"))), "key")
-        .groupBy("key", "bucket").agg(count(lit(1)).as("n_match"))
-      dec.join(actual, Seq("key", "bucket"), "left")
-        .select(col("key"), col("bucket"), col("can_skip"),
-          coalesce(col("n_match"), lit(0L)).as("n_match"))
+      bloomDecisions(o, idx)
     },
       // Bloom prune replay: same salted md5 bit positions, bit_or'd
       // per-bucket words, any-absent-bit skip rule, actual counts joined
@@ -186,16 +177,7 @@ object TableQueries extends QueryFamily {
         s"$tmp/idx")
       graft.functions.IndexMaintenance.compactBloomIndex(spark, s"$tmp/idx")
       val idx = L.loadBloomIndex(spark, s"$tmp/idx")
-      val keys = o.select(col("ckey"))
-        .where(col("ckey") % 211 === 3 && col("ckey") < 2000).distinct()
-      val dec = L.bloomPrune(idx, keys, "ckey")
-      val actual = o
-        .select(col("ckey").as("key"), expr("okey div 256").as("bucket"))
-        .join(broadcast(keys.select(col("ckey").as("key"))), "key")
-        .groupBy("key", "bucket").agg(count(lit(1)).as("n_match"))
-      dec.join(actual, Seq("key", "bucket"), "left")
-        .select(col("key"), col("bucket"), col("can_skip"),
-          coalesce(col("n_match"), lit(0L)).as("n_match"))
+      bloomDecisions(o, idx)
     },
       // appended shards fold by bit_or ≡ from-scratch build — same replay
       bloomPruneOracle),
@@ -231,16 +213,7 @@ object TableQueries extends QueryFamily {
       q.stop()
       graft.functions.IndexMaintenance.compactBloomIndex(spark, s"$tmp/idx")
       val idx = L.loadBloomIndex(spark, s"$tmp/idx")
-      val keys = o.select(col("ckey"))
-        .where(col("ckey") % 211 === 3 && col("ckey") < 2000).distinct()
-      val dec = L.bloomPrune(idx, keys, "ckey")
-      val actual = o
-        .select(col("ckey").as("key"), expr("okey div 256").as("bucket"))
-        .join(broadcast(keys.select(col("ckey").as("key"))), "key")
-        .groupBy("key", "bucket").agg(count(lit(1)).as("n_match"))
-      dec.join(actual, Seq("key", "bucket"), "left")
-        .select(col("key"), col("bucket"), col("can_skip"),
-          coalesce(col("n_match"), lit(0L)).as("n_match"))
+      bloomDecisions(o, idx)
     },
       // per-micro-batch shards fold identically — streaming twin, same replay
       bloomPruneOracle),
@@ -1267,4 +1240,22 @@ object TableQueries extends QueryFamily {
         |SELECT k, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
         |  o_orderpriority
         |FROM latest WHERE rn = 1 AND op = 'U'""".stripMargin
+
+  /** The pruning decisions of Bloom index `idx` over the orders `o(okey,
+    * ckey)` for the probe keys (ckey % 211 = 3, below 2000), joined with
+    * each (key, bucket)'s actual match count — the soundness check that
+    * a skipped bucket holds no match.
+    */
+  private def bloomDecisions(o: DataFrame, idx: DataFrame): DataFrame = {
+    val keys = o.select(col("ckey"))
+      .where(col("ckey") % 211 === 3 && col("ckey") < 2000).distinct()
+    val dec = graft.functions.Layout.bloomPrune(idx, keys, "ckey")
+    val actual = o
+      .select(col("ckey").as("key"), expr("okey div 256").as("bucket"))
+      .join(broadcast(keys.select(col("ckey").as("key"))), "key")
+      .groupBy("key", "bucket").agg(count(lit(1)).as("n_match"))
+    dec.join(actual, Seq("key", "bucket"), "left")
+      .select(col("key"), col("bucket"), col("can_skip"),
+        coalesce(col("n_match"), lit(0L)).as("n_match"))
+  }
 }
