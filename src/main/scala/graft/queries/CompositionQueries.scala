@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import DedupQueries.substrApplyCtesForPipeline
-import SqlFragments.{markerList, qualityRatios, qualityScore, stopList}
+import SqlFragments.{langFromScores, markerScores, mmrFirstPick, qualityRatios, qualityScore, stopList, wsTokenCols}
 import Fixtures.{boilerDocs, riverbank, sentinelBounds, streamWithSentinel}
 
 /** Composed `pipeline_*` entries: several operators chained the way a
@@ -411,14 +411,9 @@ object CompositionQueries extends QueryFamily {
         .where(col("quality") >= 0.5)
     },
       s"""
-        |WITH kept AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id IN (
-        |    SELECT MIN(doc_id) FROM documents
-        |    GROUP BY regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))),
+        |WITH $keptDocsCte,
         |t AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\\s+') AS toks,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
+        |$wsTokenCols
         |  FROM kept),
         |m AS (SELECT doc_id, toks, CAST(ntok AS BIGINT) AS n_tokens,
         |$qualityRatios
@@ -427,20 +422,10 @@ object CompositionQueries extends QueryFamily {
         |$qualityScore
         |  FROM m),
         |s AS (SELECT doc_id, n_tokens, quality,
-        |  len(list_filter(toks, x -> list_contains(${markerList("en")}, x))) AS s_en,
-        |  len(list_filter(toks, x -> list_contains(${markerList("fr")}, x))) AS s_fr,
-        |  len(list_filter(toks, x -> list_contains(${markerList("es")}, x))) AS s_es,
-        |  len(list_filter(toks, x -> list_contains(${markerList("de")}, x))) AS s_de,
-        |  len(list_filter(toks, x -> list_contains(${markerList("zh")}, x))) AS s_zh
+        |$markerScores
         |  FROM q)
         |SELECT doc_id, CASE
-        |  WHEN greatest(s_en, s_fr, s_es, s_de, s_zh) = 0 THEN 'und'
-        |  WHEN s_en = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'en'
-        |  WHEN s_fr = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'fr'
-        |  WHEN s_es = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'es'
-        |  WHEN s_de = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'de'
-        |  WHEN s_zh = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'zh'
-        |  ELSE 'und' END AS lang_pred,
+        |${langFromScores}lang_pred,
         |  n_tokens, quality
         |FROM s WHERE quality >= 0.5""".stripMargin),
 
@@ -472,14 +457,9 @@ object CompositionQueries extends QueryFamily {
       // 4-gram decontamination (text_decontaminate's), chunking
       // (text_chunk's) — over the surviving docs
       s"""
-        |WITH kept AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id IN (
-        |    SELECT MIN(doc_id) FROM documents
-        |    GROUP BY regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))),
+        |WITH $keptDocsCte,
         |t AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\\s+') AS toks,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
+        |$wsTokenCols
         |  FROM kept),
         |m AS (SELECT doc_id, toks, CAST(ntok AS BIGINT) AS n_tokens,
         |$qualityRatios
@@ -548,9 +528,7 @@ object CompositionQueries extends QueryFamily {
         |WITH keepers AS (SELECT MIN(doc_id) AS doc_id FROM documents
         |  GROUP BY regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')),
         |t AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\\s+') AS toks,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
+        |$wsTokenCols
         |  FROM documents),
         |m AS (SELECT doc_id, toks, CAST(ntok AS BIGINT) AS n_tokens,
         |$qualityRatios
@@ -757,25 +735,13 @@ object CompositionQueries extends QueryFamily {
     */
   private lazy val multilingualBudgetCtes: String =
     s"""WITH t AS (SELECT doc_id, text,
-       |  string_split_regex(trim(text), '\\s+') AS toks,
-       |  CASE WHEN length(trim(text)) = 0 THEN 0
-       |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
+       |$wsTokenCols
        |  FROM documents),
        |sc AS (SELECT doc_id,
-       |  len(list_filter(toks, x -> list_contains(${markerList("en")}, x))) AS s_en,
-       |  len(list_filter(toks, x -> list_contains(${markerList("fr")}, x))) AS s_fr,
-       |  len(list_filter(toks, x -> list_contains(${markerList("es")}, x))) AS s_es,
-       |  len(list_filter(toks, x -> list_contains(${markerList("de")}, x))) AS s_de,
-       |  len(list_filter(toks, x -> list_contains(${markerList("zh")}, x))) AS s_zh
+       |$markerScores
        |  FROM t),
        |lg AS (SELECT doc_id, CASE
-       |  WHEN greatest(s_en, s_fr, s_es, s_de, s_zh) = 0 THEN 'und'
-       |  WHEN s_en = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'en'
-       |  WHEN s_fr = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'fr'
-       |  WHEN s_es = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'es'
-       |  WHEN s_de = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'de'
-       |  WHEN s_zh = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'zh'
-       |  ELSE 'und' END AS lang
+       |${langFromScores}lang
        |  FROM sc),
        |c AS (SELECT lang, CAST(count(*) AS BIGINT) AS n
        |  FROM lg GROUP BY 1),
@@ -861,7 +827,7 @@ object CompositionQueries extends QueryFamily {
     * layout, spec-pinned).
     */
   private lazy val ragOracle: String =
-    """WITH RECURSIVE aug AS (SELECT doc_id,
+    raw"""WITH RECURSIVE aug AS (SELECT doc_id,
         |  CASE WHEN doc_id % 2 = 0
         |    THEN '<html><body class="page"><p>' ELSE '' END ||
         |  text ||
@@ -977,20 +943,7 @@ object CompositionQueries extends QueryFamily {
         |    CAST(f.rrf AS DOUBLE) / 32786884.0 AS rel
         |  FROM fused f JOIN bse b ON b.vec_id = f.doc_id),
         |r2 AS (
-        |  SELECT query_id, 1 AS step,
-        |    -struct_extract(m, 'nid') AS doc_id,
-        |    struct_extract(m, 'rel') AS rel,
-        |    struct_extract(m, 's') AS score,
-        |    [-struct_extract(m, 'nid')] AS sids,
-        |    [struct_extract(m, 'v')] AS svecs,
-        |    [struct_extract(m, 'nrm')] AS snrms
-        |  FROM (SELECT query_id,
-        |      max(struct_pack(
-        |        s := CAST(0.5 AS DOUBLE) * rel -
-        |          CAST(0.5 AS DOUBLE) * CAST(0.0 AS DOUBLE),
-        |        nid := -doc_id, rel := rel, v := cv, nrm := cn)) AS m
-        |    FROM sl GROUP BY query_id)
-        |  UNION ALL
+        |$mmrFirstPick
         |  SELECT g2.query_id, g2.step + 1,
         |    -struct_extract(g2.m, 'nid'),
         |    struct_extract(g2.m, 'rel'),
@@ -1021,4 +974,13 @@ object CompositionQueries extends QueryFamily {
         |SELECT query_id, doc_id, CAST(step AS INT) AS mmr_rank,
         |  round(rel, 6) AS rel, round(score, 6) AS mmr_score
         |FROM r2""".stripMargin
+
+  /** The exact-dedup keep-one survivors `kept(doc_id, text)`: the minimum
+    * id per normalized text.
+    */
+  private lazy val keptDocsCte: String =
+    raw"""kept AS (
+         |  SELECT doc_id, text FROM documents WHERE doc_id IN (
+         |    SELECT MIN(doc_id) FROM documents
+         |    GROUP BY regexp_replace(lower(trim(text)), '\s+', ' ', 'g')))""".stripMargin
 }

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
-import SqlFragments.{boilerTokenCtes, crossSpanOracle, plantedTokenCtes, prunedShingleCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, spanRows, tokenWindowCtes}
+import SqlFragments.{boilerTokenCtes, crossSpanOracle, plantedTokenCtes, prunedShingleCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, spanRows, tokenWindowCtes, wsTokenCols}
 import Fixtures.{boilerDocs, plantedDocs, riverbank, streamWithSentinel}
 
 /** Deduplication entries: exact, n-gram Jaccard / containment, MinHash-LSH,
@@ -337,9 +337,7 @@ object DedupQueries extends QueryFamily {
         |  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.u),
         |comp AS (SELECT u AS doc_id, MIN(r) AS rep FROM reach GROUP BY u),
         |t AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\\s+') AS toks,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
+        |$wsTokenCols
         |  FROM documents),
         |m AS (SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
         |$qualityRatios

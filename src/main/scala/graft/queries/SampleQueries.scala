@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
-import SqlFragments.{qualityRatios, qualityScore}
+import SqlFragments.{qualityRatios, qualityScore, wsTokenCols}
 import Fixtures.{sentinelBounds, streamWithSentinel}
 
 /** Sampling and mixing entries: hash, stratified, weighted, reservoir,
@@ -153,9 +153,7 @@ object SampleQueries extends QueryFamily {
       // must produce the identical ranked survivor set)
       s"""
         |WITH t AS (SELECT doc_id, source, text,
-        |  string_split_regex(trim(text), '\\s+') AS toks,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
+        |$wsTokenCols
         |  FROM documents),
         |m AS (SELECT doc_id, source, CAST(ntok AS BIGINT) AS n_tokens,
         |$qualityRatios
@@ -287,9 +285,7 @@ object SampleQueries extends QueryFamily {
         budget = 16000L),
       s"""
         |WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(trim(text), '\\s+') AS toks,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
+        |$wsTokenCols
         |  FROM documents),
         |m AS (SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
         |$qualityRatios

@@ -5,6 +5,7 @@ import graft.functions.{Dedup, Similarity}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Fixtures.streamWithSentinel
+import SqlFragments.mmrFirstPick
 
 /** Similarity-search and retrieval entries: brute-force and ANN top-k
   * (LSH, IVF, PQ), kNN graphs, BM25 / BM25F / phrase / hybrid retrieval
@@ -81,7 +82,7 @@ object SearchQueries extends QueryFamily {
       // full per-query recursion — argmax of 0.5·rel − 0.5·maxSim via
       // struct max with the (score desc, lower id) tie-break; step 1's
       // empty selected set contributes an explicit 0.0
-      """WITH RECURSIVE base AS (
+      raw"""WITH RECURSIVE base AS (
         |  SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v,
         |    sqrt(list_sum(list_transform(range(1, len(embedding)+1),
         |      j -> embedding[j]::DOUBLE * embedding[j]::DOUBLE))) AS nrm
@@ -99,20 +100,7 @@ object SearchQueries extends QueryFamily {
         |      ORDER BY rel DESC, doc_id) AS srank FROM sc)
         |  WHERE srank <= 30),
         |r AS (
-        |  SELECT query_id, 1 AS step,
-        |    -struct_extract(m, 'nid') AS doc_id,
-        |    struct_extract(m, 'rel') AS rel,
-        |    struct_extract(m, 's') AS score,
-        |    [-struct_extract(m, 'nid')] AS sids,
-        |    [struct_extract(m, 'v')] AS svecs,
-        |    [struct_extract(m, 'nrm')] AS snrms
-        |  FROM (SELECT query_id,
-        |      max(struct_pack(
-        |        s := CAST(0.5 AS DOUBLE) * rel -
-        |          CAST(0.5 AS DOUBLE) * CAST(0.0 AS DOUBLE),
-        |        nid := -doc_id, rel := rel, v := cv, nrm := cn)) AS m
-        |    FROM sl GROUP BY query_id)
-        |  UNION ALL
+        |$mmrFirstPick
         |  SELECT g.query_id, g.step + 1,
         |    -struct_extract(g.m, 'nid'),
         |    struct_extract(g.m, 'rel'),

@@ -126,4 +126,54 @@ private[queries] object SqlFragments {
        |f AS (SELECT doc_id, p FROM cw WHERE wtxt IN (SELECT wtxt FROM bw)),
        |$spanIslandCtes
        |$spanRows""".stripMargin
+
+  /** The MMR recursion's first row per query: the candidate of `sl` with
+    * the best 0.5·rel score (no selection yet to be diverse from), seeding
+    * the selected ids, vectors and norms.
+    */
+  private[queries] lazy val mmrFirstPick: String =
+    """  SELECT query_id, 1 AS step,
+      |    -struct_extract(m, 'nid') AS doc_id,
+      |    struct_extract(m, 'rel') AS rel,
+      |    struct_extract(m, 's') AS score,
+      |    [-struct_extract(m, 'nid')] AS sids,
+      |    [struct_extract(m, 'v')] AS svecs,
+      |    [struct_extract(m, 'nrm')] AS snrms
+      |  FROM (SELECT query_id,
+      |      max(struct_pack(
+      |        s := CAST(0.5 AS DOUBLE) * rel -
+      |          CAST(0.5 AS DOUBLE) * CAST(0.0 AS DOUBLE),
+      |        nid := -doc_id, rel := rel, v := cv, nrm := cn)) AS m
+      |    FROM sl GROUP BY query_id)
+      |  UNION ALL""".stripMargin
+
+  /** The whitespace tokens `toks` of `text` and their count `ntok`, as
+    * select items.
+    */
+  private[queries] lazy val wsTokenCols: String =
+    raw"""  string_split_regex(trim(text), '\s+') AS toks,
+         |  CASE WHEN length(trim(text)) = 0 THEN 0
+         |       ELSE len(string_split_regex(trim(text), '\s+')) END AS ntok""".stripMargin
+
+  /** Per-language marker-word hits `s_en` … `s_zh` over `toks`, as select
+    * items (TextAnalysis.langId's scores).
+    */
+  private[queries] lazy val markerScores: String =
+    raw"""  len(list_filter(toks, x -> list_contains(${markerList("en")}, x))) AS s_en,
+         |  len(list_filter(toks, x -> list_contains(${markerList("fr")}, x))) AS s_fr,
+         |  len(list_filter(toks, x -> list_contains(${markerList("es")}, x))) AS s_es,
+         |  len(list_filter(toks, x -> list_contains(${markerList("de")}, x))) AS s_de,
+         |  len(list_filter(toks, x -> list_contains(${markerList("zh")}, x))) AS s_zh""".stripMargin
+
+  /** TextAnalysis.langId's argmax over the marker scores (no hit → `und`,
+    * ties to the first language), closed by the caller's `AS` alias.
+    */
+  private[queries] lazy val langFromScores: String =
+    """  WHEN greatest(s_en, s_fr, s_es, s_de, s_zh) = 0 THEN 'und'
+      |  WHEN s_en = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'en'
+      |  WHEN s_fr = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'fr'
+      |  WHEN s_es = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'es'
+      |  WHEN s_de = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'de'
+      |  WHEN s_zh = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'zh'
+      |  ELSE 'und' END AS """.stripMargin
 }

@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.{Dedup, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import SqlFragments.{boilerTokenCtes, crossSpanOracle, markerList, plantedTokenCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, tokenWindowCtes}
+import SqlFragments.{boilerTokenCtes, crossSpanOracle, langFromScores, markerScores, plantedTokenCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, tokenWindowCtes, wsTokenCols}
 import Fixtures.{boilerDocs, plantedDocs, riverbank, streamWithSentinel}
 
 /** Text-analysis entries: normalization, quality scoring, tokenizer
@@ -105,20 +105,10 @@ object TextQueries extends QueryFamily {
       s"""
         |WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
         |s AS (SELECT doc_id,
-        |  len(list_filter(toks, x -> list_contains(${markerList("en")}, x))) AS s_en,
-        |  len(list_filter(toks, x -> list_contains(${markerList("fr")}, x))) AS s_fr,
-        |  len(list_filter(toks, x -> list_contains(${markerList("es")}, x))) AS s_es,
-        |  len(list_filter(toks, x -> list_contains(${markerList("de")}, x))) AS s_de,
-        |  len(list_filter(toks, x -> list_contains(${markerList("zh")}, x))) AS s_zh
+        |$markerScores
         |  FROM t)
         |SELECT doc_id, CASE
-        |  WHEN greatest(s_en, s_fr, s_es, s_de, s_zh) = 0 THEN 'und'
-        |  WHEN s_en = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'en'
-        |  WHEN s_fr = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'fr'
-        |  WHEN s_es = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'es'
-        |  WHEN s_de = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'de'
-        |  WHEN s_zh = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'zh'
-        |  ELSE 'und' END AS lang_pred
+        |${langFromScores}lang_pred
         |FROM s""".stripMargin),
 
     // Char-bigram novelty over deterministically garbled fixture text
@@ -511,9 +501,7 @@ object TextQueries extends QueryFamily {
       // tie-break ((rank−1)/(n−1), singleton → 0.5)
       s"""
         |WITH t AS (SELECT doc_id, source, text,
-        |  string_split_regex(trim(text), '\\s+') AS toks,
-        |  CASE WHEN length(trim(text)) = 0 THEN 0
-        |       ELSE len(string_split_regex(trim(text), '\\s+')) END AS ntok
+        |$wsTokenCols
         |  FROM documents),
         |m AS (SELECT doc_id, source, CAST(ntok AS BIGINT) AS n_tokens,
         |$qualityRatios
