@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import DedupQueries.substrApplyCtesForPipeline
-import SqlFragments.{langFromScores, markerScores, mmrFirstPick, qualityRatios, qualityScore, stopList, wsTokenCols}
+import SqlFragments.{langFromScores, markerScores, mmrFirstPick, qualityCtes, stopList, wsTokenCols}
 import Fixtures.{boilerDocs, riverbank, sentinelBounds, streamWithSentinel}
 
 /** Composed `pipeline_*` entries: several operators chained the way a
@@ -125,12 +125,7 @@ object CompositionQueries extends QueryFamily {
       // quality-ordered prefix sums, admission while cum ≤ budget
       s"""
         |$multilingualBudgetCtes
-        |m AS (SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
-        |$qualityRatios
-        |  FROM t),
-        |q AS (SELECT doc_id, n_tokens,
-        |$qualityScore
-        |  FROM m),
+        |${qualityCtes("", " n_tokens,")},
         |o AS (SELECT lg.lang, q.doc_id, q.quality, q.n_tokens,
         |  CAST(sum(q.n_tokens) OVER (PARTITION BY lg.lang
         |    ORDER BY q.quality DESC, q.doc_id
@@ -415,12 +410,7 @@ object CompositionQueries extends QueryFamily {
         |t AS (SELECT doc_id, text,
         |$wsTokenCols
         |  FROM kept),
-        |m AS (SELECT doc_id, toks, CAST(ntok AS BIGINT) AS n_tokens,
-        |$qualityRatios
-        |  FROM t),
-        |q AS (SELECT doc_id, toks, n_tokens,
-        |$qualityScore
-        |  FROM m),
+        |${qualityCtes("toks, ", " toks, n_tokens,")},
         |s AS (SELECT doc_id, n_tokens, quality,
         |$markerScores
         |  FROM q)
@@ -461,23 +451,10 @@ object CompositionQueries extends QueryFamily {
         |t AS (SELECT doc_id, text,
         |$wsTokenCols
         |  FROM kept),
-        |m AS (SELECT doc_id, toks, CAST(ntok AS BIGINT) AS n_tokens,
-        |$qualityRatios
-        |  FROM t),
-        |q AS (SELECT doc_id,
-        |$qualityScore
-        |  FROM m),
+        |${qualityCtes("toks, ", "")},
         |good AS (SELECT k.doc_id, k.text FROM q JOIN kept k USING (doc_id)
         |  WHERE q.quality >= 0.5),
-        |ntoks AS (SELECT doc_id,
-        |  string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents),
-        |g AS (SELECT doc_id, list_distinct(list_transform(
-        |  range(1, greatest(len(t) - 3, 1) + 1),
-        |  i -> array_to_string(t[i:i+3], ' '))) AS s FROM ntoks),
-        |bench AS (SELECT DISTINCT unnest(s) AS gram FROM g WHERE doc_id % 97 = 0),
-        |cand AS (SELECT doc_id, unnest(s) AS gram FROM g WHERE doc_id % 97 <> 0),
-        |hits AS (SELECT DISTINCT c.doc_id FROM cand c JOIN bench USING (gram)),
+        |$benchHitsCtes,
         |clean AS (SELECT doc_id, text FROM good
         |  WHERE doc_id % 97 <> 0 AND doc_id NOT IN (SELECT doc_id FROM hits)),
         |ct AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
@@ -530,21 +507,8 @@ object CompositionQueries extends QueryFamily {
         |t AS (SELECT doc_id, text,
         |$wsTokenCols
         |  FROM documents),
-        |m AS (SELECT doc_id, toks, CAST(ntok AS BIGINT) AS n_tokens,
-        |$qualityRatios
-        |  FROM t),
-        |q AS (SELECT doc_id,
-        |$qualityScore
-        |  FROM m),
-        |ntoks AS (SELECT doc_id,
-        |  string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS t
-        |  FROM documents),
-        |g AS (SELECT doc_id, list_distinct(list_transform(
-        |  range(1, greatest(len(t) - 3, 1) + 1),
-        |  i -> array_to_string(t[i:i+3], ' '))) AS s FROM ntoks),
-        |bench AS (SELECT DISTINCT unnest(s) AS gram FROM g WHERE doc_id % 97 = 0),
-        |cand AS (SELECT doc_id, unnest(s) AS gram FROM g WHERE doc_id % 97 <> 0),
-        |hits AS (SELECT DISTINCT c.doc_id FROM cand c JOIN bench USING (gram))
+        |${qualityCtes("toks, ", "")},
+        |$benchHitsCtes
         |SELECT d.doc_id, q.quality,
         |  (k.doc_id IS NOT NULL) AS is_keeper,
         |  (h.doc_id IS NOT NULL) AS contaminated,
@@ -983,4 +947,18 @@ object CompositionQueries extends QueryFamily {
          |  SELECT doc_id, text FROM documents WHERE doc_id IN (
          |    SELECT MIN(doc_id) FROM documents
          |    GROUP BY regexp_replace(lower(trim(text)), '\s+', ' ', 'g')))""".stripMargin
+
+  /** Benchmark decontamination (text_decontaminate's replay): `hits`, the
+    * non-benchmark docs sharing a normalized 4-gram with a %97 benchmark doc.
+    */
+  private lazy val benchHitsCtes: String =
+    raw"""ntoks AS (SELECT doc_id,
+         |  string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
+         |  FROM documents),
+         |g AS (SELECT doc_id, list_distinct(list_transform(
+         |  range(1, greatest(len(t) - 3, 1) + 1),
+         |  i -> array_to_string(t[i:i+3], ' '))) AS s FROM ntoks),
+         |bench AS (SELECT DISTINCT unnest(s) AS gram FROM g WHERE doc_id % 97 = 0),
+         |cand AS (SELECT doc_id, unnest(s) AS gram FROM g WHERE doc_id % 97 <> 0),
+         |hits AS (SELECT DISTINCT c.doc_id FROM cand c JOIN bench USING (gram))""".stripMargin
 }

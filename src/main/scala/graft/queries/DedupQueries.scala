@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
-import SqlFragments.{boilerTokenCtes, crossSpanOracle, plantedTokenCtes, prunedShingleCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, spanRows, tokenWindowCtes, wsTokenCols}
+import SqlFragments.{boilerTokenCtes, crossSpanOracle, plantedTokenCtes, prunedShingleCtes, qualityCtes, shingleCtes, spanIslandCtes, spanRows, tokenWindowCtes, wsTokenCols}
 import Fixtures.{boilerDocs, plantedDocs, riverbank, streamWithSentinel}
 
 /** Deduplication entries: exact, n-gram Jaccard / containment, MinHash-LSH,
@@ -339,12 +339,7 @@ object DedupQueries extends QueryFamily {
         |t AS (SELECT doc_id, text,
         |$wsTokenCols
         |  FROM documents),
-        |m AS (SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
-        |$qualityRatios
-        |  FROM t),
-        |q AS (SELECT doc_id,
-        |$qualityScore
-        |  FROM m),
+        |${qualityCtes("", "")},
         |lab AS (SELECT d.doc_id, COALESCE(c.rep, d.doc_id) AS rep_id, q.quality
         |  FROM documents d LEFT JOIN comp c USING (doc_id)
         |  JOIN q USING (doc_id)),

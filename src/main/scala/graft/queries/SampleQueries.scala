@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
-import SqlFragments.{qualityRatios, qualityScore, wsTokenCols}
+import SqlFragments.{qualityCtes, wsTokenCols}
 import Fixtures.{sentinelBounds, streamWithSentinel}
 
 /** Sampling and mixing entries: hash, stratified, weighted, reservoir,
@@ -155,12 +155,7 @@ object SampleQueries extends QueryFamily {
         |WITH t AS (SELECT doc_id, source, text,
         |$wsTokenCols
         |  FROM documents),
-        |m AS (SELECT doc_id, source, CAST(ntok AS BIGINT) AS n_tokens,
-        |$qualityRatios
-        |  FROM t),
-        |q AS (SELECT doc_id, source,
-        |$qualityScore
-        |  FROM m),
+        |${qualityCtes("source, ", " source,")},
         |r AS (SELECT doc_id, source, quality,
         |  CAST(row_number() OVER (PARTITION BY source
         |    ORDER BY quality DESC, doc_id) AS BIGINT) AS rank
@@ -287,12 +282,7 @@ object SampleQueries extends QueryFamily {
         |WITH t AS (SELECT doc_id, text,
         |$wsTokenCols
         |  FROM documents),
-        |m AS (SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
-        |$qualityRatios
-        |  FROM t),
-        |q AS (SELECT doc_id, n_tokens,
-        |$qualityScore
-        |  FROM m),
+        |${qualityCtes("", " n_tokens,")},
         |o AS (SELECT doc_id, quality, n_tokens,
         |  CAST(sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)

@@ -57,6 +57,18 @@ private[queries] object SqlFragments {
        |  least(stopword_ratio * 4.0, 1.0) * 0.3 +
        |  greatest(1.0 - (punct_ratio + digit_ratio) * 2.0, 0.0) * 0.3 AS quality""".stripMargin
 
+  /** `m` (the [[qualityRatios]] and `n_tokens` per doc of `t`) and `q`
+    * (their [[qualityScore]]), each carrying the extra columns `mCols`
+    * resp. `qCols` through.
+    */
+  private[queries] def qualityCtes(mCols: String, qCols: String): String =
+    s"""m AS (SELECT doc_id, ${mCols}CAST(ntok AS BIGINT) AS n_tokens,
+       |$qualityRatios
+       |  FROM t),
+       |q AS (SELECT doc_id,$qCols
+       |$qualityScore
+       |  FROM m)""".stripMargin
+
   /** `aug`, the documents with `sentence` planted as a prefix where
     * `prefix` holds and as a suffix where any of `suffix` holds (the SQL
     * twin of [[Fixtures.plantedDocs]]), then their normalized tokens `t`

@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.{Dedup, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import SqlFragments.{boilerTokenCtes, crossSpanOracle, langFromScores, markerScores, plantedTokenCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, tokenWindowCtes, wsTokenCols}
+import SqlFragments.{boilerTokenCtes, crossSpanOracle, langFromScores, markerScores, plantedTokenCtes, qualityCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, tokenWindowCtes, wsTokenCols}
 import Fixtures.{boilerDocs, plantedDocs, riverbank, streamWithSentinel}
 
 /** Text-analysis entries: normalization, quality scoring, tokenizer
@@ -503,12 +503,7 @@ object TextQueries extends QueryFamily {
         |WITH t AS (SELECT doc_id, source, text,
         |$wsTokenCols
         |  FROM documents),
-        |m AS (SELECT doc_id, source, CAST(ntok AS BIGINT) AS n_tokens,
-        |$qualityRatios
-        |  FROM t),
-        |q AS (SELECT doc_id, source,
-        |$qualityScore
-        |  FROM m),
+        |${qualityCtes("source, ", " source,")},
         |r AS (SELECT doc_id, source, quality,
         |  row_number() OVER (PARTITION BY source ORDER BY quality, doc_id) AS rn,
         |  count(*) OVER (PARTITION BY source) AS n
