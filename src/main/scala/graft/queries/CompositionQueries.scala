@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import DedupQueries.substrApplyCtesForPipeline
-import SqlFragments.{langFromScores, markerScores, mmrFirstPick, qualityCtes, stopList, wsTokenCols}
+import SqlFragments.{langFromScores, markerScores, minhashComponentCtes, mmrFirstPick, qualityCtes, stopList, wsTokenCols}
 import Fixtures.{boilerDocs, riverbank, sentinelBounds, streamWithSentinel}
 
 /** Composed `pipeline_*` entries: several operators chained the way a
@@ -545,15 +545,7 @@ object CompositionQueries extends QueryFamily {
     },
       // closure over dedup_minhash's emitted pairs (the dedup_components
       // contract), then the same max-per-component verdict spread
-      """WITH RECURSIVE p AS (SELECT id_a, id_b
-        |  FROM read_parquet('__OUT__/dedup_minhash/*.parquet')),
-        |e AS (SELECT id_a AS u, id_b AS v FROM p
-        |  UNION SELECT id_b, id_a FROM p),
-        |reach AS (
-        |  SELECT u, u AS r FROM (SELECT DISTINCT u FROM e)
-        |  UNION
-        |  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.u),
-        |comp AS (SELECT u AS doc_id, MIN(r) AS rep FROM reach GROUP BY u),
+      raw"""WITH RECURSIVE $minhashComponentCtes,
         |d AS (SELECT doc_id, (doc_id % 29 = 0) AS requested FROM documents),
         |lab AS (SELECT d.doc_id, d.requested,
         |    COALESCE(c.rep, d.doc_id) AS cmp

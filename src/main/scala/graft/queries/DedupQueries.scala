@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
-import SqlFragments.{boilerTokenCtes, crossSpanOracle, plantedTokenCtes, prunedShingleCtes, qualityCtes, shingleCtes, spanIslandCtes, spanRows, tokenWindowCtes, wsTokenCols}
+import SqlFragments.{boilerTokenCtes, crossSpanOracle, minhashComponentCtes, plantedTokenCtes, prunedShingleCtes, qualityCtes, shingleCtes, spanIslandCtes, spanRows, tokenWindowCtes, wsTokenCols}
 import Fixtures.{boilerDocs, plantedDocs, riverbank, streamWithSentinel}
 
 /** Deduplication entries: exact, n-gram Jaccard / containment, MinHash-LSH,
@@ -327,15 +327,7 @@ object DedupQueries extends QueryFamily {
       // formula: DuckDB independently recomputes component labels AND the
       // per-cluster argmax (quality desc, id asc) keep rule
       s"""
-        |WITH RECURSIVE p AS (SELECT id_a, id_b
-        |  FROM read_parquet('__OUT__/dedup_minhash/*.parquet')),
-        |e AS (SELECT id_a AS u, id_b AS v FROM p
-        |  UNION SELECT id_b, id_a FROM p),
-        |reach AS (
-        |  SELECT u, u AS r FROM (SELECT DISTINCT u FROM e)
-        |  UNION
-        |  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.u),
-        |comp AS (SELECT u AS doc_id, MIN(r) AS rep FROM reach GROUP BY u),
+        |WITH RECURSIVE $minhashComponentCtes,
         |t AS (SELECT doc_id, text,
         |$wsTokenCols
         |  FROM documents),
@@ -947,15 +939,7 @@ object DedupQueries extends QueryFamily {
       |$spanRows""".stripMargin
 
   private lazy val componentsClosureOracle: String =
-    """WITH RECURSIVE p AS (SELECT id_a, id_b
-      |  FROM read_parquet('__OUT__/dedup_minhash/*.parquet')),
-      |e AS (SELECT id_a AS u, id_b AS v FROM p
-      |  UNION SELECT id_b, id_a FROM p),
-      |reach AS (
-      |  SELECT u, u AS r FROM (SELECT DISTINCT u FROM e)
-      |  UNION
-      |  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.u),
-      |comp AS (SELECT u AS doc_id, MIN(r) AS rep FROM reach GROUP BY u)
+    raw"""WITH RECURSIVE $minhashComponentCtes
       |SELECT d.doc_id, COALESCE(c.rep, d.doc_id) AS rep_id
       |FROM documents d LEFT JOIN comp c USING (doc_id)""".stripMargin
 

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
-import SqlFragments.{qualityCtes, wsTokenCols}
+import SqlFragments.{minhashComponentCtes, qualityCtes, wsTokenCols}
 import Fixtures.{sentinelBounds, streamWithSentinel}
 
 /** Sampling and mixing entries: hash, stratified, weighted, reservoir,
@@ -35,15 +35,7 @@ object SampleQueries extends QueryFamily {
     },
       // same closure over the same verified pairs, then the portable md5
       // cut on the component label (the leakSafeSplit rule)
-      """WITH RECURSIVE p AS (SELECT id_a, id_b
-        |  FROM read_parquet('__OUT__/dedup_minhash/*.parquet')),
-        |e AS (SELECT id_a AS u, id_b AS v FROM p
-        |  UNION SELECT id_b, id_a FROM p),
-        |reach AS (
-        |  SELECT u, u AS r FROM (SELECT DISTINCT u FROM e)
-        |  UNION
-        |  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.u),
-        |comp AS (SELECT u AS doc_id, MIN(r) AS rep FROM reach GROUP BY u),
+      raw"""WITH RECURSIVE $minhashComponentCtes,
         |lab AS (SELECT d.doc_id, COALESCE(c.rep, d.doc_id) AS group_id
         |  FROM documents d LEFT JOIN comp c USING (doc_id))
         |SELECT doc_id, group_id,

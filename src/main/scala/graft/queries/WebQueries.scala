@@ -157,28 +157,13 @@ object WebQueries extends QueryFamily {
     // exact verify — the simhash shape on the media byte plane; payloads
     // never shuffle, only 8-byte signatures.
     entry("multimodal_phash", (spark, dir) => {
-      val raw = Tables.read(spark, dir, "documents")
-        .select(col("doc_id"), hex(col("text").cast("binary")).as("h"))
-      val donor = raw.select(col("doc_id").as("__sid"), col("h").as("__sh"))
-      val planted = raw
-        .join(donor,
-          col("doc_id") % 23 === 4 && col("__sid") === col("doc_id") - 4,
-          "left")
-        .select(col("doc_id"),
-          when(col("__sh").isNotNull,
-            concat(expr("substring(__sh, 1, 20)"), lit("FF"),
-              expr("substring(__sh, 23)")))
-            .otherwise(col("h")).as("h"))
-      Multimodal.phashPairs(planted, "doc_id", col("h"))
+      Multimodal.phashPairs(plantedMedia(spark, dir), "doc_id", col("h"))
     },
+      // full pipeline replay: planted flips, hex-plane signatures, band
+      // candidates, Hamming verify — engine and oracle must agree on the
+      // exact pair set AND distances
       s"""
-        |WITH raw AS (SELECT doc_id, hex(encode(text)) AS h FROM documents),
-        |pl AS (SELECT r.doc_id,
-        |    CASE WHEN d.h IS NOT NULL
-        |      THEN substring(d.h, 1, 20) || 'FF' || substring(d.h, 23)
-        |      ELSE r.h END AS h
-        |  FROM raw r LEFT JOIN raw d
-        |    ON r.doc_id % 23 = 4 AND d.doc_id = r.doc_id - 4),
+        |$plantedMediaCtes
         |f AS (SELECT doc_id, h, length(h) // 2 AS nb FROM pl
         |  WHERE length(h) >= 128),
         |s AS (SELECT doc_id, ${duckDHash56("h", "nb")} AS sig FROM f),
@@ -200,18 +185,7 @@ object WebQueries extends QueryFamily {
     // pairs show the signature mix: 3 frames at hamming 0 + frame 0 at
     // a small positive hamming.
     entry("multimodal_frame_neardup", (spark, dir) => {
-      val raw = Tables.read(spark, dir, "documents")
-        .select(col("doc_id"), hex(col("text").cast("binary")).as("h"))
-      val donor = raw.select(col("doc_id").as("__sid"), col("h").as("__sh"))
-      val planted = raw
-        .join(donor,
-          col("doc_id") % 23 === 4 && col("__sid") === col("doc_id") - 4,
-          "left")
-        .select(col("doc_id"),
-          when(col("__sh").isNotNull,
-            concat(expr("substring(__sh, 1, 20)"), lit("FF"),
-              expr("substring(__sh, 23)")))
-            .otherwise(col("h")).as("h"))
+      val planted = plantedMedia(spark, dir)
       val frames = planted
         .select(col("doc_id"),
           posexplode(Multimodal.frameSample(unhex(col("h")),
@@ -227,19 +201,10 @@ object WebQueries extends QueryFamily {
           min(col("hamming")).as("min_hamming"),
           max(col("hamming")).as("max_hamming"))
     },
-      // full pipeline replay: planted flips, hex-plane signatures, band
-      // candidates, Hamming verify — engine and oracle must agree on the
-      // exact pair set AND distances
       // frame replay: same plant, 64-byte hex slices as frame keys
       // (doc*100+idx), the identical dHash/band/verify, parent rollup
       s"""
-        |WITH raw AS (SELECT doc_id, hex(encode(text)) AS h FROM documents),
-        |pl AS (SELECT r.doc_id,
-        |    CASE WHEN d.h IS NOT NULL
-        |      THEN substring(d.h, 1, 20) || 'FF' || substring(d.h, 23)
-        |      ELSE r.h END AS h
-        |  FROM raw r LEFT JOIN raw d
-        |    ON r.doc_id % 23 = 4 AND d.doc_id = r.doc_id - 4),
+        |$plantedMediaCtes
         |fr AS (SELECT doc_id, unnest(range(0, 4)) AS i, h FROM pl),
         |fx AS (SELECT doc_id * 100 + i AS fkey,
         |    substring(h, CAST(i * 128 + 1 AS INT), 128) AS fh
@@ -462,4 +427,32 @@ object WebQueries extends QueryFamily {
       s"(CASE WHEN ${b(r * 8 + c)} > ${b(r * 8 + c + 1)} THEN ${1L << (r * 7 + c)} ELSE 0 END)")
       .mkString("(", " + ", ")")
   }
+
+  /** The documents' hex payloads `h`, with the %23 = 4 docs re-uploading
+    * their donor's (id − 4) payload with byte 10 flipped to 0xFF.
+    */
+  private def plantedMedia(spark: SparkSession, dir: String): DataFrame = {
+    val raw = Tables.read(spark, dir, "documents")
+      .select(col("doc_id"), hex(col("text").cast("binary")).as("h"))
+    val donor = raw.select(col("doc_id").as("__sid"), col("h").as("__sh"))
+    raw
+      .join(donor,
+        col("doc_id") % 23 === 4 && col("__sid") === col("doc_id") - 4,
+        "left")
+      .select(col("doc_id"),
+        when(col("__sh").isNotNull,
+          concat(expr("substring(__sh, 1, 20)"), lit("FF"),
+            expr("substring(__sh, 23)")))
+          .otherwise(col("h")).as("h"))
+  }
+
+  /** The SQL twin of [[plantedMedia]]: `pl(doc_id, h)`. */
+  private lazy val plantedMediaCtes: String =
+    """WITH raw AS (SELECT doc_id, hex(encode(text)) AS h FROM documents),
+      |pl AS (SELECT r.doc_id,
+      |    CASE WHEN d.h IS NOT NULL
+      |      THEN substring(d.h, 1, 20) || 'FF' || substring(d.h, 23)
+      |      ELSE r.h END AS h
+      |  FROM raw r LEFT JOIN raw d
+      |    ON r.doc_id % 23 = 4 AND d.doc_id = r.doc_id - 4),""".stripMargin
 }
