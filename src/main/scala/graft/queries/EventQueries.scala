@@ -296,13 +296,7 @@ object EventQueries extends QueryFamily {
     },
       // OLS trend replay: same dense zero-filled spine as events_acf,
       // same integer moments and truncating-div ppm slope
-      """WITH e AS (SELECT event_type, date_trunc('hour', ts) AS h
-        |    FROM events),
-        |cnt AS (SELECT event_type, h, count(*) AS c FROM e GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |g AS (SELECT t.event_type,
-        |    unnest(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS h
-        |  FROM (SELECT DISTINCT event_type FROM e) t, b),
+      raw"""WITH $hourlySpineCtes
         |d AS (SELECT g.event_type,
         |    CAST((date_part('epoch', g.h) - date_part('epoch', b.lo))
         |      AS BIGINT) // 3600 AS x,
@@ -1108,13 +1102,7 @@ object EventQueries extends QueryFamily {
         maxLag = 3),
       // dense zero-filled spine, per-type lag windows, exact-integer
       // moments (products summed via HUGEINT, cast to DOUBLE at the end)
-      """WITH e AS (SELECT event_type, date_trunc('hour', ts) AS h
-        |    FROM events),
-        |cnt AS (SELECT event_type, h, count(*) AS c FROM e GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |g AS (SELECT t.event_type,
-        |    unnest(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS h
-        |  FROM (SELECT DISTINCT event_type FROM e) t, b),
+      raw"""WITH $hourlySpineCtes
         |d AS (SELECT g.event_type, g.h, coalesce(cnt.c, 0) AS x
         |  FROM g LEFT JOIN cnt USING (event_type, h)),
         |l AS (SELECT event_type, x,
@@ -1189,13 +1177,7 @@ object EventQueries extends QueryFamily {
     },
       // same dense spine + planted +3/hour shift on error's last third;
       // flag comparison in squared integers (λ = 3/2 → 4·dev² > 9·n²·S)
-      """WITH e AS (SELECT event_type, date_trunc('hour', ts) AS h
-        |    FROM events),
-        |cnt AS (SELECT event_type, h, count(*) AS c FROM e GROUP BY 1, 2),
-        |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
-        |g AS (SELECT t.event_type,
-        |    unnest(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS h
-        |  FROM (SELECT DISTINCT event_type FROM e) t, b),
+      raw"""WITH $hourlySpineCtes
         |d AS (SELECT g.event_type, g.h, coalesce(cnt.c, 0) AS x
         |  FROM g LEFT JOIN cnt USING (event_type, h)),
         |pl AS (SELECT d.event_type, d.h AS hour_start,
@@ -1706,4 +1688,17 @@ object EventQueries extends QueryFamily {
         |COUNT(*) AS n_events,
         |CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum
         |FROM events GROUP BY 1, 2""".stripMargin
+
+  /** The dense per-type hourly spine (the SQL twin of [[denseHourlyCounts]]):
+    * `cnt` the observed counts, `b` the global hour bounds, `g` every
+    * (type, hour) in them.
+    */
+  private lazy val hourlySpineCtes: String =
+    """e AS (SELECT event_type, date_trunc('hour', ts) AS h
+      |    FROM events),
+      |cnt AS (SELECT event_type, h, count(*) AS c FROM e GROUP BY 1, 2),
+      |b AS (SELECT min(h) AS lo, max(h) AS hi FROM e),
+      |g AS (SELECT t.event_type,
+      |    unnest(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS h
+      |  FROM (SELECT DISTINCT event_type FROM e) t, b),""".stripMargin
 }
