@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import DedupQueries.substrApplyCtesForPipeline
-import SqlFragments.{langFromScores, markerScores, minhashComponentCtes, mmrFirstPick, qualityCtes, stopList, wsTokenCols}
+import SqlFragments.{langFromScores, markerScores, minhashComponentCtes, mmrFirstPick, qeCosine, qualityCtes, stopList, wsTokenCols}
 import Fixtures.{boilerDocs, riverbank, sentinelBounds, streamWithSentinel}
 
 /** Composed `pipeline_*` entries: several operators chained the way a
@@ -861,13 +861,7 @@ object CompositionQueries extends QueryFamily {
         |  WHERE c2.doc_id % 97 = 0 AND c2.doc_id < 1000
         |    AND length(trim(c2.clean)) > 0),
         |sc2 AS MATERIALIZED (SELECT qe.query_id, e.vec_id AS doc_id,
-        |  round(
-        |   list_sum(list_transform(range(1, len(qe.qv)+1),
-        |     i -> qe.qv[i]::DOUBLE * e.embedding[i]::DOUBLE)) /
-        |   (sqrt(list_sum(list_transform(range(1, len(qe.qv)+1),
-        |     i -> qe.qv[i]::DOUBLE * qe.qv[i]::DOUBLE))) *
-        |    sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
-        |     i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))), 6)
+        |$qeCosine
         |    AS sim
         |  FROM embeddings e CROSS JOIN qe WHERE e.vec_id % 97 <> 0),
         |vec AS MATERIALIZED (SELECT query_id, doc_id, rank FROM (

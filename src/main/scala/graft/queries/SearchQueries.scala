@@ -5,7 +5,7 @@ import graft.functions.{Dedup, Similarity}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Fixtures.streamWithSentinel
-import SqlFragments.mmrFirstPick
+import SqlFragments.{mmrFirstPick, qeCosine}
 
 /** Similarity-search and retrieval entries: brute-force and ANN top-k
   * (LSH, IVF, PQ), kNN graphs, BM25 / BM25F / phrase / hybrid retrieval
@@ -145,7 +145,7 @@ object SearchQueries extends QueryFamily {
       // sign-pack replay (bit i of word w ⇔ embedding[32w+i] >= 0),
       // popcount Hamming rank with the (hamming, id) tie-break, exact
       // cosine recomputed for the winners only
-      """WITH p AS (SELECT vec_id, embedding,
+      raw"""WITH p AS (SELECT vec_id, embedding,
         |  CAST(list_sum(list_transform(range(1, 33), i ->
         |    CASE WHEN embedding[i] >= 0 THEN 1::BIGINT << (i - 1)
         |         ELSE 0 END)) AS BIGINT) AS s0,
@@ -165,13 +165,7 @@ object SearchQueries extends QueryFamily {
         |  FROM h WHERE true),
         |w AS (SELECT * FROM t WHERE rank <= 10)
         |SELECT w.query_id, w.neighbor_id, w.hamming,
-        |  round(
-        |   list_sum(list_transform(range(1, len(q.qv)+1),
-        |     i -> q.qv[i]::DOUBLE * e.embedding[i]::DOUBLE)) /
-        |   (sqrt(list_sum(list_transform(range(1, len(q.qv)+1),
-        |     i -> q.qv[i]::DOUBLE * q.qv[i]::DOUBLE))) *
-        |    sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
-        |     i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))), 6)
+        |$qCosine
         |    AS sim,
         |  w.rank
         |FROM w JOIN q ON w.query_id = q.query_id
@@ -402,18 +396,12 @@ object SearchQueries extends QueryFamily {
       // sweep replay: found pairs read back from the dump (kmeans-
       // dependent candidate sets), exact slice top-5 + every cosine +
       // hit/recall re-derived independently and hash-checked
-      """WITH a AS (SELECT n_probe, query_id, neighbor_id
+      raw"""WITH a AS (SELECT n_probe, query_id, neighbor_id
         |  FROM read_parquet('__OUT__/sim_knn_sweep/*.parquet')),
         |q AS (SELECT vec_id AS query_id, embedding AS qv
         |  FROM embeddings WHERE vec_id < 32),
         |s AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-        |  round(
-        |   list_sum(list_transform(range(1, len(q.qv)+1),
-        |     i -> q.qv[i]::DOUBLE * e.embedding[i]::DOUBLE)) /
-        |   (sqrt(list_sum(list_transform(range(1, len(q.qv)+1),
-        |     i -> q.qv[i]::DOUBLE * q.qv[i]::DOUBLE))) *
-        |    sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
-        |     i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))), 6)
+        |$qCosine
         |    AS sim
         |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.query_id),
         |ex AS (SELECT query_id, neighbor_id FROM (
@@ -1335,13 +1323,7 @@ object SearchQueries extends QueryFamily {
       |  WHERE d.doc_id % 97 = 0 AND d.doc_id < 1000
       |    AND length(trim(d.text)) > 0),
       |s AS (SELECT qe.query_id, e.vec_id AS doc_id,
-      |  round(
-      |   list_sum(list_transform(range(1, len(qe.qv)+1),
-      |     i -> qe.qv[i]::DOUBLE * e.embedding[i]::DOUBLE)) /
-      |   (sqrt(list_sum(list_transform(range(1, len(qe.qv)+1),
-      |     i -> qe.qv[i]::DOUBLE * qe.qv[i]::DOUBLE))) *
-      |    sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
-      |     i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))), 6)
+      |$qeCosine
       |    AS sim
       |  FROM embeddings e CROSS JOIN qe WHERE e.vec_id % 97 <> 0),
       |vec AS (SELECT query_id, doc_id, rank FROM (
@@ -1367,4 +1349,16 @@ object SearchQueries extends QueryFamily {
       |FROM (SELECT *, row_number() OVER (PARTITION BY query_id
       |    ORDER BY rrf DESC, doc_id) AS rank FROM f)
       |WHERE rank <= 10""".stripMargin
+
+  /** The exact cosine of query vector `q.qv` and `e.embedding` in DOUBLE,
+    * rounded to 6 places, as a select item.
+    */
+  private lazy val qCosine: String =
+    """  round(
+      |   list_sum(list_transform(range(1, len(q.qv)+1),
+      |     i -> q.qv[i]::DOUBLE * e.embedding[i]::DOUBLE)) /
+      |   (sqrt(list_sum(list_transform(range(1, len(q.qv)+1),
+      |     i -> q.qv[i]::DOUBLE * q.qv[i]::DOUBLE))) *
+      |    sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
+      |     i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))), 6)""".stripMargin
 }

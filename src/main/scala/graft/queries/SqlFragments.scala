@@ -203,4 +203,14 @@ private[queries] object SqlFragments {
       |  UNION
       |  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.u),
       |comp AS (SELECT u AS doc_id, MIN(r) AS rep FROM reach GROUP BY u)""".stripMargin
+
+  /** [[qCosine]] for the query vector `qe.qv`. */
+  private[queries] lazy val qeCosine: String =
+    """  round(
+      |   list_sum(list_transform(range(1, len(qe.qv)+1),
+      |     i -> qe.qv[i]::DOUBLE * e.embedding[i]::DOUBLE)) /
+      |   (sqrt(list_sum(list_transform(range(1, len(qe.qv)+1),
+      |     i -> qe.qv[i]::DOUBLE * qe.qv[i]::DOUBLE))) *
+      |    sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
+      |     i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))), 6)""".stripMargin
 }
