@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import DedupQueries.substrApplyCtesForPipeline
-import SqlFragments.{langFromScores, markerScores, minhashComponentCtes, mmrFirstPick, qeCosine, qualityCtes, stopList, wsTokenCols}
-import Fixtures.{boilerDocs, riverbank, sentinelBounds, streamWithSentinel}
+import SqlFragments.{htmlWrappedSql, langFromScores, markerScores, minhashComponentCtes, mmrFirstPick, qeCosine, qualityCtes, stopList, stripMarkupSql, wsTokenCols}
+import Fixtures.{boilerDocs, htmlWrapped, riverbank, sentinelBounds, streamWithSentinel}
 
 /** Composed `pipeline_*` entries: several operators chained the way a
   * training-data job runs them (ingest, clean, dedup, filter, mix, RAG).
@@ -589,16 +589,7 @@ object CompositionQueries extends QueryFamily {
     // post-exchange on every core instead of a one-file source's single
     // scan task; no-op at production file counts
     Dedup.rebalanceRaw(docs, col("doc_id"), col("text"))
-      .select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 2 === 0,
-            lit("<html><body class=\"page\"><p>")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 3 === 0,
-            lit(" <b>bold</b>&nbsp;&amp;&nbsp;more &lt;than&gt; that<br/>"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 2 === 0, lit("</p></body></html>"))
-            .otherwise(lit(""))).as("t"))
+      .select(col("doc_id"), htmlWrapped.as("t"))
       .select(col("doc_id"),
         graft.functions.Curation.stripMarkup(col("t")).as("clean"))
 
@@ -784,21 +775,10 @@ object CompositionQueries extends QueryFamily {
     */
   private lazy val ragOracle: String =
     raw"""WITH RECURSIVE aug AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0
-        |    THEN '<html><body class="page"><p>' ELSE '' END ||
-        |  text ||
-        |  CASE WHEN doc_id % 3 = 0
-        |    THEN ' <b>bold</b>&nbsp;&amp;&nbsp;more &lt;than&gt; that<br/>'
-        |    ELSE '' END ||
-        |  CASE WHEN doc_id % 2 = 0 THEN '</p></body></html>' ELSE '' END
-        |    AS t
+        |$htmlWrappedSql
         |  FROM documents),
         |cl AS MATERIALIZED (SELECT doc_id,
-        |  trim(regexp_replace(
-        |    replace(replace(replace(replace(
-        |      regexp_replace(t, '<[^>]+>', ' ', 'g'),
-        |      '&lt;', '<'), '&gt;', '>'), '&nbsp;', ' '), '&amp;', '&'),
-        |    '\s+', ' ', 'g')) AS clean
+        |$stripMarkupSql
         |  FROM aug),
         |t0 AS MATERIALIZED (SELECT doc_id,
         |    string_split_regex(trim(clean), '\s+') AS rtoks

@@ -28,6 +28,20 @@ private[queries] object Fixtures {
         col("text"),
         when(suffix, lit(" " + sentence)).otherwise(lit(""))))
 
+  /** The document `text` deterministically wrapped in HTML: tags around
+    * the even ids, an entity-laden sentence appended to the %3 ids.
+    */
+  def htmlWrapped: Column =
+    concat(
+      when(col("doc_id") % 2 === 0,
+        lit("<html><body class=\"page\"><p>")).otherwise(lit("")),
+      col("text"),
+      when(col("doc_id") % 3 === 0,
+        lit(" <b>bold</b>&nbsp;&amp;&nbsp;more &lt;than&gt; that<br/>"))
+        .otherwise(lit("")),
+      when(col("doc_id") % 2 === 0, lit("</p></body></html>"))
+        .otherwise(lit("")))
+
   /** [[quickFox]] planted as a prefix of the %7 docs and a suffix of the
     * %11 docs — offsets no fixed token grid aligns on.
     */

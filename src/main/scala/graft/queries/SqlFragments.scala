@@ -213,4 +213,25 @@ private[queries] object SqlFragments {
       |     i -> qe.qv[i]::DOUBLE * qe.qv[i]::DOUBLE))) *
       |    sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
       |     i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))), 6)""".stripMargin
+
+  /** The SQL twin of [[Fixtures.htmlWrapped]], as a select item `t`. */
+  private[queries] lazy val htmlWrappedSql: String =
+    """  CASE WHEN doc_id % 2 = 0
+      |    THEN '<html><body class="page"><p>' ELSE '' END ||
+      |  text ||
+      |  CASE WHEN doc_id % 3 = 0
+      |    THEN ' <b>bold</b>&nbsp;&amp;&nbsp;more &lt;than&gt; that<br/>'
+      |    ELSE '' END ||
+      |  CASE WHEN doc_id % 2 = 0 THEN '</p></body></html>' ELSE '' END
+      |    AS t""".stripMargin
+
+  /** Curation.stripMarkup over `t` in SQL: tags → spaces, entities in the
+    * fixed non-double-unescape order, whitespace collapsed; item `clean`.
+    */
+  private[queries] lazy val stripMarkupSql: String =
+    raw"""  trim(regexp_replace(
+         |    replace(replace(replace(replace(
+         |      regexp_replace(t, '<[^>]+>', ' ', 'g'),
+         |      '&lt;', '<'), '&gt;', '>'), '&nbsp;', ' '), '&amp;', '&'),
+         |    '\s+', ' ', 'g')) AS clean""".stripMargin
 }

@@ -4,8 +4,8 @@ import graft.Tables
 import graft.functions.{Dedup, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import SqlFragments.{boilerTokenCtes, crossSpanOracle, langFromScores, markerScores, plantedTokenCtes, qualityCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, tokenWindowCtes, wsTokenCols}
-import Fixtures.{boilerDocs, plantedDocs, riverbank, streamWithSentinel}
+import SqlFragments.{boilerTokenCtes, crossSpanOracle, htmlWrappedSql, langFromScores, markerScores, plantedTokenCtes, qualityCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, stripMarkupSql, tokenWindowCtes, wsTokenCols}
+import Fixtures.{boilerDocs, htmlWrapped, plantedDocs, riverbank, streamWithSentinel}
 
 /** Text-analysis entries: normalization, quality scoring, tokenizer
   * induction and encoding (BPE, WordPiece, unigram LM), n-gram and
@@ -386,16 +386,7 @@ object TextQueries extends QueryFamily {
     // projection, mirrored verbatim by the oracle.
     entry("text_strip_markup", (spark, dir) => {
       val docs = Tables.read(spark, dir, "documents")
-      val aug = docs.select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 2 === 0,
-            lit("<html><body class=\"page\"><p>")).otherwise(lit("")),
-          col("text"),
-          when(col("doc_id") % 3 === 0,
-            lit(" <b>bold</b>&nbsp;&amp;&nbsp;more &lt;than&gt; that<br/>"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 2 === 0, lit("</p></body></html>"))
-            .otherwise(lit(""))).as("t"))
+      val aug = docs.select(col("doc_id"), htmlWrapped.as("t"))
       aug.select(col("doc_id"),
         size(regexp_extract_all(col("t"),
           lit(graft.functions.Curation.TagRe), lit(0)))
@@ -404,23 +395,12 @@ object TextQueries extends QueryFamily {
     },
       // markup replay: identical wrap/entity augmentation, tag regex →
       // space, replace() entity chain in the same order, '\s+' collapse
-      """WITH aug AS (SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0
-        |    THEN '<html><body class="page"><p>' ELSE '' END ||
-        |  text ||
-        |  CASE WHEN doc_id % 3 = 0
-        |    THEN ' <b>bold</b>&nbsp;&amp;&nbsp;more &lt;than&gt; that<br/>'
-        |    ELSE '' END ||
-        |  CASE WHEN doc_id % 2 = 0 THEN '</p></body></html>' ELSE '' END
-        |    AS t
+      raw"""WITH aug AS (SELECT doc_id,
+        |$htmlWrappedSql
         |  FROM documents)
         |SELECT doc_id,
         |  CAST(len(regexp_extract_all(t, '<[^>]+>')) AS BIGINT) AS n_tags,
-        |  trim(regexp_replace(
-        |    replace(replace(replace(replace(
-        |      regexp_replace(t, '<[^>]+>', ' ', 'g'),
-        |      '&lt;', '<'), '&gt;', '>'), '&nbsp;', ' '), '&amp;', '&'),
-        |    '\s+', ' ', 'g')) AS clean
+        |$stripMarkupSql
         |FROM aug""".stripMargin),
 
     // Winnowing fingerprint + simhash are xxhash64-based (engine-specific,
