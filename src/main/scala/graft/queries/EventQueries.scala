@@ -939,18 +939,10 @@ object EventQueries extends QueryFamily {
       // the SCD2 replay over profile events + the latest-start-≤-ts pick
       // (unique after empty-interval filtering); LEFT join keeps purchases
       // that precede any profile state, with NULL state
-      """WITH e AS (SELECT user_id, event_id, event_type,
+      raw"""WITH e AS (SELECT user_id, event_id, event_type,
         |    date_trunc('second', ts) AS ts_s FROM events
         |  WHERE event_type IN ('signup', 'view')),
-        |g AS (SELECT user_id, event_id, event_type, ts_s,
-        |  CASE WHEN event_type IS DISTINCT FROM lag(event_type)
-        |    OVER (PARTITION BY user_id ORDER BY ts_s, event_id)
-        |    THEN 1 ELSE 0 END AS chg
-        |  FROM e),
-        |i AS (SELECT user_id, event_type, ts_s,
-        |  SUM(chg) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS run
-        |  FROM g),
+        |$stateRunCtes
         |r AS (SELECT user_id, run, min(event_type) AS state,
         |  min(ts_s) AS valid_from FROM i GROUP BY user_id, run),
         |iv AS (SELECT user_id, state, valid_from,
@@ -1575,17 +1567,9 @@ object EventQueries extends QueryFamily {
     * twin (batch ≡ stream under the gate).
     */
   private lazy val scd2Oracle: String =
-    """WITH e AS (SELECT user_id, event_id, event_type,
+    raw"""WITH e AS (SELECT user_id, event_id, event_type,
       |    date_trunc('second', ts) AS ts_s FROM events),
-      |g AS (SELECT user_id, event_id, event_type, ts_s,
-      |  CASE WHEN event_type IS DISTINCT FROM lag(event_type)
-      |    OVER (PARTITION BY user_id ORDER BY ts_s, event_id)
-      |    THEN 1 ELSE 0 END AS chg
-      |  FROM e),
-      |i AS (SELECT user_id, event_type, ts_s,
-      |  SUM(chg) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-      |    ROWS UNBOUNDED PRECEDING) AS run
-      |  FROM g),
+      |$stateRunCtes
       |r AS (SELECT user_id, run, min(event_type) AS event_type,
       |  min(ts_s) AS valid_from, count(*) AS n_events
       |  FROM i GROUP BY user_id, run)
@@ -1701,4 +1685,18 @@ object EventQueries extends QueryFamily {
       |g AS (SELECT t.event_type,
       |    unnest(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS h
       |  FROM (SELECT DISTINCT event_type FROM e) t, b),""".stripMargin
+
+  /** Per-user state runs over `e(user_id, event_id, event_type, ts_s)`:
+    * `i` numbers each maximal run of equal event_type as `run`.
+    */
+  private lazy val stateRunCtes: String =
+    """g AS (SELECT user_id, event_id, event_type, ts_s,
+      |  CASE WHEN event_type IS DISTINCT FROM lag(event_type)
+      |    OVER (PARTITION BY user_id ORDER BY ts_s, event_id)
+      |    THEN 1 ELSE 0 END AS chg
+      |  FROM e),
+      |i AS (SELECT user_id, event_type, ts_s,
+      |  SUM(chg) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
+      |    ROWS UNBOUNDED PRECEDING) AS run
+      |  FROM g),""".stripMargin
 }

@@ -745,7 +745,7 @@ object SearchQueries extends QueryFamily {
       // passage replay: the chunk construction (text_chunk's spanning),
       // BM25 over chunks with the identical IEEE fold, per-parent best
       // chunk via the same struct max, doc-level rerank
-      """WITH t0 AS (SELECT doc_id,
+      raw"""WITH t0 AS (SELECT doc_id,
         |    string_split_regex(trim(text), '\s+') AS rtoks
         |  FROM documents
         |  WHERE length(trim(text)) > 0 AND doc_id % 97 <> 0),
@@ -775,15 +775,7 @@ object SearchQueries extends QueryFamily {
         |d AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM g
         |  WHERE term IN (SELECT DISTINCT term FROM q) GROUP BY term),
         |c AS (SELECT q.query_id, g.ckey, q.term,
-        |    sqrt((CAST(s.n - d.df AS DOUBLE) + 0.5) /
-        |         (CAST(d.df AS DOUBLE) + 0.5)) *
-        |      ((CAST(g.tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + 1.0)) /
-        |       (CAST(g.tf AS DOUBLE) + (CAST(1.2 AS DOUBLE) *
-        |         ((1.0 - CAST(0.75 AS DOUBLE)) + (CAST(0.75 AS DOUBLE) *
-        |           (CAST(g.dl AS DOUBLE) /
-        |            (CAST(s.sum_dl AS DOUBLE) / CAST(s.n AS DOUBLE))))))))
-        |      AS contrib
-        |  FROM g JOIN d USING (term) JOIN q USING (term) CROSS JOIN s),
+        |$bm25Contrib
         |agg AS (SELECT query_id, ckey,
         |    list_reduce(list(contrib ORDER BY term), (a, b) -> a + b)
         |      AS score
@@ -1191,7 +1183,7 @@ object SearchQueries extends QueryFamily {
   private lazy val bm25Oracle: String = bm25OracleBound(5000)
 
   private val bm25OracleTpl: String =
-    """WITH t AS (SELECT doc_id, string_split(
+    raw"""WITH t AS (SELECT doc_id, string_split(
       |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
       |  FROM documents WHERE length(trim(text)) > 0),
       |p AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term
@@ -1208,15 +1200,7 @@ object SearchQueries extends QueryFamily {
       |d AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM g
       |  WHERE term IN (SELECT DISTINCT term FROM q) GROUP BY term),
       |c AS (SELECT q.query_id, g.doc_id, q.term,
-      |    sqrt((CAST(s.n - d.df AS DOUBLE) + 0.5) /
-      |         (CAST(d.df AS DOUBLE) + 0.5)) *
-      |      ((CAST(g.tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + 1.0)) /
-      |       (CAST(g.tf AS DOUBLE) + (CAST(1.2 AS DOUBLE) *
-      |         ((1.0 - CAST(0.75 AS DOUBLE)) + (CAST(0.75 AS DOUBLE) *
-      |           (CAST(g.dl AS DOUBLE) /
-      |            (CAST(s.sum_dl AS DOUBLE) / CAST(s.n AS DOUBLE))))))))
-      |      AS contrib
-      |  FROM g JOIN d USING (term) JOIN q USING (term) CROSS JOIN s),
+      |$bm25Contrib
       |agg AS (SELECT query_id, doc_id,
       |    list_reduce(list(contrib ORDER BY term), (a, b) -> a + b)
       |      AS score
@@ -1361,4 +1345,19 @@ object SearchQueries extends QueryFamily {
       |     i -> q.qv[i]::DOUBLE * q.qv[i]::DOUBLE))) *
       |    sqrt(list_sum(list_transform(range(1, len(e.embedding)+1),
       |     i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE)))), 6)""".stripMargin
+
+  /** One term's BM25 contribution (k1 = 1.2, b = 0.75) from the postings
+    * `g(tf, dl)`, the df `d` and the corpus stats `s(n, sum_dl)`, as a
+    * select item `contrib`.
+    */
+  private lazy val bm25Contrib: String =
+    """    sqrt((CAST(s.n - d.df AS DOUBLE) + 0.5) /
+      |         (CAST(d.df AS DOUBLE) + 0.5)) *
+      |      ((CAST(g.tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + 1.0)) /
+      |       (CAST(g.tf AS DOUBLE) + (CAST(1.2 AS DOUBLE) *
+      |         ((1.0 - CAST(0.75 AS DOUBLE)) + (CAST(0.75 AS DOUBLE) *
+      |           (CAST(g.dl AS DOUBLE) /
+      |            (CAST(s.sum_dl AS DOUBLE) / CAST(s.n AS DOUBLE))))))))
+      |      AS contrib
+      |  FROM g JOIN d USING (term) JOIN q USING (term) CROSS JOIN s),""".stripMargin
 }
