@@ -49,14 +49,11 @@ object Components {
     * construction (bucket caps, block caps, verified pairs only), so at
     * 100 TB corpus scale the pair graph is still typically under this
     * bound; a genuinely larger graph takes the loop unchanged. Override
-    * with system property `graft.cc.localMax` or env `GRAFT_CC_LOCAL_MAX`
-    * (negative disables the cutover — ComponentsSpec uses that to pin
-    * the two paths equal).
+    * with system property `graft.cc.localMax` (negative disables the
+    * cutover — ComponentsSpec uses that to pin the two paths equal).
     */
   private def localUnionFindMax: Long =
-    sys.props.get("graft.cc.localMax")
-      .orElse(sys.env.get("GRAFT_CC_LOCAL_MAX"))
-      .map(_.toLong).getOrElse(4000000L)
+    sys.props.get("graft.cc.localMax").map(_.toLong).getOrElse(4000000L)
 
   /** Per-node component assignment for the undirected graph given by
     * `pairs(srcCol, dstCol)`: returns (`node`, `component`) with

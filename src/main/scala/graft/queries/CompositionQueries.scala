@@ -6,8 +6,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import DedupQueries.substrApplyCtesForPipeline
-import SqlFragments.{htmlWrappedSql, langFromScores, markerScores, minhashComponentCtes, mmrFirstPick, qeCosine, qualityCtes, stopList, stripMarkupSql, wsTokenCols}
-import Fixtures.{boilerDocs, htmlWrapped, riverbank, sentinelBounds, streamWithSentinel}
+import SqlFragments.{htmlWrappedSql, langFromScores, markerScores,
+  minhashComponentCtes, mmrFirstPick, qeCosine, qualityCtes, stopList,
+  stripMarkupSql, wsTokenCols}
+import Fixtures.{boilerDocs, htmlWrapped, riverbank, sentinelBounds,
+  streamWithSentinel}
 
 /** Composed `pipeline_*` entries: several operators chained the way a
   * training-data job runs them (ingest, clean, dedup, filter, mix, RAG).

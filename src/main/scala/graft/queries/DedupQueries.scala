@@ -3,7 +3,9 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
-import SqlFragments.{boilerTokenCtes, crossSpanOracle, minhashComponentCtes, plantedTokenCtes, prunedShingleCtes, qualityCtes, shingleCtes, spanIslandCtes, spanRows, tokenWindowCtes, wsTokenCols}
+import SqlFragments.{boilerTokenCtes, crossSpanOracle, minhashComponentCtes,
+  plantedTokenCtes, prunedShingleCtes, qualityCtes, shingleCtes,
+  spanIslandCtes, spanRows, tokenWindowCtes, wsTokenCols}
 import Fixtures.{boilerDocs, plantedDocs, riverbank, streamWithSentinel}
 
 /** Deduplication entries: exact, n-gram Jaccard / containment, MinHash-LSH,

@@ -524,7 +524,7 @@ object EventQueries extends QueryFamily {
       funnelBounded(Tables.read(spark, dir, "events")
         .select(col("user_id"), col("event_type"),
           date_trunc("second", col("ts")).as("ts_s"))),
-      eventsFunnelOracle),
+      funnelOracle),
 
     // The same funnel as a single-shuffle sorted-group fold (one
     // repartition by user, O(1) state) — same oracle as events_funnel.
@@ -534,7 +534,7 @@ object EventQueries extends QueryFamily {
           date_trunc("second", col("ts")).as("ts_s"))),
       // identical oracle: the single-shuffle fold must reproduce the
       // aggregation form bit-for-bit
-      eventsFunnelOracle),
+      funnelOracle),
 
     // The SAME funnel as a real Structured Streaming query: the exact
     // watermark-ordered funnel ([[graft.streaming.EventStream.funnelExact]])
@@ -577,7 +577,7 @@ object EventQueries extends QueryFamily {
     },
       // identical oracle to events_funnel: the streaming entry must produce
       // the batch answer bit-for-bit (funnelExact's exactness contract)
-      eventsFunnelOracle),
+      funnelOracle),
 
     // Gap sessionization as a streaming query: the watermark-ordered exact
     // sessionizer ([[graft.streaming.EventStream.sessionizeExact]], which
@@ -604,7 +604,7 @@ object EventQueries extends QueryFamily {
     },
       // identical oracle to events_session_window: the streaming sessionizer
       // must reproduce the batch session_window answer bit-for-bit
-      eventsSessionsStreamOracle),
+      sessionOracle),
 
     // D1/D7 retention as a streaming query: the watermark-ordered exact
     // per-user flags ([[graft.streaming.EventStream.retentionFlagsExact]])
@@ -637,7 +637,7 @@ object EventQueries extends QueryFamily {
     },
       // identical oracle to events_retention: streaming flags + stateless
       // rollup must reproduce the batch cohort table bit-for-bit
-      eventsRetentionStreamOracle),
+      retentionOracle),
 
     // Retention cohorts: users grouped by signup day; D1/D7 retention =
     // any activity exactly 1/7 days later. Same one-row-per-user shuffle
@@ -701,7 +701,7 @@ object EventQueries extends QueryFamily {
           sum(col("d1").cast("int")).as("n_d1"),
           sum(col("d7").cast("int")).as("n_d7"))
     },
-      eventsRetentionStreamOracle),
+      retentionOracle),
 
     // Rolling active users: DAU + trailing-7-day WAU per day — the
     // standard engagement rollup. (day,user) distinct once; each pair
@@ -772,7 +772,7 @@ object EventQueries extends QueryFamily {
         .groupBy(date_trunc("hour", col("ts")).as("hour_start"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast("decimal(18,6)")).cast("double").as("value_sum")),
-      eventsHourlyOracle),
+      hourlyOracle),
 
     // Hopping (sliding) windows — the third windowed-aggregation family
     // next to tumbling (events_hourly) and session (events_session_window):
@@ -843,7 +843,7 @@ object EventQueries extends QueryFamily {
     },
       // identical oracle to events_hourly: Append-mode windowed aggregation
       // must reproduce the batch hourly rollup bit-for-bit
-      eventsHourlyOracle),
+      hourlyOracle),
 
     // Native session_window (gap-based session assignment; merge iff
     // inter-event gap <= 30 min — a gap of EXACTLY the window size merges,
@@ -858,7 +858,7 @@ object EventQueries extends QueryFamily {
         .select(col("user_id"), col("session_window.start").as("session_start"),
           col("n_events"))
     },
-      eventsSessionsStreamOracle),
+      sessionOracle),
 
     // SCD2 change compaction (gaps-and-islands): the events change log
     // collapses into per-user validity intervals of event_type runs —
@@ -1065,7 +1065,7 @@ object EventQueries extends QueryFamily {
     },
       // merged state ≡ full recompute bit-for-bit (decimal sums are exact),
       // so the oracle IS the events_hourly oracle
-      eventsHourlyOracle),
+      hourlyOracle),
 
     // Seasonal (hour-of-day) traffic profile per event type — counts,
     // exact DECIMAL value sums, and the bucket's integer-exact traffic
@@ -1621,8 +1621,10 @@ object EventQueries extends QueryFamily {
       |  CAST(sum(i_e - i_s) AS BIGINT) AS covered_s
       |FROM g GROUP BY 1""".stripMargin
 
-  /** The oracle shared by events_funnel, events_funnel_fold, events_funnel_stream. */
-  private lazy val eventsFunnelOracle: String =
+  /** The oracle shared by events_funnel, events_funnel_fold,
+    * events_funnel_stream.
+    */
+  private lazy val funnelOracle: String =
     """WITH e AS (SELECT user_id, event_type, date_trunc('second', ts) AS ts_s FROM events),
         |a AS (SELECT user_id,
         |  min(CASE WHEN event_type = 'signup' THEN ts_s END) AS t_signup,
@@ -1638,7 +1640,7 @@ object EventQueries extends QueryFamily {
         |FROM b""".stripMargin
 
   /** The oracle shared by events_sessions_stream, events_session_window. */
-  private lazy val eventsSessionsStreamOracle: String =
+  private lazy val sessionOracle: String =
     """WITH e AS (SELECT user_id, event_id, date_trunc('second', ts) AS ts_s FROM events),
         |g AS (SELECT user_id, event_id, ts_s,
         |  epoch(ts_s) - epoch(lag(ts_s, 1) OVER (PARTITION BY user_id ORDER BY ts_s, event_id)) AS gap
@@ -1652,7 +1654,7 @@ object EventQueries extends QueryFamily {
         |FROM s GROUP BY user_id, session_id""".stripMargin
 
   /** The oracle shared by events_retention_stream, events_retention. */
-  private lazy val eventsRetentionStreamOracle: String =
+  private lazy val retentionOracle: String =
     """WITH e AS (SELECT user_id, event_type, CAST(ts AS DATE) AS day FROM events),
         |p AS (SELECT user_id,
         |  min(CASE WHEN event_type = 'signup' THEN day END) AS signup_day,
@@ -1666,8 +1668,10 @@ object EventQueries extends QueryFamily {
         |  CAST(SUM(CAST(d7 AS INT)) AS BIGINT) AS n_d7
         |FROM r GROUP BY signup_day""".stripMargin
 
-  /** The oracle shared by events_hourly, events_hourly_stream, events_hourly_incremental. */
-  private lazy val eventsHourlyOracle: String =
+  /** The oracle shared by events_hourly, events_hourly_stream,
+    * events_hourly_incremental.
+    */
+  private lazy val hourlyOracle: String =
     """SELECT date_trunc('hour', ts) AS hour_start, event_type,
         |COUNT(*) AS n_events,
         |CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS value_sum

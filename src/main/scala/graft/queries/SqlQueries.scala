@@ -482,7 +482,7 @@ object SqlQueries extends QueryFamily {
           leftTime = "ts", rightTime = "c_ts")
         .select(col("user_id"), col("event_id"), col("click_s").as("asof_click_s"))
     },
-      qAsofJoinOracle),
+      asofJoinOracle),
 
     // Direction variant: FIRST click at-or-after each purchase
     // (nearest-after lookup); same custom operator, direction=forward.
@@ -1297,7 +1297,7 @@ object SqlQueries extends QueryFamily {
     },
       // identical oracle to q_asof_join: the streaming as-of must reproduce
       // DuckDB's native ASOF LEFT JOIN bit-for-bit
-      qAsofJoinOracle),
+      asofJoinOracle),
 
     // Pure range join (NO equi-key): clicks landing inside sampled
     // one-hour post-purchase windows, via the bucketized point-in-interval
@@ -1450,7 +1450,7 @@ object SqlQueries extends QueryFamily {
         |  FROM lineitem GROUP BY l_returnflag) e USING (l_returnflag)""".stripMargin))
 
   /** The oracle shared by q_asof_join, q_asof_join_stream. */
-  private lazy val qAsofJoinOracle: String =
+  private lazy val asofJoinOracle: String =
     """WITH l AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'),
         |r AS (SELECT user_id, ts, date_trunc('second', ts) AS click_s
         |      FROM events WHERE event_type = 'click')

@@ -743,7 +743,7 @@ object TableQueries extends QueryFamily {
       // the engine's max(struct(seq, op, …)) election replayed as a
       // row_number over seq desc — identical because seq totally orders
       // each key's changes
-      tableMergeCdcOracle),
+      mergeCdcOracle),
 
     // Streaming twin #23 — continuous CDC intake: the change feed arrives
     // as TWO microbatches delivered OUT of seq order (all seq-2 deletes
@@ -774,7 +774,7 @@ object TableQueries extends QueryFamily {
     },
       // identical oracle to table_merge_cdc: the out-of-order streamed
       // election must reproduce the batch merge bit-for-bit
-      tableMergeCdcOracle),
+      mergeCdcOracle),
 
     // Join-key skew profile on events.user_id — the pre-join diagnostic
     // feeding the salted-join decision. TakeOrderedAndProject top-10
@@ -1214,7 +1214,7 @@ object TableQueries extends QueryFamily {
       |FROM dec d LEFT JOIN act a USING (key, bucket)""".stripMargin
 
   /** The oracle shared by table_merge_cdc, table_merge_cdc_stream. */
-  private lazy val tableMergeCdcOracle: String =
+  private lazy val mergeCdcOracle: String =
     """WITH ch AS (
         |  SELECT o_orderkey AS k, 1 AS seq, 'U' AS op, o_custkey,
         |    'R' AS o_orderstatus, o_totalprice + 1000.0 AS o_totalprice,

@@ -4,8 +4,12 @@ import graft.Tables
 import graft.functions.{Dedup, TextAnalysis}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import SqlFragments.{boilerTokenCtes, crossSpanOracle, htmlWrappedSql, langFromScores, markerScores, plantedTokenCtes, qualityCtes, qualityRatios, qualityScore, shingleCtes, spanIslandCtes, stripMarkupSql, tokenWindowCtes, wsTokenCols}
-import Fixtures.{boilerDocs, htmlWrapped, plantedDocs, riverbank, streamWithSentinel}
+import SqlFragments.{boilerTokenCtes, crossSpanOracle, htmlWrappedSql,
+  langFromScores, markerScores, plantedTokenCtes, qualityCtes, qualityRatios,
+  qualityScore, shingleCtes, spanIslandCtes, stripMarkupSql, tokenWindowCtes,
+  wsTokenCols}
+import Fixtures.{boilerDocs, htmlWrapped, plantedDocs, riverbank,
+  streamWithSentinel}
 
 /** Text-analysis entries: normalization, quality scoring, tokenizer
   * induction and encoding (BPE, WordPiece, unigram LM), n-gram and
@@ -309,7 +313,7 @@ object TextQueries extends QueryFamily {
     entry("text_topk_ngrams", (spark, dir) =>
       TextAnalysis.topNgramsByDocFreq(
         Tables.read(spark, dir, "documents"), "text", k = 50),
-      textTopkNgramsOracle),
+      topkNgramsOracle),
 
     // The SAME top-50 through the Misra-Gries sketch run in its exact
     // regime: capacity 2¹⁹ ≥ corpus 3-gram vocabulary (27k at sf0.1,
@@ -334,7 +338,7 @@ object TextQueries extends QueryFamily {
     },
       // identical construction: in exact mode the sketch must reproduce
       // the true top-50 (same tie-break: freq desc, gram asc)
-      textTopkNgramsOracle),
+      topkNgramsOracle),
 
     // PII redaction over deterministically PII-augmented fixture text
     // (the synthetic corpus carries no addresses, so each doc gets an
@@ -997,7 +1001,7 @@ object TextQueries extends QueryFamily {
     },
       // shared normalized 4-grams against the doc_id%97 benchmark slice;
       // grams per doc are DISTINCT (list_distinct mirrors array_distinct)
-      textDecontaminateOracle),
+      decontaminateOracle),
 
     // CCNet-style common-line removal over deterministically augmented
     // fixture text (the synthetic corpus has no repeated lines, so docs
@@ -1051,7 +1055,7 @@ object TextQueries extends QueryFamily {
         "text", "doc_id", k = 4)
     },
       // Bloom prefilter is pure plan optimization — identical exact result
-      textDecontaminateOracle),
+      decontaminateOracle),
 
     // SPAN-LEVEL decontamination: maximal >= 8-token spans of candidate
     // docs that occur anywhere in the %97 benchmark slice — located, not
@@ -1812,7 +1816,7 @@ object TextQueries extends QueryFamily {
       |  ) g""".stripMargin
 
   /** The oracle shared by text_topk_ngrams, text_topk_sketch. */
-  private lazy val textTopkNgramsOracle: String =
+  private lazy val topkNgramsOracle: String =
     s"""
         |WITH $shingleCtes,
         |u AS (SELECT unnest(s) AS ngram FROM sh)
@@ -1820,7 +1824,7 @@ object TextQueries extends QueryFamily {
         |GROUP BY ngram ORDER BY doc_freq DESC, ngram LIMIT 50""".stripMargin
 
   /** The oracle shared by text_decontaminate, text_decontaminate_bloom. */
-  private lazy val textDecontaminateOracle: String =
+  private lazy val decontaminateOracle: String =
     """WITH toks AS (SELECT doc_id,
         |  string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS t
         |  FROM documents),
