@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import SqlFragments.closureCtes
 
 /** Entity-resolution entries over the erRecords fixture: blocked
   * matching, clustering and survivorship.
@@ -119,14 +120,7 @@ object EntityResolutionQueries extends QueryFamily {
     * incremental twin (labels provably identical).
     */
   private lazy val erResolveOracle: String = s"""
-        |WITH RECURSIVE p AS (SELECT id_a, id_b
-        |  FROM read_parquet('__OUT__/er_match/*.parquet')),
-        |e AS (SELECT id_a AS u, id_b AS v FROM p
-        |  UNION SELECT id_b, id_a FROM p),
-        |reach AS (
-        |  SELECT u, u AS r FROM (SELECT DISTINCT u FROM e)
-        |  UNION
-        |  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.u),
+        |WITH RECURSIVE ${closureCtes("er_match")}
         |comp AS (SELECT u AS id, MIN(r) AS entity FROM reach GROUP BY u),
         |$erRecsCtes,
         |lab AS (SELECT recs.id, recs.name, recs.acctbal,

@@ -189,20 +189,26 @@ private[queries] object SqlFragments {
       |  WHEN s_zh = greatest(s_en, s_fr, s_es, s_de, s_zh) THEN 'zh'
       |  ELSE 'und' END AS """.stripMargin
 
-  /** Connected components of the dedup_minhash output pairs (`__OUT__`):
-    * the recursive `reach` closure, `comp(doc_id, rep)` labelling each
-    * paired doc with its component's minimum id. Needs `WITH RECURSIVE`.
+  /** The recursive closure over the id pairs an entry emitted (`__OUT__`
+    * output `out`): `reach(u, r)` pairs every paired id with every id it
+    * reaches. Needs `WITH RECURSIVE`.
+    */
+  private[queries] def closureCtes(out: String): String =
+    s"""p AS (SELECT id_a, id_b
+       |  FROM read_parquet('__OUT__/$out/*.parquet')),
+       |e AS (SELECT id_a AS u, id_b AS v FROM p
+       |  UNION SELECT id_b, id_a FROM p),
+       |reach AS (
+       |  SELECT u, u AS r FROM (SELECT DISTINCT u FROM e)
+       |  UNION
+       |  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.u),""".stripMargin
+
+  /** Connected components of the dedup_minhash pairs: `comp(doc_id, rep)`
+    * labels each paired doc with its component's minimum id.
     */
   private[queries] lazy val minhashComponentCtes: String =
-    """p AS (SELECT id_a, id_b
-      |  FROM read_parquet('__OUT__/dedup_minhash/*.parquet')),
-      |e AS (SELECT id_a AS u, id_b AS v FROM p
-      |  UNION SELECT id_b, id_a FROM p),
-      |reach AS (
-      |  SELECT u, u AS r FROM (SELECT DISTINCT u FROM e)
-      |  UNION
-      |  SELECT e.u, reach.r FROM e JOIN reach ON e.v = reach.u),
-      |comp AS (SELECT u AS doc_id, MIN(r) AS rep FROM reach GROUP BY u)""".stripMargin
+    s"""${closureCtes("dedup_minhash")}
+       |comp AS (SELECT u AS doc_id, MIN(r) AS rep FROM reach GROUP BY u)""".stripMargin
 
   /** [[qCosine]] for the query vector `qe.qv`. */
   private[queries] lazy val qeCosine: String =
