@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Fixtures.{sentinelBounds, streamWithSentinel}
@@ -795,25 +795,10 @@ object EventQueries extends QueryFamily {
     // Append mode — each of an event's two windows emits exactly once
     // when the watermark passes its end; the sentinel pushes it past
     // every real window. Same oracle as the batch form.
-    entry("events_hopping_stream", (spark, dir) => {
-      import spark.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = Tables.read(spark, dir, "events")
-        .select(col("event_type"), col("ts"), col("value"))
-      val (delaySec, sentinelTs) = sentinelBounds(spark, ev)
-      val sentinel = Seq(("noop", sentinelTs, 0.0))
-        .toDF("event_type", "ts", "value")
-      val agg = streamWithSentinel(spark, ev, sentinel, delaySec)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).as("vdec"))
-        .select(col("window.start").as("window_start"), col("event_type"),
-          col("n_events"), col("vdec").cast("double").as("value_sum"))
-      graft.streaming.EventStream.runToMemory(
-        agg, "events_hopping_stream_out", OutputMode.Append())
-      spark.table("events_hopping_stream_out")
-        .where(col("event_type") =!= "noop")
-    },
+    entry("events_hopping_stream", (spark, dir) =>
+      windowedCountsStream(spark, dir,
+        window(col("ts"), "1 hour", "30 minutes"), "window_start",
+        "events_hopping_stream_out"),
       hoppingOracle),
 
     // The canonical streaming shape — watermarked tumbling-window
@@ -822,25 +807,9 @@ object EventQueries extends QueryFamily {
     // it past every real window). Decimal-cast sum keeps the double
     // partition-order-independent, so the oracle is IDENTICAL to
     // `events_hourly`'s — batch ≡ stream for windowed aggregation.
-    entry("events_hourly_stream", (spark, dir) => {
-      import spark.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = Tables.read(spark, dir, "events")
-        .select(col("event_type"), col("ts"), col("value"))
-      val (delaySec, sentinelTs) = sentinelBounds(spark, ev)
-      val sentinel = Seq(("noop", sentinelTs, 0.0))
-        .toDF("event_type", "ts", "value")
-      val agg = streamWithSentinel(spark, ev, sentinel, delaySec)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).as("vdec"))
-        .select(col("window.start").as("hour_start"), col("event_type"),
-          col("n_events"), col("vdec").cast("double").as("value_sum"))
-      graft.streaming.EventStream.runToMemory(
-        agg, "events_hourly_stream_out", OutputMode.Append())
-      spark.table("events_hourly_stream_out")
-        .where(col("event_type") =!= "noop")
-    },
+    entry("events_hourly_stream", (spark, dir) =>
+      windowedCountsStream(spark, dir, window(col("ts"), "1 hour"),
+        "hour_start", "events_hourly_stream_out"),
       // identical oracle to events_hourly: Append-mode windowed aggregation
       // must reproduce the batch hourly rollup bit-for-bit
       hourlyOracle),
@@ -1703,4 +1672,29 @@ object EventQueries extends QueryFamily {
       |  SUM(chg) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
       |    ROWS UNBOUNDED PRECEDING) AS run
       |  FROM g),""".stripMargin
+
+  /** Per-type event counts and decimal value sums over the `win` windows
+    * of the watermarked event stream, drained in Append mode into memory
+    * table `sink`: each window emits once the sentinel's watermark passes
+    * its end. The window start is named `startCol`.
+    */
+  private def windowedCountsStream(spark: SparkSession, dir: String,
+                                   win: Column, startCol: String,
+                                   sink: String): DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.OutputMode
+    val ev = Tables.read(spark, dir, "events")
+      .select(col("event_type"), col("ts"), col("value"))
+    val (delaySec, sentinelTs) = sentinelBounds(spark, ev)
+    val sentinel = Seq(("noop", sentinelTs, 0.0))
+      .toDF("event_type", "ts", "value")
+    val agg = streamWithSentinel(spark, ev, sentinel, delaySec)
+      .groupBy(win, col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast("decimal(18,6)")).as("vdec"))
+      .select(col("window.start").as(startCol), col("event_type"),
+        col("n_events"), col("vdec").cast("double").as("value_sum"))
+    graft.streaming.EventStream.runToMemory(agg, sink, OutputMode.Append())
+    spark.table(sink).where(col("event_type") =!= "noop")
+  }
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{Dedup, Similarity}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Fixtures.streamWithSentinel
@@ -590,13 +591,7 @@ object SearchQueries extends QueryFamily {
     // scaladoc), so the oracle hash-compares exact score values.
     entry("search_bm25", (spark, dir) => {
       val docs = Tables.read(spark, dir, "documents")
-      val qt = docs
-        .where(col("doc_id") % 97 === 0 && col("doc_id") < 5000 &&
-          length(trim(col("text"))) > 0)
-        .select(col("doc_id").as("query_id"),
-          explode(array_distinct(slice(
-            split(Dedup.normalizeText(col("text")), " "), 1, 5)))
-            .as("term"))
+      val qt = benchQueryTerms(docs, 5000)
       // maxDfPermille stays at the no-op 1000 here: the fixture's tiny
       // synthetic vocabulary puts EVERY term in >half the docs, so any
       // real stop-term cut empties the result; the guard's semantics
@@ -626,13 +621,7 @@ object SearchQueries extends QueryFamily {
       graft.functions.Retrieval.appendPostings(
         docs.where(col("doc_id") % 3 =!= 0 && col("doc_id") % 97 =!= 0),
         "text", "doc_id", s"$tmp/idx")
-      val qt = docs
-        .where(col("doc_id") % 97 === 0 && col("doc_id") < 5000 &&
-          length(trim(col("text"))) > 0)
-        .select(col("doc_id").as("query_id"),
-          explode(array_distinct(slice(
-            split(Dedup.normalizeText(col("text")), " "), 1, 5)))
-            .as("term"))
+      val qt = benchQueryTerms(docs, 5000)
       graft.functions.Retrieval.bm25TopKFromPostings(
         spark.read.parquet(s"$tmp/idx"), qt, k = 10)
     },
@@ -725,12 +714,7 @@ object SearchQueries extends QueryFamily {
                 col("chunk_id").cast("string"))))).as("ckey"),
           col("chunk_text"))
         .localCheckpoint(true)
-      val qt = docs.where(col("doc_id") % 97 === 0 &&
-          col("doc_id") < 1000 && length(trim(col("text"))) > 0)
-        .select(col("doc_id").as("query_id"),
-          explode(array_distinct(slice(
-            split(Dedup.normalizeText(col("text")), " "), 1, 5)))
-            .as("term"))
+      val qt = benchQueryTerms(docs, 1000)
       val hits = graft.functions.Retrieval.bm25TopK(
         chunks, "chunk_text", "ckey", qt, k = 50)
       val best = hits
@@ -842,12 +826,7 @@ object SearchQueries extends QueryFamily {
     // rankers are directly comparable.
     entry("search_bm25f", (spark, dir) => {
       val docs = Tables.read(spark, dir, "documents")
-      val qt = docs.where(col("doc_id") % 97 === 0 &&
-          col("doc_id") < 5000 && length(trim(col("text"))) > 0)
-        .select(col("doc_id").as("query_id"),
-          explode(array_distinct(slice(
-            split(Dedup.normalizeText(col("text")), " "), 1, 5)))
-            .as("term"))
+      val qt = benchQueryTerms(docs, 5000)
       graft.functions.Retrieval.bm25fTopK(
         docs.where(col("doc_id") % 97 =!= 0), "text", "doc_id", qt, k = 10)
     },
@@ -862,12 +841,7 @@ object SearchQueries extends QueryFamily {
     entry("search_ranker_eval", (spark, dir) => {
       val docs = Tables.read(spark, dir, "documents")
       val corpus = docs.where(col("doc_id") % 97 =!= 0)
-      val qt = docs.where(col("doc_id") % 97 === 0 &&
-          col("doc_id") < 5000 && length(trim(col("text"))) > 0)
-        .select(col("doc_id").as("query_id"),
-          explode(array_distinct(slice(
-            split(Dedup.normalizeText(col("text")), " "), 1, 5)))
-            .as("term"))
+      val qt = benchQueryTerms(docs, 5000)
       val a = graft.functions.Retrieval.bm25TopK(
           corpus, "text", "doc_id", qt, k = 10)
         .select(col("query_id"), col("doc_id"), col("rank").as("rank_a"))
@@ -1360,4 +1334,16 @@ object SearchQueries extends QueryFamily {
       |            (CAST(s.sum_dl AS DOUBLE) / CAST(s.n AS DOUBLE))))))))
       |      AS contrib
       |  FROM g JOIN d USING (term) JOIN q USING (term) CROSS JOIN s),""".stripMargin
+
+  /** The benchmark query set: the first five distinct normalized terms
+    * `(query_id, term)` of each non-blank %97 doc below id `bound`.
+    */
+  private def benchQueryTerms(docs: DataFrame, bound: Int): DataFrame =
+    docs
+      .where(col("doc_id") % 97 === 0 && col("doc_id") < bound &&
+        length(trim(col("text"))) > 0)
+      .select(col("doc_id").as("query_id"),
+        explode(array_distinct(slice(
+          split(Dedup.normalizeText(col("text")), " "), 1, 5)))
+          .as("term"))
 }
