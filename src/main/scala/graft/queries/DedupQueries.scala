@@ -817,7 +817,9 @@ object DedupQueries extends QueryFamily {
       // three-way ingest replay: index windows come from thirds 0 (build)
       // and 1 (append), probes from third 2, plants as in the entry
       crossSpanOracle(plantedTokenCtes(riverbank,
-        "doc_id % 3 = 0 AND doc_id % 2 = 0", "doc_id % 3 = 1 AND doc_id % 5 = 0", "doc_id % 3 = 2 AND doc_id % 13 = 0"),
+          "doc_id % 3 = 0 AND doc_id % 2 = 0",
+          "doc_id % 3 = 1 AND doc_id % 5 = 0",
+          "doc_id % 3 = 2 AND doc_id % 13 = 0"),
         "doc_id % 3 = 2", "doc_id % 3 <> 2")),
 
     entry("dedup_substr_incremental", (spark, dir) => {
@@ -927,7 +929,8 @@ object DedupQueries extends QueryFamily {
   // stateless either way)
   private val substrIncrementalOracle: String =
     crossSpanOracle(plantedTokenCtes(riverbank,
-        "doc_id % 3 = 0 AND doc_id % 2 = 0", "doc_id % 3 <> 0 AND doc_id % 13 = 0"),
+          "doc_id % 3 = 0 AND doc_id % 2 = 0",
+          "doc_id % 3 <> 0 AND doc_id % 13 = 0"),
         "doc_id % 3 <> 0", "doc_id % 3 = 0")
 
   // ExactSubstr span replay — shared by the batch entry and the

@@ -907,6 +907,11 @@ object SqlQueries extends QueryFamily {
         |CAST(list_position(embedding, list_max(embedding)) AS BIGINT) AS argmax_pos
         |FROM embeddings""".stripMargin),
 
+    // Statistical aggregates, ordered-set/window distribution functions,
+    // string aggregation, regexp extraction, map functions, union-by-name,
+    // EXISTS subqueries (SQL text path), GROUPING SETS, and null-handling
+    // semantics — the wider scalar/aggregate surface of SURVEY §2.3.
+
     // Variance/stddev/correlation via EXACT decimal sums, final arithmetic
     // in double with the same expression structure as the oracle: decimal
     // addition is order-independent, so the result is identical at any

@@ -1075,7 +1075,8 @@ object TextQueries extends QueryFamily {
       // cross-corpus window replay: candidate windows IN benchmark window
       // set, islands merged per candidate doc, span text from token array
       crossSpanOracle(plantedTokenCtes(riverbank,
-        "doc_id % 97 = 0 AND doc_id % 2 = 0", "doc_id % 97 <> 0 AND doc_id % 13 = 0"),
+          "doc_id % 97 = 0 AND doc_id % 2 = 0",
+          "doc_id % 97 <> 0 AND doc_id % 13 = 0"),
         "doc_id % 97 <> 0", "doc_id % 97 = 0")),
 
     // Per-doc duplicated-token fraction (Gopher-style quality signal,
