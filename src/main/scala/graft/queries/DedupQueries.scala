@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.{Dedup, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions._
 import SqlFragments.{boilerTokenCtes, crossSpanOracle, minhashComponentCtes,
-  plantedTokenCtes, prunedShingleCtes, qualityCtes, shingleCtes,
+  plantedTokenCtes, qualityCtes, shingleCtes,
   spanIslandCtes, spanRows, tokenWindowCtes, wsTokenCols}
 import Fixtures.{boilerDocs, plantedDocs, riverbank, streamWithSentinel}
 
@@ -953,4 +953,22 @@ object DedupQueries extends QueryFamily {
     """SELECT regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm_text,
         |MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
         |FROM documents GROUP BY 1""".stripMargin
+
+  /** [[shingleCtes]] under Dedup.ngramJaccardPairs' corpus-derived
+    * stop-shingle cap (clamp(ceil(fraction·nDocs), floor, ceiling)):
+    * `ex(doc_id, g)` the pruned postings, `sz` the per-doc set sizes and
+    * `co(id_a, id_b, n)` the pair intersection counts.
+    */
+  private lazy val prunedShingleCtes: String =
+    s"""$shingleCtes,
+       |ex0 AS (SELECT doc_id, unnest(s) AS g FROM sh),
+       |hot AS (SELECT g FROM (SELECT g, COUNT(*) AS df FROM ex0 GROUP BY g) h
+       |  WHERE df > least(${graft.functions.Dedup.MaxDocFreqCeiling},
+       |    greatest(${graft.functions.Dedup.MinDocFreqFloor},
+       |      ceil(${graft.functions.Dedup.HotShingleFraction} *
+       |        (SELECT COUNT(*) FROM documents))))),
+       |ex AS (SELECT doc_id, g FROM ex0 WHERE g NOT IN (SELECT g FROM hot)),
+       |sz AS (SELECT doc_id, COUNT(*) AS sz FROM ex GROUP BY doc_id),
+       |co AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS n
+       |  FROM ex x JOIN ex y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2)""".stripMargin
 }

@@ -17,28 +17,10 @@ private[queries] object SqlFragments {
       |  range(1, greatest(len(t) - 2, 1) + 1),
       |  i -> array_to_string(t[i:i+2], ' '))) AS s FROM toks)""".stripMargin
 
-  /** [[shingleCtes]] under Dedup.ngramJaccardPairs' corpus-derived
-    * stop-shingle cap (clamp(ceil(fraction·nDocs), floor, ceiling)):
-    * `ex(doc_id, g)` the pruned postings, `sz` the per-doc set sizes and
-    * `co(id_a, id_b, n)` the pair intersection counts.
-    */
-  private[queries] lazy val prunedShingleCtes: String =
-    s"""$shingleCtes,
-       |ex0 AS (SELECT doc_id, unnest(s) AS g FROM sh),
-       |hot AS (SELECT g FROM (SELECT g, COUNT(*) AS df FROM ex0 GROUP BY g) h
-       |  WHERE df > least(${graft.functions.Dedup.MaxDocFreqCeiling},
-       |    greatest(${graft.functions.Dedup.MinDocFreqFloor},
-       |      ceil(${graft.functions.Dedup.HotShingleFraction} *
-       |        (SELECT COUNT(*) FROM documents))))),
-       |ex AS (SELECT doc_id, g FROM ex0 WHERE g NOT IN (SELECT g FROM hot)),
-       |sz AS (SELECT doc_id, COUNT(*) AS sz FROM ex GROUP BY doc_id),
-       |co AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS n
-       |  FROM ex x JOIN ex y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2)""".stripMargin
-
   private[queries] val stopList =
     TextAnalysis.EnglishStopwords.map(s => s"'$s'").mkString("[", ",", "]")
 
-  private[queries] def markerList(lang: String): String =
+  private def markerList(lang: String): String =
     TextAnalysis.LangMarkers.toMap.apply(lang).map(s => s"'$s'").mkString("[", ",", "]")
 
   /** The quality-formula ratios of [[TextAnalysis.stats]] over `text`, its
