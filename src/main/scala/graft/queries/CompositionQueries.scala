@@ -6,9 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import DedupQueries.substrApplyCtesForPipeline
-import SqlFragments.{htmlWrappedSql, langFromScores, markerScores,
-  minhashComponentCtes, mmrFirstPick, qeCosine, qualityCtes, stopList,
-  stripMarkupSql, wsTokenCols}
+import SqlFragments.{htmlWrappedSql, langFromScores, markerScores, minhashComponentCtes, mmrFirstPick, qeCosine, qualityCtes, rrfScore, stopList, stripMarkupSql, wsTokenCols}
 import Fixtures.{boilerDocs, htmlWrapped, riverbank, sentinelBounds,
   streamWithSentinel}
 
@@ -856,14 +854,7 @@ object CompositionQueries extends QueryFamily {
         |  SELECT query_id, doc_id FROM lex
         |  UNION ALL SELECT query_id, doc_id FROM vec)),
         |fz AS (SELECT u.query_id, u.doc_id,
-        |    CAST((CASE WHEN l.rank IS NULL THEN 0
-        |        ELSE CAST(1000000000 AS BIGINT) // CAST(60 + l.rank AS BIGINT)
-        |      END) +
-        |      (CASE WHEN v.rank IS NULL THEN 0
-        |        ELSE CAST(1000000000 AS BIGINT) // CAST(60 + v.rank AS BIGINT)
-        |      END) AS BIGINT) AS rrf
-        |  FROM u LEFT JOIN lex l USING (query_id, doc_id)
-        |  LEFT JOIN vec v USING (query_id, doc_id)),
+        |$rrfScore,
         |fused AS MATERIALIZED (SELECT query_id, doc_id, rrf FROM (
         |    SELECT *, row_number() OVER (PARTITION BY query_id
         |      ORDER BY rrf DESC, doc_id) AS rank FROM fz) WHERE rank <= 10),

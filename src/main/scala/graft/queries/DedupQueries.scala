@@ -231,14 +231,7 @@ object DedupQueries extends QueryFamily {
     },
       // the batch first-occurrence aggregate over the same spanning — the
       // streamed Update-mode result must collapse to exactly this
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-        |s AS (SELECT doc_id, toks, n,
-        |  unnest(range(0, CAST(ceil(n / 16.0) AS BIGINT))) AS si FROM n),
-        |sp AS (SELECT doc_id, CAST(si AS INT) AS span_idx,
-        |  array_to_string(toks[(si*16+1):least(si*16+16, n)], ' ') AS span_text
-        |  FROM s),
+      raw"""$alignedSpanCtes
         |f AS (SELECT span_text,
         |  min(struct_pack(d := doc_id, i := span_idx)) AS first,
         |  count(*) AS n FROM sp GROUP BY span_text)
@@ -681,14 +674,7 @@ object DedupQueries extends QueryFamily {
         Tables.read(spark, dir, "documents"), "text", "doc_id", span = 16),
       // same spanning as the engine: 16-token aligned spans, struct-min
       // first occurrence, ordered reassembly of the kept spans
-      """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
-        |s AS (SELECT doc_id, toks, n,
-        |  unnest(range(0, CAST(ceil(n / 16.0) AS BIGINT))) AS si FROM n),
-        |sp AS (SELECT doc_id, CAST(si AS INT) AS span_idx,
-        |  array_to_string(toks[(si*16+1):least(si*16+16, n)], ' ') AS span_text
-        |  FROM s),
+      raw"""$alignedSpanCtes
         |f AS (SELECT span_text, min(struct_pack(d := doc_id, i := span_idx)) AS first
         |  FROM sp GROUP BY span_text),
         |j AS (SELECT sp.doc_id, sp.span_idx, sp.span_text,
@@ -971,4 +957,17 @@ object DedupQueries extends QueryFamily {
        |sz AS (SELECT doc_id, COUNT(*) AS sz FROM ex GROUP BY doc_id),
        |co AS (SELECT x.doc_id AS id_a, y.doc_id AS id_b, COUNT(*) AS n
        |  FROM ex x JOIN ex y ON x.g = y.g AND x.doc_id < y.doc_id GROUP BY 1, 2)""".stripMargin
+
+  /** The 16-token aligned spans `sp(doc_id, span_idx, span_text)` of the
+    * non-blank documents (Curation.spanDedup's spanning).
+    */
+  private lazy val alignedSpanCtes: String =
+    raw"""WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
+         |  FROM documents WHERE length(trim(text)) > 0),
+         |n AS (SELECT doc_id, toks, len(toks) AS n FROM t),
+         |s AS (SELECT doc_id, toks, n,
+         |  unnest(range(0, CAST(ceil(n / 16.0) AS BIGINT))) AS si FROM n),
+         |sp AS (SELECT doc_id, CAST(si AS INT) AS span_idx,
+         |  array_to_string(toks[(si*16+1):least(si*16+16, n)], ' ') AS span_text
+         |  FROM s),""".stripMargin
 }

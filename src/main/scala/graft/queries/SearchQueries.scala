@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Fixtures.streamWithSentinel
-import SqlFragments.{mmrFirstPick, qeCosine}
+import SqlFragments.{mmrFirstPick, qeCosine, rrfScore}
 
 /** Similarity-search and retrieval entries: brute-force and ANN top-k
   * (LSH, IVF, PQ), kNN graphs, BM25 / BM25F / phrase / hybrid retrieval
@@ -1294,14 +1294,7 @@ object SearchQueries extends QueryFamily {
       |f AS (SELECT u.query_id, u.doc_id,
       |    CAST(coalesce(l.rank, 0) AS INTEGER) AS lex_rank,
       |    CAST(coalesce(v.rank, 0) AS INTEGER) AS vec_rank,
-      |    CAST((CASE WHEN l.rank IS NULL THEN 0
-      |        ELSE CAST(1000000000 AS BIGINT) // CAST(60 + l.rank AS BIGINT)
-      |      END) +
-      |      (CASE WHEN v.rank IS NULL THEN 0
-      |        ELSE CAST(1000000000 AS BIGINT) // CAST(60 + v.rank AS BIGINT)
-      |      END) AS BIGINT) AS rrf
-      |  FROM u LEFT JOIN lex l USING (query_id, doc_id)
-      |  LEFT JOIN vec v USING (query_id, doc_id))
+      |$rrfScore
       |SELECT query_id, doc_id, lex_rank, vec_rank, rrf,
       |  CAST(rank AS INTEGER) AS rank
       |FROM (SELECT *, row_number() OVER (PARTITION BY query_id

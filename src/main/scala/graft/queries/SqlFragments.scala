@@ -222,4 +222,18 @@ private[queries] object SqlFragments {
          |      regexp_replace(t, '<[^>]+>', ' ', 'g'),
          |      '&lt;', '<'), '&gt;', '>'), '&nbsp;', ' '), '&amp;', '&'),
          |    '\s+', ' ', 'g')) AS clean""".stripMargin
+
+  /** Retrieval.rrfFuse's integer RRF score (k = 60, 10⁹ fixed point) of
+    * the union `u` over the ranked `lex` and `vec` lists, as select item
+    * `rrf` and the joins that feed it.
+    */
+  private[queries] lazy val rrfScore: String =
+    """    CAST((CASE WHEN l.rank IS NULL THEN 0
+      |        ELSE CAST(1000000000 AS BIGINT) // CAST(60 + l.rank AS BIGINT)
+      |      END) +
+      |      (CASE WHEN v.rank IS NULL THEN 0
+      |        ELSE CAST(1000000000 AS BIGINT) // CAST(60 + v.rank AS BIGINT)
+      |      END) AS BIGINT) AS rrf
+      |  FROM u LEFT JOIN lex l USING (query_id, doc_id)
+      |  LEFT JOIN vec v USING (query_id, doc_id))""".stripMargin
 }
