@@ -253,11 +253,7 @@ object CompositionQueries extends QueryFamily {
       graft.functions.Retrieval.appendPostingsBucketed(
         chunks, "chunk_text", "ckey", idxPath,
         rowLocal = true, clustered = true)
-      graft.functions.IndexMaintenance.compactPostingsBucketed(spark, idxPath)
-      ragQueryFromPostings(clean, emb,
-        spark.read.parquet(idxPath).drop("bucket"),
-        doclens = Some(spark.read.parquet(
-          graft.functions.Retrieval.doclensPath(idxPath))))
+      ragQueryFromIndex(spark, clean, emb, idxPath)
     },
       // same replay: append = rebuild for the persisted postings index
       ragOracle),
@@ -303,11 +299,7 @@ object CompositionQueries extends QueryFamily {
         .start()
       q.processAllAvailable()
       q.stop()
-      graft.functions.IndexMaintenance.compactPostingsBucketed(spark, idxPath)
-      ragQueryFromPostings(clean, emb,
-        spark.read.parquet(idxPath).drop("bucket"),
-        doclens = Some(spark.read.parquet(
-          graft.functions.Retrieval.doclensPath(idxPath))))
+      ragQueryFromIndex(spark, clean, emb, idxPath)
     },
       ragOracle),
 
@@ -669,13 +661,17 @@ object CompositionQueries extends QueryFamily {
       emb, "vec_id", "embedding", k = 5)
   }
 
-  /** [[ragRerank]] over passage BM25 from a persisted postings index. */
-  private[graft] def ragQueryFromPostings(clean: DataFrame, emb: DataFrame,
-                                   postings: DataFrame,
-                                   doclens: Option[DataFrame] = None): DataFrame = {
+  /** [[ragRerank]] over passage BM25 from the bucketed postings index at
+    * `idxPath` (with its doclens sidecar), compacted first.
+    */
+  private def ragQueryFromIndex(spark: SparkSession, clean: DataFrame,
+                                emb: DataFrame, idxPath: String): DataFrame = {
+    graft.functions.IndexMaintenance.compactPostingsBucketed(spark, idxPath)
     val (qdocs, qt) = ragQueries(clean)
     ragRerank(qdocs, emb, graft.functions.Retrieval.bm25TopKFromPostings(
-      postings, qt, k = 50, doclens = doclens))
+      spark.read.parquet(idxPath).drop("bucket"), qt, k = 50,
+      doclens = Some(spark.read.parquet(
+        graft.functions.Retrieval.doclensPath(idxPath)))))
   }
 
   /** Multilingual-mix replay prefix: langid markers (`lg`) → per-lang
