@@ -725,7 +725,7 @@ object DedupQueries extends QueryFamily {
         .as[(String, Long, Int)]
       val flagged = graft.streaming.EventStream.duplicateWindowStream(wins)
       graft.streaming.EventStream.runToMemory(
-        flagged.toDF, "substr_stream_out", OutputMode.Append())
+        flagged.toDF(), "substr_stream_out", OutputMode.Append())
       Dedup.spansFromFlagged(
         spark.table("substr_stream_out").where(col("doc_id") =!= -1L)
           .select("doc_id", "p"),
