@@ -577,7 +577,7 @@ object CompositionQueries extends QueryFamily {
     * twins: deterministic markup wrapping + stripMarkup (same text as
     * pipeline_rag).
     */
-  private[graft] def ragCleanCorpus(docs: DataFrame): DataFrame =
+  private def ragCleanCorpus(docs: DataFrame): DataFrame =
     // rebalanced raw rows: the markup strip (a chain of regexps) runs
     // post-exchange on every core instead of a one-file source's single
     // scan task; no-op at production file counts
@@ -593,8 +593,8 @@ object CompositionQueries extends QueryFamily {
     * written FEED parquet, never this plan, so the checkpoint would
     * materialize the chunk table a second time for nothing.
     */
-  private[graft] def ragChunks(clean: DataFrame, label: String,
-                               checkpoint: Boolean = true): DataFrame = {
+  private def ragChunks(clean: DataFrame, label: String,
+                        checkpoint: Boolean = true): DataFrame = {
     val c = graft.functions.Curation.chunkByTokens(
         clean.where(col("doc_id") % 97 =!= 0), "clean", "doc_id",
         window = 16, stride = 8)

@@ -1368,7 +1368,7 @@ object EventQueries extends QueryFamily {
     * (10.3 s → 3.9 s cold, same box) because the events table crosses
     * the network once, which is the number that matters at 100 TB.
     */
-  def funnelFold(ev: DataFrame): DataFrame = {
+  private def funnelFold(ev: DataFrame): DataFrame = {
     val spark = ev.sparkSession
     import spark.implicits._
     val typed = ev.select(col("user_id"), col("event_type"),
