@@ -25,6 +25,21 @@ object SqlQueries extends QueryFamily {
 
   private def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
 
+  /** The PG datetime statement `q_date_dialect` runs through the rewrite. */
+  private[graft] val dateDialectSql =
+    """SELECT event_id,
+      |date_trunc('decade', ts) AS decade_start,
+      |date_trunc('week', ts) AS week_start,
+      |date_trunc('milliseconds', ts) AS ms_trunc,
+      |CAST(extract(isodow from ts) AS BIGINT) AS isodow,
+      |CAST(extract(dow from ts) AS BIGINT) AS dow,
+      |extract(epoch from ts) AS epoch_s,
+      |CAST(extract(century from ts) AS BIGINT) AS century,
+      |extract(microseconds from ts) AS micros,
+      |to_char(ts, 'YYYY-MM-DD"T"HH24:MI:SS') AS fmt_iso,
+      |to_char(ts, 'Dy, DD Mon YYYY') AS fmt_rfc
+      |FROM events_qdd""".stripMargin
+
   lazy val entries: Seq[Entry] = Seq(
 
     // TPC-H Q1-shaped pricing summary: partial+final hash aggregate,
@@ -254,19 +269,7 @@ object SqlQueries extends QueryFamily {
     // date_trunc/EXTRACT corpus, and against DuckDB here.
     entry("q_date_dialect", (spark, dir) => {
       Tables.read(spark, dir, "events").createOrReplaceTempView("events_qdd")
-      spark.sql(graft.sources.SqlDialect.rewrite(
-        """SELECT event_id,
-          |date_trunc('decade', ts) AS decade_start,
-          |date_trunc('week', ts) AS week_start,
-          |date_trunc('milliseconds', ts) AS ms_trunc,
-          |CAST(extract(isodow from ts) AS BIGINT) AS isodow,
-          |CAST(extract(dow from ts) AS BIGINT) AS dow,
-          |extract(epoch from ts) AS epoch_s,
-          |CAST(extract(century from ts) AS BIGINT) AS century,
-          |extract(microseconds from ts) AS micros,
-          |to_char(ts, 'YYYY-MM-DD"T"HH24:MI:SS') AS fmt_iso,
-          |to_char(ts, 'Dy, DD Mon YYYY') AS fmt_rfc
-          |FROM events_qdd""".stripMargin))
+      spark.sql(graft.sources.SqlDialect.rewrite(dateDialectSql))
     },
       """SELECT event_id,
         |CAST(date_trunc('decade', ts) AS TIMESTAMP) AS decade_start,

@@ -226,6 +226,13 @@ object TapQueries extends QueryFamily {
       |"key_properties":["n_nationkey"],"execution":"auto",
       |"columns":[{"name":"n_nationkey","type":"int"},{"name":"n_name","type":"text"}]}""".stripMargin
 
+  /** The SQL of every stream config above, for the dialect-rewrite pin. */
+  private[graft] def streamSql: Seq[String] = Seq(rawScanJson, incrementalJson,
+    conformJson, dialectJson, toCharNumericJson, jsonOpsJson, anyArrayJson,
+    similarToJson, operatorCollateJson, arrayAggJson, intervalJson,
+    projectionJson, distinctOnJson, jdbcPartitionedJson, pushdownJson)
+    .map(ConfigParser.parseStream(_).sql)
+
   lazy val entries: Seq[Entry] = Seq(
 
     entry("tap_pushdown_fallback", (spark, dir) => {

@@ -96,10 +96,14 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  private val castSql: Gen[String] =
+    Gen.zip(Gen.identifier.suchThat(_.nonEmpty),
+      supportedTypes.suchThat(!_.contains("(")))
+      .map { case (ident, t) => s"select $ident::$t from t" }
+
   test("rewrite eliminates all identifier/literal ::casts of supported types") {
-    val idGen = Gen.identifier.suchThat(_.nonEmpty)
-    forAll(idGen, supportedTypes.suchThat(!_.contains("("))) { (ident, t) =>
-      val out = SqlDialect.rewrite(s"select $ident::$t from t")
+    forAll(castSql) { sql =>
+      val out = SqlDialect.rewrite(sql)
       assert(!out.contains("::"), out)
       assert(out.contains("CAST("))
     }
@@ -109,18 +113,19 @@ class PropertySpec extends AnyFunSuite {
   // must be a no-op (no RLIKE RLIKE, no double CAST wrapping, no window
   // re-wrapping) — the property that makes the preprocessing safe to
   // apply defensively at multiple layers.
+  private val dialectSamples = Seq(
+    "select a::int, b::text from t where c ~ '^x' and d !~* 'y'",
+    "SELECT DISTINCT ON (g) g, v FROM t ORDER BY g, v DESC LIMIT 3",
+    "select string_agg(v, ',' ORDER BY v), extract(epoch from ts) from t group by g",
+    """select "userId", 'lit''eral', timestamptz '2021-01-01 00:00:00' from "T"""",
+    "select x from t where y ilike 'a%'",
+    "select props ->> 'k', props #>> '{a,0,b}', props -> 'a' ->> 'b' from t",
+    "select * from t where x = ANY('{a,b}') and n != ALL('{1,2}'::int[])",
+    "select '{a,\"b,c\",NULL}'::text[] as arr from t",
+    "select * from t where a similar to '(x|y)%' and b not similar to '%z_'")
+
   test("dialect rewrite is idempotent on representative PG statements") {
-    val samples = Seq(
-      "select a::int, b::text from t where c ~ '^x' and d !~* 'y'",
-      "SELECT DISTINCT ON (g) g, v FROM t ORDER BY g, v DESC LIMIT 3",
-      "select string_agg(v, ',' ORDER BY v), extract(epoch from ts) from t group by g",
-      """select "userId", 'lit''eral', timestamptz '2021-01-01 00:00:00' from "T"""",
-      "select x from t where y ilike 'a%'",
-      "select props ->> 'k', props #>> '{a,0,b}', props -> 'a' ->> 'b' from t",
-      "select * from t where x = ANY('{a,b}') and n != ALL('{1,2}'::int[])",
-      "select '{a,\"b,c\",NULL}'::text[] as arr from t",
-      "select * from t where a similar to '(x|y)%' and b not similar to '%z_'")
-    samples.foreach { sql =>
+    dialectSamples.foreach { sql =>
       val once = SqlDialect.rewrite(sql)
       assert(SqlDialect.rewrite(once) === once, s"not idempotent for: $sql")
     }
@@ -189,9 +194,11 @@ class PropertySpec extends AnyFunSuite {
         })
     }
 
-  test("SIMILAR TO translation agrees with a PG-rules interpreter") {
-    // atoms: literal chars INCLUDING the PG-literal-but-POSIX-meta `.^$`,
-    // escaped wildcards, `_`, `%`, [classes], with POSIX quantifiers
+  // SIMILAR TO patterns as alternations of atom branches, each atom with
+  // its reference matcher. Atoms: literal chars INCLUDING the
+  // PG-literal-but-POSIX-meta `.^$`, escaped wildcards, `_`, `%`,
+  // [classes], with POSIX quantifiers.
+  private val similarPattern: Gen[List[List[(String, Rep)]]] = {
     val litChars = Seq('a', 'b', 'c', 'x', '.', '^', '$')
     val litAtom = Gen.oneOf(litChars)
       .map(c => (c.toString, Rep(_ == c, 1, 1)))
@@ -217,11 +224,17 @@ class PropertySpec extends AnyFunSuite {
     val atom = Gen.frequency(4 -> litAtom, 1 -> escAtom, 2 -> oneAtom,
       2 -> anyAtom, 2 -> clsAtom, 2 -> quantAtom)
     val branch = Gen.choose(0, 5).flatMap(n => Gen.listOfN(n, atom))
-    val pattern = Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, branch))
+    Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, branch))
+  }
+
+  private def similarText(branches: List[List[(String, Rep)]]): String =
+    branches.map(_.map(_._1).mkString).mkString("|")
+
+  test("SIMILAR TO translation agrees with a PG-rules interpreter") {
     val input = Gen.choose(0, 8).flatMap(n => Gen.listOfN(n,
       Gen.oneOf('a', 'b', 'c', 'x', '.', '^', '$', '%', '_'))).map(_.mkString)
-    forAll(Gen.zip(pattern, input), n = 1500) { case (branches, s) =>
-      val pat = branches.map(_.map(_._1).mkString).mkString("|")
+    forAll(Gen.zip(similarPattern, input), n = 1500) { case (branches, s) =>
+      val pat = similarText(branches)
       val expected = branches.exists(b => refMatch(b.map(_._2), s.toList))
       val rx = "^(?:" + SqlDialect.similarToRegex(pat) + ")$"
       assert(s.matches(rx) === expected,
@@ -233,16 +246,20 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  // (identifier, (operator, keyword), pattern body); the body may itself
+  // contain operator look-alikes
+  private val likeCase = Gen.zip(Gen.oneOf("c0", "note", "v"),
+    Gen.oneOf("~~" -> "LIKE", "~~*" -> "ILIKE",
+      "!~~" -> "NOT LIKE", "!~~*" -> "NOT ILIKE"),
+    Gen.listOf(Gen.oneOf("a", "%", "_", "~~", "~~*", "!~~")).map(_.mkString))
+
+  private def likeSql(id: String, o: String, p: String): String =
+    s"SELECT * FROM t WHERE $id $o '$p' AND note = 'x $o y'"
+
   test("LIKE-operator family: right keyword outside literals, literals kept") {
-    val ident = Gen.oneOf("c0", "note", "v")
-    val op = Gen.oneOf("~~" -> "LIKE", "~~*" -> "ILIKE",
-      "!~~" -> "NOT LIKE", "!~~*" -> "NOT ILIKE")
-    // literal content may itself contain operator look-alikes
-    val patBody = Gen.listOf(Gen.oneOf("a", "%", "_", "~~", "~~*", "!~~"))
-      .map(_.mkString)
-    forAll(Gen.zip(ident, op, patBody), n = 400) { case (id, (o, kw), p) =>
+    forAll(likeCase, n = 400) { case (id, (o, kw), p) =>
       val decoy = s"'x $o y'"
-      val sql = s"SELECT * FROM t WHERE $id $o '$p' AND note = $decoy"
+      val sql = likeSql(id, o, p)
       val out = SqlDialect.rewriteOperatorSyntax(sql)
       assert(out.contains(s"$id $kw '$p'"), out)
       assert(out.contains(decoy), s"literal mangled: $out")
@@ -267,37 +284,26 @@ class PropertySpec extends AnyFunSuite {
   // get_json_object strips quotes; PG prescribes `->>` for text).
   // Found by this corpus and fixed: `-> '0'` used to rewrite to an
   // array index instead of the key "0".
-  test("JSON ops: rewrite ∘ Spark agrees with a PG-rules interpreter") {
-    val spark = SparkTestSession.spark
-    sealed trait J
-    case class JObj(fs: Vector[(String, J)]) extends J
-    case class JArr(xs: Vector[J]) extends J
-    case class JStr(s: String) extends J
-    case class JInt(n: Long) extends J
-    case class JBool(b: Boolean) extends J
-    def render(j: J): String = j match {
-      case JObj(fs) => fs.map { case (k, v) => "\"" + k + "\":" + render(v) }
-        .mkString("{", ",", "}")
-      case JArr(xs) => xs.map(render).mkString("[", ",", "]")
-      case JStr(s) => "\"" + s + "\""
-      case JInt(n) => n.toString
-      case JBool(b) => b.toString
-    }
-    // text form of a terminal result: objects/arrays keep their JSON
-    // text; scalars render bare (strings unquoted — the documented
-    // terminal-`->` divergence, and PG's own `->>` form)
-    def text(j: J): String = j match {
-      case JStr(s) => s
-      case other => render(other)
-    }
-    sealed trait Step
-    case class Key(k: String) extends Step // quoted operand: always a key
-    case class Idx(i: Int) extends Step    // integer operand: array index
-    def eval(j: J, s: Step): Option[J] = (j, s) match {
-      case (JObj(fs), Key(k)) => fs.find(_._1 == k).map(_._2)
-      case (JArr(xs), Idx(i)) => xs.lift(i)
-      case _ => None // wrong node type (PG json: NULL, never an error)
-    }
+  private sealed trait J
+  private case class JObj(fs: Vector[(String, J)]) extends J
+  private case class JArr(xs: Vector[J]) extends J
+  private case class JStr(s: String) extends J
+  private case class JInt(n: Long) extends J
+  private case class JBool(b: Boolean) extends J
+  private def renderJson(j: J): String = j match {
+    case JObj(fs) => fs.map { case (k, v) => "\"" + k + "\":" + renderJson(v) }
+      .mkString("{", ",", "}")
+    case JArr(xs) => xs.map(renderJson).mkString("[", ",", "]")
+    case JStr(s) => "\"" + s + "\""
+    case JInt(n) => n.toString
+    case JBool(b) => b.toString
+  }
+  private sealed trait Step
+  private case class Key(k: String) extends Step // quoted operand: always a key
+  private case class Idx(i: Int) extends Step    // integer operand: array index
+
+  // (document, access steps, final op is ->>, render as #>/#>> when possible)
+  private val jsonCase: Gen[(J, List[Step], Boolean, Boolean)] = {
     val keys = Seq("a", "b", "c", "k1", "0", "1")
     val leaf: Gen[J] = Gen.frequency(
       3 -> Gen.choose(-99L, 99L).map(JInt.apply),
@@ -315,45 +321,66 @@ class PropertySpec extends AnyFunSuite {
     val stepGen: Gen[Step] = Gen.frequency(
       3 -> Gen.oneOf(keys).map(Key.apply),
       2 -> Gen.choose(0, 3).map(Idx.apply))
-    val caseGen = for {
+    for {
       doc <- genJ(3)
       n <- Gen.choose(1, 3)
       steps <- Gen.listOfN(n, stepGen)
-      asText <- Gen.oneOf(true, false) // final op: -> vs ->>
-      hashForm <- Gen.oneOf(true, false) // render as #>/#>> when possible
+      asText <- Gen.oneOf(true, false)
+      hashForm <- Gen.oneOf(true, false)
     } yield (doc, steps, asText, hashForm)
+  }
+
+  /** The PG expression applying `steps` to the literal `doc`. */
+  private def jsonExpr(doc: J, steps: List[Step], asText: Boolean,
+                       hashForm: Boolean): String = {
+    val docLit = "'" + renderJson(doc) + "'"
+    // #> paths express keys bare, so digit-named KEYS can't ride
+    // them (PG resolves path digits polymorphically at runtime; the
+    // static translation reads them as indexes — documented)
+    val hashable = steps.forall {
+      case Key(k) => !k.forall(_.isDigit)
+      case _ => true
+    }
+    if (hashForm && hashable) {
+      val body = steps.map {
+        case Key(k) => k
+        case Idx(i) => i.toString
+      }.mkString(",")
+      s"$docLit ${if (asText) "#>>" else "#>"} '{$body}'"
+    } else {
+      val mid = steps.init.map {
+        case Key(k) => s"-> '$k'"
+        case Idx(i) => s"-> $i"
+      }
+      val last = steps.last match {
+        case Key(k) => s"${if (asText) "->>" else "->"} '$k'"
+        case Idx(i) => s"${if (asText) "->>" else "->"} $i"
+      }
+      (docLit +: (mid :+ last)).mkString(" ")
+    }
+  }
+
+  test("JSON ops: rewrite ∘ Spark agrees with a PG-rules interpreter") {
+    val spark = SparkTestSession.spark
+    // text form of a terminal result: objects/arrays keep their JSON
+    // text; scalars render bare (strings unquoted — the documented
+    // terminal-`->` divergence, and PG's own `->>` form)
+    def text(j: J): String = j match {
+      case JStr(s) => s
+      case other => renderJson(other)
+    }
+    def eval(j: J, s: Step): Option[J] = (j, s) match {
+      case (JObj(fs), Key(k)) => fs.find(_._1 == k).map(_._2)
+      case (JArr(xs), Idx(i)) => xs.lift(i)
+      case _ => None // wrong node type (PG json: NULL, never an error)
+    }
     val cases = scala.collection.mutable.ArrayBuffer
       .empty[(String, Option[String])]
-    forAll(caseGen, n = 600) { case (doc, steps, asText, hashForm) =>
-      val docLit = "'" + render(doc) + "'"
-      // #> paths express keys bare, so digit-named KEYS can't ride
-      // them (PG resolves path digits polymorphically at runtime; the
-      // static translation reads them as indexes — documented)
-      val hashable = steps.forall {
-        case Key(k) => !k.forall(_.isDigit)
-        case _ => true
-      }
-      val pgExpr =
-        if (hashForm && hashable) {
-          val body = steps.map {
-            case Key(k) => k
-            case Idx(i) => i.toString
-          }.mkString(",")
-          s"$docLit ${if (asText) "#>>" else "#>"} '{$body}'"
-        } else {
-          val mid = steps.init.map {
-            case Key(k) => s"-> '$k'"
-            case Idx(i) => s"-> $i"
-          }
-          val last = steps.last match {
-            case Key(k) => s"${if (asText) "->>" else "->"} '$k'"
-            case Idx(i) => s"${if (asText) "->>" else "->"} $i"
-          }
-          (docLit +: (mid :+ last)).mkString(" ")
-        }
+    forAll(jsonCase, n = 600) { case (doc, steps, asText, hashForm) =>
       val expected = steps.foldLeft(Option(doc): Option[J])(
         (acc, s) => acc.flatMap(eval(_, s))).map(text)
-      cases += ((SqlDialect.rewrite(s"SELECT $pgExpr"), expected))
+      cases += ((SqlDialect.rewrite(
+        s"SELECT ${jsonExpr(doc, steps, asText, hashForm)}"), expected))
     }
     // batch-evaluate: one projection row per 100 rewritten expressions
     cases.grouped(100).foreach { grp =>
@@ -911,12 +938,15 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  // (count, unit, cast spelling) of a `'n unit'::interval` cast
+  private val intervalCase = Gen.zip(Gen.choose(0L, 10000L),
+    Gen.oneOf("day", "days", "hour", "hours", "minute", "minutes", "second",
+      "month", "year"),
+    Gen.oneOf("::interval", "::INTERVAL", ":: Interval", " ::interval",
+      " :: INTERVAL"))
+
   test("::interval casts: INTERVAL literal form, literal-safe, idempotent") {
-    val unit = Gen.oneOf("day", "days", "hour", "hours", "minute",
-      "minutes", "second", "month", "year")
-    val spelling = Gen.oneOf("::interval", "::INTERVAL", ":: Interval",
-      " ::interval", " :: INTERVAL")
-    forAll(Gen.zip(Gen.choose(0L, 10000L), unit, spelling), n = 400) {
+    forAll(intervalCase, n = 400) {
       case (n0, u, sp) =>
         val sql = s"SELECT * FROM t WHERE ts < ts2 - '$n0 $u'$sp " +
           s"AND note = 'keep ''1 day''::interval here'"
@@ -926,6 +956,40 @@ class PropertySpec extends AnyFunSuite {
           s"literal mangled: $out")
         assert(SqlDialect.rewriteIntervalCast(out) === out)
     }
+  }
+
+  /** The first `n` fixed-seed values of `gen`. */
+  private def sample[A](gen: Gen[A], n: Int): Seq[A] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[A]
+    forAll(gen, n)(out += _)
+    out.toSeq
+  }
+
+  // The dialect rewrite's output on a fixed corpus: the representative
+  // samples, every stream config's SQL, and fixed-seed statements from the
+  // cast, JSON, LIKE-family, SIMILAR TO and interval generators above. No
+  // statement here holds a comment or a quoted identifier other than a
+  // plain name, so a change to how the rewrite scans SQL must leave this
+  // digest as it is.
+  test("dialect rewrite output is pinned on a fixed corpus") {
+    val corpus = dialectSamples ++
+      graft.queries.TapQueries.streamSql ++
+      Seq(graft.queries.SqlQueries.dateDialectSql) ++
+      sample(castSql, 250) ++
+      sample(jsonCase, 300).map { case (doc, steps, asText, hashForm) =>
+        s"SELECT ${jsonExpr(doc, steps, asText, hashForm)}" } ++
+      sample(likeCase, 200).map { case (id, (o, _), p) => likeSql(id, o, p) } ++
+      sample(similarPattern, 200).map(b => s"WHERE x SIMILAR TO '${similarText(b)}'") ++
+      sample(intervalCase, 200).map { case (n0, u, sp) =>
+        s"SELECT ts - '$n0 $u'$sp FROM t" }
+    assert(corpus.length === 1168)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    corpus.foreach { sql =>
+      md.update(SqlDialect.rewrite(sql).getBytes(UTF_8))
+      md.update(0.toByte)
+    }
+    assert(md.digest().map(b => f"$b%02x").mkString ===
+      "b92b84e293b9ffc30e1611f8e07bd347f071cdba80459d1025a122daf0a685d8")
   }
 
   // ---------------------------------------------------------------------
