@@ -1,23 +1,268 @@
 package graft.sources
 
 import graft.types.TypeMapper
+import java.util.regex.Matcher.quoteReplacement
 import org.apache.spark.sql.types._
+import scala.util.matching.Regex
 
-/** PostgreSQL → Spark SQL dialect preprocessing.
+/** PostgreSQL → Spark SQL dialect preprocessing (SURVEY §7.3).
   *
   * The reference ships stream SQL verbatim to PostgreSQL
-  * (reference: tap_rawpostgresql/client.py:300-302); our native path runs the
-  * same text through Spark's parser, so the PG-isms that appear in real
-  * configs are rewritten at the string level (SURVEY §7.3):
-  *   - `expr::type` casts  → `CAST(expr AS TYPE)`  (e.g. `'…'::uuid`)
-  *   - `timestamptz '…'` literals → `TIMESTAMP '…'`
-  *   - `:rep_key_val` bind parameter → typed literal (Spark SQL has no bind
-  *     parameters; the literal is rendered through the declared column type,
-  *     which also guards against injection — reference: client.py:283,298)
+  * (reference: tap_rawpostgresql/client.py:300-304); the native path runs
+  * the same text through Spark's parser, so [[rewrite]] turns the PG-isms
+  * of real configs into Spark SQL at the string level, with no SQL parser.
+  *
+  * Lexical rule: one forward pass ([[Lexed]]) gives every character its
+  * class — code, a `'…'` literal (`''` escapes a quote; no backslash
+  * escape, as under PG's standard_conforming_strings), a `"…"` identifier
+  * (`""` escapes), a backtick identifier, a `--` comment, or a `/* … */`
+  * comment (nested as PG nests them) — and pairs the code parens. Every
+  * rewrite matches only in code and splits arguments only at code commas
+  * and parens. [[rewrite]] first turns each comment into one space (a
+  * `/*+ … */` hint, which Spark reads, stays as written) and each `"…"`
+  * identifier into a backtick identifier, so no rewrite sees or splices a
+  * comment. `E'…'` and `$$…$$` strings are not lexed; Spark's parser
+  * rejects them and an `auto` stream pushes the original SQL down.
+  *
+  * The rewrites, in the order [[rewrite]] applies them:
+  *   - `SELECT DISTINCT ON (k) …`, top level or nested → row_number window
+  *   - `array_to_string(a, d)` → `array_join` with the element cast;
+  *     `array_agg(x ORDER BY k)` → struct sort; `string_agg` → `listagg`
+  *   - `ts AT TIME ZONE 'z'` → `from_utc_timestamp` / `to_utc_timestamp`
+  *   - `OPERATOR(pg_catalog.op)` unwrapped; `~~`, `~~*`, `!~~`, `!~~*` →
+  *     [NOT] LIKE / ILIKE; COLLATE clauses dropped
+  *   - `= ANY` / `<> ALL` over array literals → IN / NOT IN;
+  *     `'{…}'::type[]` → `array(…)`
+  *   - `[NOT] SIMILAR TO 'p'` → anchored RLIKE; `(a, b) OVERLAPS (c, d)` →
+  *     comparisons; `'…'::interval` → `INTERVAL '…'`
+  *   - `timestamptz '…'`, `timestamp with[out] time zone '…'` → `TIMESTAMP '…'`
+  *   - `~`, `~*`, `!~`, `!~*` → [NOT] RLIKE
+  *   - EXTRACT and date_trunc fields Spark lacks; `to_char` → `DATE_FORMAT`
+  *     or `pg_to_char_num`; numeric `trunc` → floor/ceil toward zero
+  *   - `x::type`, `(…)::type` → `CAST(… AS TYPE)` (TypeMapper's names)
+  *   - `->`, `->>`, `#>`, `#>>` → `get_json_object`
+  *
+  * [[bindRepKeyVal]] then binds `:rep_key_val` as a typed literal (Spark
+  * SQL has no bind parameters; rendering through the declared column type
+  * also guards against injection — reference: client.py:283,298).
   */
 object SqlDialect {
 
-  // operand: a quoted string literal (with '' escapes) or a (qualified) identifier
+  private final val Code: Byte = 0
+  private final val Literal: Byte = 1
+  private final val Ident: Byte = 2
+  private final val Comment: Byte = 3
+
+  /** One forward pass over `sql`: the lexical class of every character
+    * and the partner of every code paren.
+    */
+  private final class Lexed(val sql: String) {
+    private val n = sql.length
+    private val kind = new Array[Byte](n)
+    // first index of the literal, identifier or comment holding a character
+    private val first = new Array[Int](n)
+    // code-paren depth: a paren pair and the text around it share a value
+    private val depth = new Array[Int](n)
+    private val partner = Array.fill(n)(-1)
+    // (start, end, kind) of every token; adjacent code characters form one
+    private val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Byte)]
+
+    locally {
+      var opens = List.empty[Int]
+      var d = 0
+      var i = 0
+      while (i < n) {
+        val c = sql.charAt(i)
+        val (k, end) =
+          if (c == '\'') (Literal, quotedEnd(i))
+          else if (c == '"' || c == '`') (Ident, quotedEnd(i))
+          else if (sql.startsWith("--", i)) (Comment, lineEnd(i))
+          else if (sql.startsWith("/*", i)) (Comment, blockEnd(i))
+          else (Code, i + 1)
+        if (k == Code && c == ')') {
+          d -= 1
+          opens match {
+            case o :: rest => partner(o) = i; partner(i) = o; opens = rest
+            case Nil =>
+          }
+        }
+        var j = i
+        while (j < end) { kind(j) = k; first(j) = i; depth(j) = d; j += 1 }
+        if (k == Code && c == '(') { d += 1; opens ::= i }
+        if (k == Code && spans.nonEmpty && spans.last._3 == Code)
+          spans(spans.length - 1) = (spans.last._1, end, Code)
+        else spans += ((i, end, k))
+        i = end
+      }
+    }
+
+    /** End of the quoted token opening at `i`; a doubled quote is an
+      * escaped one.
+      */
+    private def quotedEnd(i: Int): Int = {
+      val q = sql.charAt(i)
+      var j = i + 1
+      while (j < n) {
+        if (sql.charAt(j) != q) j += 1
+        else if (j + 1 < n && sql.charAt(j + 1) == q) j += 2
+        else return j + 1
+      }
+      n
+    }
+
+    private def lineEnd(i: Int): Int = {
+      val j = sql.indexWhere(c => c == '\n' || c == '\r', i)
+      if (j < 0) n else j
+    }
+
+    private def blockEnd(i: Int): Int = {
+      var nest = 0
+      var j = i
+      while (j < n) {
+        if (sql.startsWith("/*", j)) { nest += 1; j += 2 }
+        else if (sql.startsWith("*/", j)) {
+          nest -= 1; j += 2
+          if (nest == 0) return j
+        } else j += 1
+      }
+      n
+    }
+
+    def code(i: Int): Boolean = kind(i) == Code
+
+    /** A match may start at `i`: in code, or at a literal's opening quote. */
+    def outside(i: Int): Boolean = code(i) || (kind(i) == Literal && first(i) == i)
+
+    /** Start of the literal or quoted identifier holding `i`, or -1. */
+    def quotedStart(i: Int): Int =
+      if (kind(i) == Literal || kind(i) == Ident) first(i) else -1
+
+    /** The `)` balancing a code `(` at `open`, or -1. */
+    def close(open: Int): Int = if (sql.charAt(open) == '(') partner(open) else -1
+
+    /** The `(` balancing a code `)` at `close`, or -1. */
+    def open(close: Int): Int = if (sql.charAt(close) == ')') partner(close) else -1
+
+    private def topLevel(from: Int, to: Int): Iterator[Int] = {
+      val d = if (from < n) depth(from) else 0
+      Iterator.range(from, to).filter(i => code(i) && depth(i) == d)
+    }
+
+    /** Code commas in `[from, to)` outside the parens that open there. */
+    def commas(from: Int, to: Int): Seq[Int] =
+      topLevel(from, to).filter(sql.charAt(_) == ',').toSeq
+
+    /** The comma-separated arguments of the balanced group at `open`. */
+    def args(open: Int): Seq[String] = {
+      val cuts = open +: commas(open + 1, close(open)) :+ close(open)
+      cuts.zip(cuts.tail).map { case (a, b) => sql.substring(a + 1, b) }
+    }
+
+    /** First whole-word `kw` in code in `[from, to)` outside the parens
+      * that open there, or -1.
+      */
+    def keyword(from: Int, to: Int, kw: String): Int = {
+      def word(i: Int) = i >= 0 && i < n && sql.charAt(i).isLetterOrDigit
+      topLevel(from, to).find(i => sql.regionMatches(true, i, kw, 0, kw.length) &&
+        !word(i - 1) && !word(i + kw.length)).getOrElse(-1)
+    }
+
+    /** The matches of `re` that start where [[outside]] holds. */
+    def matches(re: Regex): Iterator[Regex.Match] =
+      re.findAllMatchIn(sql).filter(m => outside(m.start))
+
+    /** `f` applied to every run of code; other tokens stay as written. */
+    def mapCode(f: String => String): String = spans.map { case (s, e, k) =>
+      if (k == Code) f(sql.substring(s, e)) else sql.substring(s, e)
+    }.mkString
+
+    /** Every comment as one space (a hint as written), every `"…"`
+      * identifier as a backtick one.
+      */
+    def normalized: String = spans.map { case (s, e, k) =>
+      val t = sql.substring(s, e)
+      if (k == Comment) { if (t.startsWith("/*+")) t else " " }
+      else if (k == Ident && t.length >= 2 && t.head == '"' && t.last == '"')
+        "`" + t.substring(1, t.length - 1).replace("\"\"", "\"")
+          .replace("`", "``") + "`"
+      else t
+    }.mkString
+  }
+
+  /** `sql` with `f`'s text in place of each match of `re` that starts
+    * where [[Lexed.outside]] holds; None keeps the match.
+    */
+  private def replaceCode(sql: String, re: Regex)(
+      f: Regex.Match => Option[String]): String = {
+    val lex = new Lexed(sql)
+    re.replaceSomeIn(sql, m =>
+      if (lex.outside(m.start)) f(m).map(quoteReplacement) else None)
+  }
+
+  /** The statement `f` makes of the first code match of `re` it rewrites,
+    * rewritten again until no match is left that `f` rewrites.
+    */
+  private def rewriteFirst(sql: String, re: Regex)(
+      f: (Lexed, Regex.Match) => Option[String]): String = {
+    val lex = new Lexed(sql)
+    lex.matches(re).flatMap(f(lex, _)).nextOption()
+      .fold(sql)(rewriteFirst(_, re)(f))
+  }
+
+  /** [[rewriteFirst]] for a pattern ending in a call's `(`: `f` gets the
+    * balanced `(`/`)` and gives the text for the whole call.
+    */
+  private def rewriteCalls(sql: String, re: Regex)(
+      f: (Lexed, Int, Int) => Option[String]): String =
+    rewriteFirst(sql, re) { (lex, m) =>
+      val close = lex.close(m.end - 1)
+      if (close < 0) None
+      else f(lex, m.end - 1, close).map(r =>
+        lex.sql.substring(0, m.start) + r + lex.sql.substring(close + 1))
+    }
+
+  private def isNameChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
+
+  /** Start of the function name (if any) just left of `i`. */
+  private def nameStart(s: String, i: Int): Int =
+    s.lastIndexWhere(!isNameChar(_), i - 1) + 1
+
+  /** `[start, end)` of the operand ending just left of `opStart`: a
+    * parenthesized span with the function name before it, a literal or
+    * quoted identifier, or a (qualified) name.
+    */
+  private def leftOperand(lex: Lexed, opStart: Int): Option[(Int, Int)] = {
+    val s = lex.sql
+    val i = s.lastIndexWhere(!_.isWhitespace, opStart - 1)
+    if (i < 0) None
+    else if (s.charAt(i) == ')')
+      Some(lex.open(i)).filter(_ >= 0).map(o => (nameStart(s, o), i + 1))
+    else if (lex.quotedStart(i) >= 0) Some((lex.quotedStart(i), i + 1))
+    else if (isNameChar(s.charAt(i)))
+      Some((s.lastIndexWhere(c => !isNameChar(c) && c != '.', i) + 1, i + 1))
+    else None
+  }
+
+  private val rewrites: Seq[String => String] = Seq(
+    rewriteDistinctOn, rewriteNestedDistinctOn, rewriteArrayToString,
+    rewriteArrayAgg, rewriteStringAgg, rewriteAtTimeZone,
+    // OPERATOR()/LIKE family before the regex-operator rewrites, whose
+    // guards would misread the multi-char `~~` forms
+    rewriteOperatorSyntax,
+    // ANY/ALL first (its pattern consumes an optional ::type[] suffix),
+    // then standalone array-literal casts — both before the scalar casts,
+    // which would turn `'{a,b}'::text[]` into `CAST('{a,b}' AS STRING)[]`
+    rewriteAnyAll, rewriteArrayCast, rewriteSimilarTo, rewriteOverlaps,
+    rewriteIntervalCast, rewriteTimestampLiterals, rewriteRegexOps,
+    rewriteExtract, rewriteDateTrunc, rewriteToChar, rewriteNumericTrunc,
+    rewriteCasts, rewriteJsonOps)
+
+  /** Rewrite PostgreSQL-flavored SQL into Spark-parseable SQL. */
+  def rewrite(sql: String): String =
+    rewrites.foldLeft(new Lexed(sql).normalized)((s, f) => f(s))
+
+  // ---- casts ------------------------------------------------------------
+
   // operand: quoted literal, identifier, or an UNSIGNED numeric literal
   // (PG allows `1::numeric/3`; the sign is excluded so `a -1::int` keeps
   // its binary minus). Type: optional (p[,s]) args ride along so
@@ -25,58 +270,55 @@ object SqlDialect {
   // of leaving the parenthesized args dangling after the CAST.
   private val castRe =
     """('(?:[^']|'')*'|[A-Za-z_][A-Za-z0-9_\.]*|(?<![A-Za-z0-9_.'])\d+(?:\.\d+)?)\s*::\s*([A-Za-z_][A-Za-z0-9_]*(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?(?:\s+with(?:out)?\s+time\s+zone)?)""".r
-  private val tstzLitRe = """(?i)\btimestamptz\s*(')""".r
-  private val tsLitRe = """(?i)\btimestamp\s+with(?:out)?\s+time\s+zone\s*(')""".r
-
   private val parenCastRe =
     """\)\s*::\s*([A-Za-z_][A-Za-z0-9_]*(?:\s*\(\s*\d+\s*(?:,\s*\d+\s*)?\))?)""".r
 
-  // posix-regex match operators; the case-insensitive forms fold the
-  // (?i) flag into the pattern literal
+  /** `x::type` casts (a chain casts its first operand here), then every
+    * `(…)::type` / `fn(…)::type` cast, which completes the chains.
+    */
+  private def rewriteCasts(sql: String): String = {
+    val simple = replaceCode(sql, castRe)(m =>
+      Some(s"CAST(${m.group(1)} AS ${sparkTypeName(m.group(2))})"))
+    rewriteFirst(simple, parenCastRe) { (lex, m) =>
+      val s = lex.sql
+      Some(lex.open(m.start)).filter(_ >= 0).map { open =>
+        val start = nameStart(s, open)
+        s.substring(0, start) +
+          s"CAST(${s.substring(start, m.start + 1)} AS ${sparkTypeName(m.group(1))})" +
+          s.substring(m.end)
+      }
+    }
+  }
+
+  private val tstzLitRe = """(?i)\btimestamptz\s*'""".r
+  private val tsLitRe = """(?i)\btimestamp\s+with(?:out)?\s+time\s+zone\s*'""".r
+
+  private def rewriteTimestampLiterals(sql: String): String =
+    replaceCode(replaceCode(sql, tstzLitRe)(_ => Some("TIMESTAMP '")),
+      tsLitRe)(_ => Some("TIMESTAMP '"))
+
+  // ---- posix-regex match operators ---------------------------------------
+
+  // the case-insensitive forms fold the (?i) flag into the pattern literal
   private val ciNotMatchRe = """!~\*\s*('(?:[^']|'')*')""".r
   private val ciMatchRe = """~\*\s*('(?:[^']|'')*')""".r
-  private val dquoteIdentRe = """"([A-Za-z_][A-Za-z0-9_$]*)"""".r
 
-  /** True iff position `idx` falls inside a single-quoted string literal
-    * ('' escapes toggle twice, netting out correctly).
+  /** `'pat'` → `'(?i)pat'` (single-quoted literal in, literal out). */
+  private def foldCaseFlag(lit: String): String =
+    "'(?i)" + lit.substring(1)
+
+  /** `~*` / `!~*` (longest first, so `!~*` is not eaten by `~*`), then
+    * `!~` / `~`.
     */
-  private def inLiteral(sql: String, idx: Int): Boolean = {
-    var inStr = false
-    var i = 0
-    while (i < idx) {
-      if (sql.charAt(i) == '\'') inStr = !inStr
-      i += 1
-    }
-    inStr
+  private def rewriteRegexOps(sql: String): String = {
+    val folded = replaceCode(
+      replaceCode(sql, ciNotMatchRe)(m => Some("NOT RLIKE " + foldCaseFlag(m.group(1)))),
+      ciMatchRe)(m => Some("RLIKE " + foldCaseFlag(m.group(1))))
+    new Lexed(folded).mapCode(_.replaceAll("""!~(?![\*~])""", " NOT RLIKE ")
+      .replaceAll("""(?<![!<>=~])~(?![~*=])""", " RLIKE "))
   }
 
-  /** Apply `f` to the spans of `sql` OUTSIDE single-quoted string literals
-    * ('' escapes respected) — rewrites that must not touch literal text.
-    */
-  private def mapOutsideStrings(sql: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val code = new StringBuilder
-    var i = 0
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (!inStr && c == '\'') {
-        out.append(f(code.toString())); code.clear()
-        out.append(c); inStr = true
-      } else if (inStr && c == '\'') {
-        out.append(c)
-        if (i + 1 < sql.length && sql.charAt(i + 1) == '\'') {
-          out.append('\''); i += 1 // escaped quote stays inside the literal
-        } else inStr = false
-      } else if (inStr) out.append(c)
-      else code.append(c)
-      i += 1
-    }
-    out.append(f(code.toString()))
-    out.toString()
-  }
-
-  private val stringAggRe = """(?i)\bstring_agg\s*\(""".r
+  // ---- AT TIME ZONE --------------------------------------------------------
 
   // operand AT TIME ZONE 'zone' — typed literal (timestamp '…'),
   // identifier/qualified name, or parenthesized expression; literal zone
@@ -98,60 +340,32 @@ object SqlDialect {
     * keep the timestamptz reading; configs needing the naive-column form
     * should call to_utc_timestamp explicitly.
     */
-  def rewriteAtTimeZone(sql: String): String = {
-    val s = sql
-    atTimeZoneRe.replaceSomeIn(s, m =>
-      if (inLiteral(s, m.start)) None
-      else {
-        val operand = m.group(1)
-        val naiveLiteral =
-          "(?is)^timestamp\\s*'.*".r.matches(operand.trim)
-        val fn = if (naiveLiteral) "TO_UTC_TIMESTAMP" else "FROM_UTC_TIMESTAMP"
-        Some(java.util.regex.Matcher.quoteReplacement(
-          s"$fn($operand, ${m.group(2)})"))
-      })
-  }
-
-  /** Rewrite PG `string_agg(expr, delim [ORDER BY …])` to Spark 4's
-    * `listagg(expr, delim) [WITHIN GROUP (ORDER BY …)]`. Iterates over
-    * every occurrence; arguments found by balanced-paren scan, the
-    * optional ORDER BY located at the argument top level.
-    */
-  def rewriteStringAgg(sql: String): String = {
-    val m = stringAggRe.findAllMatchIn(sql)
-      .find(mm => !inLiteral(sql, mm.start)).getOrElse(return sql)
-    val openIdx = m.end - 1
-    var depth = 0
-    var i = openIdx
-    var close = -1
-    var inStr = false
-    while (i < sql.length && close < 0) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) close = i
-        case _ =>
-      }
-      i += 1
+  def rewriteAtTimeZone(sql: String): String =
+    replaceCode(sql, atTimeZoneRe) { m =>
+      val operand = m.group(1)
+      val naiveLiteral = "(?is)^timestamp\\s*'.*".r.matches(operand.trim)
+      val fn = if (naiveLiteral) "TO_UTC_TIMESTAMP" else "FROM_UTC_TIMESTAMP"
+      Some(s"$fn($operand, ${m.group(2)})")
     }
-    if (close < 0) return sql
-    val args = sql.substring(openIdx + 1, close)
-    val orderIdx = topLevelIndexOf(args, "ORDER")
-    val replaced =
-      if (orderIdx < 0) s"listagg($args)"
-      else {
-        val core = args.substring(0, orderIdx).trim.stripSuffix(",").trim
-        val orderBy = args.substring(orderIdx).trim
-        s"listagg($core) WITHIN GROUP ($orderBy)"
-      }
-    rewriteStringAgg(
-      sql.substring(0, m.start) + replaced + sql.substring(close + 1))
-  }
 
+  // ---- ordered aggregates --------------------------------------------------
+
+  private val stringAggRe = """(?i)\bstring_agg\s*\(""".r
   private val arrayAggRe = """(?i)\barray_agg\s*\(""".r
   private val arrayToStringRe = """(?i)\barray_to_string\s*\(""".r
+
+  /** Rewrite PG `string_agg(expr, delim [ORDER BY …])` to Spark 4's
+    * `listagg(expr, delim) [WITHIN GROUP (ORDER BY …)]`.
+    */
+  def rewriteStringAgg(sql: String): String =
+    rewriteCalls(sql, stringAggRe) { (lex, open, close) =>
+      val s = lex.sql
+      val order = lex.keyword(open + 1, close, "ORDER")
+      Some(
+        if (order < 0) s"listagg(${s.substring(open + 1, close)})"
+        else s"listagg(${s.substring(open + 1, order).trim.stripSuffix(",").trim})" +
+          s" WITHIN GROUP (${s.substring(order, close).trim})")
+    }
 
   /** Rewrite PG `array_agg(expr ORDER BY key [ASC|DESC])` — Spark's
     * `array_agg` exists but takes no ORDER BY — to the struct-sort form
@@ -162,37 +376,22 @@ object SqlDialect {
     * untouched and rides the `auto` pushdown fallback. Plain
     * `array_agg(x)` passes through — Spark has it natively.
     */
-  def rewriteArrayAgg(sql: String): String = {
-    val m = arrayAggRe.findAllMatchIn(sql)
-      .find { mm =>
-        if (inLiteral(sql, mm.start)) false
-        else {
-          val close = matchParen(sql, mm.end - 1)
-          close > 0 && {
-            val args = sql.substring(mm.end, close)
-            topLevelIndexOf(args, "ORDER") >= 0 &&
-              !args.trim.toUpperCase.startsWith("DISTINCT") &&
-              !args.substring(topLevelIndexOf(args, "ORDER"))
-                .split("""(?i)\bORDER\s+BY\b""").last.contains(",")
-          }
-        }
+  def rewriteArrayAgg(sql: String): String =
+    rewriteCalls(sql, arrayAggRe) { (lex, open, close) =>
+      val s = lex.sql
+      val order = lex.keyword(open + 1, close, "ORDER")
+      val core = s.substring(open + 1, if (order < 0) close else order)
+        .trim.stripSuffix(",").trim
+      if (order < 0 || lex.commas(order, close).nonEmpty ||
+        core.toUpperCase.startsWith("DISTINCT")) None
+      else {
+        val key = s.substring(order, close).trim
+          .replaceFirst("""(?i)^ORDER\s+BY\s+""", "").trim
+        val sorted = "transform(array_sort(array_agg(named_struct('o', " +
+          s"${key.replaceFirst("""(?i)\s+(ASC|DESC)$""", "").trim}, 'v', $core))), s -> s.v)"
+        Some(if (key.toUpperCase.endsWith(" DESC")) s"reverse($sorted)" else sorted)
       }
-      .getOrElse(return sql)
-    val openIdx = m.end - 1
-    val close = matchParen(sql, openIdx)
-    val args = sql.substring(openIdx + 1, close)
-    val orderIdx = topLevelIndexOf(args, "ORDER")
-    val core = args.substring(0, orderIdx).trim.stripSuffix(",").trim
-    var key = args.substring(orderIdx).trim
-      .replaceFirst("""(?i)^ORDER\s+BY\s+""", "").trim
-    val desc = key.toUpperCase.endsWith(" DESC")
-    key = key.replaceFirst("""(?i)\s+(ASC|DESC)$""", "").trim
-    val sorted =
-      s"transform(array_sort(array_agg(named_struct('o', $key, 'v', $core))), s -> s.v)"
-    val replaced = if (desc) s"reverse($sorted)" else sorted
-    rewriteArrayAgg(
-      sql.substring(0, m.start) + replaced + sql.substring(close + 1))
-  }
+    }
 
   /** PG `array_to_string(arr, delim)` → Spark
     * `array_join(transform(arr, __x -> CAST(__x AS STRING)), delim)` —
@@ -201,71 +400,15 @@ object SqlDialect {
     * The 3-argument form (explicit null replacement) is left untouched
     * for the pushdown fallback.
     */
-  def rewriteArrayToString(sql: String): String = {
-    val m = arrayToStringRe.findAllMatchIn(sql)
-      .find { mm =>
-        !inLiteral(sql, mm.start) && {
-          val close = matchParen(sql, mm.end - 1)
-          close > 0 &&
-            topLevelCommas(sql.substring(mm.end, close)).length == 1
-        }
+  def rewriteArrayToString(sql: String): String =
+    rewriteCalls(sql, arrayToStringRe) { (lex, open, _) =>
+      lex.args(open).map(_.trim) match {
+        case Seq(arr, delim) =>
+          Some(s"array_join(transform($arr, __x -> CAST(__x AS STRING)), $delim)")
+        case _ => None
       }
-      .getOrElse(return sql)
-    val openIdx = m.end - 1
-    val close = matchParen(sql, openIdx)
-    val args = sql.substring(openIdx + 1, close)
-    val cut = topLevelCommas(args).head
-    val arr = args.substring(0, cut).trim
-    val delim = args.substring(cut + 1).trim
-    val replaced =
-      s"array_join(transform($arr, __x -> CAST(__x AS STRING)), $delim)"
-    rewriteArrayToString(
-      sql.substring(0, m.start) + replaced + sql.substring(close + 1))
-  }
-
-  /** Positions of top-level (depth-0, non-literal) commas in `args`. */
-  private def topLevelCommas(args: String): Seq[Int] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var depth = 0
-    var inStr = false
-    var i = 0
-    while (i < args.length) {
-      val c = args.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += i
-        case _ =>
-      }
-      i += 1
     }
-    out.toSeq
-  }
 
-  /** Index of the `)` balancing the `(` at `openIdx` (literal-aware),
-    * or -1.
-    */
-  private def matchParen(sql: String, openIdx: Int): Int = {
-    var depth = 0
-    var i = openIdx
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Rewrite PostgreSQL-flavored SQL into Spark-parseable SQL. */
   // ---- `OPERATOR(pg_catalog.op)` explicit-operator syntax + the LIKE
   // operator family (`~~` = LIKE, `~~*` = ILIKE, negations) + COLLATE ----
 
@@ -273,175 +416,34 @@ object SqlDialect {
     """(?i)\s*OPERATOR\s*\(\s*(?:pg_catalog\s*\.\s*)?([~!<>=#@^|&+*/%-]+)\s*\)\s*""".r
   // an expression COLLATE "en_US.utf8" / COLLATE c — collation is a PG
   // comparison detail with no Spark counterpart; dropping it preserves
-  // semantics for the byte-wise collations real stream SQL pins ("C")
-  private val collateRe =
-    """(?i)\s+COLLATE\s+("[^"]*"|[A-Za-z_][\w$]*(?:\.[A-Za-z_][\w$]*)?)""".r
+  // semantics for the byte-wise collations real stream SQL pins ("C").
+  // The name may be a `"…"` identifier or, after [[rewrite]]'s first
+  // step, a backtick one.
+  private val collateRe = {
+    val name = """(?:"(?:[^"]|"")*"|`(?:[^`]|``)*`|[A-Za-z_][\w$]*)"""
+    s"""(?i)\\s+COLLATE\\s+$name(?:\\.$name)?""".r
+  }
 
   /** Unwrap PG's explicit-operator syntax (`x OPERATOR(pg_catalog.~~) y`
     * → `x ~~ y`), rewrite the LIKE-family operators to keywords, and
-    * strip COLLATE clauses — all outside string literals, BEFORE the
-    * regex-operator rewrites (whose guards would otherwise misread the
-    * multi-char `~~` forms).
+    * strip COLLATE clauses — all in code.
     */
-  def rewriteOperatorSyntax(sql: String): String = mapOutsideStrings(sql) { c0 =>
-    var c = operatorSynRe.replaceAllIn(c0, m =>
-      java.util.regex.Matcher.quoteReplacement(" " + m.group(1) + " "))
-    c = collateRe.replaceAllIn(c, "")
-    // longest first so !~~* is not eaten by its prefixes; surrounding
-    // whitespace is consumed so insertions never double spaces
-    c = c.replaceAll("""\s*!~~\*\s*""", " NOT ILIKE ")
-    c = c.replaceAll("""\s*!~~(?!\*)\s*""", " NOT LIKE ")
-    c = c.replaceAll("""\s*(?<!!)~~\*\s*""", " ILIKE ")
-    c = c.replaceAll("""\s*(?<![!~])~~(?![~*])\s*""", " LIKE ")
-    c
-  }
-
-  def rewrite(sql: String): String = {
-    var out = rewriteOperatorSyntax(rewriteAtTimeZone(rewriteStringAgg(
-      rewriteArrayAgg(rewriteArrayToString(
-        rewriteNestedDistinctOn(rewriteDistinctOn(sql)))))))
-    // ANY/ALL first (its pattern consumes an optional ::type[] suffix),
-    // then standalone array-literal casts — both BEFORE the scalar-cast
-    // loop, which would otherwise mangle `'{a,b}'::text[]` into
-    // `CAST('{a,b}' AS STRING)[]`
-    out = rewriteAnyAll(out)
-    out = rewriteArrayCast(out)
-    out = rewriteSimilarTo(out)
-    out = rewriteOverlaps(out)
-    out = rewriteIntervalCast(out)
-    out = tstzLitRe.replaceAllIn(out, m => "TIMESTAMP " + m.group(1))
-    out = tsLitRe.replaceAllIn(out, m => "TIMESTAMP " + m.group(1))
-    // case-insensitive regex matches first (their patterns absorb (?i)),
-    // longest operator first so !~* is not eaten by ~*; trigger positions
-    // inside string literals are left untouched
-    locally {
-      val s1 = out
-      out = ciNotMatchRe.replaceSomeIn(s1, m =>
-        if (inLiteral(s1, m.start)) None
-        else Some(java.util.regex.Matcher.quoteReplacement(
-          "NOT RLIKE " + foldCaseFlag(m.group(1)))))
+  def rewriteOperatorSyntax(sql: String): String =
+    new Lexed(replaceCode(sql, collateRe)(_ => Some(""))).mapCode { code =>
+      operatorSynRe.replaceAllIn(code, m => quoteReplacement(" " + m.group(1) + " "))
+        // longest first so !~~* is not eaten by its prefixes; surrounding
+        // whitespace is consumed so insertions never double spaces
+        .replaceAll("""\s*!~~\*\s*""", " NOT ILIKE ")
+        .replaceAll("""\s*!~~(?!\*)\s*""", " NOT LIKE ")
+        .replaceAll("""\s*(?<!!)~~\*\s*""", " ILIKE ")
+        .replaceAll("""\s*(?<![!~])~~(?![~*])\s*""", " LIKE ")
     }
-    locally {
-      val s2 = out
-      out = ciMatchRe.replaceSomeIn(s2, m =>
-        if (inLiteral(s2, m.start)) None
-        else Some(java.util.regex.Matcher.quoteReplacement(
-          "RLIKE " + foldCaseFlag(m.group(1)))))
-    }
-    out = mapOutsideStrings(out) { code =>
-      var c = code
-      // PG quotes identifiers with "…"; Spark uses backticks
-      c = dquoteIdentRe.replaceAllIn(c, m =>
-        java.util.regex.Matcher.quoteReplacement("`" + m.group(1) + "`"))
-      c = c.replaceAll("""!~(?![\*~])""", " NOT RLIKE ")
-      c = c.replaceAll("""(?<![!<>=~])~(?![~*=])""", " RLIKE ")
-      c
-    }
-    out = rewriteDateTrunc(rewriteExtract(out))
-    out = rewriteToChar(out)
-    out = rewriteNumericTrunc(out)
-    // iterate to handle chained casts like x::text::int
-    var prev: String = null
-    while (prev != out) {
-      prev = out
-      out = castRe.replaceAllIn(out, m => {
-        val operand = m.group(1)
-        val tpe = sparkTypeName(m.group(2))
-        java.util.regex.Matcher.quoteReplacement(s"CAST($operand AS $tpe)")
-      })
-      out = rewriteParenCast(out)
-    }
-    rewriteJsonOps(out)
-  }
 
   // ---- PG JSON extraction operators (`->`, `->>`, `#>`, `#>>`) ----------
 
   private val jsonOpRe = """#>>|#>|->>|->""".r
   // right operand: string literal (key or '{a,b}' path) or array index
   private val jsonRightRe = """\s*('(?:[^']|'')*'|-?\d+)""".r
-
-  /** Char-indexed flags: true where `s(i)` belongs to a single-quoted
-    * string literal (quotes included, '' escapes handled) — for scans
-    * that walk BACKWARDS and cannot replay the forward literal state.
-    */
-  private def literalFlags(s: String): Array[Boolean] = {
-    val f = new Array[Boolean](s.length)
-    var inStr = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (!inStr && c == '\'') { inStr = true; f(i) = true }
-      else if (inStr && c == '\'') {
-        f(i) = true
-        if (i + 1 < s.length && s.charAt(i + 1) == '\'') { f(i + 1) = true; i += 1 }
-        else inStr = false
-      } else f(i) = inStr
-      i += 1
-    }
-    f
-  }
-
-  /** `[start, end]` quote positions (inclusive) of every string literal. */
-  private def literalSpans(s: String): Seq[(Int, Int)] = {
-    val spans = scala.collection.mutable.ArrayBuffer[(Int, Int)]()
-    var inStr = false
-    var start = -1
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (!inStr && c == '\'') { inStr = true; start = i }
-      else if (inStr && c == '\'') {
-        if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1
-        else { inStr = false; spans += ((start, i)) }
-      }
-      i += 1
-    }
-    spans.toSeq
-  }
-
-  /** `[start, endExclusive)` of the expression ending just left of
-    * `opStart`: a parenthesized/function-call span, string literal,
-    * backtick identifier, or (qualified) identifier.
-    */
-  private def scanLeftOperand(s: String, opStart: Int): Option[(Int, Int)] = {
-    var i = opStart - 1
-    while (i >= 0 && s.charAt(i).isWhitespace) i -= 1
-    if (i < 0) return None
-    val end = i + 1
-    s.charAt(i) match {
-      case ')' =>
-        val lit = literalFlags(s)
-        var depth = 0
-        var j = i
-        while (j >= 0) {
-          if (!lit(j)) s.charAt(j) match {
-            case ')' => depth += 1
-            case '(' =>
-              depth -= 1
-              if (depth == 0) {
-                var k = j - 1 // include a preceding function name
-                while (k >= 0 && (s.charAt(k).isLetterOrDigit || s.charAt(k) == '_')) k -= 1
-                return Some((k + 1, end))
-              }
-            case _ =>
-          }
-          j -= 1
-        }
-        None
-      case '\'' =>
-        literalSpans(s).find(_._2 == i).map(sp => (sp._1, end))
-      case '`' =>
-        var j = i - 1
-        while (j >= 0 && s.charAt(j) != '`') j -= 1
-        if (j >= 0) Some((j, end)) else None
-      case c if c.isLetterOrDigit || c == '_' =>
-        var j = i
-        while (j >= 0 && (s.charAt(j).isLetterOrDigit || s.charAt(j) == '_' ||
-          s.charAt(j) == '.')) j -= 1
-        Some((j + 1, end))
-      case _ => None
-    }
-  }
 
   private def unquoteSqlLiteral(lit: String): String =
     lit.substring(1, lit.length - 1).replace("''", "'")
@@ -495,33 +497,17 @@ object SqlDialect {
     * only; occurrences whose operands don't parse are left for Spark's
     * parser to reject loudly.
     */
-  def rewriteJsonOps(sql: String): String = {
-    var out = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      val s = out
-      val it = jsonOpRe.findAllMatchIn(s).filterNot(m => inLiteral(s, m.start))
-      while (!changed && it.hasNext) {
-        val m = it.next()
-        val op = m.matched
-        val rightM = jsonRightRe.findPrefixMatchOf(s.subSequence(m.end, s.length))
-        val left = scanLeftOperand(s, m.start)
-        (left, rightM) match {
-          case (Some((ls, le)), Some(r))
-            if !(op.startsWith("#") && !r.group(1).startsWith("'")) =>
-            val path = jsonPathFor(op, r.group(1))
-            val operand = s.substring(ls, le)
-            out = s.substring(0, ls) +
-              s"get_json_object($operand, '${path.replace("'", "''")}')" +
-              s.substring(m.end + r.end)
-            changed = true
-          case _ => // unparseable occurrence: skip, let Spark's parser report
-        }
-      }
+  def rewriteJsonOps(sql: String): String =
+    rewriteFirst(sql, jsonOpRe) { (lex, m) =>
+      val s = lex.sql
+      for {
+        (ls, le) <- leftOperand(lex, m.start)
+        r <- jsonRightRe.findPrefixMatchOf(s.subSequence(m.end, s.length))
+        if !(m.matched.startsWith("#") && !r.group(1).startsWith("'"))
+      } yield s.substring(0, ls) +
+        s"get_json_object(${s.substring(ls, le)}, '${escape(jsonPathFor(m.matched, r.group(1)))}')" +
+        s.substring(m.end + r.end)
     }
-    out
-  }
 
   // ---- PG array literals and ANY/ALL ------------------------------------
 
@@ -566,26 +552,68 @@ object SqlDialect {
     * array-literal parsing) have no static Spark equivalent and are left
     * unchanged.
     */
-  def rewriteArrayCast(sql: String): String = {
-    val s = sql
-    arrayCastRe.replaceSomeIn(s, m =>
-      if (inLiteral(s, m.start)) None
+  def rewriteArrayCast(sql: String): String =
+    replaceCode(sql, arrayCastRe) { m =>
+      val content = m.group(1).replace("''", "'").trim
+      if (!(content.startsWith("{") && content.endsWith("}"))) None
       else {
-        val content = m.group(1).replace("''", "'").trim
-        if (!(content.startsWith("{") && content.endsWith("}"))) None
-        else {
-          val tpe = sparkTypeName(m.group(2))
-          val elems = pgArrayElements(content.substring(1, content.length - 1))
-          val rendered =
-            if (elems.isEmpty) s"CAST(array() AS ARRAY<$tpe>)"
-            else elems.map {
-              case Some(e) => s"CAST('${e.replace("'", "''")}' AS $tpe)"
-              case None => s"CAST(NULL AS $tpe)"
-            }.mkString("array(", ", ", ")")
-          Some(java.util.regex.Matcher.quoteReplacement(rendered))
-        }
-      })
-  }
+        val tpe = sparkTypeName(m.group(2))
+        val elems = pgArrayElements(content.substring(1, content.length - 1))
+        Some(
+          if (elems.isEmpty) s"CAST(array() AS ARRAY<$tpe>)"
+          else elems.map {
+            case Some(e) => s"CAST('${escape(e)}' AS $tpe)"
+            case None => s"CAST(NULL AS $tpe)"
+          }.mkString("array(", ", ", ")"))
+      }
+    }
+
+  private val anyAllRe =
+    ("""(?i)(=|<>|!=)\s*(ANY|ALL)\s*\(\s*(?:'((?:[^']|'')*)'""" +
+      """(?:\s*::\s*([A-Za-z_][A-Za-z0-9_ ]*?)\s*\[\s*\])?""" +
+      """|ARRAY\s*\[([^\[\]]*)\])\s*\)""").r
+
+  private val numericTokRe = """-?\d+(?:\.\d+)?""".r
+
+  /** Rewrite PG quantified comparisons over array literals to IN lists:
+    * `x = ANY('{a,b}')` / `x = ANY('{1,2}'::int[])` / `x = ANY(ARRAY[…])`
+    * → `x IN (…)`, and `x <> ALL(…)` / `x != ALL(…)` → `x NOT IN (…)`.
+    * Untyped `'{…}'` elements render numeric tokens bare and everything
+    * else as string literals (PG coerces against the left operand; the
+    * IN list lets Spark do the same). Other operator/quantifier combos
+    * (`<> ANY`, `= ALL`) have no IN equivalent and are left unchanged, as
+    * are subquery forms (`ANY(SELECT …)` doesn't match the pattern).
+    */
+  def rewriteAnyAll(sql: String): String =
+    replaceCode(sql, anyAllRe) { m =>
+      val quant = m.group(2).toUpperCase
+      val neg = m.group(1) == "<>" || m.group(1) == "!="
+      // only = ANY (membership) and <>/!= ALL (non-membership) map to IN
+      if ((quant == "ANY" && neg) || (quant == "ALL" && !neg)) None
+      else {
+        val listed: Option[String] =
+          if (m.group(5) != null) // ARRAY[…] splice; empty list → leave
+            Some(m.group(5).trim).filter(_.nonEmpty)
+          else {
+            val content = m.group(3).replace("''", "'").trim
+            if (!(content.startsWith("{") && content.endsWith("}"))) None
+            else {
+              val tpe = Option(m.group(4)).map(sparkTypeName)
+              val elems = pgArrayElements(content.substring(1, content.length - 1))
+              if (elems.isEmpty) None // empty IN list is a parse error; leave
+              else Some(elems.map {
+                case Some(e) => tpe match {
+                  case Some(t) => s"CAST('${escape(e)}' AS $t)"
+                  case None if numericTokRe.matches(e) => e
+                  case None => s"'${escape(e)}'"
+                }
+                case None => "NULL"
+              }.mkString(", "))
+            }
+          }
+        listed.map(l => s"${if (neg) "NOT IN" else "IN"} ($l)")
+      }
+    }
 
   // ---- PG SIMILAR TO ------------------------------------------------------
 
@@ -631,80 +659,30 @@ object SqlDialect {
     * config-SQL case) to `x [NOT] RLIKE '^(?:<regex>)$'`. Column-valued
     * patterns are left unchanged (no static translation).
     */
-  def rewriteSimilarTo(sql: String): String = {
-    val s = sql
-    similarToRe.replaceSomeIn(s, m =>
-      if (inLiteral(s, m.start)) None
-      else {
-        val neg = Option(m.group(1)).map(_ => "NOT ").getOrElse("")
-        val lit = m.group(2)
-        val body = lit.substring(1, lit.length - 1) // keep '' escapes as-is
-        Some(java.util.regex.Matcher.quoteReplacement(
-          s"${neg}RLIKE '^(?:${similarToRegex(body)})$$'"))
-      })
-  }
+  def rewriteSimilarTo(sql: String): String =
+    replaceCode(sql, similarToRe) { m =>
+      val neg = Option(m.group(1)).map(_ => "NOT ").getOrElse("")
+      val lit = m.group(2)
+      val body = lit.substring(1, lit.length - 1) // keep '' escapes as-is
+      Some(s"${neg}RLIKE '^(?:${similarToRegex(body)})$$'")
+    }
 
   // ---- PG interval casts and OVERLAPS ----------------------------------
 
+  private val intervalCastRe =
+    """('(?:[^']|'')*')\s*::\s*[Ii][Nn][Tt][Ee][Rr][Vv][Aa][Ll]\b""".r
+
   /** `'30 days'::interval` → `INTERVAL '30 days'` — Spark parses the
     * multi-unit interval STRING literal natively, so only the PG cast
-    * spelling needs translating (before the scalar-cast loop would turn
+    * spelling needs translating (before the scalar-cast pass would turn
     * it into an unresolvable CAST). Non-literal `::interval` operands
     * have no static Spark translation and are left for the `auto`
     * pushdown fallback.
     */
-  private val intervalCastRe =
-    """('(?:[^']|'')*')\s*::\s*[Ii][Nn][Tt][Ee][Rr][Vv][Aa][Ll]\b""".r
-
-  def rewriteIntervalCast(sql: String): String = {
-    val s = sql
-    intervalCastRe.replaceSomeIn(s, m =>
-      if (inLiteral(s, m.start)) None
-      else Some(java.util.regex.Matcher.quoteReplacement(
-        s"INTERVAL ${m.group(1)}")))
-  }
+  def rewriteIntervalCast(sql: String): String =
+    replaceCode(sql, intervalCastRe)(m => Some(s"INTERVAL ${m.group(1)}"))
 
   private val overlapsRe = """(?i)\boverlaps\b""".r
-
-  /** Split `a, b` at the single top-level comma of a paren-group body. */
-  private def topLevelComma(body: String): Option[Int] = {
-    val lit = literalFlags(body)
-    var depth = 0
-    var i = 0
-    while (i < body.length) {
-      if (!lit(i)) body.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => return Some(i)
-        case _ =>
-      }
-      i += 1
-    }
-    None
-  }
-
-  /** Forward scan of the `(...)` group starting at/after `from`
-    * (whitespace-skipping); returns (openIdx, closeIdx) inclusive.
-    */
-  private def scanParenGroup(s: String, from: Int): Option[(Int, Int)] = {
-    var i = from
-    while (i < s.length && s.charAt(i).isWhitespace) i += 1
-    if (i >= s.length || s.charAt(i) != '(') return None
-    val lit = literalFlags(s)
-    var depth = 0
-    var j = i
-    while (j < s.length) {
-      if (!lit(j)) s.charAt(j) match {
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return Some((i, j))
-        case _ =>
-      }
-      j += 1
-    }
-    None
-  }
 
   /** Rewrite `(s1, e1) OVERLAPS (s2, e2)` into the SQL-standard
     * expansion over NORMALIZED bounds (PG swaps each pair so start <=
@@ -715,123 +693,38 @@ object SqlDialect {
     *
     * with S_i = LEAST(s_i, e_i), E_i = GREATEST(s_i, e_i). This stays on
     * the native Catalyst path (plain comparisons — pushable, codegen'd);
-    * the repeated subexpressions are collapsed by Catalyst CSE.
+    * the repeated subexpressions are collapsed by Catalyst CSE. Anything
+    * but two 2-element row constructors is left for the fallback.
     */
-  def rewriteOverlaps(sql: String): String = {
-    val s = sql
-    // rightmost-first so earlier spans stay valid across replacements
-    val ms = overlapsRe.findAllMatchIn(s).toList.reverse
-    var out = s
-    for (m <- ms if !inLiteral(s, m.start)) {
-      val left = scanLeftOperand(out, m.start)
-      val right = scanParenGroup(out, m.end)
-      (left, right) match {
-        case (Some((ls, le)), Some((ro, rc)))
-            if out.charAt(ls) == '(' =>
-          val lBody = out.substring(ls + 1, le - 1)
-          val rBody = out.substring(ro + 1, rc)
-          (topLevelComma(lBody), topLevelComma(rBody)) match {
-            case (Some(lc), Some(rcm)) =>
-              val (a, b) = (lBody.substring(0, lc).trim, lBody.substring(lc + 1).trim)
-              val (c, d) = (rBody.substring(0, rcm).trim, rBody.substring(rcm + 1).trim)
+  def rewriteOverlaps(sql: String): String =
+    rewriteFirst(sql, overlapsRe) { (lex, m) =>
+      val s = lex.sql
+      val ro = s.indexWhere(!_.isWhitespace, m.end)
+      leftOperand(lex, m.start)
+        .filter { case (ls, _) => s.charAt(ls) == '(' && ro >= 0 && lex.close(ro) >= 0 }
+        .flatMap { case (ls, _) =>
+          (lex.args(ls).map(_.trim), lex.args(ro).map(_.trim)) match {
+            case (Seq(a, b), Seq(c, d)) =>
               val (s1, e1) = (s"LEAST($a, $b)", s"GREATEST($a, $b)")
               val (s2, e2) = (s"LEAST($c, $d)", s"GREATEST($c, $d)")
-              val repl = s"(($s1 > $s2 AND NOT ($s1 >= $e2 AND $e1 >= $e2))" +
+              Some(s.substring(0, ls) +
+                s"(($s1 > $s2 AND NOT ($s1 >= $e2 AND $e1 >= $e2))" +
                 s" OR ($s2 > $s1 AND NOT ($s2 >= $e1 AND $e2 >= $e1))" +
-                s" OR $s1 = $s2)"
-              out = out.substring(0, ls) + repl + out.substring(rc + 1)
-            case _ => // not a 2-element row constructor: leave for fallback
+                s" OR $s1 = $s2)" + s.substring(lex.close(ro) + 1))
+            case _ => None
           }
-        case _ => // no paren row constructor on both sides: leave as-is
-      }
-    }
-    out
-  }
-
-  private val anyAllRe =
-    ("""(?i)(=|<>|!=)\s*(ANY|ALL)\s*\(\s*(?:'((?:[^']|'')*)'""" +
-      """(?:\s*::\s*([A-Za-z_][A-Za-z0-9_ ]*?)\s*\[\s*\])?""" +
-      """|ARRAY\s*\[([^\[\]]*)\])\s*\)""").r
-
-  private val numericTokRe = """-?\d+(?:\.\d+)?""".r
-
-  /** Rewrite PG quantified comparisons over array literals to IN lists:
-    * `x = ANY('{a,b}')` / `x = ANY('{1,2}'::int[])` / `x = ANY(ARRAY[…])`
-    * → `x IN (…)`, and `x <> ALL(…)` / `x != ALL(…)` → `x NOT IN (…)`.
-    * Untyped `'{…}'` elements render numeric tokens bare and everything
-    * else as string literals (PG coerces against the left operand; the
-    * IN list lets Spark do the same). Other operator/quantifier combos
-    * (`<> ANY`, `= ALL`) have no IN equivalent and are left unchanged, as
-    * are subquery forms (`ANY(SELECT …)` doesn't match the pattern).
-    */
-  def rewriteAnyAll(sql: String): String = {
-    val s = sql
-    anyAllRe.replaceSomeIn(s, m =>
-      if (inLiteral(s, m.start)) None
-      else {
-        val op = m.group(1)
-        val quant = m.group(2).toUpperCase
-        val neg = op == "<>" || op == "!="
-        // only = ANY (membership) and <>/!= ALL (non-membership) map to IN
-        if ((quant == "ANY" && neg) || (quant == "ALL" && !neg)) None
-        else {
-          val kw = if (neg) "NOT IN" else "IN"
-          val listed: Option[String] =
-            if (m.group(5) != null) // ARRAY[…] splice; empty list → leave
-              Some(m.group(5).trim).filter(_.nonEmpty)
-            else {
-              val content = m.group(3).replace("''", "'").trim
-              if (!(content.startsWith("{") && content.endsWith("}"))) None
-              else {
-                val tpe = Option(m.group(4)).map(sparkTypeName)
-                val elems = pgArrayElements(content.substring(1, content.length - 1))
-                if (elems.isEmpty) None // empty IN list is a parse error; leave
-                else Some(elems.map {
-                  case Some(e) => tpe match {
-                    case Some(t) => s"CAST('${e.replace("'", "''")}' AS $t)"
-                    case None if numericTokRe.matches(e) => e
-                    case None => s"'${e.replace("'", "''")}'"
-                  }
-                  case None => "NULL"
-                }.mkString(", "))
-              }
-            }
-          listed.map(l => java.util.regex.Matcher.quoteReplacement(s"$kw ($l)"))
         }
-      })
-  }
+    }
 
-  /** `'pat'` → `'(?i)pat'` (single-quoted literal in, literal out). */
-  private def foldCaseFlag(lit: String): String =
-    "'(?i)" + lit.substring(1)
+  // ---- DISTINCT ON -----------------------------------------------------
 
   private val distinctOnRe = """(?is)^\s*select\s+distinct\s+on\s*\(""".r
-
-  /** First top-level (outside parens and string literals) occurrence of
-    * keyword `kw` (upper-case) in `s` as a whole word, or -1.
-    */
-  private def topLevelIndexOf(s: String, kw: String): Int = {
-    val upper = s.toUpperCase
-    var d = 0
-    var j = 0
-    var inStr = false
-    while (j < s.length) {
-      val c = s.charAt(j)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => d += 1
-        case ')' => d -= 1
-        case _ =>
-          if (d == 0 && upper.startsWith(kw, j) &&
-            (j == 0 || !s.charAt(j - 1).isLetterOrDigit) &&
-            (j + kw.length >= s.length || !s.charAt(j + kw.length).isLetterOrDigit))
-            return j
-      }
-      j += 1
-    }
-    -1
-  }
+  private val nestedDistinctOnRe = """(?is)select\s+distinct\s+on\s*\(""".r
+  private val qualifiedRe = """[A-Za-z_]\w*\.[A-Za-z_]""".r
+  private val singleTableRe =
+    """(?is)^\s*FROM\s+([A-Za-z_][\w\.]*)(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?""".r
+  private val clauseWords = Set("where", "group", "having", "order", "limit",
+    "window", "qualify")
 
   /** Rewrite PostgreSQL `SELECT DISTINCT ON (keys) cols FROM … ORDER BY
     * keys, tiebreak` — keep the first row per key group under the ORDER BY
@@ -839,58 +732,30 @@ object SqlDialect {
     * `SELECT cols FROM (SELECT cols, row_number() OVER (PARTITION BY keys
     * ORDER BY full-order) AS __rn FROM …) WHERE __rn = 1`.
     *
-    * Handles the common top-level single-SELECT form (the shape stream
-    * configs use); statements where DISTINCT ON is nested in a subquery
-    * are left unchanged. Called from [[rewrite]] before the cast passes.
+    * Handles the top-level single-SELECT form (the shape stream configs
+    * use); [[rewriteNestedDistinctOn]] applies it to subqueries.
     */
   def rewriteDistinctOn(sql: String): String = {
     val m = distinctOnRe.findFirstMatchIn(sql).getOrElse(return sql)
-    // balanced-paren scan for the ON (…) key list
-    val openIdx = m.end - 1
-    var depth = 0
-    var i = openIdx
-    var close = -1
-    while (i < sql.length && close < 0) {
-      sql.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) close = i
-        case _ =>
-      }
-      i += 1
-    }
-    if (close < 0) return sql
-    val keys = sql.substring(openIdx + 1, close).trim
-    val rest = sql.substring(close + 1)
-
-    val fromIdx = topLevelIndexOf(rest, "FROM")
-    if (fromIdx < 0) return sql
-    val selectList = rest.substring(0, fromIdx).trim
-    val afterSelect = rest.substring(fromIdx)
-    val orderIdx = topLevelIndexOf(afterSelect, "ORDER")
-    val (body0, orderClause) =
-      if (orderIdx < 0) (afterSelect, "")
-      else (afterSelect.substring(0, orderIdx), afterSelect.substring(orderIdx))
+    val lex = new Lexed(sql)
+    val close = lex.close(m.end - 1)
+    val from = if (close < 0) -1 else lex.keyword(close + 1, sql.length, "FROM")
+    if (from < 0) return sql
+    val keys = sql.substring(m.end, close).trim
+    val selectList = sql.substring(close + 1, from).trim
     // LIMIT may live after the ORDER BY or (with no ORDER BY) at the end
     // of the body; PG applies it AFTER dedup either way, so hoist it out
-    val (body, limit) = {
-      val inOrder = topLevelIndexOf(orderClause, "LIMIT")
-      if (inOrder >= 0) (body0, orderClause.substring(inOrder))
-      else {
-        val inBody = topLevelIndexOf(body0, "LIMIT")
-        if (inBody >= 0) (body0.substring(0, inBody), body0.substring(inBody))
-        else (body0, "")
-      }
-    }
-    val orderBy = {
-      val inOrder = topLevelIndexOf(orderClause, "LIMIT")
-      if (inOrder >= 0) orderClause.substring(0, inOrder) else orderClause
-    }
+    val order = lex.keyword(from, sql.length, "ORDER")
+    val limit = lex.keyword(if (order < 0) from else order, sql.length, "LIMIT")
+    val orderEnd = if (limit < 0) sql.length else limit
+    val bodyEnd = if (order < 0) orderEnd else order
+    val body = sql.substring(from, bodyEnd).trim
+    val orderBy = if (order < 0) "" else sql.substring(order, orderEnd).trim
     // PG requires ORDER BY to start with the DISTINCT ON keys; with no
     // ORDER BY the keys themselves give a deterministic (arbitrary-pick
     // replaced by first-by-key) order
     val windowOrder =
-      if (orderBy.isEmpty) keys
-      else orderBy.trim.replaceFirst("(?is)^order\\s+by\\s+", "")
+      if (orderBy.isEmpty) keys else orderBy.replaceFirst("(?is)^order\\s+by\\s+", "")
     // The hoist moves FROM into a subquery, so a table alias or the table
     // name itself (SELECT DISTINCT ON (t.id) t.id … FROM tbl t ORDER BY
     // t.id — the common PG idiom) is out of scope in the OUTER select
@@ -898,16 +763,15 @@ object SqlDialect {
     // there (the inner window still sees them); multi-table statements
     // with qualified outer references would silently mis-resolve, so
     // reject those loudly.
-    val quals = singleTableQualifiers(body)
+    val quals = singleTableQualifiers(lex, from, bodyEnd)
     def stripAlias(fragment: String): String =
       quals.foldLeft(fragment) { (f, a) =>
-        mapOutsideStrings(f)(
+        new Lexed(f).mapCode(
           _.replaceAll(s"(?i)\\b${java.util.regex.Pattern.quote(a)}\\.", ""))
       }
-    val qualifiedRe = """[A-Za-z_]\w*\.[A-Za-z_]""".r
-    if (quals.isEmpty &&
-        (qualifiedRe.findFirstIn(withoutLiterals(selectList)).isDefined ||
-         qualifiedRe.findFirstIn(withoutLiterals(orderBy)).isDefined))
+    def qualified(a: Int, b: Int): Boolean =
+      qualifiedRe.findAllMatchIn(sql.substring(a, b)).exists(q => lex.code(a + q.start))
+    if (quals.isEmpty && (qualified(close + 1, from) || (order >= 0 && qualified(order, orderEnd))))
       throw new IllegalArgumentException(
         "DISTINCT ON rewrite: qualified column references with a multi-table " +
           "FROM are not supported — qualify-free the select list/ORDER BY or " +
@@ -916,64 +780,25 @@ object SqlDialect {
     // list AND an outer ORDER BY over non-projected columns (the common
     // PG latest-row-per-key idiom) both resolve
     s"SELECT ${stripAlias(selectList)} FROM (SELECT *, row_number() OVER " +
-      s"(PARTITION BY $keys ORDER BY $windowOrder) AS __rn ${body.trim}) " +
+      s"(PARTITION BY $keys ORDER BY $windowOrder) AS __rn $body) " +
       s"WHERE __rn = 1" +
-      (if (orderBy.trim.nonEmpty) " " + stripAlias(orderBy.trim) else "") +
-      (if (limit.trim.nonEmpty) " " + limit.trim else "")
-  }
-
-  /** `s` with single-quoted literal contents blanked to spaces — for
-    * scans that must ignore literal text.
-    */
-  private def withoutLiterals(s: String): String = {
-    val sb = new StringBuilder
-    var inStr = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (!inStr && c == '\'') { inStr = true; sb.append(' ') }
-      else if (inStr && c == '\'') {
-        if (i + 1 < s.length && s.charAt(i + 1) == '\'') { sb.append("  "); i += 1 }
-        else { inStr = false; sb.append(' ') }
-      }
-      else sb.append(if (inStr) ' ' else c)
-      i += 1
-    }
-    sb.toString()
+      (if (orderBy.nonEmpty) " " + stripAlias(orderBy) else "") +
+      (if (limit >= 0) " " + sql.substring(limit).trim else "")
   }
 
   /** The strippable qualifier names of a simple single-table
-    * `FROM tbl [AS alias] [WHERE …]` body: the table name's last segment
-    * plus the alias when present — empty for multi-table/JOIN bodies.
+    * `FROM tbl [AS alias] [WHERE …]` body in `[from, to)`: the table
+    * name's last segment plus the alias when present — empty for
+    * multi-table (JOIN or comma) bodies.
     */
-  private def singleTableQualifiers(body: String): Seq[String] = {
-    val code = withoutLiterals(body)
-    if ("""(?is)\bjoin\b""".r.findFirstIn(code).isDefined) return Nil
-    // top-level comma ⇒ old-style multi-table FROM
-    var d = 0
-    var i = 0
-    while (i < code.length) {
-      code.charAt(i) match {
-        case '(' => d += 1
-        case ')' => d -= 1
-        case ',' if d == 0 => return Nil
-        case _ =>
-      }
-      i += 1
-    }
-    val kw = Set("where", "group", "having", "order", "limit",
-      "window", "qualify")
-    """(?is)^\s*FROM\s+([A-Za-z_][\w\.]*)(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?""".r
-      .findFirstMatchIn(body.trim) match {
+  private def singleTableQualifiers(lex: Lexed, from: Int, to: Int): Seq[String] =
+    if (lex.keyword(from, to, "JOIN") >= 0 || lex.commas(from, to).nonEmpty) Nil
+    else singleTableRe.findFirstMatchIn(lex.sql.substring(from, to)) match {
       case Some(m) =>
-        val tableLast = m.group(1).split('.').last
-        val alias = Option(m.group(2)).filterNot(a => kw(a.toLowerCase))
-        (tableLast +: alias.toSeq).distinct
+        val alias = Option(m.group(2)).filterNot(a => clauseWords(a.toLowerCase))
+        (m.group(1).split('.').last +: alias.toSeq).distinct
       case None => Nil
     }
-  }
-
-  private val nestedDistinctOnRe = """(?is)select\s+distinct\s+on\s*\(""".r
 
   /** Rewrite DISTINCT ON occurrences NESTED inside parentheses — derived
     * tables and CTE bodies, e.g.
@@ -981,81 +806,21 @@ object SqlDialect {
     * `SELECT … FROM (SELECT DISTINCT ON (k) …) t`. Each parenthesized
     * span whose content starts with the DISTINCT ON select is itself a
     * complete single-SELECT statement, so the top-level
-    * [[rewriteDistinctOn]] applies to it verbatim; spans are rewritten
-    * innermost-occurrence-first until none remain.
+    * [[rewriteDistinctOn]] applies to it verbatim.
     */
-  def rewriteNestedDistinctOn(sql: String): String = {
-    var out = sql
-    var progressed = true
-    while (progressed) {
-      progressed = false
-      val candidates = nestedDistinctOnRe.findAllMatchIn(out)
-        .map(_.start).filterNot(inLiteral(out, _)).toList
-      val it = candidates.iterator
-      while (!progressed && it.hasNext) {
-        val p = it.next()
-        // the subquery form: '(' immediately (mod whitespace) before SELECT
-        var i = p - 1
-        while (i >= 0 && out.charAt(i).isWhitespace) i -= 1
-        if (i >= 0 && out.charAt(i) == '(') {
-          // matching close paren, literal-aware
-          var depth = 0
-          var j = i
-          var close = -1
-          var inStr = false
-          while (j < out.length && close < 0) {
-            val c = out.charAt(j)
-            if (inStr) { if (c == '\'') inStr = false }
-            else c match {
-              case '\'' => inStr = true
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) close = j
-              case _ =>
-            }
-            j += 1
-          }
-          if (close > 0) {
-            val inner = out.substring(i + 1, close)
-            val rewritten = rewriteDistinctOn(inner)
-            if (rewritten != inner) {
-              out = out.substring(0, i + 1) + rewritten + out.substring(close)
-              progressed = true
-            }
-          }
-        }
-      }
+  def rewriteNestedDistinctOn(sql: String): String =
+    rewriteFirst(sql, nestedDistinctOnRe) { (lex, m) =>
+      val s = lex.sql
+      val open = s.lastIndexWhere(!_.isWhitespace, m.start - 1)
+      val close = if (open < 0) -1 else lex.close(open)
+      val inner = if (close < 0) "" else s.substring(open + 1, close)
+      Some(rewriteDistinctOn(inner)).filter(_ != inner)
+        .map(s.substring(0, open + 1) + _ + s.substring(close))
     }
-    out
-  }
 
-  /** Rewrite one `(...)::type` / `fn(...)::type` cast (balanced-paren scan;
-    * regex alone cannot match the operand). Iterated by `rewrite`.
-    */
-  private def rewriteParenCast(sql: String): String =
-    parenCastRe.findFirstMatchIn(sql) match {
-      case None => sql
-      case Some(m) =>
-        var depth = 0
-        var j = m.start // index of ')'
-        var open = -1
-        while (j >= 0 && open < 0) {
-          sql.charAt(j) match {
-            case ')' => depth += 1
-            case '(' => depth -= 1; if (depth == 0) open = j
-            case _ =>
-          }
-          j -= 1
-        }
-        if (open < 0) sql // unbalanced; leave untouched
-        else {
-          var k = open - 1 // include a preceding function name, if any
-          while (k >= 0 && (sql.charAt(k).isLetterOrDigit || sql.charAt(k) == '_')) k -= 1
-          val start = k + 1
-          val operand = sql.substring(start, m.start + 1)
-          val tpe = sparkTypeName(m.group(1))
-          sql.substring(0, start) + s"CAST($operand AS $tpe)" + sql.substring(m.end)
-        }
-    }
+  // ---- numeric trunc, EXTRACT, date_trunc, to_char ------------------------
+
+  private val truncRe = """(?i)(?<![A-Za-z0-9_])trunc\s*\(""".r
 
   /** PG `trunc(x[, d])` is NUMERIC truncation toward zero — PG has no
     * bare `trunc` over dates (that is `date_trunc`, which the `\btrunc`
@@ -1065,72 +830,18 @@ object SqlDialect {
     * round-toward-zero: floor for non-negative operands, ceil for
     * negative. One-arg trunc gets scale 0, matching PG.
     */
-  def rewriteNumericTrunc(sql: String): String = {
-    val re = """(?i)(?<![A-Za-z0-9_])trunc\s*\(""".r
-    re.findAllMatchIn(sql).filterNot(m => inLiteral(sql, m.start))
-      .toSeq.headOption match {
-      case None => sql
-      case Some(m) =>
-        // balanced scan from the open paren, literal-aware, collecting
-        // top-level commas
-        var depth = 0
-        var i = m.end - 1
-        var close = -1
-        var inStr = false
-        var comma = -1
-        while (i < sql.length && close < 0) {
-          val c = sql.charAt(i)
-          if (inStr) { if (c == '\'') inStr = false } // '' toggles twice, nets out
-          else c match {
-            case '\'' => inStr = true
-            case '(' => depth += 1
-            case ')' => depth -= 1; if (depth == 0) close = i
-            case ',' if depth == 1 && comma < 0 => comma = i
-            case _ =>
-          }
-          i += 1
-        }
-        if (close < 0) sql // unbalanced; leave untouched
-        else {
-          val open = m.end - 1
-          val (x, d) =
-            if (comma >= 0)
-              (sql.substring(open + 1, comma), sql.substring(comma + 1, close))
-            else (sql.substring(open + 1, close), "0")
-          val repl =
-            s"(CASE WHEN ($x) >= 0 THEN FLOOR(($x), ($d)) " +
-              s"ELSE CEIL(($x), ($d)) END)"
-          // recurse: later (or operand-nested) truncs; each pass removes
-          // one trunc( token and introduces none, so this terminates
-          rewriteNumericTrunc(
-            sql.substring(0, m.start) + repl + sql.substring(close + 1))
-        }
+  def rewriteNumericTrunc(sql: String): String =
+    rewriteCalls(sql, truncRe) { (lex, open, _) =>
+      val (x, d) = lex.args(open) match {
+        case Seq(x) => (x, "0")
+        case x +: rest => (x, rest.mkString(","))
+      }
+      Some(s"(CASE WHEN ($x) >= 0 THEN FLOOR(($x), ($d)) ELSE CEIL(($x), ($d)) END)")
     }
-  }
 
   private val extractRe = """(?i)\bextract\s*\(""".r
-  private val dateTruncRe = """(?i)\bdate_trunc\s*\(\s*'([A-Za-z]+)'\s*,""".r
-
-  /** Balanced close-paren index for the '(' at `openIdx` (literal-aware);
-    * -1 when unbalanced.
-    */
-  private def balancedClose(sql: String, openIdx: Int): Int = {
-    var depth = 0
-    var i = openIdx
-    var inStr = false
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false } // '' toggles twice, nets out
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
+  private val dateTruncRe = """(?i)\bdate_trunc\s*\(""".r
+  private val fieldLiteralRe = """'([A-Za-z]+)'""".r
 
   /** PG `EXTRACT(field FROM expr)` fields Spark lacks or spells
     * differently (PG functions-datetime §9.9 vs Spark's DatePart):
@@ -1157,41 +868,26 @@ object SqlDialect {
     * PG also allows `epoch` over INTERVAL values (total seconds) —
     * not supported here; such statements ride the pushdown fallback.
     */
-  def rewriteExtract(sql: String): String = {
-    val m = extractRe.findAllMatchIn(sql)
-      .find(mm => !inLiteral(sql, mm.start)).getOrElse(return sql)
-    val openIdx = m.end - 1
-    val close = balancedClose(sql, openIdx)
-    if (close < 0) return sql
-    val args = sql.substring(openIdx + 1, close)
-    val fromIdx = topLevelIndexOf(args, "FROM")
-    if (fromIdx < 0) return sql
-    val field = args.substring(0, fromIdx).trim.toLowerCase
-    val op = args.substring(fromIdx + 4).trim
-    val replaced = field match {
-      case "epoch" => s"(UNIX_MICROS(CAST($op AS TIMESTAMP)) / 1000000.0D)"
-      case "dow" => s"(EXTRACT(DAYOFWEEK FROM $op) - 1)"
-      case "isodow" => s"EXTRACT(DAYOFWEEK_ISO FROM $op)"
-      case "isoyear" => s"EXTRACT(YEAROFWEEK FROM $op)"
-      case "decade" => s"FLOOR(YEAR($op) / 10)"
-      case "century" => s"CEIL(YEAR($op) / 100.0)"
-      case "millennium" => s"CEIL(YEAR($op) / 1000.0)"
-      case "milliseconds" => s"(EXTRACT(SECOND FROM $op) * 1000)"
-      case "microseconds" =>
-        s"CAST(EXTRACT(SECOND FROM $op) * 1000000 AS BIGINT)"
-      case _ => null
+  def rewriteExtract(sql: String): String =
+    rewriteCalls(sql, extractRe) { (lex, open, close) =>
+      val from = lex.keyword(open + 1, close, "FROM")
+      if (from < 0) None
+      else {
+        val op = lex.sql.substring(from + 4, close).trim
+        Option(lex.sql.substring(open + 1, from).trim.toLowerCase match {
+          case "epoch" => s"(UNIX_MICROS(CAST($op AS TIMESTAMP)) / 1000000.0D)"
+          case "dow" => s"(EXTRACT(DAYOFWEEK FROM $op) - 1)"
+          case "isodow" => s"EXTRACT(DAYOFWEEK_ISO FROM $op)"
+          case "isoyear" => s"EXTRACT(YEAROFWEEK FROM $op)"
+          case "decade" => s"FLOOR(YEAR($op) / 10)"
+          case "century" => s"CEIL(YEAR($op) / 100.0)"
+          case "millennium" => s"CEIL(YEAR($op) / 1000.0)"
+          case "milliseconds" => s"(EXTRACT(SECOND FROM $op) * 1000)"
+          case "microseconds" => s"CAST(EXTRACT(SECOND FROM $op) * 1000000 AS BIGINT)"
+          case _ => null
+        })
+      }
     }
-    if (replaced == null)
-      // pass-through field: recurse into the operand (a nested extract
-      // may hide inside) and the remainder
-      sql.substring(0, openIdx + 1) + rewriteExtract(args) + ")" +
-        rewriteExtract(sql.substring(close + 1))
-    else
-      // each pass eliminates one rewritable extract( and introduces at
-      // most pass-through ones, so this terminates
-      rewriteExtract(
-        sql.substring(0, m.start) + replaced + sql.substring(close + 1))
-  }
 
   /** PG `date_trunc('field', expr)` fields Spark's `date_trunc` lacks:
     * `decade`/`century`/`millennium` become a MAKE_TIMESTAMP on the
@@ -1202,32 +898,25 @@ object SqlDialect {
     * fields pass through unchanged — Spark's `week` (Monday), `quarter`,
     * etc. match PG, pinned by the PropertySpec corpus.
     */
-  def rewriteDateTrunc(sql: String): String = {
-    val candidates = dateTruncRe.findAllMatchIn(sql)
-      .filterNot(mm => inLiteral(sql, mm.start))
-    val m = candidates.find { mm =>
-      val f = mm.group(1).toLowerCase
-      f == "decade" || f == "century" || f == "millennium" ||
-        f == "milliseconds" || f == "microseconds"
-    }.getOrElse(return sql)
-    val openIdx = sql.indexOf('(', m.start)
-    val close = balancedClose(sql, openIdx)
-    if (close < 0) return sql
-    val op = sql.substring(m.end, close).trim
-    val y = s"YEAR($op)"
-    val replaced = m.group(1).toLowerCase match {
-      case "decade" =>
-        s"MAKE_TIMESTAMP(CAST(FLOOR($y / 10) * 10 AS INT), 1, 1, 0, 0, 0)"
-      case "century" =>
-        s"MAKE_TIMESTAMP(CAST((CEIL($y / 100.0) - 1) * 100 + 1 AS INT), 1, 1, 0, 0, 0)"
-      case "millennium" =>
-        s"MAKE_TIMESTAMP(CAST((CEIL($y / 1000.0) - 1) * 1000 + 1 AS INT), 1, 1, 0, 0, 0)"
-      case "milliseconds" => s"date_trunc('MILLISECOND', $op)"
-      case "microseconds" => s"date_trunc('MICROSECOND', $op)"
+  def rewriteDateTrunc(sql: String): String =
+    rewriteCalls(sql, dateTruncRe) { (lex, open, _) =>
+      lex.args(open).map(_.trim) match {
+        case Seq(fieldLiteralRe(field), op) =>
+          val y = s"YEAR($op)"
+          Option(field.toLowerCase match {
+            case "decade" =>
+              s"MAKE_TIMESTAMP(CAST(FLOOR($y / 10) * 10 AS INT), 1, 1, 0, 0, 0)"
+            case "century" =>
+              s"MAKE_TIMESTAMP(CAST((CEIL($y / 100.0) - 1) * 100 + 1 AS INT), 1, 1, 0, 0, 0)"
+            case "millennium" =>
+              s"MAKE_TIMESTAMP(CAST((CEIL($y / 1000.0) - 1) * 1000 + 1 AS INT), 1, 1, 0, 0, 0)"
+            case "milliseconds" => s"date_trunc('MILLISECOND', $op)"
+            case "microseconds" => s"date_trunc('MICROSECOND', $op)"
+            case _ => null
+          })
+        case _ => None
+      }
     }
-    rewriteDateTrunc(
-      sql.substring(0, m.start) + replaced + sql.substring(close + 1))
-  }
 
   private val toCharRe = """(?i)\bto_char\s*\(""".r
 
@@ -1266,7 +955,7 @@ object SqlDialect {
     * Double-quoted template text becomes a single-quoted pattern
     * literal; plain punctuation/space separators pass through.
     */
-  private[sources] def toCharPattern(tpl: String): Option[String] = {
+  private def toCharPattern(tpl: String): Option[String] = {
     val sb = new StringBuilder
     var i = 0
     while (i < tpl.length) {
@@ -1294,9 +983,9 @@ object SqlDialect {
 
   /** Rewrite PG `to_char(expr, template)`: datetime templates translate
     * to Spark `DATE_FORMAT(expr, '<pattern>')` when exact parity holds
-    * ([[toCharPattern]]); numeric templates (disjoint token set) go to
-    * the native PG-rules renderer `pg_to_char_num`
-    * ([[graft.plans.PgNumFormat]], session-registered by
+    * ([[toCharPattern]]); numeric templates (disjoint token set: 9/0/./,/
+    * S/MI/PR vs YYYY/MM/…) go to the native PG-rules renderer
+    * `pg_to_char_num` ([[graft.plans.PgNumFormat]], session-registered by
     * [[PgFunctions]]) — Spark's own `to_char` number grammar diverges
     * from PG on sign columns, separator blanking and FM. Everything
     * else is left untouched and surfaces as an AnalysisException that
@@ -1304,57 +993,17 @@ object SqlDialect {
     * pinned by PropertySpec's generated template corpora vs independent
     * PG-rules renderers (datetime AND numeric).
     */
-  def rewriteToChar(sql: String): String = {
-    val m = toCharRe.findAllMatchIn(sql)
-      .find(mm => !inLiteral(sql, mm.start)).getOrElse(return sql)
-    val openIdx = m.end - 1
-    val close = balancedClose(sql, openIdx)
-    if (close < 0) return sql
-    def skipRest(): String =
-      sql.substring(0, close + 1) + rewriteToChar(sql.substring(close + 1))
-    val args = sql.substring(openIdx + 1, close)
-    val commaIdx = {
-      // first top-level comma, literal-aware
-      var d = 0; var j = 0; var inStr = false; var at = -1
-      while (j < args.length && at < 0) {
-        val c = args.charAt(j)
-        if (inStr) { if (c == '\'') inStr = false }
-        else c match {
-          case '\'' => inStr = true
-          case '(' => d += 1
-          case ')' => d -= 1
-          case ',' if d == 0 => at = j
-          case _ =>
-        }
-        j += 1
+  def rewriteToChar(sql: String): String =
+    rewriteCalls(sql, toCharRe) { (lex, open, _) =>
+      lex.args(open).map(_.trim) match {
+        case Seq(arg, lit) if lit.length >= 2 && lit.head == '\'' && lit.last == '\'' =>
+          val tpl = unquoteSqlLiteral(lit)
+          toCharPattern(tpl).map(p => s"DATE_FORMAT($arg, '${escape(p)}')")
+            .orElse(graft.plans.PgNumFormat.parse(tpl)
+              .map(_ => s"pg_to_char_num($arg, '${escape(tpl)}')"))
+        case _ => None
       }
-      at
     }
-    if (commaIdx < 0) return skipRest()
-    val arg1 = args.substring(0, commaIdx).trim
-    val tplLit = args.substring(commaIdx + 1).trim
-    if (tplLit.length < 2 || tplLit.head != '\'' || tplLit.last != '\'')
-      return skipRest()
-    val tpl = tplLit.substring(1, tplLit.length - 1).replace("''", "'")
-    toCharPattern(tpl) match {
-      case None =>
-        // not a datetime template — numeric? PG numeric templates and
-        // datetime ones are disjoint (9/0/./,/S/MI/PR vs YYYY/MM/…), so
-        // a successful numeric parse is unambiguous. Rewrites to the
-        // registered native renderer (PgFunctions.ensureRegistered).
-        graft.plans.PgNumFormat.parse(tpl) match {
-          case Some(_) =>
-            rewriteToChar(sql.substring(0, m.start) +
-              s"pg_to_char_num($arg1, '${tpl.replace("'", "''")}')" +
-              sql.substring(close + 1))
-          case None => skipRest()
-        }
-      case Some(p) =>
-        rewriteToChar(sql.substring(0, m.start) +
-          s"DATE_FORMAT($arg1, '${p.replace("'", "''")}')" +
-          sql.substring(close + 1))
-    }
-  }
 
   /** Spark SQL name for a PG type string (uuid → STRING, etc.). */
   def sparkTypeName(pgType: String): String =

@@ -131,6 +131,25 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  // A comment holding a quote, an identifier quote, a cast, a regex
+  // operator and a paren, put at any whitespace outside a literal, leaves
+  // the rewrite's output as it is, modulo whitespace.
+  test("a comment between any two tokens does not change the rewrite") {
+    val comments = Seq("/* it's \"x\" :: ~ ( */", "-- it's \"x\" :: ~ (\n")
+    def squeezed(s: String) = s.replaceAll("\\s+", "")
+    dialectSamples.foreach { sql =>
+      val expected = squeezed(SqlDialect.rewrite(sql))
+      // whitespace outside literals: an even number of quotes before it
+      val gaps = sql.indices.filter(i =>
+        sql.charAt(i).isWhitespace && sql.take(i).count(_ == '\'') % 2 == 0)
+      assert(gaps.nonEmpty, sql)
+      for (i <- gaps; c <- comments) {
+        val commented = sql.substring(0, i) + " " + c + sql.substring(i)
+        assert(squeezed(SqlDialect.rewrite(commented)) === expected, commented)
+      }
+    }
+  }
+
   // ---------------------------------------------------------------------
   // Stride-scheduling discrepancy law (the math behind
   // Curation.interleaveBySource; the Spark implementation is pinned equal

@@ -639,4 +639,62 @@ class SqlDialectSpec extends AnyFunSuite {
     val nested = SqlDialect.rewrite("SELECT trunc(coalesce(a, b), 1)")
     assert(nested.contains("FLOOR((coalesce(a, b)), ( 1))"), nested)
   }
+
+  // Comments and quoted identifiers of any text: the lexer gives every
+  // character one class, so a quote inside a comment or an identifier
+  // never starts a literal, and a paren inside a literal never counts.
+  test("a quote inside a comment does not hide the code after it") {
+    assert(SqlDialect.rewrite("""SELECT /* it's */ "Id" FROM t""") ===
+      "SELECT   `Id` FROM t")
+    assert(SqlDialect.rewrite(
+      "SELECT a -- don't\nFROM t WHERE a ~* 'x' AND j ->> 'k' = 'v'") ===
+      "SELECT a  \nFROM t WHERE a RLIKE '(?i)x' AND get_json_object(j, '$.k') = 'v'")
+    // PG nests block comments: the quote sits inside the outer comment
+    assert(SqlDialect.rewrite("SELECT a /* /* */ ' */ ~ 'x' FROM t")
+      .replaceAll("\\s+", " ") === "SELECT a RLIKE 'x' FROM t")
+  }
+
+  test("double-quoted identifiers of any text become backtick identifiers") {
+    assert(SqlDialect.rewrite(
+      "SELECT \"Order Date\", \"it's\", \"a`b\", \"say \"\"hi\"\"\" FROM t") ===
+      "SELECT `Order Date`, `it's`, `a``b`, `say \"hi\"` FROM t")
+    // the code after an identifier holding a quote is still rewritten
+    assert(SqlDialect.rewrite("""SELECT "it's", a ~ 'x' FROM t""") ===
+      "SELECT `it's`, a  RLIKE  'x' FROM t")
+  }
+
+  test("comments become one space; a /*+ hint */ stays as written") {
+    assert(SqlDialect.rewrite("SELECT /*+ BROADCAST(u) */ t.a FROM t JOIN u " +
+      "ON t.k = u.k /* o'clock */ WHERE t.a ~ 'x'") ===
+      "SELECT /*+ BROADCAST(u) */ t.a FROM t JOIN u ON t.k = u.k   WHERE t.a  RLIKE  'x'")
+  }
+
+  test("DISTINCT ON: a line comment before ORDER BY, a paren in a literal key") {
+    assert(SqlDialect.rewrite(
+      "SELECT DISTINCT ON (k) k, v FROM t -- latest per key\nORDER BY k") ===
+      "SELECT k, v FROM (SELECT *, row_number() OVER (PARTITION BY k ORDER BY k) " +
+        "AS __rn FROM t) WHERE __rn = 1 ORDER BY k")
+    assert(SqlDialect.rewrite("SELECT DISTINCT ON (coalesce(k, ')')) k, v FROM t " +
+      "ORDER BY coalesce(k, ')'), v") ===
+      "SELECT k, v FROM (SELECT *, row_number() OVER (PARTITION BY coalesce(k, ')') " +
+        "ORDER BY coalesce(k, ')'), v) AS __rn FROM t) WHERE __rn = 1 " +
+        "ORDER BY coalesce(k, ')'), v")
+  }
+
+  test("casts: a paren inside a literal operand, `::` inside a literal") {
+    assert(SqlDialect.rewrite("SELECT concat(a, ')')::uuid FROM t") ===
+      "SELECT CAST(concat(a, ')') AS STRING) FROM t")
+    assert(SqlDialect.rewrite("SELECT 'a::int' AS s") === "SELECT 'a::int' AS s")
+    val interval = "SELECT 'keep ''1 day''::interval here' AS s"
+    assert(SqlDialect.rewrite(interval) === interval)
+  }
+
+  test("a quoted identifier after a comment reads the column, not a string") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    Seq("a", "b").toDF("Id").createOrReplaceTempView("dq_ident_t")
+    val got = spark.sql(SqlDialect.rewrite(
+      """SELECT /* it's */ "Id" FROM dq_ident_t ORDER BY 1""")).as[String].collect().toSeq
+    assert(got === Seq("a", "b"))
+  }
 }
