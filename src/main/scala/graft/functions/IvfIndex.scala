@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** IVF (inverted-file) approximate nearest neighbor: the coarse-quantizer
   * scale path for similarity search, complementing the sign-projection LSH
@@ -35,12 +36,12 @@ object IvfIndex {
   private def computeListStats(centroids: Array[(Int, Array[Double])],
                                assigned: DataFrame, vecCol: String): DataFrame = {
     val centroidRows = centroids.map { case (i, c) =>
-      struct(lit(i).as("list_id"), array(c.map(lit(_)): _*).as("centroid"))
+      struct(lit(i).as("list_id"), array(ArraySeq.unsafeWrapArray(c.map(lit(_))): _*).as("centroid"))
     }
     assigned
       .withColumn("__c", element_at(
-        map_from_entries(array(centroidRows.map(s =>
-          struct(s.getField("list_id"), s.getField("centroid"))): _*)),
+        map_from_entries(array(ArraySeq.unsafeWrapArray(centroidRows.map(s =>
+          struct(s.getField("list_id"), s.getField("centroid")))): _*)),
         col("list_id")))
       .select(col("list_id"),
         sqrt(sqDist(col(vecCol), col("__c"))).as("__resid"),
@@ -147,10 +148,10 @@ object IvfIndex {
   private[graft] def probeRange(index: Index, queries: DataFrame, idCol: String,
                          vecCol: String, loRank: Int, hiRank: Int): DataFrame = {
     val centroidRows = index.centroids.map { case (i, c) =>
-      struct(lit(i).as("list_id"), array(c.map(lit(_)): _*).as("centroid"))
+      struct(lit(i).as("list_id"), array(ArraySeq.unsafeWrapArray(c.map(lit(_))): _*).as("centroid"))
     }
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("__c", explode(array(centroidRows: _*)))
+      .withColumn("__c", explode(array(ArraySeq.unsafeWrapArray(centroidRows): _*)))
       .select(col("query_id"), col("qv"), col("__c.list_id").as("list_id"),
         sqDist(col("qv"), col("__c.centroid")).as("dist"),
         aggregate(zip_with(col("qv"), col("__c.centroid"),
@@ -184,7 +185,7 @@ object IvfIndex {
                          allowedLists: Array[Int]): DataFrame = {
     val c = index.assigned.select(col(idCol).as("neighbor_id"),
         col(vecCol).as("cv"), col("list_id"))
-      .where(col("list_id").isin(allowedLists.map(Int.box): _*))
+      .where(col("list_id").isin(ArraySeq.unsafeWrapArray(allowedLists.map(Int.box)): _*))
     c.join(broadcast(probed.select("query_id", "qv", "list_id")), "list_id")
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -229,7 +230,7 @@ object IvfIndex {
         col(attrCol).as("__qattr"))), "query_id")
     val c = index.assigned.select(col(idCol).as("neighbor_id"),
         col(vecCol).as("cv"), col("list_id"), col(attrCol).as("__cattr"))
-      .where(col("list_id").isin(listSet(probed).map(Int.box): _*))
+      .where(col("list_id").isin(ArraySeq.unsafeWrapArray(listSet(probed).map(Int.box)): _*))
     val cands = c
       .join(broadcast(probed.select(col("query_id"), col("qv"),
         col("list_id"), col("__qattr"))), "list_id")

@@ -5,6 +5,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Product quantization (PQ) for approximate nearest neighbor — the
   * memory-compression scale path that completes the ANN family
@@ -38,7 +39,7 @@ object PqIndex {
   private def subDot(v: Column, i: Int, dsub: Int,
                      cent: Array[Double]): Column =
     aggregate(zip_with(slice(v, i * dsub + 1, dsub),
-      array(cent.map(lit(_)): _*),
+      array(ArraySeq.unsafeWrapArray(cent.map(lit(_))): _*),
       (x, y) => x.cast("double") * y),
       lit(0.0), (s, x) => s + x)
 
@@ -54,9 +55,9 @@ object PqIndex {
   /** The query-side ADC table: `m × ksub` exact subspace dot products. */
   private def adcTable(qv: Column, codebooks: Array[Array[Array[Double]]],
                        dsub: Int): Column =
-    array(codebooks.zipWithIndex.map { case (cb, i) =>
-      array(cb.map(c => subDot(qv, i, dsub, c)): _*)
-    }: _*)
+    array(ArraySeq.unsafeWrapArray(codebooks.zipWithIndex.map { case (cb, i) =>
+      array(ArraySeq.unsafeWrapArray(cb.map(c => subDot(qv, i, dsub, c))): _*)
+    }): _*)
 
   /** Learn per-subspace codebooks (seeded local k-means over a capped
     * content-hash sample) and encode the corpus once.
@@ -186,9 +187,9 @@ object PqIndex {
   private def residualExpr(centroids: Array[(Int, Array[Double])],
                            v: Column): Column = {
     val centroidMap = element_at(
-      map_from_entries(array(centroids.map { case (i, c) =>
-        struct(lit(i), array(c.map(lit(_)): _*))
-      }: _*)), col("list_id"))
+      map_from_entries(array(ArraySeq.unsafeWrapArray(centroids.map { case (i, c) =>
+        struct(lit(i), array(ArraySeq.unsafeWrapArray(c.map(lit(_))): _*))
+      }): _*)), col("list_id"))
     zip_with(v, centroidMap, (x, y) => x.cast("double") - y)
   }
 
@@ -257,7 +258,7 @@ object PqIndex {
     // list_id-partitioned code files outside the probe set are never
     // opened; the join alone would scan them all (DPP degenerates here)
     val approx = index.codes
-      .where(col("list_id").isin(IvfIndex.listSet(probed).map(Int.box): _*))
+      .where(col("list_id").isin(ArraySeq.unsafeWrapArray(IvfIndex.listSet(probed).map(Int.box)): _*))
       .join(broadcast(probed.select("query_id", "list_id", "qdotc", "qtab")),
         "list_id")
       .where(col(idCol) =!= col("query_id"))

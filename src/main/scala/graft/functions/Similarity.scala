@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -923,7 +924,7 @@ object Similarity {
       col("v").as("va"), col("n").as("na"))
     val a = if (batch.isStreaming) allMembers else {
       val touched = b.select("bucket").distinct().collect().map(_.getLong(0))
-      allMembers.where(col("bucket").isin(touched.map(Long.box): _*))
+      allMembers.where(col("bucket").isin(ArraySeq.unsafeWrapArray(touched.map(Long.box)): _*))
     }
     val denom = col("na") * col("nb")
     val cos = when(denom === 0.0, lit(0.0))
@@ -963,7 +964,7 @@ object Similarity {
       col("v").as("va"), col("n").as("na"))
     val a = if (batch.isStreaming) allMembers else {
       val touched = b.select("bucket").distinct().collect().map(_.getLong(0))
-      allMembers.where(col("bucket").isin(touched.map(Long.box): _*))
+      allMembers.where(col("bucket").isin(ArraySeq.unsafeWrapArray(touched.map(Long.box)): _*))
     }
     val denom = col("na") * col("nb")
     val cos = when(denom === 0.0, lit(0.0))

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** Warehouse maintenance operators: CDC MERGE (SCD1 upsert/delete apply)
   * and incremental aggregate-state maintenance — the two mutation shapes a
@@ -31,7 +32,7 @@ object Warehouse {
       seqCol: String, opCol: String): DataFrame =
     applyElected(snapshot,
       electLatest(changes, keyCol, seqCol, opCol,
-        snapshot.columns.filterNot(_ == keyCol)),
+        ArraySeq.unsafeWrapArray(snapshot.columns.filterNot(_ == keyCol))),
       keyCol, opCol)
 
   /** The per-key latest-change election alone: one
@@ -52,13 +53,13 @@ object Warehouse {
     */
   def applyElected(snapshot: DataFrame, latest: DataFrame, keyCol: String,
       opCol: String): DataFrame = {
-    val payload = snapshot.columns.filterNot(_ == keyCol)
+    val payload = ArraySeq.unsafeWrapArray(snapshot.columns.filterNot(_ == keyCol))
     val upserts = latest
       .where(col(s"__c.$opCol") === "U")
       .select(col(keyCol) +: payload.map(c => col(s"__c.$c").as(c)): _*)
     val touched = latest.select(col(keyCol))
     snapshot.join(touched, Seq(keyCol), "left_anti")
-      .unionByName(upserts.select(snapshot.columns.map(col): _*))
+      .unionByName(upserts.select(ArraySeq.unsafeWrapArray(snapshot.columns.map(col)): _*))
   }
 
   /** Incremental materialized-aggregate maintenance: merge a delta batch's
