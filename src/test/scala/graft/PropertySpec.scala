@@ -109,10 +109,7 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  // Rewriting is idempotent: a second pass over already-rewritten SQL
-  // must be a no-op (no RLIKE RLIKE, no double CAST wrapping, no window
-  // re-wrapping) — the property that makes the preprocessing safe to
-  // apply defensively at multiple layers.
+  // Representative PG statements for the dialect rewrite.
   private val dialectSamples = Seq(
     "select a::int, b::text from t where c ~ '^x' and d !~* 'y'",
     "SELECT DISTINCT ON (g) g, v FROM t ORDER BY g, v DESC LIMIT 3",
@@ -124,6 +121,10 @@ class PropertySpec extends AnyFunSuite {
     "select '{a,\"b,c\",NULL}'::text[] as arr from t",
     "select * from t where a similar to '(x|y)%' and b not similar to '%z_'")
 
+  // Rewriting is idempotent: a second pass over already-rewritten SQL
+  // must be a no-op (no RLIKE RLIKE, no double CAST wrapping, no window
+  // re-wrapping) — the property that makes the preprocessing safe to
+  // apply defensively at multiple layers.
   test("dialect rewrite is idempotent on representative PG statements") {
     dialectSamples.foreach { sql =>
       val once = SqlDialect.rewrite(sql)
